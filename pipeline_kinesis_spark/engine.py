@@ -27,6 +27,7 @@ import shutil
 import threading
 import uuid
 import warnings
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -82,10 +83,24 @@ from pipeline_kinesis_spark.streaming.continuous_view import (
     validate_having,
 )
 
-# Reference caps parallelism at 8 bgworkers (pipeline_kinesis.c:54). We keep
-# the knob for API parity but it only bounds maxFilesPerTrigger here —
-# actual parallelism is Spark's scheduler.
+# Reference caps parallelism at 8 bgworkers (pipeline_kinesis.c:54). On
+# Kinesis paths the knob sets the pump's polling workers; on file feeds
+# it is the maxFilesPerTrigger admission cap (A11).
 MAX_PROCS = 8
+
+
+def spool_admission_cap(n_live_shards: int) -> int:
+    """maxFilesPerTrigger for an engine-owned Kinesis spool, on the pump
+    and datasource paths alike. Flow control there lives upstream
+    (``batchsize`` per shard per fetch, ``rate_limit_rps`` fetches per
+    second), so this cap is only a backstop and must never throttle the
+    drain below the landing rate: each micro-batch admits everything
+    spooled since the last one. A datasource landing batch publishes up
+    to one file per live shard (2x headroom for resharding splits
+    between restarts); a pump round publishes one file per polling
+    worker (at most MAX_PROCS), which the floor of 64 covers."""
+    return max(2 * n_live_shards, 64)
+
 
 # <view>_osrel — the output-stream relation naming convention; single
 # source of truth for every parser that recognizes it
@@ -203,6 +218,32 @@ def _publish_spool_batch(spool: str, bid: int, tmp: str) -> None:
         )
         i += 1
     shutil.rmtree(tmp, ignore_errors=True)
+
+
+# A memory view's sink table lives in the SparkSession (named after the
+# view), but a view name is unique only within one metadata dir. Per
+# session: sink name → the metadata dir whose standing query last
+# started that sink. Engines over other dirs never read its rows. Keyed
+# weakly by the session, the object whose name space is shared — no
+# single Engine can hold this.
+_SINK_OWNERS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def _repoint_table(query: str, name: str, tmp_name: str) -> str:
+    """Rewrite references to table ``name`` in ``query`` to ``tmp_name``,
+    case-insensitively and outside string literals only (a predicate
+    like WHERE label = 'v' keeps its literal)."""
+    from pipeline_kinesis_spark.streaming.continuous_view import (
+        _outside_string_mask,
+    )
+
+    mask = _outside_string_mask(query)
+    return re.sub(
+        rf"\b{re.escape(name)}\b",
+        lambda m: tmp_name if mask[m.start()] else m.group(0),
+        query,
+        flags=re.IGNORECASE,
+    )
 
 
 def _view_qnames(name: str) -> set[str]:
@@ -806,6 +847,13 @@ class Engine:
           pipeline_kinesis.c:54) and the endpoint can serve it,
           else "pump".
 
+        ``parallelism`` (clamped to 1..MAX_PROCS) sets the pump's polling
+        workers on Kinesis paths, not batch admission: each micro-batch
+        there admits everything spooled since the last one, up to the
+        spool_admission_cap backstop, and ``batchsize`` x
+        ``rate_limit_rps`` is the flow control. On file-feed endpoints
+        it caps the files one micro-batch admits (maxFilesPerTrigger).
+
         ``spool_keep_seconds`` bounds the raw kinesis spool (the record
         files the pump/landing writes and the ingest pipeline consumes):
         files older than this are auto-reaped during ingestion. None
@@ -978,6 +1026,13 @@ class Engine:
                 consumer.source = resolved_source
                 self.catalog.upsert_consumer(consumer)
             ds_raw = None
+            if is_kinesis:
+                # the engine-owned record spool both Kinesis paths land
+                # into and the ingest pipeline replays from
+                spool = os.path.join(
+                    self.metadata_dir, "spool", str(consumer.id)
+                )
+                os.makedirs(spool, exist_ok=True)
             if ds_mode:
                 # Executor-parallel ingest: one input partition per
                 # shard, GetRecords polled ON executors (sources/
@@ -1037,18 +1092,9 @@ class Engine:
                         parallelism,
                     ),
                 )
-                spool = os.path.join(
-                    self.metadata_dir, "spool", str(consumer.id)
-                )
-                os.makedirs(spool, exist_ok=True)
-                # flow control on this path lives in the LANDING query
-                # (per-shard record caps + trigger pacing); the file
-                # -source admission cap is only a backstop, so it must
-                # not throttle the drain below the landing rate — one
-                # landing batch publishes up to one file per SHARD, so
-                # the backstop is derived from the LIVE shard count
-                # (2x headroom for resharding splits between restarts),
-                # never a constant a bigger stream can outgrow
+                # the admission backstop scales with the LIVE shard
+                # count (one landing file per shard per batch), never a
+                # constant a bigger stream can outgrow
                 if n_live_shards == 0:
                     try:
                         n_live_shards = len(
@@ -1056,13 +1102,6 @@ class Engine:
                         )
                     except Exception:  # noqa: BLE001 — backstop only
                         n_live_shards = 0
-                replay_src = FileReplaySource(
-                    spool,
-                    max_files_per_trigger=max(
-                        parallelism, 2 * n_live_shards, 64
-                    ),
-                )
-                records = replay_src.read_stream(self.spark)
             elif is_kinesis:
                 # full consumer protocol on a managed background pump
                 # (reference consume_thread, kinesis_consumer.cpp:
@@ -1072,10 +1111,6 @@ class Engine:
                 # catalog checkpoint always wins), so no driver-side
                 # seqnum filtering — kinesis seqnums need not compare
                 # lexicographically.
-                spool = os.path.join(
-                    self.metadata_dir, "spool", str(consumer.id)
-                )
-                os.makedirs(spool, exist_ok=True)
                 cfg = KinesisSource(
                     stream_name=stream,
                     region=ep.region or "local",
@@ -1141,11 +1176,14 @@ class Engine:
                     # clamped above)
                     workers=parallelism,
                 )
-                replay_src = FileReplaySource(
-                    spool, max_files_per_trigger=parallelism
-                )
-                records = replay_src.read_stream(self.spark)
+            if is_kinesis:
+                records = FileReplaySource(
+                    spool,
+                    max_files_per_trigger=spool_admission_cap(n_live_shards),
+                ).read_stream(self.spark)
             else:
+                # file feeds: the caller's own directory, where this
+                # cap is the only flow control (A11)
                 replay_src = FileReplaySource(
                     os.path.join(ep.url, stream),
                     max_files_per_trigger=parallelism,
@@ -2014,6 +2052,7 @@ class Engine:
         else:
             sink_name = view.name
         self._snapshot_memory_sink(sink_name)
+        _SINK_OWNERS.setdefault(self.spark, {})[sink_name] = self.metadata_dir
         return materialize_memory(
             vdf,
             sink_name,
@@ -2039,7 +2078,10 @@ class Engine:
         live table with a non-empty snapshot always means 'no batch
         has repopulated the sink yet', never 'the view became empty'.
         Memory views are the session-scale tier by contract, so the
-        driver-side copy is bounded."""
+        driver-side copy is bounded. Only this metadata dir's own sink
+        is pinned (see _owns_sink)."""
+        if not self._owns_sink(sink_name):
+            return
         try:
             df = self.spark.table(sink_name)
             rows = df.collect()
@@ -2048,9 +2090,18 @@ class Engine:
         if rows:
             self._memview_snapshots[sink_name] = (df.schema, rows)
 
+    def _owns_sink(self, sink_name: str) -> bool:
+        """True iff the session's memory sink ``sink_name`` was last
+        started by an Engine over this metadata dir — this one, or an
+        earlier one the r15 restart contract hands its contents to."""
+        owners = _SINK_OWNERS.get(self.spark, {})
+        return owners.get(sink_name) == self.metadata_dir
+
     def _memory_sink_table(self, sink_name: str) -> DataFrame:
         """The memory sink's live table, or its wire-time snapshot
-        while the live table is empty (see _snapshot_memory_sink)."""
+        while the live table is empty (see _snapshot_memory_sink). A
+        sink another metadata dir started under a reused view name
+        reads as empty: no batch of this view has written it."""
         snap = self._memview_snapshots.get(sink_name)
         try:
             df = self.spark.table(sink_name)
@@ -2058,6 +2109,8 @@ class Engine:
             if snap is None:
                 raise
             return self.spark.createDataFrame(snap[1], snap[0])
+        if not self._owns_sink(sink_name):
+            df = self.spark.createDataFrame([], df.schema)
         if snap is not None and df.isEmpty():
             return self.spark.createDataFrame(snap[1], snap[0])
         return df
@@ -2786,7 +2839,9 @@ class Engine:
         Plain MEMORY views resolve to their live sink table by name —
         for a memory view with TTL that means expired rows are visible
         here (use view_table()/combine() for TTL-filtered reads; the
-        name cannot be rebound without detaching the standing sink).
+        name cannot be rebound without detaching the standing sink). A
+        sink another metadata dir started under the same view name is
+        never read: the name resolves to this engine's own view_table.
         Every other materialization (parquet, sw, hidden partials)
         resolves through view_table and honors TTL."""
         # PipelineDB spelling output_of('v') → the <v>_osrel relation;
@@ -2821,6 +2876,17 @@ class Engine:
                     self.view_table(name).createOrReplaceTempView(name)
                 except Exception:
                     continue  # not materialized yet — leave unregistered
+            elif name.lower() in ids and not self._owns_sink(name):
+                # the session's sink under this name belongs to another
+                # metadata dir: read this engine's view under a private
+                # name (replacing the public one would detach that sink)
+                try:
+                    own = self.view_table(name)
+                except Exception:
+                    continue  # no sink under this name at all
+                tmp_name = f"__own_view_{name}"
+                own.createOrReplaceTempView(tmp_name)
+                query = _repoint_table(query, name, tmp_name)
         query = self._rewrite_combine(query)
         for name in self.catalog.state.streams:
             if name.lower() not in ids:
@@ -2946,12 +3012,7 @@ class Engine:
             ),
             query,
         )
-        mask2 = _outside_string_mask(query2)
-        return re.sub(
-            rf"\b{re.escape(name)}\b",
-            lambda m: tmp_name if mask2[m.start()] else m.group(0),
-            query2,
-        )
+        return _repoint_table(query2, name, tmp_name)
 
     def execute(self, statement: str) -> DataFrame | str:
         """The reference's SQL surface as a single entry point: endpoint /

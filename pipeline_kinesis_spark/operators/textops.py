@@ -286,19 +286,22 @@ def winnow_fingerprint_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # _low materialized once — see winnow_fingerprints (r15): the
     # inlined lower(trim(text)) re-ran per char position inside the
     # interpreted lambda, O(len²) per document.
-    d = spread(load(spark, sf_dir, "documents"), "doc_id").withColumn(
-        "_low", F.expr("lower(trim(text))")
+    d = spread(load(spark, sf_dir, "documents"), "doc_id").select(
+        "doc_id", F.expr("lower(trim(text))").alias("_low")
     )
+    # a doc shorter than k chars has NO grams: sequence(1, 0) would
+    # count DOWN to [1, 0] and invent two
     grams = (
-        f"transform(sequence(1, greatest(length(_low) - {k - 1}, 0)), "
-        f"i -> xxhash64(substring(_low, i, {k})))"
+        f"CASE WHEN length(_low) >= {k} THEN transform(sequence(1, "
+        f"length(_low) - {k - 1}), i -> xxhash64(substring(_low, i, {k}))) "
+        "ELSE array() END"
     )
-    d = d.withColumn("_g", F.expr(grams))
-    fp = F.expr(
-        f"array_distinct(transform(sequence(1, greatest(size(_g) - {w - 1}, 0)), "
-        f"j -> array_min(slice(_g, j, {w}))))"
+    # fingerprints from the codegen'd rows form winnow_fingerprints
+    # uses: [] for a doc with fewer than w grams (no window)
+    d = d.withColumn("_g", F.expr(grams)).join(
+        _winnow_fp_rows(d, k, w).withColumnRenamed("fingerprints", "_fp"),
+        "doc_id",
     )
-    d = d.withColumn("_fp", fp)
     n_grams = F.size("_g").cast("long")
     n_windows = F.greatest(F.size("_g") - (w - 1), F.lit(0)).cast("long")
     n_fp = F.size("_fp").cast("long")

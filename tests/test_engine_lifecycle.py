@@ -133,3 +133,47 @@ def test_view_created_mid_stream_starts_immediately(engine, spark, tmp_path):
     }
     # materializing without any restart, backfilled from the archive
     assert rows == {("a", 1), ("b", 2)}
+
+
+def test_reused_view_name_is_private_to_its_metadata_dir(spark, tmp_path):
+    """A memory view's sink table is session-wide and named after the
+    view. A second Engine over ANOTHER metadata dir that reuses the
+    name reads only its own (still empty) view — through view_table and
+    sql() — while an Engine over the SAME dir still sees the contents
+    before its first batch (the restart contract)."""
+    view_sql = "SELECT payload, count(*) AS n FROM rv_stream GROUP BY payload"
+
+    def engine(meta, src):
+        eng = Engine(spark, metadata_dir=str(tmp_path / meta))
+        eng.add_endpoint("ep", url=str(tmp_path / src))
+        eng.create_stream("rv_stream", "payload STRING")
+        eng.create_continuous_view("rv_view", view_sql, stream="rv_stream")
+        return eng
+
+    write_record_file(str(tmp_path / "src_a" / "s"), [{"data": "a"}])
+    a = engine("meta_a", "src_a")
+    a.consume_begin("ep", "s", "rv_stream")
+    a.wait_for_ingest()
+    a.consume_end_all()
+    want_a = [("a", 1)]
+    assert [tuple(r) for r in a.view_table("rv_view").collect()] == want_a
+
+    b = engine("meta_b", "src_b")
+    assert b.view_table("rv_view").collect() == []
+    assert b.sql("SELECT * FROM rv_view WHERE payload = 'a'").collect() == []
+    assert b.sql("SELECT count(*) AS c FROM RV_VIEW").collect()[0].c == 0
+
+    a2 = Engine(spark, metadata_dir=str(tmp_path / "meta_a"))
+    assert [tuple(r) for r in a2.view_table("rv_view").collect()] == want_a
+    a2.consume_begin("ep", "s", "rv_stream")
+    assert [tuple(r) for r in a2.view_table("rv_view").collect()] == want_a
+    a2.consume_end_all()
+
+    write_record_file(str(tmp_path / "src_b" / "s"), [{"data": "b"}] * 2)
+    b.consume_begin("ep", "s", "rv_stream")
+    b.wait_for_ingest()
+    assert [tuple(r) for r in b.view_table("rv_view").collect()] == [("b", 2)]
+    assert [tuple(r) for r in b.sql("SELECT * FROM rv_view").collect()] == [
+        ("b", 2)
+    ]
+    b.consume_end_all()

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from pipeline_kinesis_spark.operators.similarity import (
@@ -9,7 +11,12 @@ from pipeline_kinesis_spark.operators.similarity import (
     cosine_topk,
     cosine_topk_ivf,
 )
-from pipeline_kinesis_spark.operators.textops import winnow_fingerprints
+from pipeline_kinesis_spark.operators.textops import (
+    WINNOW_STATS_SQL,
+    winnow_fingerprint_stats,
+    winnow_fingerprints,
+)
+from pipeline_kinesis_spark.testing import compare_to_oracle, oracle_connection
 
 
 def test_winnow_deterministic_and_shaped(spark, sf_dir):
@@ -19,6 +26,39 @@ def test_winnow_deterministic_and_shaped(spark, sf_dir):
     # winnowing guarantee: fingerprint count ≤ gram count, ≥ 1 for any
     # doc longer than k+w chars
     assert all(len(v) >= 1 for v in a.values())
+
+
+def test_winnow_stats_short_docs_match_oracle(spark, tmp_path):
+    """Docs with 0..w+1 grams (k=8, w=4), where a window count of zero
+    once made the array form slice from position 0 and raise
+    INVALID_PARAMETER_VALUE.START: every length answers, exactly as the
+    oracle does, and the fingerprint counts stay in bounds."""
+    k, w = 8, 4
+    texts = [""] + ["abcdefghijklmnopqrstuvwxyz"[:n] for n in range(1, k + w + 1)]
+    pq.write_table(
+        pa.table(
+            {
+                "doc_id": list(range(len(texts))),
+                "text": texts,
+                "lang": ["en"] * len(texts),
+                "source": ["t"] * len(texts),
+                "n_chars": [len(t) for t in texts],
+            }
+        ),
+        str(tmp_path / "documents.parquet"),
+    )
+    df = winnow_fingerprint_stats(spark, str(tmp_path))
+    rows = {r.doc_id: r for r in df.collect()}
+    assert sorted(r.n_grams for r in rows.values()) == sorted(
+        max(len(t) - (k - 1), 0) for t in texts
+    )
+    assert max(r.n_grams for r in rows.values()) == w + 1
+    assert all(r.count_in_bounds and r.fingerprints_contained for r in rows.values())
+    con = oracle_connection(str(tmp_path))
+    try:
+        assert not compare_to_oracle(df, con, WINNOW_STATS_SQL)
+    finally:
+        con.close()
 
 
 def test_winnow_detects_shared_substrings(spark, sf_dir):
