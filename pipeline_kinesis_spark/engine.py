@@ -49,8 +49,9 @@ from pipeline_kinesis_spark.sources.kinesis import (
     KinesisReplayBridge,
     KinesisSource,
     describe_all_shards,
-    make_boto3_client,
+    iterator_type,
 )
+from pipeline_kinesis_spark.sources.kinesis_datasource import build_client
 from pipeline_kinesis_spark.sources.records import RECORD_SCHEMA
 from pipeline_kinesis_spark.streaming.listeners import QueryMetricsListener
 from pipeline_kinesis_spark.streaming.pinned_start import pinned_shuffle
@@ -889,10 +890,7 @@ class Engine:
                     "kinesis client (register_kinesis_client, or set "
                     "url/region)"
                 )
-            if start_position not in ("trim_horizon", "latest") and not (
-                start_position.startswith("after_sequence_number:")
-            ):
-                raise ValueError(f"unknown start_position {start_position!r}")
+            iterator_type(start_position)  # validate before any side effect
             if spool_keep_seconds is not None and not is_kinesis:
                 # the file-feed path reads the caller's own directory
                 # directly — there is no engine-owned spool to reap, and
@@ -972,15 +970,11 @@ class Engine:
             if is_kinesis:
                 client = self._kinesis_clients.get(endpoint)
                 factory = self._kinesis_client_factories.get(endpoint)
-                if client is None and factory is not None:
-                    from pipeline_kinesis_spark.sources.kinesis_datasource import (  # noqa: E501
-                        _load_factory,
-                    )
-
-                    client = _load_factory(factory)()
                 if client is None:
-                    client = make_boto3_client(
-                        ep.region, ep.credfile, ep.url
+                    # built fresh per consume_begin (never cached): a
+                    # factory may hand out a different client each call
+                    client = build_client(
+                        factory, ep.region, ep.credfile, ep.url
                     )
                 # an injected client OBJECT is driver-only; the
                 # datasource needs executors to build their own
@@ -1033,6 +1027,16 @@ class Engine:
                     self.metadata_dir, "spool", str(consumer.id)
                 )
                 os.makedirs(spool, exist_ok=True)
+                reap_spool = self._spool_reaper(spool, spool_keep_seconds)
+                cfg = KinesisSource(
+                    stream_name=stream,
+                    region=ep.region or "local",
+                    endpoint_url=ep.url,
+                    credfile=ep.credfile,
+                    start_position=start_position,
+                    batch_size=batchsize,
+                    max_fetch_rate_per_shard=rate_limit_rps or 4.0,
+                )
             if ds_mode:
                 # Executor-parallel ingest: one input partition per
                 # shard, GetRecords polled ON executors (sources/
@@ -1065,21 +1069,10 @@ class Engine:
                         "spark.speculation=false (speculative task "
                         "attempts race the attained-position pin)"
                     )
-                cfg = KinesisSource(
-                    stream_name=stream,
-                    region=ep.region or "local",
-                    endpoint_url=ep.url,
-                    credfile=ep.credfile,
-                    start_position=start_position,
-                    batch_size=batchsize,
-                    max_fetch_rate_per_shard=rate_limit_rps or 4.0,
-                )
                 ds_raw = cfg.read_stream(
                     self.spark,
                     state_dir=self._ds_state_dir(consumer.id),
-                    client_factory=self._kinesis_client_factories.get(
-                        endpoint
-                    ),
+                    client_factory=factory,
                     # one scheduling wave per trigger: when live shards
                     # outnumber the cluster's task slots, the reader
                     # packs shards round-robin into at most this many
@@ -1111,15 +1104,6 @@ class Engine:
                 # catalog checkpoint always wins), so no driver-side
                 # seqnum filtering — kinesis seqnums need not compare
                 # lexicographically.
-                cfg = KinesisSource(
-                    stream_name=stream,
-                    region=ep.region or "local",
-                    endpoint_url=ep.url,
-                    credfile=ep.credfile,
-                    start_position=start_position,
-                    batch_size=batchsize,
-                    max_fetch_rate_per_shard=rate_limit_rps or 4.0,
-                )
                 poller = cfg.poller(
                     client,
                     checkpoints=self.catalog.load_kinesis_seqnums(
@@ -1138,33 +1122,19 @@ class Engine:
                 # checkpoint map only ever advances per shard, so the
                 # last write is always the newest.
                 persist_lock = threading.Lock()
-                reap_state = {"t": 0.0}
 
                 def _persist_round(
                     n,
                     _cid=consumer.id,
                     _p=poller,
                     _lk=persist_lock,
-                    _spool=spool,
-                    _keep=spool_keep_seconds,
-                    _rs=reap_state,
+                    _reap=reap_spool,
                 ):
                     with _lk:
                         self.catalog.save_kinesis_seqnums(
                             _cid, _p.snapshot_checkpoints()
                         )
-                    if _keep is not None:
-                        import time as _t
-
-                        now = _t.monotonic()
-                        # time-gated: a listdir every landing round
-                        # would be O(spool) work per batch
-                        if (
-                            now - _rs["t"]
-                            > self._spool_reap_interval_s
-                        ):
-                            _rs["t"] = now
-                            self._reap_spool_dir(_spool, _keep)
+                    _reap()
 
                 pump = KinesisPump(
                     KinesisReplayBridge(poller, spool),
@@ -1228,25 +1198,8 @@ class Engine:
                 # replayed batch rewrites byte-identical files, so the
                 # publish is idempotent and downstream file sources
                 # never see a torn or divergent batch.
-                _land_reap = {"t": 0.0}
-
-                def _land(
-                    bdf,
-                    bid,
-                    _spool=spool,
-                    _keep=spool_keep_seconds,
-                    _rs=_land_reap,
-                ):
-                    if _keep is not None:
-                        import time as _t
-
-                        now = _t.monotonic()
-                        if (
-                            now - _rs["t"]
-                            > self._spool_reap_interval_s
-                        ):
-                            _rs["t"] = now
-                            self._reap_spool_dir(_spool, _keep)
+                def _land(bdf, bid, _spool=spool, _reap=reap_spool):
+                    _reap()
                     tmp = f"{_spool}__tmp_b{bid}"
                     bdf.write.mode("overwrite").json(tmp)
                     _publish_spool_batch(_spool, bid, tmp)
@@ -2130,28 +2083,27 @@ class Engine:
         framing (write_record_file); a real Kinesis connector resolves this
         server-side via GetShardIterator instead.
         """
-        sp = consumer.start_position or "trim_horizon"
-        if sp == "trim_horizon":
+        it_type, seq = iterator_type(
+            consumer.start_position or "trim_horizon"
+        )
+        if it_type == "TRIM_HORIZON":
             return records
-        if sp == "latest":
-            snap = self._resolve_latest(consumer, source)
-            if not snap:
-                return records
-            snap_df = self.spark.createDataFrame(
-                sorted(snap.items()), "shard_id STRING, _start_seq STRING"
-            )
-            return (
-                records.join(F.broadcast(snap_df), "shard_id", "left")
-                .filter(
-                    F.col("_start_seq").isNull()
-                    | (F.col("sequence_number") > F.col("_start_seq"))
-                )
-                .select(*[f.name for f in RECORD_SCHEMA.fields])
-            )
-        if sp.startswith("after_sequence_number:"):
-            seq = sp.split(":", 1)[1]
+        if it_type == "AFTER_SEQUENCE_NUMBER":
             return records.filter(F.col("sequence_number") > F.lit(seq))
-        raise ValueError(f"unknown start_position {sp!r}")
+        snap = self._resolve_latest(consumer, source)
+        if not snap:
+            return records
+        snap_df = self.spark.createDataFrame(
+            sorted(snap.items()), "shard_id STRING, _start_seq STRING"
+        )
+        return (
+            records.join(F.broadcast(snap_df), "shard_id", "left")
+            .filter(
+                F.col("_start_seq").isNull()
+                | (F.col("sequence_number") > F.col("_start_seq"))
+            )
+            .select(*[f.name for f in RECORD_SCHEMA.fields])
+        )
 
     def _resolve_latest(
         self, consumer: Consumer, source: FileReplaySource
@@ -2306,6 +2258,25 @@ class Engine:
                 },
             }
         return out
+
+    def _spool_reaper(self, spool: str, keep_s: float | None):
+        """Per-round auto-reap hook for a consumer's spool: sweeps files
+        older than ``keep_s`` (spool_keep_seconds; None = keep all) at
+        most once per _spool_reap_interval_s — a listdir every landing
+        round would be O(spool) work per batch."""
+        import time as _time
+
+        last = [0.0]
+
+        def reap() -> None:
+            if keep_s is None:
+                return
+            now = _time.monotonic()
+            if now - last[0] > self._spool_reap_interval_s:
+                last[0] = now
+                self._reap_spool_dir(spool, keep_s)
+
+        return reap
 
     @staticmethod
     def _reap_spool_dir(spool: str, older_than_s: float) -> int:

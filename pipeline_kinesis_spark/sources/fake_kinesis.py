@@ -1,7 +1,8 @@
 """Deterministic in-process Kinesis wire (boto3-shaped, no network).
 
 Plays canned DescribeStream / GetShardIterator / GetRecords against the
-consumer protocol (sources/kinesis.py) exactly the way the reference's
+consumer protocol (ShardCursor in sources/kinesis_datasource.py, driven
+by both the pump and the datasource reader) exactly the way the reference's
 test rig plays against kinesis_consumer.cpp: shards hold ordered record
 payloads, iterators encode (shard, offset), reshard()/merge() close
 parents and surface children with ParentShardId lineage the next
@@ -19,7 +20,7 @@ from __future__ import annotations
 
 class ProvisionedThroughputExceededException(Exception):
     """Fake of the AWS throttle error (matched by type name,
-    kinesis.py:_error_code)."""
+    kinesis_datasource.py:aws_error_code)."""
 
 
 class ExpiredIteratorException(Exception):

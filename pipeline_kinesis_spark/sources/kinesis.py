@@ -2,21 +2,25 @@
 
 Maps the reference's endpoint/consumer surface (pipeline_kinesis--0.9.0.sql:
 4-25; kinesis_add_endpoint args region/credfile/url, pipeline_kinesis.c:
-120-188) onto a Structured Streaming source configuration plus a complete
-client-side consumer protocol (KinesisShardPoller → KinesisReplayBridge →
-KinesisPump). The wire path is implemented and tested: boto3 IS installed
-here, make_boto3_client builds real clients, and test_kinesis_wire.py
-drives genuine SigV4-signed HTTP through botocore against an in-process
-fake Kinesis REST endpoint (x-amz-json-1.1). Only live AWS itself is
-absent from the sandbox; against real AWS the same code runs unchanged.
+120-188) onto the driver-side consumer pump (KinesisShardPoller →
+KinesisReplayBridge → KinesisPump). The per-shard protocol itself —
+iterator resolution, GetRecords with NextShardIterator follow, throttle
+and expired-iterator handling — is the ShardCursor in
+sources/kinesis_datasource.py, shared with the executor-parallel
+datasource path; this module adds only the pump's policy: discovery,
+parent gating, crc32 shard ownership, commit-after-spool checkpoints and
+never-give-up throttle sleeps. make_boto3_client builds real clients,
+and test_kinesis_wire.py drives genuine SigV4-signed HTTP through
+botocore against an in-process fake Kinesis REST endpoint
+(x-amz-json-1.1); against real AWS the same code runs unchanged.
 
 Reference flow parity:
 - shard discovery (DescribeStream, kinesis_consumer.cpp:200-234)
-  → connector `describeShardInterval` / planInputPartitions
+  → describe_all_shards, per pump round and datasource plan
 - iterator resolution (GetShardIterator, kinesis_consumer.cpp:258-325)
-  → `startingPosition` option, resolved per shard from checkpoints
+  → ShardCursor.acquire, resumed per shard from checkpoints
 - GetRecords pacing/backoff (kinesis_consumer.cpp:364-434)
-  → connector fetch-interval/maxFetchRate options
+  → ShardCursor.fetch; pacing by KinesisPump / the reader's ready_at
 """
 
 from __future__ import annotations
@@ -28,20 +32,17 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
-_ITERATOR_TYPES = {
-    "trim_horizon": "TRIM_HORIZON",
-    "latest": "LATEST",
-}
-
-
-def iterator_type(start_position: str) -> tuple[str, str | None]:
-    """start_position → (ShardIteratorType, seqnum or None) — the analog
-    of parse_seqnum/format_seqnum (pipeline_kinesis.c:587-605)."""
-    if start_position in _ITERATOR_TYPES:
-        return _ITERATOR_TYPES[start_position], None
-    if start_position.startswith("after_sequence_number:"):
-        return "AFTER_SEQUENCE_NUMBER", start_position.split(":", 1)[1]
-    raise ValueError(f"unknown start_position {start_position!r}")
+# the protocol core lives in kinesis_datasource.py (which must be
+# self-contained for planner/executor pickling); re-exported here for
+# the pump path and external callers
+from pipeline_kinesis_spark.sources.kinesis_datasource import (  # noqa: F401
+    BACKOFF_MAX_S,
+    ShardCursor,
+    aws_error_code,
+    describe_all_shards,
+    iterator_type,
+    make_boto3_client,
+)
 
 
 @dataclass
@@ -64,24 +65,6 @@ class KinesisSource:
         iterator_type(self.start_position)  # validate eagerly
         if self.batch_size < 1 or self.batch_size > 10_000:
             raise ValueError("batch_size must be in [1, 10000]")  # AWS limit
-
-    def reader_options(self) -> dict[str, str]:
-        """Options a Kinesis Structured Streaming connector consumes."""
-        it, seq = iterator_type(self.start_position)
-        opts = {
-            "streamName": self.stream_name,
-            "region": self.region,
-            "startingPosition": it,
-            "maxFetchRatePerShard": str(self.max_fetch_rate_per_shard),
-            "maxRecordsPerFetch": str(self.batch_size),
-        }
-        if seq is not None:
-            opts["startingSequenceNumber"] = seq
-        if self.endpoint_url:
-            opts["endpointUrl"] = self.endpoint_url
-        if self.credfile:
-            opts["awsCredentialsFile"] = self.credfile
-        return opts
 
     def poller(
         self,
@@ -115,18 +98,14 @@ class KinesisSource:
 
         kinesis_datasource.register(spark)
         FORMAT_NAME = kinesis_datasource.FORMAT_NAME
-        it, seq = iterator_type(self.start_position)
-        start = (
-            f"after_sequence_number:{seq}"
-            if seq is not None
-            else self.start_position
-        )
         reader = (
             spark.readStream.format(FORMAT_NAME)
             .option("streamName", self.stream_name)
             .option("stateDir", state_dir)
             .option("region", self.region)
-            .option("startingPosition", start)
+            # validated by iterator_type in __post_init__; the reader
+            # parses it with the same function
+            .option("startingPosition", self.start_position)
             .option("maxRecordsPerFetch", str(self.batch_size))
             .option(
                 "maxFetchRatePerShard",
@@ -152,111 +131,22 @@ class KinesisSource:
         return reader.load()
 
 
-def make_boto3_client(
-    region: str,
-    credfile: str | None = None,
-    endpoint_url: str | None = None,
-):
-    """Production client for the consumer-protocol engine — the analog
-    of the reference's per-endpoint AWS client construction
-    (pipeline_kinesis.c:120-188: region/credfile/url → client). boto3
-    is present in this environment and the SigV4 wire is exercised
-    end-to-end in test_kinesis_wire.py (against an in-process fake
-    Kinesis REST endpoint; only live AWS is absent). The import guard
-    below is for minimal deployments without boto3, where an injected
-    client (Engine.register_kinesis_client) is the alternative."""
-    try:
-        import boto3
-    except ImportError as exc:
-        raise NotImplementedError(
-            "boto3 is not installed; register an injected client via "
-            "Engine.register_kinesis_client(endpoint, client) or install "
-            "boto3 for the real AWS wire"
-        ) from exc
-    session_kwargs = {}
-    if credfile:
-        # reference credfile: shared-credentials-file style. Assignment
-        # (not setdefault): THIS endpoint's credfile must win — boto3
-        # reads the variable at Session construction, immediately below
-        import os as _os
-
-        _os.environ["AWS_SHARED_CREDENTIALS_FILE"] = credfile
-    session = boto3.session.Session(**session_kwargs)
-    return session.client(
-        "kinesis", region_name=region, endpoint_url=endpoint_url
-    )
-
-
-# --------------------------------------------------------------------------
-# Consumer-protocol engine
-#
-# The reference's per-shard polling loop (kinesis_consumer.cpp:364-434:
-# GetRecords → follow NextShardIterator → linear 1-5 s backoff on
-# throttle; shard discovery :200-234; iterator resolution :258-325)
-# re-expressed client-agnostically: anything exposing boto3-shaped
-# describe_stream / get_shard_iterator / get_records drives it, so the
-# protocol logic — NOT the network — is the unit under test. In
-# production the client is boto3; in tests an in-process fake returns
-# canned responses (test_kinesis_protocol.py).
-
-# linear backoff: 1 s, 2 s, ... capped at 5 s, reset on success —
-# kinesis_consumer.cpp:395-430 parity
-BACKOFF_STEP_S = 1.0
-BACKOFF_MAX_S = 5.0
-
-
-@dataclass
-class ShardState:
-    """Per-shard consumer position (the seqnums-relation row analog)."""
-
-    shard_id: str
-    iterator: str | None = None
-    last_seq: str | None = None
-    millis_behind: int | None = None
-    closed: bool = False
-    backoff_s: float = 0.0
-    parents: tuple[str, ...] = ()
-    # a post-close rediscovery has already run for this shard — without
-    # the flag every later round would DescribeStream again (AWS caps
-    # that call at ~10/s account-wide)
-    refreshed_after_close: bool = False
-
-
-# canonical copy lives in kinesis_datasource.py (which must be
-# self-contained for planner/executor pickling); re-exported here for
-# the poller path and external callers
-from pipeline_kinesis_spark.sources.kinesis_datasource import (  # noqa: E402
-    describe_all_shards,
-)
-
-
-def _error_code(exc: Exception) -> str:
-    """AWS error code of an exception: botocore ClientError carries it
-    in .response, fakes in .code or the type name."""
-    name = getattr(exc, "code", None) or type(exc).__name__
-    resp = getattr(exc, "response", None)
-    if isinstance(resp, dict):
-        name = resp.get("Error", {}).get("Code") or name
-    return name
-
-
 class KinesisShardPoller:
-    """Drives the Kinesis consumer protocol over an injected client.
+    """Drives the Kinesis consumer protocol over an injected client: the
+    driver-side loop over one ShardCursor per shard.
 
-    Covered behaviors (reference parity):
-    - shard discovery with DescribeStream pagination (HasMoreShards);
-    - per-shard iterator resolution: checkpointed seqnum →
-      AFTER_SEQUENCE_NUMBER, else the source's start_position mapping
-      (trim_horizon/latest/after_sequence_number:X);
-    - GetRecords loop following NextShardIterator;
-    - ProvisionedThroughputExceeded → linear 1-5 s backoff (reset on a
-      successful fetch);
-    - ExpiredIterator → re-acquire from the last checkpointed seqnum
-      (no loss, no duplicates);
-    - resharding: a closed shard (null NextShardIterator) drains fully,
-      then rediscovery picks up child shards, started at TRIM_HORIZON
-      so no record between parent end and child start is missed;
-    - MillisBehindLatest surfaced per shard (the lag metric feed).
+    The cursor owns the protocol (iterator resolution: a known position →
+    AFTER_SEQUENCE_NUMBER, a reshard child → TRIM_HORIZON, else the
+    source's start_position; NextShardIterator follow; throttle and
+    expired-iterator classification; closed-shard detection;
+    MillisBehindLatest). The poller adds the pump's policy:
+    - shard discovery with DescribeStream pagination (HasMoreShards),
+      re-run once per reshard so child shards join mid-stream;
+    - parent gating: a child is not polled until every parent closed;
+    - ProvisionedThroughputExceeded → sleep the linear 1-5 s backoff
+      (reset on a successful fetch) and never give up;
+    - crc32 shard→worker ownership and commit-after-spool checkpoints;
+    - MillisBehindLatest per live shard via lag().
     """
 
     def __init__(
@@ -268,15 +158,22 @@ class KinesisShardPoller:
     ) -> None:
         self.client = client
         self.source = source
+        self._start = iterator_type(source.start_position)
         # COMMITTED positions only: a shard's entry advances when its
         # records have been handed downstream (bridge spool write →
         # commit()), never merely on poll — persisting a polled-but-
         # unspooled position would let a crash skip those records
-        # forever. st.last_seq tracks the in-memory polled position
-        # (iterator re-acquire after expiry).
+        # forever. A cursor's last_seq tracks the in-memory polled
+        # position (seeded from here when the shard is registered).
         self.checkpoints = dict(checkpoints or {})
         self.sleep = sleep
-        self.shards: dict[str, ShardState] = {}
+        self.shards: dict[str, ShardCursor] = {}
+        # shard id → parent shard ids (reshard lineage, for gating)
+        self._parents: dict[str, tuple[str, ...]] = {}
+        # closed shards whose post-close rediscovery already ran —
+        # without it every later round would DescribeStream again (AWS
+        # caps that call at ~10/s account-wide)
+        self._swept: set[str] = set()
         # guards shard DISCOVERY; each shard's polling state is owned
         # by exactly one worker (stable crc32 assignment), so per-shard
         # mutation needs no lock — the reference's shard→bgworker
@@ -302,107 +199,59 @@ class KinesisShardPoller:
             sid = sh["ShardId"]
             if sid in self.shards:
                 continue
-            self.shards[sid] = ShardState(
+            parents = tuple(
+                p
+                for p in (
+                    sh.get("ParentShardId"),
+                    sh.get("AdjacentParentShardId"),
+                )
+                if p
+            )
+            with self._ck_lock:
+                committed = self.checkpoints.get(sid)
+            # lineage before the cursor: a worker that sees the shard
+            # must also see its parents
+            self._parents[sid] = parents
+            self.shards[sid] = ShardCursor(
+                self.source.stream_name,
                 sid,
-                parents=tuple(
-                    p
-                    for p in (
-                        sh.get("ParentShardId"),
-                        sh.get("AdjacentParentShardId"),
-                    )
-                    if p
-                ),
+                from_reshard=bool(parents),
+                last_seq=committed,
             )
             new.append(sid)
         return new
 
-    # -- iterator resolution -----------------------------------------------
-
-    def _acquire_iterator(self, st: ShardState) -> None:
-        """GetShardIterator (kinesis_consumer.cpp:258-325): a
-        checkpointed position always wins (resume AFTER it); child
-        shards of a reshard start at TRIM_HORIZON regardless of the
-        configured start (records between parent end and child start
-        must not be skipped); otherwise the configured start maps via
-        iterator_type()."""
-        with self._ck_lock:
-            committed = self.checkpoints.get(st.shard_id)
-        # the furthest in-memory position wins within a live process
-        # (st.last_seq advances past the committed mark mid-flight)
-        seq = st.last_seq or committed
-        if seq is not None:
-            it_type, start_seq = "AFTER_SEQUENCE_NUMBER", seq
-        elif st.parents:
-            it_type, start_seq = "TRIM_HORIZON", None
-        else:
-            it_type, start_seq = iterator_type(self.source.start_position)
-        kwargs = {
-            "StreamName": self.source.stream_name,
-            "ShardId": st.shard_id,
-            "ShardIteratorType": it_type,
-        }
-        if start_seq is not None:
-            kwargs["StartingSequenceNumber"] = start_seq
-        st.iterator = self.client.get_shard_iterator(**kwargs)[
-            "ShardIterator"
-        ]
-
     # -- polling -----------------------------------------------------------
 
-    def _parent_pending(self, st: ShardState) -> bool:
+    def _parent_pending(self, c: ShardCursor) -> bool:
         """A child shard must not be consumed until every parent has
         drained (ordering across a reshard boundary)."""
         return any(
             p in self.shards and not self.shards[p].closed
-            for p in st.parents
+            for p in self._parents.get(c.shard_id, ())
         )
 
-    def poll_shard(self, st: ShardState) -> list[dict]:
-        """One GetRecords call for one shard, with backoff/expiry/close
-        handling (kinesis_consumer.cpp:364-434)."""
-        if st.closed or self._parent_pending(st):
+    def poll_shard(self, c: ShardCursor) -> list[dict]:
+        """One GetRecords call for one shard; a throttled shard sleeps
+        its backoff (capped at BACKOFF_MAX_S) and is retried next
+        round, forever."""
+        if c.closed or self._parent_pending(c):
             return []
-        if st.iterator is None:
-            self._acquire_iterator(st)
-        try:
-            resp = self.client.get_records(
-                ShardIterator=st.iterator, Limit=self.source.batch_size
-            )
-        except Exception as exc:  # noqa: BLE001 — classify by code/name
-            name = _error_code(exc)
-            if "ProvisionedThroughputExceeded" in name:
-                st.backoff_s = min(st.backoff_s + BACKOFF_STEP_S, BACKOFF_MAX_S)
-                self.sleep(st.backoff_s)
-                return []
-            if "ExpiredIterator" in name:
-                st.iterator = None  # next poll re-acquires from last_seq
-                return []
-            raise
-        st.backoff_s = 0.0
-        st.millis_behind = resp.get("MillisBehindLatest")
-        out = []
-        for rec in resp["Records"]:
-            st.last_seq = rec["SequenceNumber"]
-            out.append(
-                {
-                    "shard_id": st.shard_id,
-                    "sequence_number": rec["SequenceNumber"],
-                    "partition_key": rec.get("PartitionKey"),
-                    "data": rec["Data"],
-                    "approximate_arrival_timestamp": rec.get(
-                        "ApproximateArrivalTimestamp"
-                    ),
-                }
-            )
-        nxt = resp.get("NextShardIterator")
-        if nxt is None:
-            # shard closed by a reshard: fully drained once GetRecords
-            # returns no successor iterator — children become eligible
-            st.closed = True
-            st.iterator = None
-        else:
-            st.iterator = nxt
-        return out
+        recs, fault = c.fetch(self.client, self._start, self.source.batch_size)
+        if fault == "throttle":
+            self.sleep(min(c.backoff_s, BACKOFF_MAX_S))
+        return [
+            {
+                "shard_id": c.shard_id,
+                "sequence_number": rec["SequenceNumber"],
+                "partition_key": rec.get("PartitionKey"),
+                "data": rec["Data"],
+                "approximate_arrival_timestamp": rec.get(
+                    "ApproximateArrivalTimestamp"
+                ),
+            }
+            for rec in recs
+        ]
 
     @staticmethod
     def shard_owner(shard_id: str, workers: int) -> int:
@@ -427,35 +276,32 @@ class KinesisShardPoller:
                 if not self.shards:
                     self.refresh_shards()
         out = []
-        for sid, st in list(self.shards.items()):
+        for sid, c in list(self.shards.items()):
             if owner is not None and self.shard_owner(sid, workers) != owner:
                 continue
-            out.extend(self.poll_shard(st))
+            out.extend(self.poll_shard(c))
         pending = [
-            s
-            for s in list(self.shards.values())
-            if s.closed and not s.refreshed_after_close
+            sid
+            for sid, c in list(self.shards.items())
+            if c.closed and sid not in self._swept
         ]
         if pending:
             with self._disc_lock:
-                pending = [
-                    s for s in pending if not s.refreshed_after_close
-                ]
+                pending = [sid for sid in pending if sid not in self._swept]
                 if pending:
                     try:
                         self.refresh_shards()
                     except Exception as exc:  # noqa: BLE001 — classify
-                        code = _error_code(exc)
+                        code = aws_error_code(exc)
                         if not (
                             "LimitExceeded" in code
                             or "ProvisionedThroughputExceeded" in code
                         ):
                             raise
-                        # throttled discovery: leave the flags unset so
-                        # a later round retries the sweep
+                        # throttled discovery: leave the shards unswept
+                        # so a later round retries the sweep
                     else:
-                        for s in pending:
-                            s.refreshed_after_close = True
+                        self._swept.update(pending)
         return out
 
     def commit(self, recs: list[dict]) -> None:
@@ -479,9 +325,9 @@ class KinesisShardPoller:
         """MillisBehindLatest per live shard (lag-metrics feed,
         consumer_status analog)."""
         return {
-            sid: st.millis_behind
-            for sid, st in list(self.shards.items())
-            if not st.closed
+            sid: c.millis_behind
+            for sid, c in list(self.shards.items())
+            if not c.closed
         }
 
 
@@ -560,8 +406,9 @@ class KinesisPump(threading.Thread):
     (kinesis_consumer.cpp:415-421). Throttle backoff sleeps happen
     inside the poller on top of this pacing. One worker (the default)
     is plenty for a handful of shards; the reference's own ceiling is
-    8 workers, and a deployment beyond that scale runs the JVM
-    connector path (reader_options) where executors fetch in parallel.
+    8 workers, and a deployment beyond that scale runs the executor-
+    parallel datasource path (KinesisSource.read_stream), where
+    executors fetch in parallel.
 
     ``on_round(n_records)`` runs after every round that landed records
     — the engine persists poller checkpoints there (reference

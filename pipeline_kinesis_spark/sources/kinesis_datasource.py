@@ -13,6 +13,13 @@ responses land in executor Python workers and flow straight into the
 micro-batch, never through the driver. Ingest bandwidth then scales with
 the cluster: 1000 shards on a 1000-executor cluster poll concurrently.
 
+This module also holds the consumer protocol core both ingest paths
+share (it must stay self-contained, so the pump imports from here, not
+the other way round): ``ShardCursor`` (iterator resolution and one
+GetRecords step), ``iterator_type`` (the start-position parser),
+``aws_error_code``, ``describe_all_shards`` and the client builders.
+The reader's ``_ShardCursor`` adds only its per-batch policy on top.
+
 Offset & exactly-once model
 ---------------------------
 Kinesis, unlike Kafka, has no "tail offset" API: the only way to learn a
@@ -102,6 +109,52 @@ def _load_factory(spec: str):
     return getattr(importlib.import_module(mod), attr)
 
 
+def make_boto3_client(
+    region: str,
+    credfile: str | None = None,
+    endpoint_url: str | None = None,
+):
+    """boto3 Kinesis client for one endpoint — the analog of the
+    reference's per-endpoint AWS client construction
+    (pipeline_kinesis.c:120-188: region/credfile/url → client). The
+    import guard is for minimal deployments without boto3, where an
+    injected client (Engine.register_kinesis_client) is the
+    alternative."""
+    try:
+        import boto3
+    except ImportError as exc:
+        raise NotImplementedError(
+            "boto3 is not installed; register an injected client via "
+            "Engine.register_kinesis_client(endpoint, client) or install "
+            "boto3 for the real AWS wire"
+        ) from exc
+    if credfile:
+        # reference credfile: shared-credentials-file style; also how
+        # executor workers (whose env Spark controls) get SigV4
+        # material. Assignment, not setdefault: THIS endpoint's
+        # credfile must win over whatever an earlier caller left in the
+        # env — boto3 reads the variable at Session construction below
+        os.environ["AWS_SHARED_CREDENTIALS_FILE"] = credfile
+    return boto3.session.Session().client(
+        "kinesis", region_name=region, endpoint_url=endpoint_url or None
+    )
+
+
+def build_client(
+    factory: str | None,
+    region: str,
+    credfile: str | None = None,
+    endpoint_url: str | None = None,
+):
+    """A Kinesis client for one endpoint: the registered "module:attr"
+    factory's product when there is one, else boto3. Uncached — the
+    reader caches per process (_make_client); the engine builds one
+    per consume_begin."""
+    if factory:
+        return _load_factory(factory)()
+    return make_boto3_client(region, credfile, endpoint_url)
+
+
 # per-process client cache: the planner process calls partitions()
 # every trigger and executor workers are reused across tasks — a fresh
 # boto3 client each time would pay client construction + a TLS
@@ -111,10 +164,8 @@ _CLIENT_CACHE: dict[tuple, object] = {}
 
 
 def _make_client(opts: dict):
-    """boto3 Kinesis client from reader options (the per-endpoint
-    client construction of pipeline_kinesis.c:120-188), cached per
-    process and config — clients are never stored on the pickled
-    reader."""
+    """build_client from reader options, cached per process and config
+    — clients are never stored on the pickled reader."""
     key = (
         opts.get("clientfactory"),
         opts.get("region"),
@@ -122,28 +173,13 @@ def _make_client(opts: dict):
         opts.get("credfile"),
     )
     client = _CLIENT_CACHE.get(key)
-    if client is not None:
-        return client
-    factory = opts.get("clientfactory")
-    if factory:
-        client = _load_factory(factory)()
-    else:
-        import boto3
-
-        if opts.get("credfile"):
-            # reference credfile: shared-credentials-file style; also
-            # how executor workers (whose env Spark controls) get
-            # SigV4 material. Assignment, not setdefault: this
-            # reader's credfile must win over whatever a previous
-            # task left in the worker's env
-            os.environ["AWS_SHARED_CREDENTIALS_FILE"] = opts["credfile"]
-        session = boto3.session.Session()
-        client = session.client(
-            "kinesis",
-            region_name=opts.get("region", "us-east-1"),
-            endpoint_url=opts.get("endpointurl") or None,
+    if client is None:
+        client = _CLIENT_CACHE[key] = build_client(
+            opts.get("clientfactory"),
+            opts.get("region", "us-east-1"),
+            opts.get("credfile"),
+            opts.get("endpointurl"),
         )
-    _CLIENT_CACHE[key] = client
     return client
 
 
@@ -165,15 +201,132 @@ def describe_all_shards(client, stream_name: str) -> list[dict]:
         start_id = shards[-1]["ShardId"]
 
 
-def _aws_error_code(exc: Exception) -> str:
+_ITERATOR_TYPES = {
+    "trim_horizon": "TRIM_HORIZON",
+    "latest": "LATEST",
+}
+
+
+def iterator_type(
+    start_position: str, what: str = "start_position"
+) -> tuple[str, str | None]:
+    """start_position → (ShardIteratorType, seqnum or None) — the analog
+    of parse_seqnum/format_seqnum (pipeline_kinesis.c:587-605). The one
+    parser of trim_horizon | latest | after_sequence_number:X (type name
+    case-insensitive); ``what`` names the setting in the error."""
+    kind, sep, seq = start_position.partition(":")
+    kind = kind.lower()
+    if not sep and kind in _ITERATOR_TYPES:
+        return _ITERATOR_TYPES[kind], None
+    if sep and kind == "after_sequence_number":
+        return "AFTER_SEQUENCE_NUMBER", seq
+    raise ValueError(f"unknown {what} {start_position!r}")
+
+
+def aws_error_code(exc: Exception) -> str:
     """AWS error code of an exception: botocore ClientError carries it
-    in .response, fakes in .code or the type name (kept local — see
-    SELF-CONTAINMENT CONTRACT)."""
+    in .response, fakes in .code or the type name."""
     name = getattr(exc, "code", None) or type(exc).__name__
     resp = getattr(exc, "response", None)
     if isinstance(resp, dict):
         name = resp.get("Error", {}).get("Code") or name
     return name
+
+
+# linear throttle backoff: 1 s, 2 s, ... capped at 5 s, reset on
+# success — kinesis_consumer.cpp:395-430 parity
+BACKOFF_STEP_S = 1.0
+BACKOFF_MAX_S = 5.0
+
+
+class ShardCursor:
+    """One shard's place in the Kinesis consumer protocol
+    (kinesis_consumer.cpp:258-434) — the single implementation both
+    ingest paths drive: the driver pump (KinesisShardPoller in
+    sources/kinesis.py) and the executor reader (_ShardCursor below).
+    It holds only protocol state; pacing, giving up, shard ownership
+    and checkpointing are the caller's policy. Any boto3-shaped client
+    drives it (get_shard_iterator / get_records), so the protocol — not
+    the network — is the unit under test."""
+
+    def __init__(
+        self,
+        stream: str,
+        shard_id: str,
+        from_reshard: bool = False,
+        last_seq: str | None = None,
+        iterator: str | None = None,
+    ) -> None:
+        self.stream = stream
+        self.shard_id = shard_id
+        self.from_reshard = from_reshard  # child shard of a reshard
+        self.last_seq = last_seq  # last consumed (or resumed-from) seqnum
+        self.iterator = iterator
+        self.closed = False  # drained after a reshard
+        # throttle ramp in BACKOFF_STEP_S steps, UNcapped: the caller
+        # applies BACKOFF_MAX_S (the pump sleeps at most that long; the
+        # executor reader gives up past it)
+        self.backoff_s = 0.0
+        self.millis_behind: int | None = None
+
+    def acquire(self, client, start: tuple[str, str | None]) -> None:
+        """GetShardIterator (kinesis_consumer.cpp:258-325): a known
+        position always wins (resume AFTER it); a reshard child starts
+        at TRIM_HORIZON whatever the configured start (records between
+        parent end and child start must not be skipped); otherwise
+        ``start`` — iterator_type() of the configured position."""
+        if self.last_seq is not None:
+            it_type, seq = "AFTER_SEQUENCE_NUMBER", self.last_seq
+        elif self.from_reshard:
+            it_type, seq = "TRIM_HORIZON", None
+        else:
+            it_type, seq = start
+        kwargs = {
+            "StreamName": self.stream,
+            "ShardId": self.shard_id,
+            "ShardIteratorType": it_type,
+        }
+        if seq is not None:
+            kwargs["StartingSequenceNumber"] = seq
+        self.iterator = client.get_shard_iterator(**kwargs)[
+            "ShardIterator"
+        ]
+
+    def fetch(
+        self, client, start: tuple[str, str | None], limit: int
+    ) -> tuple[list[dict], str | None]:
+        """At most ONE GetRecords call (kinesis_consumer.cpp:364-434),
+        acquiring an iterator first if none is held. Returns (records,
+        fault): the response's raw records and None, or ([], "throttle")
+        after ProvisionedThroughputExceeded (backoff_s ramps; the caller
+        decides how to wait) or ([], "expire") after ExpiredIterator
+        (the next fetch re-acquires AFTER last_seq: no loss, no
+        duplicates). Any other error propagates. A response resets the
+        backoff, records MillisBehindLatest and advances last_seq; with
+        no NextShardIterator the shard is closed (fully drained after a
+        reshard — its children become eligible)."""
+        if self.iterator is None:
+            self.acquire(client, start)
+        try:
+            resp = client.get_records(ShardIterator=self.iterator, Limit=limit)
+        except Exception as exc:  # noqa: BLE001 — classify by code
+            code = aws_error_code(exc)
+            if "ProvisionedThroughputExceeded" in code:
+                self.backoff_s += BACKOFF_STEP_S
+                return [], "throttle"
+            if "ExpiredIterator" in code:
+                self.iterator = None
+                return [], "expire"
+            raise
+        self.backoff_s = 0.0
+        self.millis_behind = resp.get("MillisBehindLatest")
+        recs = resp["Records"]
+        if recs:
+            self.last_seq = recs[-1]["SequenceNumber"]
+        self.iterator = resp.get("NextShardIterator")
+        if self.iterator is None:
+            self.closed = True
+        return recs, None
 
 
 # -- attained-position side channel -----------------------------------------
@@ -399,14 +552,9 @@ class KinesisStreamReader(DataSourceStreamReader):
             )
         self.stream = opts["streamname"]
         self.state_dir = opts["statedir"]
-        self.start_position = opts.get("startingposition", "latest").lower()
-        if self.start_position not in (
-            "trim_horizon",
-            "latest",
-        ) and not self.start_position.startswith("after_sequence_number:"):
-            raise ValueError(
-                f"unknown startingPosition {self.start_position!r}"
-            )
+        self.start = iterator_type(
+            opts.get("startingposition", "latest"), "startingPosition"
+        )
         self.limit = int(opts.get("maxrecordsperfetch", DEFAULT_LIMIT))
         self.max_per_batch = int(
             opts.get(
@@ -617,32 +765,42 @@ class KinesisStreamReader(DataSourceStreamReader):
                     time.sleep(wait)
 
 
-class _ShardCursor:
-    """Resumable per-shard poll state for one micro-batch, ON AN
-    EXECUTOR. ``step()`` makes at most ONE GetRecords call, so a packed
-    group can interleave calls across its shards while each shard's
-    pacing window (``ready_at``) cools. Stops (``done``) at the
-    per-batch record cap, when caught up (empty response), or when the
-    shard closes — exactly the old serial loop's exits, state-machined.
+class _ShardCursor(ShardCursor):
+    """The executor reader's per-batch policy over one ShardCursor, ON
+    AN EXECUTOR. ``step()`` makes at most ONE GetRecords call, so a
+    packed group can interleave calls across its shards while each
+    shard's pacing window (``ready_at``) cools. Stops (``done``) at the
+    per-batch record cap, when caught up (empty response), at the
+    replay bound, when the shard closes, or once throttle backoff
+    passes BACKOFF_MAX_S (the next batch retries).
     """
 
     def __init__(self, reader, sid, start_seq, from_reshard, epoch):
+        attained = _read_attained_shard(reader.state_dir, sid)
+        super().__init__(
+            reader.stream,
+            sid,
+            from_reshard,
+            last_seq=start_seq,
+            # cached NextShardIterator from the previous batch — valid
+            # only if it continues exactly from our committed start
+            # (also carries sticky-latest across empty polls)
+            iterator=(
+                attained.get("it")
+                if attained.get("seq") == start_seq
+                else None
+            ),
+        )
         self.reader = reader
-        self.sid = sid
         self.start_seq = start_seq
-        self.from_reshard = from_reshard
         self.epoch = epoch
-        self.last_seq = start_seq
-        self.closed = False
         self.emitted = 0
-        self.backoff = 0.0
         self.empty_polls = 0
         self.done = False
         self.skip_write = False
         self.ready_at = 0.0  # monotonic instant the next call may fire
         self.min_gap = 1.0 / reader.rate if reader.rate > 0 else 0.0
 
-        attained = _read_attained_shard(reader.state_dir, sid)
         # Deterministic replay: if a previous ATTEMPT of this same
         # (epoch, start) already ran — its attained file records this
         # epoch and start — its reach becomes a hard END BOUND, so the
@@ -661,73 +819,41 @@ class _ShardCursor:
                 # and the pin must survive untouched
                 self.done = True
                 self.skip_write = True
-        self.iterator = None
-        if attained.get("it") and attained.get("seq") == start_seq:
-            # cached NextShardIterator from the previous batch — valid
-            # only if it continues exactly from our committed start
-            # (also carries sticky-latest across empty polls)
-            self.iterator = attained["it"]
-
-    def _acquire(self, client, seq: str | None) -> str:
-        if seq is not None:
-            kwargs = {
-                "ShardIteratorType": "AFTER_SEQUENCE_NUMBER",
-                "StartingSequenceNumber": seq,
-            }
-        elif self.from_reshard:
-            kwargs = {"ShardIteratorType": "TRIM_HORIZON"}
-        elif self.reader.start_position.startswith(
-            "after_sequence_number:"
-        ):
-            kwargs = {
-                "ShardIteratorType": "AFTER_SEQUENCE_NUMBER",
-                "StartingSequenceNumber": self.reader.start_position.split(
-                    ":", 1
-                )[1],
-            }
-        else:
-            kwargs = {
-                "ShardIteratorType": self.reader.start_position.upper()
-            }
-        return client.get_shard_iterator(
-            StreamName=self.reader.stream, ShardId=self.sid, **kwargs
-        )["ShardIterator"]
 
     def step(self, client):
         """At most one GetRecords call; yields this call's RECORD_SCHEMA
         tuples. Start-to-start pacing: ready_at advances by min_gap per
         call, matching the old sleep-before-call spacing."""
         reader = self.reader
-        if self.iterator is None:
-            self.iterator = self._acquire(client, self.last_seq)
         self.ready_at = time.monotonic() + self.min_gap
-        try:
-            resp = client.get_records(
-                ShardIterator=self.iterator,
-                Limit=min(
-                    reader.limit, reader.max_per_batch - self.emitted
-                ),
-            )
-        except Exception as exc:  # noqa: BLE001 — classify by code
-            code = _aws_error_code(exc)
-            if "ProvisionedThroughputExceeded" in code:
-                # bounded in-batch backoff; the next batch retries
-                self.backoff += 1.0
-                if self.backoff > 5.0:
-                    self.done = True
-                    return
-                self.ready_at = time.monotonic() + self.backoff
-                return
-            if "ExpiredIterator" in code:
-                self.iterator = None  # re-acquire from last_seq
-                return
-            raise
-        self.backoff = 0.0
-        recs = resp["Records"]
+        recs, fault = self.fetch(
+            client,
+            reader.start,
+            min(reader.limit, reader.max_per_batch - self.emitted),
+        )
+        if fault == "throttle":
+            # bounded in-batch backoff; the next batch retries
+            if self.backoff_s > BACKOFF_MAX_S:
+                self.done = True
+            else:
+                self.ready_at = time.monotonic() + self.backoff_s
+            return
+        if fault is not None:
+            return  # expired: the next step re-acquires from last_seq
+        if self.bound is not None:
+            seqs = [rec["SequenceNumber"] for rec in recs]
+            if self.bound in seqs:
+                # replay reached the pinned end, possibly MID-response:
+                # the response's NextShardIterator points past records
+                # not emitted — discard it so the next batch
+                # re-acquires AFTER the bound and reads them
+                recs = recs[: seqs.index(self.bound) + 1]
+                self.last_seq, self.iterator = self.bound, None
+                self.closed = False
+                self.done = True
+        self.emitted += len(recs)
         for rec in recs:
-            self.last_seq = rec["SequenceNumber"]
             data = rec["Data"]
-            self.emitted += 1
             yield (
                 data.decode("utf-8", "replace")
                 if isinstance(data, (bytes, bytearray))
@@ -735,23 +861,13 @@ class _ShardCursor:
                 rec["SequenceNumber"],
                 rec.get("PartitionKey"),
                 rec.get("ApproximateArrivalTimestamp"),
-                self.sid,
+                self.shard_id,
             )
-            if self.bound is not None and self.last_seq == self.bound:
-                # replay reached the pinned end, possibly MID-
-                # response: the response's NextShardIterator points
-                # past records not emitted — discard it so the next
-                # batch re-acquires AFTER the bound and reads them
-                self.done = True
-                self.iterator = None
-                return
-        nxt = resp.get("NextShardIterator")
-        if nxt is None:
-            self.closed = True
-            self.iterator = None
+        if self.done:
+            return
+        if self.closed:
             self.done = True
             return
-        self.iterator = nxt
         if not recs:
             if self.bound is not None and self.empty_polls < 100:
                 # pinned replay: the bound's records were read once
@@ -770,7 +886,7 @@ class _ShardCursor:
             return
         _write_attained(
             self.reader.state_dir,
-            self.sid,
+            self.shard_id,
             {
                 "seq": self.last_seq,
                 "it": self.iterator,

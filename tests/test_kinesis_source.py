@@ -21,24 +21,6 @@ def test_iterator_type_mapping():
         iterator_type("yesterday")
 
 
-def test_reader_options_assembly():
-    src = KinesisSource(
-        stream_name="test",
-        region="us-east-1",
-        endpoint_url="http://localhost:4566",
-        credfile="/tmp/creds",
-        start_position="after_sequence_number:42",
-        batch_size=500,
-    )
-    opts = src.reader_options()
-    assert opts["streamName"] == "test"
-    assert opts["startingPosition"] == "AFTER_SEQUENCE_NUMBER"
-    assert opts["startingSequenceNumber"] == "42"
-    assert opts["endpointUrl"] == "http://localhost:4566"
-    assert opts["maxRecordsPerFetch"] == "500"
-    assert float(opts["maxFetchRatePerShard"]) == 4.0  # reference pacing
-
-
 def test_config_validation():
     with pytest.raises(ValueError, match="stream_name"):
         KinesisSource(stream_name="", region="us-east-1")
