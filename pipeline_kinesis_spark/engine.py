@@ -2050,23 +2050,32 @@ class Engine:
         owners = _SINK_OWNERS.get(self.spark, {})
         return owners.get(sink_name) == self.metadata_dir
 
+    def _serves_live_sink(self, sink_name: str) -> bool:
+        """True iff _memory_sink_table serves the session's live sink
+        table itself: this metadata dir owns it and either no snapshot
+        is pinned or a batch has repopulated it since."""
+        if not self._owns_sink(sink_name):
+            return False
+        if sink_name not in self._memview_snapshots:
+            return True
+        try:
+            return not self.spark.table(sink_name).isEmpty()
+        except Exception:  # noqa: BLE001 — never started this session
+            return False
+
     def _memory_sink_table(self, sink_name: str) -> DataFrame:
         """The memory sink's live table, or its wire-time snapshot
         while the live table is empty (see _snapshot_memory_sink). A
         sink another metadata dir started under a reused view name
         reads as empty: no batch of this view has written it."""
+        if self._serves_live_sink(sink_name):
+            return self.spark.table(sink_name)
         snap = self._memview_snapshots.get(sink_name)
-        try:
-            df = self.spark.table(sink_name)
-        except Exception:  # noqa: BLE001 — never started this session
-            if snap is None:
-                raise
+        if snap is not None:
             return self.spark.createDataFrame(snap[1], snap[0])
-        if not self._owns_sink(sink_name):
-            df = self.spark.createDataFrame([], df.schema)
-        if snap is not None and df.isEmpty():
-            return self.spark.createDataFrame(snap[1], snap[0])
-        return df
+        return self.spark.createDataFrame(
+            [], self.spark.table(sink_name).schema
+        )
 
     def _apply_start_position(
         self,
@@ -2761,16 +2770,12 @@ class Engine:
                 if vd.get("sw_having"):
                     df = df.filter(F.expr(vd["sw_having"]))
                 return df
-            df = drop_partial_cols(
-                self._memory_sink_table(self._sink_name(vd))
+            return self._ttl_live_filter(
+                drop_partial_cols(
+                    self._memory_sink_table(self._sink_name(vd))
+                ),
+                vd,
             )
-            ttl, col = vd.get("ttl_seconds"), vd.get("ttl_column")
-            if ttl is not None and col is not None:
-                df = df.filter(
-                    F.col(col)
-                    >= F.current_timestamp() - F.expr(f"INTERVAL {ttl} SECOND")
-                )
-            return df
         df = self._read_view_store(view_name)
         if KB_COL in df.columns:
             # hash-bucket partition column — physical store layout, not
@@ -2793,12 +2798,7 @@ class Engine:
             # TTL rides the merge for touched buckets and a round-robin
             # sweep covers the rest within n batches; this read-time
             # filter guarantees sweep lag is never visible to queries.
-            ttl, col = vd.get("ttl_seconds"), vd.get("ttl_column")
-            if ttl is not None and col is not None:
-                df = df.filter(
-                    F.col(col)
-                    >= F.current_timestamp() - F.expr(f"INTERVAL {ttl} SECOND")
-                )
+            df = self._ttl_live_filter(df, vd)
         return df
 
     def sql(self, query: str) -> DataFrame:
@@ -2812,7 +2812,9 @@ class Engine:
         here (use view_table()/combine() for TTL-filtered reads; the
         name cannot be rebound without detaching the standing sink). A
         sink another metadata dir started under the same view name is
-        never read: the name resolves to this engine's own view_table.
+        never read, nor is a sink restarted empty while view_table
+        serves its pinned snapshot: then the name resolves to this
+        engine's own view_table.
         Every other materialization (parquet, sw, hidden partials)
         resolves through view_table and honors TTL."""
         # PipelineDB spelling output_of('v') → the <v>_osrel relation;
@@ -2847,10 +2849,12 @@ class Engine:
                     self.view_table(name).createOrReplaceTempView(name)
                 except Exception:
                     continue  # not materialized yet — leave unregistered
-            elif name.lower() in ids and not self._owns_sink(name):
-                # the session's sink under this name belongs to another
-                # metadata dir: read this engine's view under a private
-                # name (replacing the public one would detach that sink)
+            elif name.lower() in ids and not self._serves_live_sink(name):
+                # the session's sink under this name is not what
+                # view_table serves — another metadata dir owns it, or
+                # it restarted empty under a pinned snapshot: read this
+                # engine's view under a private name (replacing the
+                # public one would detach the standing sink)
                 try:
                     own = self.view_table(name)
                 except Exception:

@@ -1,119 +1,96 @@
-"""End-to-end continuous-view gate query (VERDICT r08 "Next round" #6).
+"""The 24 streaming gate rows: the engine's standing-query loop under
+the DuckDB oracle (VERDICT r08 "Next round" #6 onwards).
 
 The standing-query engine (streams, continuous views, exactly-once
 ingest — the reference's core loop, README.md:34-129 and
-pipeline_kinesis--0.9.0.sql:54-60) is otherwise pytest-only: the DuckDB
-oracle can't run a streaming engine. This row closes that gap with a
-DETERMINISTIC replay — a fixed subset of the events table is written as
-kinesis-style record files, consumed through a real Engine into a real
-continuous view, and the view's final counts are returned. Exactly-once
-ingest makes the matrel contents a pure function of the input subset,
-so a plain GROUP BY over the same subset oracles it.
+pipeline_kinesis--0.9.0.sql:54-60) cannot run inside the DuckDB
+oracle. Each row here closes that gap with a DETERMINISTIC replay: a
+fixed subset of the events table (a hash-style modulus on user_id) is
+written as kinesis-style record files or served on a fake Kinesis wire,
+consumed through a real Engine into real continuous views, and the
+views' final contents are returned. Exactly-once ingest makes every
+view a pure function of its input slice, so a plain GROUP BY over the
+same slice oracles it.
 
-Kept deliberately small (a hash-style modulus picks ~2.4% of events):
-this is a correctness gate on the engine loop, not an ingest benchmark
-(bench.py's _ingest_throughput prices that path).
+Every row is only its own choreography (what it declares, feeds,
+pauses, restarts or faults). The work they share is one harness,
+``_run_gate`` + ``_Gate``:
+
+- the slice, and the typed empty result when it is empty (returned
+  before any temp dir exists);
+- one temp root and unique name tag per invocation — the driver may
+  run a row twice in one Spark session, and spool/checkpoint names
+  must never be reused across engine instances;
+- Engine construction with the shared gate settings (and a second
+  engine over the same metadata dir for the restart row);
+- feeding record files through ``_as_records``, the counts view, the
+  drain, the row extraction and the ``__archive_rows__`` sentinel;
+- one teardown that stops every engine, served wire and started
+  query and removes the root, even when the row body raises.
+
+Kept deliberately small (each slice is a few % of events): these are
+correctness gates on the engine loop, not ingest benchmarks
+(perfbench/ and bench.py's _ingest_throughput price that path).
 """
 
 from __future__ import annotations
 
+import contextlib
+import json
 import shutil
+import sys
 import tempfile
+import threading
+import time
 import uuid
+import weakref as _weakref
+from datetime import datetime, timedelta
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pipeline_kinesis_spark import sqlapi
+from pipeline_kinesis_spark.engine import Engine
 from pipeline_kinesis_spark.io import load
 from pipeline_kinesis_spark.operators import QuerySpec
+from pipeline_kinesis_spark.sources.fake_kinesis import (
+    FakeKinesisClient,
+    serve_fake_kinesis,
+)
+from pipeline_kinesis_spark.sources.file_replay import (
+    FileReplaySource,
+    write_record_file,
+)
 from pipeline_kinesis_spark.streaming.pinned_start import pinned_shuffle
+from pipeline_kinesis_spark.streaming.stateful import sessionize
 
-
-def streaming_view_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """events subset → record files → Engine consume → continuous view
-    `SELECT event_type, count(*), sum(event_id) GROUP BY event_type` →
-    final matrel contents.
-
-    Every engine object gets a fresh unique name and metadata dir: the
-    driver may invoke this twice in one Spark session, and spool/
-    checkpoint names must never be reused across engine instances."""
-    from pipeline_kinesis_spark.engine import Engine
-    from pipeline_kinesis_spark.sources.file_replay import (
-        write_record_file,
-    )
-
-    ev = _events_subset(spark, sf_dir, 41, 7)
-    tag = uuid.uuid4().hex[:8]
-    root = tempfile.mkdtemp(prefix=f"svc_{tag}_")
-    stream_dir = f"{root}/events_replay"
-    write_record_file(
-        stream_dir,
-        [
-            {
-                "data": f"{r.event_id},{r.event_type}",
-                "partition_key": str(r.user_id),
-                "shard_id": f"shardId-{r.user_id % 4:012d}",
-                "sequence_number": f"{r.event_id:056d}",
-            }
-            for r in ev
-        ],
-    )
-    eng = Engine(
-        spark,
-        metadata_dir=f"{root}/meta",
-        # gate rows replay a small fixed file; poll tightly so the
-        # drain wait prices the data path, not inter-batch idle
-        trigger_interval="50 milliseconds",
-        # ~1k-row slice: state-store count should follow the data, not
-        # the session's 32-partition default (VERDICT r11 #2 — the gate
-        # bill is micro-batch fixed cost per shuffle partition)
-        shuffle_partitions=4,
-    )
-    stream, view = f"svc_stream_{tag}", f"svc_view_{tag}"
-    try:
-        eng.add_endpoint(f"svc_ep_{tag}", url=root)
-        eng.create_stream(stream, "event_id BIGINT, event_type STRING")
-        eng.create_continuous_view(
-            view,
-            f"SELECT event_type, count(*) AS n_events, "
-            f"sum(event_id) AS sum_event_id FROM {stream} "
-            f"GROUP BY event_type",
-            stream=stream,
-        )
-        eng.consume_begin(
-            f"svc_ep_{tag}", "events_replay", stream,
-            fmt="csv", delimiter=",",
-        )
-        eng.wait_for_ingest(timeout_s=180)
-        rows = [
-            (r.event_type, int(r.n_events), int(r.sum_event_id))
-            for r in eng.view_table(view).collect()
-        ]
-    finally:
-        eng.consume_end_all()
-        shutil.rmtree(root, ignore_errors=True)
-    return spark.createDataFrame(
-        rows, "event_type STRING, n_events BIGINT, sum_event_id BIGINT"
-    )
-
-
-STREAMING_VIEW_COUNTS_SQL = """
-SELECT event_type,
-       CAST(count(*) AS BIGINT) AS n_events,
-       CAST(sum(event_id) AS BIGINT) AS sum_event_id
-FROM events
-WHERE user_id % 41 = 7
-GROUP BY event_type
-"""
-
-
+# -- the gate harness ----------------------------------------------------
+#
+# Gate rows replay a small fixed file: standing queries poll tightly so
+# the drain wait prices the data path, not inter-batch idle, and run at
+# 4 shuffle partitions — a ~1k-row slice's state-store count should
+# follow the data, not the session's 32-partition default (VERDICT r11
+# #2: the gate bill is micro-batch fixed cost per shuffle partition).
+_TRIGGER = "50 milliseconds"
+_SHUFFLE_PARTITIONS = 4
+_DRAIN_S = 180
+# the record-file stream every file-fed row consumes
+_REPLAY = "events_replay"
+# sequence base of a row's later batch: strictly above every event_id,
+# so it lands after everything already consumed on every shard
+_BATCH2 = 10**12
+_EVENT_COLS = "event_id BIGINT, event_type STRING"
+_COUNTS_SQL = (
+    "SELECT event_type, count(*) AS n_events, "
+    "sum(event_id) AS sum_event_id FROM {src} GROUP BY event_type"
+)
 _RESULT_SCHEMA = "event_type STRING, n_events BIGINT, sum_event_id BIGINT"
 
 
-# One projected events collect per sf_dir, shared by all eleven gate
-# rows: each row needs a different (mod, rem) slice, and eleven separate
-# parquet scans + collects cost ~0.5-1 s each at sf0.1 — ~a quarter of
-# the streaming rows' gate-window bill (VERDICT r09 "what's wrong" #2).
+# One projected events collect per sf_dir, shared by all the gate rows:
+# each row needs a different (mod, rem) slice, and one parquet scan +
+# collect per row costs ~0.5-1 s each at sf0.1 — ~a quarter of the
+# streaming rows' gate-window bill (VERDICT r09 "what's wrong" #2).
 # The projection is 3 small columns (~100k rows / ~3 MB at sf0.1), so
 # holding ONE sf_dir's copy on the driver is cheap; a different sf_dir
 # evicts it. Filtering a driver-side list is gate-fixture construction
@@ -151,8 +128,8 @@ def _events_subset(spark: SparkSession, sf_dir: str, mod: int, rem: int):
 # and the datasource row then prices the data path (~7 s), not the
 # session setup. The warm query is a minimal 1-shard read over the same
 # in-process SigV4 HTTP wire the real row uses, unnamed (tests only
-# assert on NAMED active queries), env-restoring, and failure-silent:
-# a failed warm costs nothing but the cold start it meant to hide.
+# assert on NAMED active queries), and failure-silent: a failed warm
+# costs nothing but the cold start it meant to hide.
 #
 # Keyed on the SparkSession OBJECT via weakref (ADVICE r13 #2): keying
 # on id(spark) risked both id-reuse after a GC'd session (a genuinely
@@ -161,16 +138,12 @@ def _events_subset(spark: SparkSession, sf_dir: str, mod: int, rem: int):
 # alternate — each re-entry leaking a running query + HTTP server.
 # A WeakKeyDictionary keeps one warm per LIVE session and lets a dead
 # session's entry vanish with it.
-import weakref as _weakref
-
 _DS_PREWARM: "_weakref.WeakKeyDictionary" = _weakref.WeakKeyDictionary()
 
 
 def prewarm_datasource(spark: SparkSession):
     """Idempotent per Spark session: start (once) and return the warm
     thread so callers that need the machinery can join() it."""
-    import threading
-
     t = _DS_PREWARM.get(spark)
     if t is None:
         t = threading.Thread(
@@ -201,19 +174,11 @@ _DS_PREWARM_KEEP: list = []
 def _prewarm_datasource_work(spark: SparkSession) -> None:
     # NOTE deliberately no AWS_SHARED_CREDENTIALS_FILE save/restore
     # here (ADVICE r13 #1): nothing on this thread's path writes that
-    # env var in the DRIVER process (KinesisSource carries its credfile
-    # by option; env writes happen inside DataSource worker
-    # subprocesses), so a late `finally` restore was pure hazard — it
-    # wrote back a value captured minutes earlier, racing any gate row
-    # that set the var in between.
-    import time as _t
-
+    # variable (make_boto3_client scopes a credfile to its own botocore
+    # session), so a late `finally` restore would be pure hazard — it
+    # would write back a value captured minutes earlier.
     root = tempfile.mkdtemp(prefix="dswarm_")
     try:
-        from pipeline_kinesis_spark.sources.fake_kinesis import (
-            FakeKinesisClient,
-            serve_fake_kinesis,
-        )
         from pipeline_kinesis_spark.sources.kinesis import KinesisSource
 
         fake = FakeKinesisClient({"shardId-000": [b"warm"]})
@@ -239,31 +204,247 @@ def _prewarm_datasource_work(spark: SparkSession) -> None:
             .start()
         )
         _DS_PREWARM_KEEP.append((q, srv, fake))
-        deadline = _t.monotonic() + 90
-        while _t.monotonic() < deadline:
+        deadline = time.monotonic() + 90
+        while time.monotonic() < deadline:
             p = q.lastProgress
             # one committed batch means the runner process, module ship
             # and executor workers are all live
             if p is not None and p.get("batchId", -1) >= 1:
                 break
-            _t.sleep(0.2)
+            time.sleep(0.2)
     except Exception:
         pass  # a failed warm must never fail a gate row
 
 
-def _as_records(rows, seq_base: int = 0):
+def _as_records(rows, seq_base: int = 0, data=None, arrival=None):
     """events rows → kinesis-style records (4 shards by user_id;
     sequence = seq_base + event_id, so a later batch with a higher base
-    lands strictly after everything already consumed on every shard)."""
-    return [
-        {
-            "data": f"{r.event_id},{r.event_type}",
+    lands strictly after everything already consumed on every shard).
+    ``data`` maps a row to its payload (default "event_id,event_type");
+    ``arrival``, when given, maps it to approximate_arrival_timestamp."""
+    out = []
+    for r in rows:
+        rec = {
+            "data": data(r) if data else f"{r.event_id},{r.event_type}",
             "partition_key": str(r.user_id),
             "shard_id": f"shardId-{r.user_id % 4:012d}",
             "sequence_number": f"{seq_base + r.event_id:056d}",
         }
-        for r in rows
+        if arrival:
+            rec["approximate_arrival_timestamp"] = arrival(r)
+        out.append(rec)
+    return out
+
+
+def _count_rows(df: DataFrame) -> list:
+    """(event_type, n_events, sum_event_id) result rows of ``df``."""
+    return [
+        (r.event_type, int(r.n_events), int(r.sum_event_id))
+        for r in df.collect()
     ]
+
+
+class _Gate:
+    """One gate row's replay: its slice (``ev``), temp root, unique
+    names, current engine (``eng``) and teardown registrations. Built
+    only by _run_gate, which runs the teardown."""
+
+    def __init__(self, spark, ev, prefix: str, tag: str, root: str, stack):
+        self.spark, self.ev, self.root = spark, ev, root
+        self.prefix, self.tag = prefix, tag
+        self._stack = stack
+        self.eng: Engine | None = None
+        self.ep, self.stream, self.view = (
+            self.name("ep"), self.name("stream"), self.name("view")
+        )
+
+    def name(self, kind: str) -> str:
+        return f"{self.prefix}_{kind}_{self.tag}"
+
+    def rows(self, mod: int, *rems: int) -> list:
+        """The slice's rows whose event_id % mod is one of ``rems``."""
+        return [r for r in self.ev if r.event_id % mod in rems]
+
+    def defer(self, fn, *args) -> None:
+        """Run ``fn(*args)`` at teardown (before anything registered
+        earlier)."""
+        self._stack.callback(fn, *args)
+
+    def engine(self, cols: str | None = _EVENT_COLS, **endpoint) -> Engine:
+        """A new current Engine over the row's metadata dir, stopped at
+        teardown. With ``cols`` it also declares the row's endpoint — a
+        file endpoint at the root unless ``endpoint`` gives
+        add_endpoint's region/credfile/url — and its stream."""
+        eng = Engine(
+            self.spark,
+            metadata_dir=f"{self.root}/meta",
+            trigger_interval=_TRIGGER,
+            shuffle_partitions=_SHUFFLE_PARTITIONS,
+        )
+        self.defer(eng.consume_end_all)
+        self.eng = eng
+        if cols is not None:
+            eng.add_endpoint(self.ep, **(endpoint or {"url": self.root}))
+            eng.create_stream(self.stream, cols)
+        return eng
+
+    def restart(self) -> Engine:
+        """The process-restart analog: a full stop of the current
+        engine — no live query may stay behind the restarted engine's
+        back — then a second Engine over the same metadata dir
+        (catalog reload, cold checkpoint resume)."""
+        self.eng.consume_end_all()
+        return self.engine(cols=None)
+
+    def write(self, records: list, stream: str = _REPLAY) -> str:
+        """Append one record file to the replay dir ``stream``; returns
+        the dir."""
+        path = f"{self.root}/{stream}"
+        write_record_file(path, records)
+        return path
+
+    def feed(self, rows, seq_base: int = 0, **fields) -> None:
+        """Append events rows to the replay (see _as_records)."""
+        self.write(_as_records(rows, seq_base, **fields))
+
+    def serve(self, fake) -> str:
+        """Front ``fake`` with the in-process SigV4 HTTP wire, shut down
+        at teardown; returns its url."""
+        srv, url = serve_fake_kinesis(fake)
+        self.defer(srv.server_close)
+        self.defer(srv.shutdown)
+        return url
+
+    def counts_view(self, src: str | None = None, **opts) -> None:
+        """Declare the row's view as the counts view over ``src``
+        (default: the row's stream)."""
+        src = src or self.stream
+        self.eng.create_continuous_view(
+            self.view, _COUNTS_SQL.format(src=src), stream=src, **opts
+        )
+
+    def begin(self, fmt: str = "csv", **opts):
+        """consume_begin the row's endpoint → stream over the replay
+        (comma-delimited csv unless told otherwise)."""
+        if fmt == "csv":
+            opts.setdefault("delimiter", ",")
+        return self.eng.consume_begin(
+            self.ep, _REPLAY, self.stream, fmt=fmt, **opts
+        )
+
+    def drain(self, timeout_s: float = _DRAIN_S) -> None:
+        self.eng.wait_for_ingest(timeout_s=timeout_s)
+
+    def counts(self, view: str | None = None, archive: bool = False):
+        """The counts view's rows; with ``archive`` also the durable
+        archive's row count as the ('__archive_rows__', n, n)
+        exactly-once sentinel — a dupe the view's aggregate absorbs but
+        the archive kept twice still fails."""
+        rows = _count_rows(self.eng.view_table(view or self.view))
+        if archive:
+            n = self.eng.stream_table(self.stream).count()
+            rows.append(("__archive_rows__", n, n))
+        return rows
+
+    def memory_query(self, df: DataFrame):
+        """Start ``df`` as an append-mode memory query named after the
+        row, stopped at teardown; returns (query, table name). The
+        query's shuffle width is pinned at start (streaming queries
+        snapshot the conf): every stateful operator pays its state
+        stores per shuffle partition — applyInPandasWithState also one
+        Arrow-batched Python worker task, a stream-stream join FOUR
+        stores (keyed + key-with-index, each side) — so a ~1k-row
+        replay at the session default would be priced by partition
+        count, not data."""
+        name = f"{self.prefix}_{self.tag}"
+        with pinned_shuffle(self.spark, _SHUFFLE_PARTITIONS):
+            q = (
+                df.writeStream.format("memory")
+                .queryName(name)
+                .outputMode("append")
+                .option("checkpointLocation", f"{self.root}/ck")
+                .start()
+            )
+        self.defer(q.stop)
+        return q, name
+
+
+def _run_gate(
+    spark: SparkSession,
+    sf_dir: str,
+    mod: int,
+    rem: int,
+    prefix: str,
+    body,
+    schema: str = _RESULT_SCHEMA,
+) -> DataFrame:
+    """Run one gate row over the slice user_id % mod == rem. An empty
+    slice returns the typed empty result before any temp dir exists;
+    otherwise ``body(gate)`` runs the row's choreography and returns
+    its result rows. One teardown — consume_end_all on every engine
+    the row built, every served wire and started query stopped, the
+    temp root removed — runs whether or not the body raised."""
+    ev = _events_subset(spark, sf_dir, mod, rem)
+    if not ev:
+        return spark.createDataFrame([], schema)
+    tag = uuid.uuid4().hex[:8]
+    with contextlib.ExitStack() as stack:
+        root = tempfile.mkdtemp(prefix=f"{prefix}_{tag}_")
+        stack.callback(shutil.rmtree, root, ignore_errors=True)
+        rows = body(_Gate(spark, ev, prefix, tag, root, stack))
+    return spark.createDataFrame(rows, schema)
+
+
+# sliding-window rows' planted eras (streaming_sw_recombine and the two
+# sketch rows): year 2000 is expired for any plausible 'now' under a
+# 1-hour window; year 2099 stays inside the trailing window until 2099
+_SW_ALIVE = datetime(2099, 1, 1, 10, 0, 0)
+_SW_DEAD = datetime(2000, 1, 1, 10, 0, 0)
+
+
+def _sw_slot(r):
+    """A sliding-window row's planted step slot: None (expired era) for
+    event_id % 3 == 0, else its offset in seconds past _SW_ALIVE —
+    (event_id % 5) * 180 for rem 1, 540 + (event_id % 2) * 180 for
+    rem 2."""
+    rem = r.event_id % 3
+    if rem == 0:
+        return None
+    if rem == 1:
+        return (r.event_id % 5) * 180
+    return 540 + (r.event_id % 2) * 180
+
+
+def _sw_arrival(r) -> str:
+    s = _sw_slot(r)
+    when = _SW_DEAD if s is None else _SW_ALIVE + timedelta(seconds=s)
+    return when.isoformat()
+
+
+def streaming_view_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """events subset → record files → Engine consume → continuous view
+    `SELECT event_type, count(*), sum(event_id) GROUP BY event_type` →
+    final matrel contents."""
+
+    def body(g: _Gate) -> list:
+        g.feed(g.ev)
+        g.engine()
+        g.counts_view()
+        g.begin()
+        g.drain()
+        return g.counts()
+
+    return _run_gate(spark, sf_dir, 41, 7, "svc", body)
+
+
+STREAMING_VIEW_COUNTS_SQL = """
+SELECT event_type,
+       CAST(count(*) AS BIGINT) AS n_events,
+       CAST(sum(event_id) AS BIGINT) AS sum_event_id
+FROM events
+WHERE user_id % 41 = 7
+GROUP BY event_type
+"""
 
 
 def streaming_transform_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -276,63 +457,24 @@ def streaming_transform_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic, so the final matrel is a plain two-predicate GROUP BY
     for the oracle — a drift anywhere in the chain (transform predicate,
     sink append, chained-view wiring, exactly-once ingest) hash-fails."""
-    from pipeline_kinesis_spark.engine import Engine
-    from pipeline_kinesis_spark.sources.file_replay import (
-        write_record_file,
-    )
 
-    ev = _events_subset(spark, sf_dir, 37, 5)
-    tag = uuid.uuid4().hex[:8]
-    root = tempfile.mkdtemp(prefix=f"stc_{tag}_")
-    if not ev:
-        return spark.createDataFrame([], _RESULT_SCHEMA)
-    write_record_file(f"{root}/events_replay", _as_records(ev))
-    eng = Engine(
-        spark,
-        metadata_dir=f"{root}/meta",
-        # gate rows replay a small fixed file; poll tightly so the
-        # drain wait prices the data path, not inter-batch idle
-        trigger_interval="50 milliseconds",
-        # ~1k-row slice: state-store count should follow the data, not
-        # the session's 32-partition default (VERDICT r11 #2 — the gate
-        # bill is micro-batch fixed cost per shuffle partition)
-        shuffle_partitions=4,
-    )
-    stream, sink, view = (
-        f"stc_stream_{tag}",
-        f"stc_sink_{tag}",
-        f"stc_view_{tag}",
-    )
-    try:
-        eng.add_endpoint(f"stc_ep_{tag}", url=root)
-        eng.create_stream(stream, "event_id BIGINT, event_type STRING")
+    def body(g: _Gate) -> list:
+        g.feed(g.ev)
+        eng = g.engine()
+        sink = g.name("sink")
         eng.create_continuous_transform(
-            f"stc_even_{tag}",
-            f"SELECT event_id, event_type FROM {stream} "
+            g.name("even"),
+            f"SELECT event_id, event_type FROM {g.stream} "
             f"WHERE event_id % 2 = 0",
-            stream=stream,
+            stream=g.stream,
             sink_relation=sink,
         )
-        eng.create_continuous_view(
-            view,
-            f"SELECT event_type, count(*) AS n_events, "
-            f"sum(event_id) AS sum_event_id FROM {sink} "
-            f"GROUP BY event_type",
-            stream=sink,
-        )
-        eng.consume_begin(
-            f"stc_ep_{tag}", "events_replay", stream,
-            fmt="csv", delimiter=",",
-        )
-        eng.wait_for_ingest(timeout_s=180)
-        rows = [
-            (r.event_type, int(r.n_events), int(r.sum_event_id))
-            for r in eng.view_table(view).collect()
-        ]
-    finally:
-        eng.consume_end_all()
-        shutil.rmtree(root, ignore_errors=True)
-    return spark.createDataFrame(rows, _RESULT_SCHEMA)
+        g.counts_view(src=sink)
+        g.begin()
+        g.drain()
+        return g.counts()
+
+    return _run_gate(spark, sf_dir, 37, 5, "stc", body)
 
 
 STREAMING_TRANSFORM_CHAIN_SQL = """
@@ -357,82 +499,23 @@ def streaming_restart_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     store a pure function of the full subset: any duplicate or lost
     record across the restart shifts a count or a sum and hash-fails
     against the one-shot GROUP BY oracle."""
-    from pipeline_kinesis_spark.engine import Engine
-    from pipeline_kinesis_spark.sources.file_replay import (
-        write_record_file,
-    )
 
-    ev = _events_subset(spark, sf_dir, 43, 11)
-    tag = uuid.uuid4().hex[:8]
-    root = tempfile.mkdtemp(prefix=f"src_{tag}_")
-    if not ev:
-        return spark.createDataFrame([], _RESULT_SCHEMA)
-    first = [r for r in ev if r.event_id % 2 == 0]
-    second = [r for r in ev if r.event_id % 2 == 1]
-    write_record_file(f"{root}/events_replay", _as_records(first))
-    eng1 = Engine(
-        spark,
-        metadata_dir=f"{root}/meta",
-        # gate rows replay a small fixed file; poll tightly so the
-        # drain wait prices the data path, not inter-batch idle
-        trigger_interval="50 milliseconds",
-        # ~1k-row slice: state-store count should follow the data, not
-        # the session's 32-partition default (VERDICT r11 #2 — the gate
-        # bill is micro-batch fixed cost per shuffle partition)
-        shuffle_partitions=4,
-    )
-    eng2 = None
-    ep, stream, view = (
-        f"src_ep_{tag}",
-        f"src_stream_{tag}",
-        f"src_view_{tag}",
-    )
-    try:
-        eng1.add_endpoint(ep, url=root)
-        eng1.create_stream(stream, "event_id BIGINT, event_type STRING")
-        eng1.create_continuous_view(
-            view,
-            f"SELECT event_type, count(*) AS n_events, "
-            f"sum(event_id) AS sum_event_id FROM {stream} "
-            f"GROUP BY event_type",
-            stream=stream,
-            materialize="parquet_upsert",
-            key_cols=["event_type"],
-        )
-        eng1.consume_begin(
-            ep, "events_replay", stream, fmt="csv", delimiter=",",
-        )
-        eng1.wait_for_ingest(timeout_s=180)
-        # explicit full stop of the first engine BEFORE the second is
-        # constructed — the process-death analog must leave no live
-        # queries behind the restarted engine's back
-        eng1.consume_end_all()
+    def body(g: _Gate) -> list:
+        g.feed(g.rows(2, 0))
+        g.engine()
+        g.counts_view(materialize="parquet_upsert", key_cols=["event_type"])
+        g.begin()
+        g.drain()
+        g.restart()
         # the second half lands WHILE THE PIPELINE IS DOWN, at
         # sequence numbers above everything consumed; the restarted
         # engine must pick up exactly these
-        write_record_file(
-            f"{root}/events_replay", _as_records(second, seq_base=10**12)
-        )
-        eng2 = Engine(
-            spark,
-            metadata_dir=f"{root}/meta",
-            trigger_interval="50 milliseconds",
-            shuffle_partitions=4,
-        )
-        eng2.consume_begin(
-            ep, "events_replay", stream, fmt="csv", delimiter=",",
-        )
-        eng2.wait_for_ingest(timeout_s=180)
-        rows = [
-            (r.event_type, int(r.n_events), int(r.sum_event_id))
-            for r in eng2.view_table(view).collect()
-        ]
-    finally:
-        eng1.consume_end_all()
-        if eng2 is not None:
-            eng2.consume_end_all()
-        shutil.rmtree(root, ignore_errors=True)
-    return spark.createDataFrame(rows, _RESULT_SCHEMA)
+        g.feed(g.rows(2, 1), _BATCH2)
+        g.begin()
+        g.drain()
+        return g.counts()
+
+    return _run_gate(spark, sf_dir, 43, 11, "src", body)
 
 
 STREAMING_RESTART_COUNTS_SQL = """
@@ -471,64 +554,34 @@ def streaming_dead_letter_replay(
     ('__quarantined__', dl_before, dl_after) row — a missed
     quarantine, a lost or duplicated recovery, or a residue after
     replay each shift a value and hash-fail against the oracle."""
-    from pipeline_kinesis_spark.engine import Engine
-    from pipeline_kinesis_spark.sources.file_replay import (
-        write_record_file,
-    )
 
-    ev = _events_subset(spark, sf_dir, 53, 7)
-    tag = uuid.uuid4().hex[:8]
-    root = tempfile.mkdtemp(prefix=f"sdl_{tag}_")
-    if not ev:
-        return spark.createDataFrame([], _RESULT_SCHEMA)
-    write_record_file(
-        f"{root}/events_replay",
-        [
-            {
-                "data": (
-                    f"{r.event_id};{r.event_type}"
-                    if r.event_id % 5 == 0
-                    else f"{r.event_id},{r.event_type}"
-                ),
-                "partition_key": str(r.user_id),
-                "shard_id": f"shardId-{r.user_id % 4:012d}",
-                "sequence_number": f"{r.event_id:056d}",
-            }
-            for r in ev
-        ],
-    )
-    eng = Engine(
-        spark,
-        metadata_dir=f"{root}/meta",
-        trigger_interval="50 milliseconds",
-        shuffle_partitions=4,
-    )
-    ep, stream = f"sdl_ep_{tag}", f"sdl_stream_{tag}"
-    try:
-        eng.add_endpoint(ep, url=root)
-        eng.create_stream(stream, "event_id BIGINT, event_type STRING")
-        eng.consume_begin(
-            ep, "events_replay", stream, fmt="csv", delimiter=",",
+    def body(g: _Gate) -> list:
+        g.feed(
+            g.ev,
+            data=lambda r: (
+                f"{r.event_id};{r.event_type}"
+                if r.event_id % 5 == 0
+                else f"{r.event_id},{r.event_type}"
+            ),
         )
-        eng.wait_for_ingest(timeout_s=180)
-        dl_before = eng.dead_letters(stream).count()
-        eng.replay_dead_letters(stream, delimiter=";")
-        dl_after = eng.dead_letters(stream).count()
-        rows = [
-            (r.event_type, int(r.n_events), int(r.sum_event_id))
-            for r in eng.stream_table(stream)
+        eng = g.engine()
+        g.begin()
+        g.drain()
+        dl_before = eng.dead_letters(g.stream).count()
+        eng.replay_dead_letters(g.stream, delimiter=";")
+        dl_after = eng.dead_letters(g.stream).count()
+        rows = _count_rows(
+            eng.stream_table(g.stream)
             .groupBy("event_type")
             .agg(
                 F.count(F.lit(1)).alias("n_events"),
                 F.sum("event_id").alias("sum_event_id"),
             )
-            .collect()
-        ]
+        )
         rows.append(("__quarantined__", int(dl_before), int(dl_after)))
-    finally:
-        eng.consume_end_all()
-        shutil.rmtree(root, ignore_errors=True)
-    return spark.createDataFrame(rows, _RESULT_SCHEMA)
+        return rows
+
+    return _run_gate(spark, sf_dir, 53, 7, "sdl", body)
 
 
 STREAMING_DEAD_LETTER_REPLAY_SQL = """
@@ -564,65 +617,28 @@ def streaming_activate_resume(
     snapshot taken WHILE PAUSED: maintenance leaking through the pause
     inflates the snapshot, and any event lost across the resume
     deflates a final count — both hash-fail."""
-    from pipeline_kinesis_spark.engine import Engine
-    from pipeline_kinesis_spark.sources.file_replay import (
-        write_record_file,
-    )
 
-    ev = _events_subset(spark, sf_dir, 29, 13)
-    tag = uuid.uuid4().hex[:8]
-    root = tempfile.mkdtemp(prefix=f"sar_{tag}_")
-    if not ev:
-        return spark.createDataFrame([], _RESULT_SCHEMA)
-    first = [r for r in ev if r.event_id % 2 == 0]
-    second = [r for r in ev if r.event_id % 2 == 1]
-    write_record_file(f"{root}/events_replay", _as_records(first))
-    eng = Engine(
-        spark,
-        metadata_dir=f"{root}/meta",
-        trigger_interval="50 milliseconds",
-        shuffle_partitions=4,
-    )
-    ep, stream, view = (
-        f"sar_ep_{tag}",
-        f"sar_stream_{tag}",
-        f"sar_view_{tag}",
-    )
-    try:
-        eng.add_endpoint(ep, url=root)
-        eng.create_stream(stream, "event_id BIGINT, event_type STRING")
-        eng.create_continuous_view(
-            view,
-            f"SELECT event_type, count(*) AS n_events, "
-            f"sum(event_id) AS sum_event_id FROM {stream} "
-            f"GROUP BY event_type",
-            stream=stream,
-        )
-        eng.consume_begin(
-            ep, "events_replay", stream, fmt="csv", delimiter=",",
-        )
-        eng.wait_for_ingest(timeout_s=180)
-        eng.deactivate(view)
+    def body(g: _Gate) -> list:
+        g.feed(g.rows(2, 0))
+        eng = g.engine()
+        g.counts_view()
+        g.begin()
+        g.drain()
+        eng.deactivate(g.view)
         # the odd half arrives while maintenance is PAUSED; the
         # consumer keeps archiving it into the stream
-        write_record_file(
-            f"{root}/events_replay", _as_records(second, seq_base=10**12)
-        )
-        eng.wait_for_ingest(timeout_s=180)
-        paused = eng.view_table(view).collect()
+        g.feed(g.rows(2, 1), _BATCH2)
+        g.drain()
+        paused = eng.view_table(g.view).collect()
         paused_n = sum(int(r.n_events) for r in paused)
         paused_sum = sum(int(r.sum_event_id) for r in paused)
-        eng.activate(view)
-        eng.wait_for_ingest(timeout_s=180)
-        rows = [
-            (r.event_type, int(r.n_events), int(r.sum_event_id))
-            for r in eng.view_table(view).collect()
-        ]
+        eng.activate(g.view)
+        g.drain()
+        rows = g.counts()
         rows.append(("__paused_total__", paused_n, paused_sum))
-    finally:
-        eng.consume_end_all()
-        shutil.rmtree(root, ignore_errors=True)
-    return spark.createDataFrame(rows, _RESULT_SCHEMA)
+        return rows
+
+    return _run_gate(spark, sf_dir, 29, 13, "sar", body)
 
 
 STREAMING_ACTIVATE_RESUME_SQL = """
@@ -659,71 +675,31 @@ def streaming_combine_regroup(
     partials MAINTAINED BY THE STANDING QUERY, end to end. event_ids
     are integers, so every partial sum is exact and the final division
     is one deterministic IEEE op — hash-comparable."""
-    from pipeline_kinesis_spark.engine import Engine
-    from pipeline_kinesis_spark.sources.file_replay import (
-        write_record_file,
-    )
 
-    ev = _events_subset(spark, sf_dir, 31, 3)
-    tag = uuid.uuid4().hex[:8]
-    root = tempfile.mkdtemp(prefix=f"scr_{tag}_")
-    if not ev:
-        return spark.createDataFrame(
-            [],
-            "event_type STRING, n_events BIGINT, "
-            "total_id BIGINT, mean_id DOUBLE",
+    def body(g: _Gate) -> list:
+        g.feed(
+            g.ev, data=lambda r: f"{r.event_id},{r.event_type},{r.user_id % 4}"
         )
-    write_record_file(
-        f"{root}/events_replay",
-        [
-            {
-                "data": f"{r.event_id},{r.event_type},{r.user_id % 4}",
-                "partition_key": str(r.user_id),
-                "shard_id": f"shardId-{r.user_id % 4:012d}",
-                "sequence_number": f"{r.event_id:056d}",
-            }
-            for r in ev
-        ],
-    )
-    eng = Engine(
-        spark,
-        metadata_dir=f"{root}/meta",
-        trigger_interval="50 milliseconds",
-        shuffle_partitions=4,
-    )
-    ep, stream, view = (
-        f"scr_ep_{tag}",
-        f"scr_stream_{tag}",
-        f"scr_view_{tag}",
-    )
-    try:
-        eng.add_endpoint(ep, url=root)
-        eng.create_stream(
-            stream, "event_id BIGINT, event_type STRING, ub BIGINT"
-        )
+        eng = g.engine("event_id BIGINT, event_type STRING, ub BIGINT")
         eng.create_continuous_view(
-            view,
+            g.view,
             f"SELECT event_type, ub, count(*) AS n_events, "
             f"sum(event_id) AS total_id, avg(event_id) AS mean_id "
-            f"FROM {stream} GROUP BY event_type, ub",
-            stream=stream,
+            f"FROM {g.stream} GROUP BY event_type, ub",
+            stream=g.stream,
         )
-        eng.consume_begin(
-            ep, "events_replay", stream, fmt="csv", delimiter=",",
-        )
-        eng.wait_for_ingest(timeout_s=180)
-        out = eng.combine(view, ["event_type"]).select(
+        g.begin()
+        g.drain()
+        out = eng.combine(g.view, ["event_type"]).select(
             "event_type",
             F.col("n_events").cast("long").alias("n_events"),
             F.col("total_id").cast("long").alias("total_id"),
             F.col("mean_id").cast("double").alias("mean_id"),
         )
-        rows = [tuple(r) for r in out.collect()]
-    finally:
-        eng.consume_end_all()
-        shutil.rmtree(root, ignore_errors=True)
-    return spark.createDataFrame(
-        rows,
+        return [tuple(r) for r in out.collect()]
+
+    return _run_gate(
+        spark, sf_dir, 31, 3, "scr", body,
         "event_type STRING, n_events BIGINT, "
         "total_id BIGINT, mean_id DOUBLE",
     )
@@ -765,39 +741,11 @@ def streaming_osrel_telescope(
     invariant to them and equals the final count — a delta emitted
     twice, lost, or carrying a stale `old` breaks the telescope and
     hash-fails against the plain GROUP BY oracle."""
-    from pipeline_kinesis_spark.engine import Engine
-    from pipeline_kinesis_spark.sources.file_replay import (
-        write_record_file,
-    )
 
-    ev = _events_subset(spark, sf_dir, 47, 9)
-    tag = uuid.uuid4().hex[:8]
-    root = tempfile.mkdtemp(prefix=f"sot_{tag}_")
-    if not ev:
-        return spark.createDataFrame([], _RESULT_SCHEMA)
-    first = [r for r in ev if r.event_id % 2 == 0]
-    second = [r for r in ev if r.event_id % 2 == 1]
-    write_record_file(f"{root}/events_replay", _as_records(first))
-    eng = Engine(
-        spark,
-        metadata_dir=f"{root}/meta",
-        trigger_interval="50 milliseconds",
-        shuffle_partitions=4,
-    )
-    ep, stream, view = (
-        f"sot_ep_{tag}",
-        f"sot_stream_{tag}",
-        f"sot_view_{tag}",
-    )
-    try:
-        eng.add_endpoint(ep, url=root)
-        eng.create_stream(stream, "event_id BIGINT, event_type STRING")
-        eng.create_continuous_view(
-            view,
-            f"SELECT event_type, count(*) AS n_events, "
-            f"sum(event_id) AS sum_event_id FROM {stream} "
-            f"GROUP BY event_type",
-            stream=stream,
+    def body(g: _Gate) -> list:
+        g.feed(g.rows(2, 0))
+        eng = g.engine()
+        g.counts_view(
             materialize="parquet_upsert",
             key_cols=["event_type"],
             # the telescope needs the FULL delta history — opt out of
@@ -806,26 +754,21 @@ def streaming_osrel_telescope(
         )
         # emission requires a standing output-stream consumer
         eng.create_continuous_transform(
-            f"sot_audit_{tag}",
+            g.name("audit"),
             f"SELECT new.event_type AS event_type, "
-            f"new.n_events AS n_events FROM {view}_osrel",
-            stream=f"{view}_osrel",
-            sink_relation=f"sot_sink_{tag}",
+            f"new.n_events AS n_events FROM {g.view}_osrel",
+            stream=f"{g.view}_osrel",
+            sink_relation=g.name("sink"),
         )
-        eng.consume_begin(
-            ep, "events_replay", stream, fmt="csv", delimiter=",",
-        )
-        eng.wait_for_ingest(timeout_s=180)
+        g.begin()
+        g.drain()
         # phase two: every key's matrel row changes at least once more,
         # so the osrel history holds genuine (old != NULL) updates
-        write_record_file(
-            f"{root}/events_replay", _as_records(second, seq_base=10**12)
-        )
-        eng.wait_for_ingest(timeout_s=180)
-        deltas = eng.output_stream(view)
-        rows = [
-            (r.event_type, int(r.n_events), int(r.sum_event_id))
-            for r in deltas.groupBy(F.col("new.event_type").alias("event_type"))
+        g.feed(g.rows(2, 1), _BATCH2)
+        g.drain()
+        deltas = eng.output_stream(g.view)
+        return _count_rows(
+            deltas.groupBy(F.col("new.event_type").alias("event_type"))
             .agg(
                 F.sum(
                     F.col("new.n_events")
@@ -836,12 +779,9 @@ def streaming_osrel_telescope(
                     - F.coalesce(F.col("old.sum_event_id"), F.lit(0))
                 ).alias("sum_event_id"),
             )
-            .collect()
-        ]
-    finally:
-        eng.consume_end_all()
-        shutil.rmtree(root, ignore_errors=True)
-    return spark.createDataFrame(rows, _RESULT_SCHEMA)
+        )
+
+    return _run_gate(spark, sf_dir, 47, 9, "sot", body)
 
 
 STREAMING_OSREL_TELESCOPE_SQL = """
@@ -890,22 +830,6 @@ def streaming_watermark_drop(
     oracle is the closed-form GROUP BY that excludes the late rows —
     a view that accepts even one late row (or loses an on-time one)
     shifts a count and hash-fails."""
-    from datetime import datetime, timedelta
-
-    from pipeline_kinesis_spark.engine import Engine
-    from pipeline_kinesis_spark.sources.file_replay import (
-        write_record_file,
-    )
-
-    ev = _events_subset(spark, sf_dir, 59, 3)
-    tag = uuid.uuid4().hex[:8]
-    root = tempfile.mkdtemp(prefix=f"swd_{tag}_")
-    if not ev:
-        return spark.createDataFrame(
-            [],
-            "window_start TIMESTAMP, event_type STRING, "
-            "n_events BIGINT, sum_event_id BIGINT",
-        )
     base = datetime(2024, 1, 1, 10, 0, 0)
 
     def rec(event_id: int, event_type: str, when: datetime, seq: int):
@@ -919,66 +843,48 @@ def streaming_watermark_drop(
             "sequence_number": f"{seq:056d}",
         }
 
-    on_time = [r for r in ev if r.event_id % 3 != 0]
-    late = [r for r in ev if r.event_id % 3 == 0]
-    ts = lambda r: base + timedelta(minutes=r.event_id % 60)  # noqa: E731
-    batch1 = [rec(r.event_id, r.event_type, ts(r), r.event_id)
-              for r in on_time]
-    # watermark-advancing sentinel: HIGHEST sequence in the file, so
-    # on the single shard it is consumed last
-    batch1.append(rec(0, "__advance__", datetime(2024, 1, 1, 23, 0), 10**11))
-    batch2 = [rec(r.event_id, r.event_type, ts(r), 10**12 + r.event_id)
-              for r in late]
-    write_record_file(f"{root}/events_replay", batch1)
-    eng = Engine(
-        spark,
-        metadata_dir=f"{root}/meta",
-        trigger_interval="50 milliseconds",
-        shuffle_partitions=4,
-    )
-    ep, stream, view = (
-        f"swd_ep_{tag}",
-        f"swd_stream_{tag}",
-        f"swd_view_{tag}",
-    )
-    try:
-        eng.add_endpoint(ep, url=root)
-        eng.create_stream(
-            stream,
-            "event_id BIGINT, event_type STRING, event_time TIMESTAMP",
+    def body(g: _Gate) -> list:
+        ts = lambda r: base + timedelta(minutes=r.event_id % 60)  # noqa: E731
+        batch1 = [rec(r.event_id, r.event_type, ts(r), r.event_id)
+                  for r in g.rows(3, 1, 2)]
+        # watermark-advancing sentinel: HIGHEST sequence in the file, so
+        # on the single shard it is consumed last
+        batch1.append(
+            rec(0, "__advance__", datetime(2024, 1, 1, 23, 0), 10**11)
+        )
+        g.write(batch1)
+        eng = g.engine(
+            "event_id BIGINT, event_type STRING, event_time TIMESTAMP"
         )
         eng.create_continuous_view(
-            view,
+            g.view,
             f"SELECT window(event_time, '30 minutes').start "
             f"AS window_start, event_type, "
             f"count(*) AS n_events, sum(event_id) AS sum_event_id "
-            f"FROM {stream} "
+            f"FROM {g.stream} "
             f"GROUP BY window(event_time, '30 minutes'), event_type",
-            stream=stream,
+            stream=g.stream,
             output_mode="append",
             watermark_column="event_time",
             watermark_delay_seconds=600,
         )
-        eng.consume_begin(
-            ep, "events_replay", stream, fmt="csv", delimiter=",",
-        )
-        eng.wait_for_ingest(timeout_s=180)
-        # the late half lands only after batch 1 fully drained — the
+        g.begin()
+        g.drain()
+        # the late third lands only after batch 1 fully drained — the
         # watermark the standing query holds is already 22:50
-        write_record_file(f"{root}/events_replay", batch2)
-        eng.wait_for_ingest(timeout_s=180)
-        rows = [
+        g.write([rec(r.event_id, r.event_type, ts(r), _BATCH2 + r.event_id)
+                 for r in g.rows(3, 0)])
+        g.drain()
+        return [
             (r.window_start, r.event_type, int(r.n_events),
              int(r.sum_event_id))
-            for r in eng.view_table(view)
+            for r in eng.view_table(g.view)
             .filter("event_type <> '__advance__'")
             .collect()
         ]
-    finally:
-        eng.consume_end_all()
-        shutil.rmtree(root, ignore_errors=True)
-    return spark.createDataFrame(
-        rows,
+
+    return _run_gate(
+        spark, sf_dir, 59, 3, "swd", body,
         "window_start TIMESTAMP, event_type STRING, "
         "n_events BIGINT, sum_event_id BIGINT",
     )
@@ -1016,72 +922,32 @@ def streaming_dim_join_counts(
     join+GROUP BY oracles it: a dropped/duplicated stream row, a wrong
     join key, or a stale dimension snapshot all shift a count or a sum
     and hash-fail."""
-    from pipeline_kinesis_spark.engine import Engine
-    from pipeline_kinesis_spark.sources.file_replay import (
-        write_record_file,
-    )
 
-    ev = _events_subset(spark, sf_dir, 61, 5)
-    tag = uuid.uuid4().hex[:8]
-    root = tempfile.mkdtemp(prefix=f"sdj_{tag}_")
-    if not ev:
-        return spark.createDataFrame(
-            [], "n_name STRING, n_events BIGINT, sum_event_id BIGINT"
-        )
-    write_record_file(
-        f"{root}/events_replay",
-        [
-            {
-                "data": f"{r.event_id},{r.event_type},{r.user_id}",
-                "partition_key": str(r.user_id),
-                "shard_id": f"shardId-{r.user_id % 4:012d}",
-                "sequence_number": f"{r.event_id:056d}",
-            }
-            for r in ev
-        ],
-    )
-    eng = Engine(
-        spark,
-        metadata_dir=f"{root}/meta",
-        trigger_interval="50 milliseconds",
-        shuffle_partitions=4,
-    )
-    ep, stream, view, dim = (
-        f"sdj_ep_{tag}",
-        f"sdj_stream_{tag}",
-        f"sdj_view_{tag}",
-        f"sdj_nation_{tag}",
-    )
-    load(spark, sf_dir, "nation").createOrReplaceTempView(dim)
-    try:
-        eng.add_endpoint(ep, url=root)
-        eng.create_stream(
-            stream,
-            "event_id BIGINT, event_type STRING, user_id BIGINT",
-        )
+    def body(g: _Gate) -> list:
+        g.feed(g.ev, data=lambda r: f"{r.event_id},{r.event_type},{r.user_id}")
+        dim = g.name("nation")
+        load(spark, sf_dir, "nation").createOrReplaceTempView(dim)
+        g.defer(spark.catalog.dropTempView, dim)
+        eng = g.engine("event_id BIGINT, event_type STRING, user_id BIGINT")
         eng.create_continuous_view(
-            view,
+            g.view,
             f"SELECT n.n_name AS n_name, count(*) AS n_events, "
             f"sum(s.event_id) AS sum_event_id "
-            f"FROM {stream} s JOIN {dim} n "
+            f"FROM {g.stream} s JOIN {dim} n "
             f"ON s.user_id % 25 = n.n_nationkey "
             f"GROUP BY n.n_name",
-            stream=stream,
+            stream=g.stream,
         )
-        eng.consume_begin(
-            ep, "events_replay", stream, fmt="csv", delimiter=",",
-        )
-        eng.wait_for_ingest(timeout_s=180)
-        rows = [
+        g.begin()
+        g.drain()
+        return [
             (r.n_name, int(r.n_events), int(r.sum_event_id))
-            for r in eng.view_table(view).collect()
+            for r in eng.view_table(g.view).collect()
         ]
-    finally:
-        eng.consume_end_all()
-        spark.catalog.dropTempView(dim)
-        shutil.rmtree(root, ignore_errors=True)
-    return spark.createDataFrame(
-        rows, "n_name STRING, n_events BIGINT, sum_event_id BIGINT"
+
+    return _run_gate(
+        spark, sf_dir, 61, 5, "sdj", body,
+        "n_name STRING, n_events BIGINT, sum_event_id BIGINT",
     )
 
 
@@ -1117,90 +983,44 @@ def streaming_sessionize_payloads(
     event times. A state machine that drops/duplicates an event,
     mis-merges runs across batches, or double-emits on timeout shifts
     n_events/duration and hash-fails."""
-    from datetime import datetime, timedelta
-
-    from pipeline_kinesis_spark.sources.file_replay import (
-        FileReplaySource,
-        write_record_file,
-    )
-    from pipeline_kinesis_spark.streaming.stateful import sessionize
-
-    ev = _events_subset(spark, sf_dir, 67, 7)
-    tag = uuid.uuid4().hex[:8]
-    root = tempfile.mkdtemp(prefix=f"ssp_{tag}_")
-    schema = (
-        "key STRING, session_start TIMESTAMP, session_end TIMESTAMP, "
-        "n_events BIGINT, duration_secs DOUBLE"
-    )
-    if not ev:
-        return spark.createDataFrame([], schema)
     base = datetime(2024, 1, 1, 0, 0, 0)
-    data = sorted(
-        (base + timedelta(minutes=r.event_id % 240), r.user_id, r.event_id)
-        for r in ev
-    )
-    src = f"{root}/events_replay"
-    write_record_file(
-        src,
-        [
-            {
-                "data": str(uid),
-                "approximate_arrival_timestamp": ts.strftime(
-                    "%Y-%m-%dT%H:%M:%S"
-                ),
-                "sequence_number": f"{i:056d}",
-                "shard_id": "shardId-000000000000",
-            }
-            for i, (ts, uid, _eid) in enumerate(data)
-        ],
-    )
-    records = FileReplaySource(src).read_stream(spark)
-    sessions = sessionize(
-        records,
-        key_col="data",
-        ts_col="approximate_arrival_timestamp",
-        gap_secs=300,
-        watermark_delay="10 minutes",
-    )
-    name = f"ssp_{tag}"
-    # pin the query's shuffle width at start (streaming queries
-    # snapshot the conf): applyInPandasWithState spins one state store
-    # AND one Arrow-batched Python worker task per shuffle partition —
-    # under a host session's default 200 partitions this ~1k-row gate
-    # replay would pay 200 store inits per batch
-    with pinned_shuffle(spark, 4):
-        q = (
-            sessions.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", f"{root}/ck")
-            .start()
+
+    def rec(data: str, when: datetime, seq: int) -> dict:
+        return {
+            "data": data,
+            "approximate_arrival_timestamp": when.strftime(
+                "%Y-%m-%dT%H:%M:%S"
+            ),
+            "sequence_number": f"{seq:056d}",
+            "shard_id": "shardId-000000000000",
+        }
+
+    def body(g: _Gate) -> list:
+        data = sorted(
+            (base + timedelta(minutes=r.event_id % 240), r.user_id,
+             r.event_id)
+            for r in g.ev
         )
-    try:
+        src = g.write([
+            rec(str(uid), ts, i) for i, (ts, uid, _eid) in enumerate(data)
+        ])
+        q, name = g.memory_query(sessionize(
+            FileReplaySource(src).read_stream(spark),
+            key_col="data",
+            ts_col="approximate_arrival_timestamp",
+            gap_secs=300,
+            watermark_delay="10 minutes",
+        ))
         q.processAllAvailable()
-
-        def sentinel(i: int, when: datetime) -> None:
-            write_record_file(
-                src,
-                [
-                    {
-                        "data": "__wm__",
-                        "approximate_arrival_timestamp": when.strftime(
-                            "%Y-%m-%dT%H:%M:%S"
-                        ),
-                        "sequence_number": f"{10**12 + i:056d}",
-                        "shard_id": "shardId-000000000000",
-                    }
-                ],
-            )
-            q.processAllAvailable()
-
         # sentinel 1 advances the watermark past every session's
         # last + gap; sentinel 2 triggers the batch in which the
         # event-time timeouts (evaluated against that watermark) fire
-        sentinel(0, datetime(2024, 1, 3, 0, 0))
-        sentinel(1, datetime(2024, 1, 3, 0, 1))
-        rows = [
+        for i, when in enumerate(
+            (datetime(2024, 1, 3, 0, 0), datetime(2024, 1, 3, 0, 1))
+        ):
+            g.write([rec("__wm__", when, _BATCH2 + i)])
+            q.processAllAvailable()
+        return [
             (
                 r.key,
                 r.session_start,
@@ -1212,10 +1032,12 @@ def streaming_sessionize_payloads(
             .filter("key <> '__wm__'")
             .collect()
         ]
-    finally:
-        q.stop()
-        shutil.rmtree(root, ignore_errors=True)
-    return spark.createDataFrame(rows, schema)
+
+    return _run_gate(
+        spark, sf_dir, 67, 7, "ssp", body,
+        "key STRING, session_start TIMESTAMP, session_end TIMESTAMP, "
+        "n_events BIGINT, duration_secs DOUBLE",
+    )
 
 
 STREAMING_SESSIONIZE_PAYLOADS_SQL = """
@@ -1277,43 +1099,24 @@ def streaming_stream_join_pairs(
     range predicate. A pair lost (state evicted too early), duplicated
     (re-emitted on redelivery), or matched past the interval shifts a
     count and hash-fails."""
-    from datetime import datetime, timedelta
-
-    from pipeline_kinesis_spark.sources.file_replay import (
-        FileReplaySource,
-        write_record_file,
-    )
-
-    ev = _events_subset(spark, sf_dir, 71, 11)
-    tag = uuid.uuid4().hex[:8]
-    root = tempfile.mkdtemp(prefix=f"ssj_{tag}_")
-    schema = "user_id BIGINT, n_pairs BIGINT, sum_pair_ids BIGINT"
-    if not ev:
-        return spark.createDataFrame([], schema)
     base = datetime(2024, 1, 1, 0, 0, 0)
 
-    def recs(rows):
-        return [
-            {
-                "data": f"{r.event_id},{r.user_id}",
-                "approximate_arrival_timestamp": (
-                    base + timedelta(minutes=r.event_id % 120)
-                ).strftime("%Y-%m-%dT%H:%M:%S"),
-                "sequence_number": f"{r.event_id:056d}",
-                "shard_id": "shardId-000000000000",
-            }
-            for r in rows
-        ]
-
-    write_record_file(
-        f"{root}/clicks", recs([r for r in ev if r.event_id % 2 == 0])
-    )
-    write_record_file(
-        f"{root}/views", recs([r for r in ev if r.event_id % 2 == 1])
-    )
-
-    def side(dir_name: str, prefix: str) -> DataFrame:
-        raw = FileReplaySource(f"{root}/{dir_name}").read_stream(spark)
+    def side(g: _Gate, rows, dir_name: str, prefix: str) -> DataFrame:
+        path = g.write(
+            [
+                {
+                    "data": f"{r.event_id},{r.user_id}",
+                    "approximate_arrival_timestamp": (
+                        base + timedelta(minutes=r.event_id % 120)
+                    ).strftime("%Y-%m-%dT%H:%M:%S"),
+                    "sequence_number": f"{r.event_id:056d}",
+                    "shard_id": "shardId-000000000000",
+                }
+                for r in rows
+            ],
+            dir_name,
+        )
+        raw = FileReplaySource(path).read_stream(spark)
         parts = F.split(F.col("data"), ",")
         return raw.select(
             parts.getItem(0).cast("bigint").alias(f"{prefix}_event_id"),
@@ -1321,34 +1124,20 @@ def streaming_stream_join_pairs(
             F.col("approximate_arrival_timestamp").alias(f"{prefix}_ts"),
         ).withWatermark(f"{prefix}_ts", "10 minutes")
 
-    clicks, views = side("clicks", "c"), side("views", "v")
-    pairs = clicks.join(
-        views,
-        (F.col("c_user_id") == F.col("v_user_id"))
-        & (F.col("v_ts") >= F.col("c_ts") - F.expr("INTERVAL 10 MINUTES"))
-        & (F.col("v_ts") <= F.col("c_ts")),
-        "inner",
-    )
-    name = f"ssj_{tag}"
-    # a stream-stream join materializes FOUR state stores per shuffle
-    # partition (keyed + key-with-index, each side); at the session's
-    # 32 partitions that is 128 store initializations for a ~1k-row
-    # gate replay — partition-count, not data, dominates. Pin the
-    # query's shuffle width at start (streaming queries snapshot the
-    # conf), then restore the session value for whatever runs next.
-    with pinned_shuffle(spark, 4):
-        q = (
-            pairs.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", f"{root}/ck")
-            .start()
-        )
-    try:
+    def body(g: _Gate) -> list:
+        clicks = side(g, g.rows(2, 0), "clicks", "c")
+        views = side(g, g.rows(2, 1), "views", "v")
+        q, name = g.memory_query(clicks.join(
+            views,
+            (F.col("c_user_id") == F.col("v_user_id"))
+            & (F.col("v_ts") >= F.col("c_ts") - F.expr("INTERVAL 10 MINUTES"))
+            & (F.col("v_ts") <= F.col("c_ts")),
+            "inner",
+        ))
         q.processAllAvailable()
         # batch-side aggregation of the appended pair set (the
         # streaming contract under test is the join itself)
-        rows = [
+        return [
             (int(r.user_id), int(r.n_pairs), int(r.sum_pair_ids))
             for r in spark.table(name)
             .groupBy(F.col("c_user_id").alias("user_id"))
@@ -1360,10 +1149,11 @@ def streaming_stream_join_pairs(
             )
             .collect()
         ]
-    finally:
-        q.stop()
-        shutil.rmtree(root, ignore_errors=True)
-    return spark.createDataFrame(rows, schema)
+
+    return _run_gate(
+        spark, sf_dir, 71, 11, "ssj", body,
+        "user_id BIGINT, n_pairs BIGINT, sum_pair_ids BIGINT",
+    )
 
 
 STREAMING_STREAM_JOIN_PAIRS_SQL = """
@@ -1407,60 +1197,20 @@ def streaming_dedup_redelivery(
     one. The durable archive's deduped row count rides along as a
     ('__archive_rows__', n, n) sentinel so a dupe swallowed before the
     view but archived twice still fails."""
-    from pipeline_kinesis_spark.engine import Engine
-    from pipeline_kinesis_spark.sources.file_replay import (
-        write_record_file,
-    )
 
-    ev = _events_subset(spark, sf_dir, 73, 5)
-    tag = uuid.uuid4().hex[:8]
-    root = tempfile.mkdtemp(prefix=f"sdr_{tag}_")
-    if not ev:
-        return spark.createDataFrame([], _RESULT_SCHEMA)
-    write_record_file(f"{root}/events_replay", _as_records(ev))
-    eng = Engine(
-        spark,
-        metadata_dir=f"{root}/meta",
-        trigger_interval="50 milliseconds",
-        shuffle_partitions=4,
-    )
-    ep, stream, view = (
-        f"sdr_ep_{tag}",
-        f"sdr_stream_{tag}",
-        f"sdr_view_{tag}",
-    )
-    try:
-        eng.add_endpoint(ep, url=root)
-        eng.create_stream(stream, "event_id BIGINT, event_type STRING")
-        eng.create_continuous_view(
-            view,
-            f"SELECT event_type, count(*) AS n_events, "
-            f"sum(event_id) AS sum_event_id FROM {stream} "
-            f"GROUP BY event_type",
-            stream=stream,
-        )
-        eng.consume_begin(
-            ep, "events_replay", stream, fmt="csv", delimiter=",",
-            dedup=True,
-        )
-        eng.wait_for_ingest(timeout_s=180)
+    def body(g: _Gate) -> list:
+        g.feed(g.ev)
+        g.engine()
+        g.counts_view()
+        g.begin(dedup=True)
+        g.drain()
         # the redelivered batch arrives only after the first fully
         # drains, so the dedup state must survive ACROSS micro-batches
-        write_record_file(
-            f"{root}/events_replay",
-            _as_records([r for r in ev if r.event_id % 3 == 0]),
-        )
-        eng.wait_for_ingest(timeout_s=180)
-        rows = [
-            (r.event_type, int(r.n_events), int(r.sum_event_id))
-            for r in eng.view_table(view).collect()
-        ]
-        n_arch = eng.stream_table(stream).count()
-        rows.append(("__archive_rows__", n_arch, n_arch))
-    finally:
-        eng.consume_end_all()
-        shutil.rmtree(root, ignore_errors=True)
-    return spark.createDataFrame(rows, _RESULT_SCHEMA)
+        g.feed(g.rows(3, 0))
+        g.drain()
+        return g.counts(archive=True)
+
+    return _run_gate(spark, sf_dir, 73, 5, "sdr", body)
 
 
 STREAMING_DEDUP_REDELIVERY_SQL = """
@@ -1506,98 +1256,49 @@ def streaming_ttl_reap(spark: SparkSession, sf_dir: str) -> DataFrame:
     sqlapi.execute), so the synchronous per-bucket MVCC sweep runs
     against a live standing query. The oracle is the plain GROUP BY
     over the future third."""
-    from pipeline_kinesis_spark import sqlapi
-    from pipeline_kinesis_spark.engine import Engine
-    from pipeline_kinesis_spark.sources.file_replay import (
-        write_record_file,
-    )
-
-    ev = _events_subset(spark, sf_dir, 79, 3)
-    tag = uuid.uuid4().hex[:8]
-    root = tempfile.mkdtemp(prefix=f"str_{tag}_")
-    if not ev:
-        return spark.createDataFrame([], _RESULT_SCHEMA)
     ancient, future = "2000-01-01T10:00:00", "2099-01-01T10:00:00"
 
-    def recs(rows, seq_base=0):
-        return [
-            {
-                "data": (
-                    f"{r.event_id},{r.event_type},"
-                    f"{ancient if r.event_id % 3 != 1 else future}"
-                ),
-                "partition_key": str(r.user_id),
-                "shard_id": f"shardId-{r.user_id % 4:012d}",
-                "sequence_number": f"{seq_base + r.event_id:056d}",
-            }
-            for r in rows
-        ]
-
-    write_record_file(
-        f"{root}/events_replay",
-        recs([r for r in ev if r.event_id % 3 in (0, 1)]),
-    )
-    eng = Engine(
-        spark,
-        metadata_dir=f"{root}/meta",
-        trigger_interval="50 milliseconds",
-        shuffle_partitions=4,
-    )
-    ep, stream, view = (
-        f"str_ep_{tag}",
-        f"str_stream_{tag}",
-        f"str_view_{tag}",
-    )
-    try:
-        eng.add_endpoint(ep, url=root)
-        eng.create_stream(
-            stream,
-            "event_id BIGINT, event_type STRING, ts TIMESTAMP",
+    def stamped(r) -> str:
+        return (
+            f"{r.event_id},{r.event_type},"
+            f"{ancient if r.event_id % 3 != 1 else future}"
         )
+
+    def body(g: _Gate) -> list:
+        g.feed(g.rows(3, 0, 1), data=stamped)
+        eng = g.engine("event_id BIGINT, event_type STRING, ts TIMESTAMP")
         eng.create_continuous_view(
-            view,
+            g.view,
             f"SELECT event_type, ts, count(*) AS n_events, "
-            f"sum(event_id) AS sum_event_id FROM {stream} "
+            f"sum(event_id) AS sum_event_id FROM {g.stream} "
             f"GROUP BY event_type, ts",
-            stream=stream,
+            stream=g.stream,
             materialize="parquet_upsert",
             key_cols=["event_type", "ts"],
             ttl_seconds=3600,
             ttl_column="ts",
         )
-        eng.consume_begin(
-            ep, "events_replay", stream, fmt="csv", delimiter=",",
-        )
-        eng.wait_for_ingest(timeout_s=180)
+        g.begin()
+        g.drain()
         # the reference's manual sweep, through its SQL spelling —
         # returns the reaped-row count as a string (ignored: whether
         # the merge already filtered the ancient rows or the sweep
         # reaps them now is batch-boundary dependent; VISIBILITY is
         # the deterministic contract)
-        sqlapi.execute(eng, f"SELECT pipeline_ttl_expire('{view}')")
+        sqlapi.execute(eng, f"SELECT pipeline_ttl_expire('{g.view}')")
         # batch 2: rows that arrive ALREADY expired must never surface
-        write_record_file(
-            f"{root}/events_replay",
-            recs(
-                [r for r in ev if r.event_id % 3 == 2],
-                seq_base=10**12,
-            ),
-        )
-        eng.wait_for_ingest(timeout_s=180)
-        rows = [
-            (r.event_type, int(r.n_events), int(r.sum_event_id))
-            for r in eng.view_table(view)
+        g.feed(g.rows(3, 2), _BATCH2, data=stamped)
+        g.drain()
+        return _count_rows(
+            eng.view_table(g.view)
             .groupBy("event_type")
             .agg(
                 F.sum("n_events").alias("n_events"),
                 F.sum("sum_event_id").alias("sum_event_id"),
             )
-            .collect()
-        ]
-    finally:
-        eng.consume_end_all()
-        shutil.rmtree(root, ignore_errors=True)
-    return spark.createDataFrame(rows, _RESULT_SCHEMA)
+        )
+
+    return _run_gate(spark, sf_dir, 79, 3, "str", body)
 
 
 STREAMING_TTL_REAP_SQL = """
@@ -1632,78 +1333,42 @@ def streaming_alter_schema(spark: SparkSession, sf_dir: str) -> DataFrame:
       sentinel carries |gen1| + |gen2| and
     - mergeSchema + typed NULL fill-in: every gen-1 archive row reads
       back NULL for `val`, so n_nulls == |gen1| exactly."""
-    from pipeline_kinesis_spark import sqlapi
-    from pipeline_kinesis_spark.engine import Engine
-    from pipeline_kinesis_spark.sources.file_replay import (
-        write_record_file,
-    )
 
-    ev = _events_subset(spark, sf_dir, 83, 7)
-    tag = uuid.uuid4().hex[:8]
-    root = tempfile.mkdtemp(prefix=f"sas_{tag}_")
-    if not ev:
-        return spark.createDataFrame([], _RESULT_SCHEMA)
-    gen1 = [r for r in ev if r.event_id % 2 == 0]
-    gen2 = [r for r in ev if r.event_id % 2 == 1]
-    write_record_file(f"{root}/events_replay", _as_records(gen1))
-    eng = Engine(
-        spark,
-        metadata_dir=f"{root}/meta",
-        trigger_interval="50 milliseconds",
-        shuffle_partitions=4,
-    )
-    ep, stream, view = (
-        f"sas_ep_{tag}",
-        f"sas_stream_{tag}",
-        f"sas_view_{tag}",
-    )
-    try:
-        eng.add_endpoint(ep, url=root)
-        eng.create_stream(stream, "event_id BIGINT, event_type STRING")
-        eng.consume_begin(
-            ep, "events_replay", stream, fmt="csv", delimiter=",",
-        )
-        eng.wait_for_ingest(timeout_s=180)
-        eng.consume_end(ep, "events_replay", stream)
+    def body(g: _Gate) -> list:
+        g.feed(g.rows(2, 0))
+        eng = g.engine()
+        g.begin()
+        g.drain()
+        eng.consume_end(g.ep, _REPLAY, g.stream)
         # schema evolution through the reference's DDL spelling
         sqlapi.execute(
-            eng, f"ALTER STREAM {stream} ADD COLUMN val bigint"
+            eng, f"ALTER STREAM {g.stream} ADD COLUMN val bigint"
         )
         eng.create_continuous_view(
-            view,
+            g.view,
             f"SELECT event_type, count(*) AS n_events, "
-            f"sum(val) AS sum_val FROM {stream} GROUP BY event_type",
-            stream=stream,
+            f"sum(val) AS sum_val FROM {g.stream} GROUP BY event_type",
+            stream=g.stream,
         )
-        write_record_file(
-            f"{root}/events_replay",
-            [
-                {
-                    "data": f"{r.event_id},{r.event_type},{7 * r.event_id}",
-                    "partition_key": str(r.user_id),
-                    "shard_id": f"shardId-{r.user_id % 4:012d}",
-                    "sequence_number": f"{10**12 + r.event_id:056d}",
-                }
-                for r in gen2
-            ],
+        g.feed(
+            g.rows(2, 1), _BATCH2,
+            data=lambda r: f"{r.event_id},{r.event_type},{7 * r.event_id}",
         )
-        eng.consume_begin(
-            ep, "events_replay", stream, fmt="csv", delimiter=",",
-        )
-        eng.wait_for_ingest(timeout_s=180)
+        g.begin()
+        g.drain()
         rows = [
             (r.event_type, int(r.n_events), int(r.sum_val))
-            for r in eng.view_table(view).collect()
+            for r in eng.view_table(g.view).collect()
         ]
-        arch = eng.stream_table(stream)
+        arch = eng.stream_table(g.stream)
         total = arch.count()
         n_nulls = arch.filter(F.col("val").isNull()).count()
         rows.append(("__archive__", total, n_nulls))
-    finally:
-        eng.consume_end_all()
-        shutil.rmtree(root, ignore_errors=True)
-    return spark.createDataFrame(
-        rows, "event_type STRING, n_events BIGINT, sum_val BIGINT"
+        return rows
+
+    return _run_gate(
+        spark, sf_dir, 83, 7, "sas", body,
+        "event_type STRING, n_events BIGINT, sum_val BIGINT",
     )
 
 
@@ -1761,74 +1426,45 @@ def streaming_reshard_counts(
     the expiry re-acquire deflates a count, a replayed one inflates
     one. The durable archive row count rides along as an exactly-once
     sentinel."""
-    import time as _time
 
-    from pipeline_kinesis_spark.engine import Engine
-    from pipeline_kinesis_spark.sources.fake_kinesis import (
-        FakeKinesisClient,
-    )
+    def body(g: _Gate) -> list:
+        def payloads(mod: int, *rems: int) -> list[bytes]:
+            return [
+                f"{r.event_id},{r.event_type}".encode()
+                for r in g.rows(mod, *rems)
+            ]
 
-    ev = _events_subset(spark, sf_dir, 89, 3)
-    if not ev:
-        return spark.createDataFrame([], _RESULT_SCHEMA)
-    tag = uuid.uuid4().hex[:8]
-    root = tempfile.mkdtemp(prefix=f"srs_{tag}_")
-
-    def payload(r) -> bytes:
-        return f"{r.event_id},{r.event_type}".encode()
-
-    era0a = [payload(r) for r in ev if r.event_id % 4 == 0]
-    era0b = [payload(r) for r in ev if r.event_id % 4 == 1]
-    era1a = [payload(r) for r in ev if r.event_id % 8 == 2]
-    era1b = [payload(r) for r in ev if r.event_id % 8 == 6]
-    era2 = [payload(r) for r in ev if r.event_id % 4 == 3]
-    n0 = len(era0a) + len(era0b)
-    n1 = len(era1a) + len(era1b)
-    fake = FakeKinesisClient(
-        {"shardId-000": era0a, "shardId-001": era0b}
-    )
-    eng = Engine(
-        spark,
-        metadata_dir=f"{root}/meta",
-        trigger_interval="50 milliseconds",
-        shuffle_partitions=4,
-    )
-    ep, stream, view = (
-        f"srs_ep_{tag}",
-        f"srs_stream_{tag}",
-        f"srs_view_{tag}",
-    )
-
-    def wait_pumped(c, n, timeout_s=120.0):
-        deadline = _time.monotonic() + timeout_s
-        while _time.monotonic() < deadline:
-            st = eng.pump_status().get(c.id, {})
-            if st.get("records", 0) >= n:
-                return
-            _time.sleep(0.05)
-        raise TimeoutError(
-            f"pump landed {eng.pump_status()} < {n} records"
+        era0a, era0b = payloads(4, 0), payloads(4, 1)
+        era1a, era1b = payloads(8, 2), payloads(8, 6)
+        era2 = payloads(4, 3)
+        n0 = len(era0a) + len(era0b)
+        n1 = len(era1a) + len(era1b)
+        fake = FakeKinesisClient(
+            {"shardId-000": era0a, "shardId-001": era0b}
         )
-
-    try:
-        eng.add_endpoint(ep)  # kinesis-typed: no url, client injected
-        eng.register_kinesis_client(ep, fake)
-        eng.create_stream(stream, "event_id BIGINT, event_type STRING")
-        eng.create_continuous_view(
-            view,
-            f"SELECT event_type, count(*) AS n_events, "
-            f"sum(event_id) AS sum_event_id FROM {stream} "
-            f"GROUP BY event_type",
-            stream=stream,
-        )
-        c = eng.consume_begin(
-            ep, "events_replay", stream, fmt="csv", delimiter=",",
+        # kinesis-typed endpoint: no url, client injected
+        eng = g.engine(url=None)
+        eng.register_kinesis_client(g.ep, fake)
+        g.counts_view()
+        c = g.begin(
             source="pump",
             # gate replay: poll tightly so era drains price the
             # protocol, not the reference's 4 req/s wire pacing
             rate_limit_rps=40,
         )
-        wait_pumped(c, n0)
+
+        def wait_pumped(n, timeout_s=120.0):
+            deadline = time.monotonic() + timeout_s
+            while time.monotonic() < deadline:
+                st = eng.pump_status().get(c.id, {})
+                if st.get("records", 0) >= n:
+                    return
+                time.sleep(0.05)
+            raise TimeoutError(
+                f"pump landed {eng.pump_status()} < {n} records"
+            )
+
+        wait_pumped(n0)
         # era 1: split 000 -> 002/003 while 001 stays open; children
         # must begin (TRIM_HORIZON) only after the parent drains.
         # Wire faults are pinned per-shard (fault_plan, ADVICE r12 —
@@ -1847,24 +1483,17 @@ def streaming_reshard_counts(
             fake.append("shardId-002", d)
         for d in era1b:
             fake.append("shardId-003", d)
-        wait_pumped(c, n0 + n1)
+        wait_pumped(n0 + n1)
         # era 2: the children MERGE into 004 (ParentShardId +
         # AdjacentParentShardId lineage), which carries the final era
         fake.merge(["shardId-002", "shardId-003"], "shardId-004")
         for d in era2:
             fake.append("shardId-004", d)
-        wait_pumped(c, len(ev))
-        eng.wait_for_ingest(timeout_s=180)
-        rows = [
-            (r.event_type, int(r.n_events), int(r.sum_event_id))
-            for r in eng.view_table(view).collect()
-        ]
-        n_arch = eng.stream_table(stream).count()
-        rows.append(("__archive_rows__", n_arch, n_arch))
-    finally:
-        eng.consume_end_all()
-        shutil.rmtree(root, ignore_errors=True)
-    return spark.createDataFrame(rows, _RESULT_SCHEMA)
+        wait_pumped(len(g.ev))
+        g.drain()
+        return g.counts(archive=True)
+
+    return _run_gate(spark, sf_dir, 89, 3, "srs", body)
 
 
 STREAMING_RESHARD_COUNTS_SQL = """
@@ -1906,55 +1535,18 @@ def streaming_start_position(
     _as_records), so the oracle expresses it as a scalar subquery. The
     archive count rides along: a start applied to the VIEW but not the
     archive (or vice versa) fails the sentinel."""
-    from pipeline_kinesis_spark.engine import Engine
-    from pipeline_kinesis_spark.sources.file_replay import (
-        write_record_file,
-    )
 
-    ev = _events_subset(spark, sf_dir, 97, 5)
-    if not ev:
-        return spark.createDataFrame([], _RESULT_SCHEMA)
-    ids = [r.event_id for r in ev]
-    threshold = (min(ids) + max(ids)) // 2
-    tag = uuid.uuid4().hex[:8]
-    root = tempfile.mkdtemp(prefix=f"ssp_{tag}_")
-    write_record_file(f"{root}/events_replay", _as_records(ev))
-    eng = Engine(
-        spark,
-        metadata_dir=f"{root}/meta",
-        trigger_interval="50 milliseconds",
-        shuffle_partitions=4,
-    )
-    ep, stream, view = (
-        f"ssp_ep_{tag}",
-        f"ssp_stream_{tag}",
-        f"ssp_view_{tag}",
-    )
-    try:
-        eng.add_endpoint(ep, url=root)
-        eng.create_stream(stream, "event_id BIGINT, event_type STRING")
-        eng.create_continuous_view(
-            view,
-            f"SELECT event_type, count(*) AS n_events, "
-            f"sum(event_id) AS sum_event_id FROM {stream} "
-            f"GROUP BY event_type",
-            stream=stream,
-        )
-        eng.consume_begin(
-            ep, "events_replay", stream, fmt="csv", delimiter=",",
-            start_position=f"after_sequence_number:{threshold:056d}",
-        )
-        eng.wait_for_ingest(timeout_s=180)
-        rows = [
-            (r.event_type, int(r.n_events), int(r.sum_event_id))
-            for r in eng.view_table(view).collect()
-        ]
-        n_arch = eng.stream_table(stream).count()
-        rows.append(("__archive_rows__", n_arch, n_arch))
-    finally:
-        eng.consume_end_all()
-        shutil.rmtree(root, ignore_errors=True)
-    return spark.createDataFrame(rows, _RESULT_SCHEMA)
+    def body(g: _Gate) -> list:
+        ids = [r.event_id for r in g.ev]
+        threshold = (min(ids) + max(ids)) // 2
+        g.feed(g.ev)
+        g.engine()
+        g.counts_view()
+        g.begin(start_position=f"after_sequence_number:{threshold:056d}")
+        g.drain()
+        return g.counts(archive=True)
+
+    return _run_gate(spark, sf_dir, 97, 5, "ssp", body)
 
 
 STREAMING_START_POSITION_SQL = """
@@ -2002,121 +1594,61 @@ def streaming_datasource_counts(
     GROUP BY over the whole slice; the archive count rides along as the
     exactly-once sentinel (a replayed batch after the mid-stream append
     inflates it even if the view's aggregate absorbs the dupe)."""
-    import os
+    n_shards = 12  # > MAX_PROCS: the regime that forces this path
 
-    from pipeline_kinesis_spark.engine import Engine
-    from pipeline_kinesis_spark.sources.fake_kinesis import (
-        FakeKinesisClient,
-        serve_fake_kinesis,
-    )
-
-    ev = _events_subset(spark, sf_dir, 101, 7)
-    if not ev:
-        return spark.createDataFrame([], _RESULT_SCHEMA)
-    # join the background warm (kicked off by the session's first
-    # streaming row) so this row prices the data path, not the cold
-    # start; a standalone invocation still gets a warmed session. The
-    # warm thread touches no process-wide state (its env save/restore
-    # was removed — ADVICE r13 #1), so a warm that outlives the 120 s
-    # join is merely concurrent machinery setup, not a race; note it
-    # and proceed.
-    _warm = prewarm_datasource(spark)
-    _warm.join(timeout=120)
-    if _warm.is_alive():  # pragma: no cover — slow-host diagnostics
-        import sys as _sys
-
-        print(
-            "streaming_datasource_counts: DataSource pre-warm still "
-            "running after 120 s; proceeding (row will pay part of "
-            "the cold start)",
-            file=_sys.stderr,
-        )
-    tag = uuid.uuid4().hex[:8]
-    root = tempfile.mkdtemp(prefix=f"sdc_{tag}_")
+    def shard(r) -> str:
+        return f"shardId-{r.user_id % n_shards:012d}"
 
     def payload(r) -> bytes:
         return f"{r.event_id},{r.event_type}".encode()
 
-    n_shards = 12  # > MAX_PROCS: the regime that forces this path
-    shards: dict[str, list[bytes]] = {
-        f"shardId-{i:012d}": [] for i in range(n_shards)
-    }
-    for r in ev:
-        if r.event_id % 2 == 0:
-            shards[f"shardId-{r.user_id % n_shards:012d}"].append(
-                payload(r)
+    def body(g: _Gate) -> list:
+        # join the background warm (kicked off by the session's first
+        # streaming row) so this row prices the data path, not the
+        # cold start; a standalone invocation still gets a warmed
+        # session. The warm thread touches no process-wide state, so a
+        # warm that outlives the 120 s join is merely concurrent
+        # machinery setup, not a race; note it and proceed.
+        warm = prewarm_datasource(spark)
+        warm.join(timeout=120)
+        if warm.is_alive():  # pragma: no cover — slow-host diagnostics
+            print(
+                "streaming_datasource_counts: DataSource pre-warm still "
+                "running after 120 s; proceeding (row will pay part of "
+                "the cold start)",
+                file=sys.stderr,
             )
-    fake = FakeKinesisClient(shards)
-    ep, stream, view = (
-        f"sdc_ep_{tag}",
-        f"sdc_stream_{tag}",
-        f"sdc_view_{tag}",
-    )
-    # Everything that acquires a resource sits INSIDE the try (ADVICE
-    # r12: a failure between serve_fake_kinesis and the old try block
-    # leaked the HTTP server thread and the temp dir), and the engine's
-    # process-wide AWS_SHARED_CREDENTIALS_FILE is saved/restored rather
-    # than popped (a pre-existing host value must survive this row).
-    prior_cred = os.environ.get("AWS_SHARED_CREDENTIALS_FILE")
-    srv = eng = None
-    try:
-        srv, url = serve_fake_kinesis(fake)
-        cred = f"{root}/creds"
+        shards: dict[str, list[bytes]] = {
+            f"shardId-{i:012d}": [] for i in range(n_shards)
+        }
+        for r in g.rows(2, 0):
+            shards[shard(r)].append(payload(r))
+        fake = FakeKinesisClient(shards)
+        url = g.serve(fake)
+        cred = f"{g.root}/creds"
         with open(cred, "w") as f:
             f.write(
                 "[default]\naws_access_key_id = testing\n"
                 "aws_secret_access_key = testing\n"
             )
-        eng = Engine(
-            spark,
-            metadata_dir=f"{root}/meta",
-            trigger_interval="50 milliseconds",
-            shuffle_partitions=4,
-        )
-        eng.add_endpoint(ep, region="us-east-1", url=url, credfile=cred)
-        eng.create_stream(stream, "event_id BIGINT, event_type STRING")
-        eng.create_continuous_view(
-            view,
-            f"SELECT event_type, count(*) AS n_events, "
-            f"sum(event_id) AS sum_event_id FROM {stream} "
-            f"GROUP BY event_type",
-            stream=stream,
-        )
-        eng.consume_begin(
-            ep, "events_replay", stream, fmt="csv", delimiter=",",
+        g.engine(region="us-east-1", url=url, credfile=cred)
+        g.counts_view()
+        g.begin(
             source="datasource",
             # gate replay against an in-process wire: unpace GetRecords
             # so the drain waits price the executor data path, not the
             # reference's 4 req/s/shard AWS budget
             rate_limit_rps=1000,
         )
-        eng.wait_for_ingest(timeout_s=180)
+        g.drain()
         # tranche 2 arrives mid-consume: the executor tasks must pick
         # up the new reach on already-drained shards (no restart)
-        for r in ev:
-            if r.event_id % 2 == 1:
-                fake.append(
-                    f"shardId-{r.user_id % n_shards:012d}", payload(r)
-                )
-        eng.wait_for_ingest(timeout_s=180)
-        rows = [
-            (r.event_type, int(r.n_events), int(r.sum_event_id))
-            for r in eng.view_table(view).collect()
-        ]
-        n_arch = eng.stream_table(stream).count()
-        rows.append(("__archive_rows__", n_arch, n_arch))
-    finally:
-        if eng is not None:
-            eng.consume_end_all()
-        if srv is not None:
-            srv.shutdown()
-            srv.server_close()
-        if prior_cred is None:
-            os.environ.pop("AWS_SHARED_CREDENTIALS_FILE", None)
-        else:
-            os.environ["AWS_SHARED_CREDENTIALS_FILE"] = prior_cred
-        shutil.rmtree(root, ignore_errors=True)
-    return spark.createDataFrame(rows, _RESULT_SCHEMA)
+        for r in g.rows(2, 1):
+            fake.append(shard(r), payload(r))
+        g.drain()
+        return g.counts(archive=True)
+
+    return _run_gate(spark, sf_dir, 101, 7, "sdc", body)
 
 
 STREAMING_DATASOURCE_COUNTS_SQL = """
@@ -2152,7 +1684,7 @@ def streaming_sw_recombine(spark: SparkSession, sf_dir: str) -> DataFrame:
     wall-clock never enters the hash because every arrival timestamp is
     either year 2000 (expired for any plausible 'now' under the 1-hour
     window + 2-step retention) or year 2099 (inside the trailing window
-    until 2099). The slice splits by event_id % 3:
+    until 2099). The slice splits by event_id % 3 (_sw_slot):
 
     - rem 0 → arrival 2000-01-01, batch 1: their steps must be REAPED
       from the durable store (or never land) — n_steps counts the
@@ -2173,90 +1705,27 @@ def streaming_sw_recombine(spark: SparkSession, sf_dir: str) -> DataFrame:
     declared through the SQL surface (`WITH (sw, sw_step, materialize,
     key_cols...)` — engine.create_continuous_view's documented SQL
     spelling)."""
-    from datetime import datetime, timedelta
 
-    from pipeline_kinesis_spark.engine import Engine
-    from pipeline_kinesis_spark.sources.file_replay import (
-        write_record_file,
-    )
-
-    ev = _events_subset(spark, sf_dir, 103, 7)
-    tag = uuid.uuid4().hex[:8]
-    root = tempfile.mkdtemp(prefix=f"swr_{tag}_")
-    schema = (
-        "event_type STRING, n_events BIGINT, sum_event_id BIGINT, "
-        "max_event_id BIGINT, min_event_id BIGINT, n_steps BIGINT"
-    )
-    if not ev:
-        return spark.createDataFrame([], schema)
-    t_alive = datetime(2099, 1, 1, 10, 0, 0)
-    t_dead = datetime(2000, 1, 1, 10, 0, 0)
-
-    def arrival(r) -> str:
-        rem = r.event_id % 3
-        if rem == 0:
-            return t_dead.isoformat()
-        if rem == 1:
-            off = (r.event_id % 5) * 180
-        else:
-            off = 540 + (r.event_id % 2) * 180
-        return (t_alive + timedelta(seconds=off)).isoformat()
-
-    def recs(rows, seq_base=0):
-        return [
-            {
-                "data": f"{r.event_id},{r.event_type}",
-                "partition_key": str(r.user_id),
-                "shard_id": f"shardId-{r.user_id % 4:012d}",
-                "sequence_number": f"{seq_base + r.event_id:056d}",
-                "approximate_arrival_timestamp": arrival(r),
-            }
-            for r in rows
-        ]
-
-    write_record_file(
-        f"{root}/events_replay",
-        recs([r for r in ev if r.event_id % 3 in (0, 1)]),
-    )
-    eng = Engine(
-        spark,
-        metadata_dir=f"{root}/meta",
-        trigger_interval="50 milliseconds",
-        shuffle_partitions=4,
-    )
-    ep, stream, view = (
-        f"swr_ep_{tag}",
-        f"swr_stream_{tag}",
-        f"swr_view_{tag}",
-    )
-    try:
-        eng.add_endpoint(ep, url=root)
-        eng.create_stream(stream, "event_id BIGINT, event_type STRING")
+    def body(g: _Gate) -> list:
+        g.feed(g.rows(3, 0, 1), arrival=_sw_arrival)
+        eng = g.engine()
         assert eng.execute(
-            f"CREATE CONTINUOUS VIEW {view} WITH (sw = '1 hour', "
+            f"CREATE CONTINUOUS VIEW {g.view} WITH (sw = '1 hour', "
             f"sw_step = '3 minutes', materialize = 'parquet_upsert') AS "
             f"SELECT event_type, count(*) AS n_events, "
             f"sum(event_id) AS sum_event_id, "
             f"max(event_id) AS max_event_id, "
             f"min(event_id) AS min_event_id "
-            f"FROM {stream} GROUP BY event_type"
+            f"FROM {g.stream} GROUP BY event_type"
         ) == "success"
-        eng.consume_begin(
-            ep, "events_replay", stream, fmt="csv", delimiter=",",
-        )
-        eng.wait_for_ingest(timeout_s=180)
+        g.begin()
+        g.drain()
         # batch 2: later-arriving rows merge into EXISTING step state
-        write_record_file(
-            f"{root}/events_replay",
-            recs(
-                [r for r in ev if r.event_id % 3 == 2],
-                seq_base=10**12,
-            ),
-        )
-        eng.wait_for_ingest(timeout_s=180)
+        g.feed(g.rows(3, 2), _BATCH2, arrival=_sw_arrival)
+        g.drain()
         recombined = {
             r.event_type: r
-            for r in eng.view_table(view).collect()
+            for r in eng.view_table(g.view).collect()
         }
         # the durable store's live per-step granularity: matrel is the
         # MVCC-resolved store read (latest version per (group, step) —
@@ -2264,12 +1733,12 @@ def streaming_sw_recombine(spark: SparkSession, sf_dir: str) -> DataFrame:
         # updated buckets); expired steps must already be reaped
         steps = {
             r.event_type: int(r.n_steps)
-            for r in eng.matrel(view)
+            for r in eng.matrel(g.view)
             .groupBy("event_type")
             .agg(F.count("*").alias("n_steps"))
             .collect()
         }
-        rows = [
+        return [
             (
                 et,
                 int(r.n_events),
@@ -2280,10 +1749,12 @@ def streaming_sw_recombine(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             for et, r in sorted(recombined.items())
         ]
-    finally:
-        eng.consume_end_all()
-        shutil.rmtree(root, ignore_errors=True)
-    return spark.createDataFrame(rows, schema)
+
+    return _run_gate(
+        spark, sf_dir, 103, 7, "swr", body,
+        "event_type STRING, n_events BIGINT, sum_event_id BIGINT, "
+        "max_event_id BIGINT, min_event_id BIGINT, n_steps BIGINT",
+    )
 
 
 STREAMING_SW_RECOMBINE_SQL = """
@@ -2332,94 +1803,34 @@ def streaming_sw_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     a value seen in SEVERAL live steps counts once (sketch union, not
     sum), an expired step's values drop out entirely, and the
     sketch-typed partials survive the store's MVCC merge cycle."""
-    from datetime import datetime, timedelta
 
-    from pipeline_kinesis_spark.engine import Engine
-    from pipeline_kinesis_spark.sources.file_replay import (
-        write_record_file,
-    )
+    def body(g: _Gate) -> list:
+        def data(r) -> str:
+            return f"{r.event_id},{r.event_type},{r.user_id % 32}"
 
-    ev = _events_subset(spark, sf_dir, 107, 3)
-    tag = uuid.uuid4().hex[:8]
-    root = tempfile.mkdtemp(prefix=f"swh_{tag}_")
-    schema = "event_type STRING, uniq BIGINT, n_events BIGINT"
-    if not ev:
-        return spark.createDataFrame([], schema)
-    t_alive = datetime(2099, 1, 1, 10, 0, 0)
-    t_dead = datetime(2000, 1, 1, 10, 0, 0)
-
-    def arrival(r) -> str:
-        rem = r.event_id % 3
-        if rem == 0:
-            return t_dead.isoformat()
-        if rem == 1:
-            off = (r.event_id % 5) * 180
-        else:
-            off = 540 + (r.event_id % 2) * 180
-        return (t_alive + timedelta(seconds=off)).isoformat()
-
-    def recs(rows, seq_base=0):
-        return [
-            {
-                "data": (
-                    f"{r.event_id},{r.event_type},{r.user_id % 32}"
-                ),
-                "partition_key": str(r.user_id),
-                "shard_id": f"shardId-{r.user_id % 4:012d}",
-                "sequence_number": f"{seq_base + r.event_id:056d}",
-                "approximate_arrival_timestamp": arrival(r),
-            }
-            for r in rows
-        ]
-
-    write_record_file(
-        f"{root}/events_replay",
-        recs([r for r in ev if r.event_id % 3 in (0, 1)]),
-    )
-    eng = Engine(
-        spark,
-        metadata_dir=f"{root}/meta",
-        trigger_interval="50 milliseconds",
-        shuffle_partitions=4,
-    )
-    ep, stream, view = (
-        f"swh_ep_{tag}",
-        f"swh_stream_{tag}",
-        f"swh_view_{tag}",
-    )
-    try:
-        eng.add_endpoint(ep, url=root)
-        eng.create_stream(
-            stream, "event_id BIGINT, event_type STRING, u BIGINT"
-        )
+        g.feed(g.rows(3, 0, 1), data=data, arrival=_sw_arrival)
+        eng = g.engine("event_id BIGINT, event_type STRING, u BIGINT")
         assert eng.execute(
-            f"CREATE CONTINUOUS VIEW {view} WITH (sw = '1 hour', "
+            f"CREATE CONTINUOUS VIEW {g.view} WITH (sw = '1 hour', "
             f"sw_step = '3 minutes', materialize = 'parquet_upsert') AS "
             f"SELECT event_type, approx_count_distinct(u) AS uniq, "
             f"count(*) AS n_events "
-            f"FROM {stream} GROUP BY event_type"
+            f"FROM {g.stream} GROUP BY event_type"
         ) == "success"
-        eng.consume_begin(
-            ep, "events_replay", stream, fmt="csv", delimiter=",",
-        )
-        eng.wait_for_ingest(timeout_s=180)
+        g.begin()
+        g.drain()
         # batch 2: more arrivals union into EXISTING step sketches
-        write_record_file(
-            f"{root}/events_replay",
-            recs(
-                [r for r in ev if r.event_id % 3 == 2],
-                seq_base=10**12,
-            ),
-        )
-        eng.wait_for_ingest(timeout_s=180)
-        rows = [
+        g.feed(g.rows(3, 2), _BATCH2, data=data, arrival=_sw_arrival)
+        g.drain()
+        return [
             (r.event_type, int(r.uniq), int(r.n_events))
-            for r in eng.view_table(view).collect()
+            for r in eng.view_table(g.view).collect()
         ]
-    finally:
-        eng.consume_end_all()
-        shutil.rmtree(root, ignore_errors=True)
-    return spark.createDataFrame(rows, schema)
+
+    return _run_gate(
+        spark, sf_dir, 107, 3, "swh", body,
+        "event_type STRING, uniq BIGINT, n_events BIGINT",
+    )
 
 
 STREAMING_SW_HLL_DISTINCT_SQL = """
@@ -2449,20 +1860,8 @@ def streaming_json_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     even/odd nested arithmetic. In the driver window since the r14
     rotation (r13 pledge honored); the full differential covers it
     besides."""
-    import json as _json
 
-    from pipeline_kinesis_spark.engine import Engine
-    from pipeline_kinesis_spark.sources.file_replay import (
-        write_record_file,
-    )
-
-    ev = _events_subset(spark, sf_dir, 109, 5)
-    tag = uuid.uuid4().hex[:8]
-    root = tempfile.mkdtemp(prefix=f"sji_{tag}_")
-    if not ev:
-        return spark.createDataFrame([], _RESULT_SCHEMA)
-
-    def rec(r):
+    def data(r) -> str:
         body = {
             "event_id": r.event_id,
             "event_type": r.event_type,
@@ -2472,49 +1871,26 @@ def streaming_json_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             # optional field present on the even half only: the odd
             # half must land NULL (and sum as zero), not dead-letter
             body["weight"] = r.event_id % 7
-        return {
-            "data": _json.dumps(body, sort_keys=True),
-            "partition_key": str(r.user_id),
-            "shard_id": f"shardId-{r.user_id % 4:012d}",
-            "sequence_number": f"{r.event_id:056d}",
-        }
+        return json.dumps(body, sort_keys=True)
 
-    write_record_file(f"{root}/events_replay", [rec(r) for r in ev])
-    eng = Engine(
-        spark,
-        metadata_dir=f"{root}/meta",
-        trigger_interval="50 milliseconds",
-        shuffle_partitions=4,
-    )
-    stream, view = f"sji_stream_{tag}", f"sji_view_{tag}"
-    try:
-        eng.add_endpoint(f"sji_ep_{tag}", url=root)
-        eng.create_stream(
-            stream,
+    def body(g: _Gate) -> list:
+        g.feed(g.ev, data=data)
+        eng = g.engine(
             "event_id BIGINT, event_type STRING, "
             "meta STRUCT<user: BIGINT, flag: BOOLEAN>, weight BIGINT",
         )
         eng.create_continuous_view(
-            view,
+            g.view,
             f"SELECT event_type, count(*) AS n_events, "
             f"sum(meta.user + coalesce(weight, 0)) AS sum_event_id "
-            f"FROM {stream} GROUP BY event_type",
-            stream=stream,
+            f"FROM {g.stream} GROUP BY event_type",
+            stream=g.stream,
         )
-        eng.consume_begin(
-            f"sji_ep_{tag}", "events_replay", stream, fmt="json",
-        )
-        eng.wait_for_ingest(timeout_s=180)
-        rows = [
-            (r.event_type, int(r.n_events), int(r.sum_event_id))
-            for r in eng.view_table(view).collect()
-        ]
-        n_arch = eng.stream_table(stream).count()
-        rows.append(("__archive_rows__", n_arch, n_arch))
-    finally:
-        eng.consume_end_all()
-        shutil.rmtree(root, ignore_errors=True)
-    return spark.createDataFrame(rows, _RESULT_SCHEMA)
+        g.begin(fmt="json")
+        g.drain()
+        return g.counts(archive=True)
+
+    return _run_gate(spark, sf_dir, 109, 5, "sji", body)
 
 
 STREAMING_JSON_INGEST_SQL = """
@@ -2554,70 +1930,26 @@ def streaming_rebucket_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     across the swap. Oracled as the whole-slice GROUP BY. Registered
     in the driver window since the r14 rotation (r13 pledge
     honored)."""
-    from pipeline_kinesis_spark.engine import Engine
-    from pipeline_kinesis_spark.sources.file_replay import (
-        write_record_file,
-    )
 
-    ev = _events_subset(spark, sf_dir, 113, 7)
-    tag = uuid.uuid4().hex[:8]
-    root = tempfile.mkdtemp(prefix=f"srb_{tag}_")
-    if not ev:
-        return spark.createDataFrame([], _RESULT_SCHEMA)
-    write_record_file(
-        f"{root}/events_replay",
-        _as_records([r for r in ev if r.event_id % 2 == 0]),
-    )
-    eng = Engine(
-        spark,
-        metadata_dir=f"{root}/meta",
-        trigger_interval="50 milliseconds",
-        shuffle_partitions=4,
-    )
-    ep, stream, view = (
-        f"srb_ep_{tag}",
-        f"srb_stream_{tag}",
-        f"srb_view_{tag}",
-    )
-    try:
-        eng.add_endpoint(ep, url=root)
-        eng.create_stream(stream, "event_id BIGINT, event_type STRING")
-        eng.create_continuous_view(
-            view,
-            f"SELECT event_type, count(*) AS n_events, "
-            f"sum(event_id) AS sum_event_id FROM {stream} "
-            f"GROUP BY event_type",
-            stream=stream,
+    def body(g: _Gate) -> list:
+        g.feed(g.rows(2, 0))
+        eng = g.engine()
+        g.counts_view(
             materialize="parquet_upsert",
             key_cols=["event_type"],
             upsert_buckets=2,
         )
-        eng.consume_begin(
-            ep, "events_replay", stream, fmt="csv", delimiter=",",
-        )
-        eng.wait_for_ingest(timeout_s=180)
+        g.begin()
+        g.drain()
         # the ops hammer: resize the live store 2 -> 8 while the
         # standing query keeps running (merges queue behind the
         # rewrite on the store mutex and resume on the new layout)
-        eng.rebucket(view, 8)
-        write_record_file(
-            f"{root}/events_replay",
-            _as_records(
-                [r for r in ev if r.event_id % 2 == 1],
-                seq_base=10**12,
-            ),
-        )
-        eng.wait_for_ingest(timeout_s=180)
-        rows = [
-            (r.event_type, int(r.n_events), int(r.sum_event_id))
-            for r in eng.view_table(view).collect()
-        ]
-        n_arch = eng.stream_table(stream).count()
-        rows.append(("__archive_rows__", n_arch, n_arch))
-    finally:
-        eng.consume_end_all()
-        shutil.rmtree(root, ignore_errors=True)
-    return spark.createDataFrame(rows, _RESULT_SCHEMA)
+        eng.rebucket(g.view, 8)
+        g.feed(g.rows(2, 1), _BATCH2)
+        g.drain()
+        return g.counts(archive=True)
+
+    return _run_gate(spark, sf_dir, 113, 7, "srb", body)
 
 
 STREAMING_REBUCKET_COUNTS_SQL = """
@@ -2651,59 +1983,24 @@ def streaming_text_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     continuous view. Exactly-once via the archive sentinel. Registered
     in the driver window since the r14 rotation (r13 pledge
     honored)."""
-    from pipeline_kinesis_spark.engine import Engine
-    from pipeline_kinesis_spark.sources.file_replay import (
-        write_record_file,
-    )
 
-    ev = _events_subset(spark, sf_dir, 127, 9)
-    tag = uuid.uuid4().hex[:8]
-    root = tempfile.mkdtemp(prefix=f"sti_{tag}_")
-    if not ev:
-        return spark.createDataFrame([], _RESULT_SCHEMA)
-    write_record_file(
-        f"{root}/events_replay",
-        [
-            {
-                "data": f"{r.event_type}:{r.event_id}",
-                "partition_key": str(r.user_id),
-                "shard_id": f"shardId-{r.user_id % 4:012d}",
-                "sequence_number": f"{r.event_id:056d}",
-            }
-            for r in ev
-        ],
-    )
-    eng = Engine(
-        spark,
-        metadata_dir=f"{root}/meta",
-        trigger_interval="50 milliseconds",
-        shuffle_partitions=4,
-    )
-    stream, view = f"sti_stream_{tag}", f"sti_view_{tag}"
-    try:
-        eng.add_endpoint(f"sti_ep_{tag}", url=root)
-        eng.create_stream(stream, "payload STRING")
+    def body(g: _Gate) -> list:
+        g.feed(g.ev, data=lambda r: f"{r.event_type}:{r.event_id}")
+        eng = g.engine("payload STRING")
         eng.create_continuous_view(
-            view,
+            g.view,
             f"SELECT split(payload, ':')[0] AS event_type, "
             f"count(*) AS n_events, "
             f"sum(CAST(split(payload, ':')[1] AS BIGINT)) "
-            f"AS sum_event_id FROM {stream} "
+            f"AS sum_event_id FROM {g.stream} "
             f"GROUP BY split(payload, ':')[0]",
-            stream=stream,
+            stream=g.stream,
         )
-        eng.consume_begin(f"sti_ep_{tag}", "events_replay", stream, fmt="text")
-        eng.wait_for_ingest(timeout_s=180)
-        rows = [
-            (r.event_type, int(r.n_events), int(r.sum_event_id))
-            for r in eng.view_table(view).collect()
-        ]
-        n_arch = eng.stream_table(stream).count()
-        rows.append(("__archive_rows__", n_arch, n_arch))
-    finally:
-        eng.consume_end_all()
-        shutil.rmtree(root, ignore_errors=True)
-    return spark.createDataFrame(rows, _RESULT_SCHEMA)
+        g.begin(fmt="text")
+        g.drain()
+        return g.counts(archive=True)
+
+    return _run_gate(spark, sf_dir, 127, 9, "sti", body)
 
 
 STREAMING_TEXT_INGEST_SQL = """
@@ -2757,108 +2054,47 @@ def streaming_sw_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketches. Dedup-to-one-record-per-key is driver-side fixture
     construction (the documented gate boundary), reproduced by the
     oracle as SELECT DISTINCT over the same key arithmetic."""
-    from datetime import datetime, timedelta
 
-    from pipeline_kinesis_spark.engine import Engine
-    from pipeline_kinesis_spark.sources.file_replay import (
-        write_record_file,
-    )
+    def data(r) -> str:
+        return f"{r.event_id},{r.event_type},{r.user_id % 17}"
 
-    ev = _events_subset(spark, sf_dir, 131, 5)
-    tag = uuid.uuid4().hex[:8]
-    root = tempfile.mkdtemp(prefix=f"swp_{tag}_")
-    schema = (
-        "event_type STRING, p50 DOUBLE, p90 DOUBLE, n_events BIGINT"
-    )
-    if not ev:
-        return spark.createDataFrame([], schema)
-    t_alive = datetime(2099, 1, 1, 10, 0, 0)
-    t_dead = datetime(2000, 1, 1, 10, 0, 0)
-
-    def slot(r):
-        rem = r.event_id % 3
-        if rem == 0:
-            return "dead"
-        if rem == 1:
-            return (r.event_id % 5) * 180
-        return 540 + (r.event_id % 2) * 180
-
-    # one record per (group, value, slot): the KLL exact-regime bound
-    kept: dict[tuple, object] = {}
-    for r in ev:
-        key = (r.event_type, r.user_id % 17, slot(r))
-        cur = kept.get(key)
-        if cur is None or r.event_id < cur.event_id:
-            kept[key] = r
-
-    def arrival(r) -> str:
-        s = slot(r)
-        if s == "dead":
-            return t_dead.isoformat()
-        return (t_alive + timedelta(seconds=s)).isoformat()
-
-    def recs(rows, seq_base=0):
-        return [
-            {
-                "data": (
-                    f"{r.event_id},{r.event_type},{r.user_id % 17}"
-                ),
-                "partition_key": str(r.user_id),
-                "shard_id": f"shardId-{r.user_id % 4:012d}",
-                "sequence_number": f"{seq_base + r.event_id:056d}",
-                "approximate_arrival_timestamp": arrival(r),
-            }
-            for r in rows
-        ]
-
-    batch1 = [r for r in kept.values() if r.event_id % 3 in (0, 1)]
-    batch2 = [r for r in kept.values() if r.event_id % 3 == 2]
-    if not batch1:  # degenerate tiny slice: ship everything up front
-        batch1, batch2 = batch2, []
-    eng = Engine(
-        spark,
-        metadata_dir=f"{root}/meta",
-        trigger_interval="50 milliseconds",
-        shuffle_partitions=4,
-    )
-    ep, stream, view = (
-        f"swp_ep_{tag}",
-        f"swp_stream_{tag}",
-        f"swp_view_{tag}",
-    )
-    try:
-        eng.add_endpoint(ep, url=root)
-        eng.create_stream(
-            stream, "event_id BIGINT, event_type STRING, v BIGINT"
-        )
+    def body(g: _Gate) -> list:
+        # one record per (group, value, slot): the KLL exact-regime bound
+        kept: dict[tuple, object] = {}
+        for r in g.ev:
+            key = (r.event_type, r.user_id % 17, _sw_slot(r))
+            cur = kept.get(key)
+            if cur is None or r.event_id < cur.event_id:
+                kept[key] = r
+        batch1 = [r for r in kept.values() if r.event_id % 3 in (0, 1)]
+        batch2 = [r for r in kept.values() if r.event_id % 3 == 2]
+        if not batch1:  # degenerate tiny slice: ship everything up front
+            batch1, batch2 = batch2, []
+        eng = g.engine("event_id BIGINT, event_type STRING, v BIGINT")
         assert eng.execute(
-            f"CREATE CONTINUOUS VIEW {view} WITH (sw = '1 hour', "
+            f"CREATE CONTINUOUS VIEW {g.view} WITH (sw = '1 hour', "
             f"sw_step = '3 minutes', materialize = 'parquet_upsert') AS "
             f"SELECT event_type, approx_percentile(v, 0.5) AS p50, "
             f"approx_percentile(v, 0.9) AS p90, "
             f"count(*) AS n_events "
-            f"FROM {stream} GROUP BY event_type"
+            f"FROM {g.stream} GROUP BY event_type"
         ) == "success"
-        write_record_file(f"{root}/events_replay", recs(batch1))
-        eng.consume_begin(
-            ep, "events_replay", stream, fmt="csv", delimiter=",",
-        )
-        eng.wait_for_ingest(timeout_s=180)
+        g.feed(batch1, data=data, arrival=_sw_arrival)
+        g.begin()
+        g.drain()
         if batch2:
             # later arrivals merge into steps holding batch-1 sketches
-            write_record_file(
-                f"{root}/events_replay",
-                recs(batch2, seq_base=10**12),
-            )
-            eng.wait_for_ingest(timeout_s=180)
-        rows = [
+            g.feed(batch2, _BATCH2, data=data, arrival=_sw_arrival)
+            g.drain()
+        return [
             (r.event_type, float(r.p50), float(r.p90), int(r.n_events))
-            for r in eng.view_table(view).collect()
+            for r in eng.view_table(g.view).collect()
         ]
-    finally:
-        eng.consume_end_all()
-        shutil.rmtree(root, ignore_errors=True)
-    return spark.createDataFrame(rows, schema)
+
+    return _run_gate(
+        spark, sf_dir, 131, 5, "swp", body,
+        "event_type STRING, p50 DOUBLE, p90 DOUBLE, n_events BIGINT",
+    )
 
 
 STREAMING_SW_PERCENTILE_SQL = """
@@ -2902,57 +2138,23 @@ def streaming_osrel_cascade(
     telescope over a transform's sink) to the view→osrel→view shape
     that was pytest-only (tests/test_output_streams.py
     test_two_level_cascade)."""
-    from pipeline_kinesis_spark.engine import Engine
-    from pipeline_kinesis_spark.sources.file_replay import (
-        write_record_file,
-    )
 
-    ev = _events_subset(spark, sf_dir, 139, 11)
-    tag = uuid.uuid4().hex[:8]
-    root = tempfile.mkdtemp(prefix=f"soc_{tag}_")
-    if not ev:
-        return spark.createDataFrame([], _RESULT_SCHEMA)
+    def data(r) -> str:
+        return f"{r.event_id},{r.event_type},{r.user_id}"
 
-    def recs(rows, seq_base=0):
-        return [
-            {
-                "data": f"{r.event_id},{r.event_type},{r.user_id}",
-                "partition_key": str(r.user_id),
-                "shard_id": f"shardId-{r.user_id % 4:012d}",
-                "sequence_number": f"{seq_base + r.event_id:056d}",
-            }
-            for r in rows
-        ]
-
-    first = [r for r in ev if r.event_id % 2 == 0]
-    second = [r for r in ev if r.event_id % 2 == 1]
-    if not first:  # degenerate tiny slice: ship everything up front
-        first, second = second, []
-    write_record_file(f"{root}/events_replay", recs(first))
-    eng = Engine(
-        spark,
-        metadata_dir=f"{root}/meta",
-        trigger_interval="50 milliseconds",
-        shuffle_partitions=4,
-    )
-    ep, stream, base, chained = (
-        f"soc_ep_{tag}",
-        f"soc_stream_{tag}",
-        f"soc_base_{tag}",
-        f"soc_chain_{tag}",
-    )
-    try:
-        eng.add_endpoint(ep, url=root)
-        eng.create_stream(
-            stream,
-            "event_id BIGINT, event_type STRING, user_id BIGINT",
-        )
+    def body(g: _Gate) -> list:
+        first, second = g.rows(2, 0), g.rows(2, 1)
+        if not first:  # degenerate tiny slice: ship everything up front
+            first, second = second, []
+        g.feed(first, data=data)
+        eng = g.engine("event_id BIGINT, event_type STRING, user_id BIGINT")
+        base, chained = g.name("base"), g.name("chain")
         eng.create_continuous_view(
             base,
             f"SELECT event_type, user_id % 4 AS bucket, "
-            f"count(*) AS n, sum(event_id) AS s FROM {stream} "
+            f"count(*) AS n, sum(event_id) AS s FROM {g.stream} "
             f"GROUP BY event_type, user_id % 4",
-            stream=stream,
+            stream=g.stream,
             materialize="parquet_upsert",
             key_cols=["event_type", "bucket"],
             # the telescope needs the FULL delta history — opt out of
@@ -2969,27 +2171,18 @@ def streaming_osrel_cascade(
             f"FROM {base}_osrel GROUP BY new.event_type",
             stream=f"{base}_osrel",
         )
-        eng.consume_begin(
-            ep, "events_replay", stream, fmt="csv", delimiter=",",
-        )
-        eng.wait_for_ingest(timeout_s=180)
-        eng.wait_for_ingest(timeout_s=60)  # drain the cascade tail
+        g.begin()
+        g.drain()
+        g.drain(timeout_s=60)  # drain the cascade tail
         if second:
             # phase two: most (type, bucket) keys update, so the
             # osrel history holds genuine (old != NULL) deltas
-            write_record_file(
-                f"{root}/events_replay", recs(second, seq_base=10**12)
-            )
-            eng.wait_for_ingest(timeout_s=180)
-            eng.wait_for_ingest(timeout_s=60)
-        rows = [
-            (r.event_type, int(r.n_events), int(r.sum_event_id))
-            for r in eng.view_table(chained).collect()
-        ]
-    finally:
-        eng.consume_end_all()
-        shutil.rmtree(root, ignore_errors=True)
-    return spark.createDataFrame(rows, _RESULT_SCHEMA)
+            g.feed(second, _BATCH2, data=data)
+            g.drain()
+            g.drain(timeout_s=60)
+        return g.counts(view=chained)
+
+    return _run_gate(spark, sf_dir, 139, 11, "soc", body)
 
 
 STREAMING_OSREL_CASCADE_SQL = """

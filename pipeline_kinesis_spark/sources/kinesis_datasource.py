@@ -122,20 +122,22 @@ def make_boto3_client(
     alternative."""
     try:
         import boto3
+        import botocore.session
     except ImportError as exc:
         raise NotImplementedError(
             "boto3 is not installed; register an injected client via "
             "Engine.register_kinesis_client(endpoint, client) or install "
             "boto3 for the real AWS wire"
         ) from exc
+    core = botocore.session.Session()
     if credfile:
-        # reference credfile: shared-credentials-file style; also how
-        # executor workers (whose env Spark controls) get SigV4
-        # material. Assignment, not setdefault: THIS endpoint's
-        # credfile must win over whatever an earlier caller left in the
-        # env — boto3 reads the variable at Session construction below
-        os.environ["AWS_SHARED_CREDENTIALS_FILE"] = credfile
-    return boto3.session.Session().client(
+        # reference credfile: shared-credentials-file style, scoped to
+        # THIS client's session — the process environment is never
+        # written, so two endpoints with different credfiles (or a
+        # host-level AWS_SHARED_CREDENTIALS_FILE) cannot leak into
+        # each other's signing
+        core.set_config_variable("credentials_file", credfile)
+    return boto3.session.Session(botocore_session=core).client(
         "kinesis", region_name=region, endpoint_url=endpoint_url or None
     )
 

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import base64
 import json
+import os
 import time
 
 import pytest
@@ -113,3 +114,38 @@ def test_engine_ingests_through_real_boto3_wire(wire, spark, tmp_path):
     }
     assert marks[(c.id, "shardId-000")] == "shardId-000-1"
     eng.consume_end_all()
+
+
+def test_credfile_scoped_to_its_client(monkeypatch, tmp_path):
+    """Each client signs with ITS endpoint's credfile, and building one
+    never writes AWS_SHARED_CREDENTIALS_FILE: two endpoints with
+    different credfiles cannot leak into each other, and a host-level
+    value survives every client build."""
+    for var in ("AWS_ACCESS_KEY_ID", "AWS_SECRET_ACCESS_KEY",
+                "AWS_SESSION_TOKEN", "AWS_PROFILE"):
+        monkeypatch.delenv(var, raising=False)
+    monkeypatch.setenv("AWS_EC2_METADATA_DISABLED", "true")
+    host = str(tmp_path / "host_creds")
+    monkeypatch.setenv("AWS_SHARED_CREDENTIALS_FILE", host)
+
+    class Signed(Exception):
+        pass
+
+    def authorization(request, **_):
+        # stop before the wire: the signed header is all this needs
+        raise Signed(str(request.headers["Authorization"]))
+
+    for key in ("AKIDFIRST", "AKIDSECOND"):
+        cred = tmp_path / f"{key}.creds"
+        cred.write_text(
+            f"[default]\naws_access_key_id = {key}\n"
+            "aws_secret_access_key = testing\n"
+        )
+        client = make_boto3_client(
+            "us-east-1", str(cred), endpoint_url="http://127.0.0.1:1"
+        )
+        client.meta.events.register("before-send", authorization)
+        with pytest.raises(Signed) as signed:
+            client.describe_stream(StreamName="events")
+        assert f"Credential={key}/" in str(signed.value)
+        assert os.environ["AWS_SHARED_CREDENTIALS_FILE"] == host

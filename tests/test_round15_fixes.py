@@ -129,6 +129,12 @@ def test_memory_view_survives_pause_resume_without_new_data(
             r.k: (r.n, r.total) for r in eng.view_table("mv").collect()
         }
         assert got == want
+        # ad-hoc SQL reads the same pinned contents, not the empty sink
+        got_sql = {
+            r.k: (r.n, r.total)
+            for r in eng.sql("SELECT k, n, total FROM mv").collect()
+        }
+        assert got_sql == want
         # ...and new data after the resume takes over from the pin
         write_record_file(
             os.path.join(root, "records"),
