@@ -21,6 +21,7 @@ into Spark's task scheduler; shard→task assignment is automatic.
 from __future__ import annotations
 
 import functools
+import glob
 import os
 import re
 import shutil
@@ -188,37 +189,57 @@ def _guarded_batch(fn):
     return wrapper
 
 
-def _publish_spool_batch(spool: str, bid: int, tmp: str) -> None:
-    """Publish one landed datasource micro-batch into the spool: rename
-    `tmp`'s non-empty part files to deterministic
-    `batch-ds{bid}-{i}.jsonl` names. A REPLAY must fully replace the
-    prior attempt's publish — if the first attempt wrote more files for
-    this batch id than the replay does (shard set changed between
-    attempts, or pinned records expired from retention), a stale
-    leftover would duplicate its records downstream — so any existing
-    files for this batch id are deleted first. With the source's
-    pinned-replay guarantee the rewritten files are byte-identical, so
-    the publish is idempotent as seen by downstream file sources."""
-    stale_prefix = f"batch-ds{int(bid):010d}-"
-    for n in os.listdir(spool):
-        if n.startswith(stale_prefix):
-            try:
-                os.unlink(os.path.join(spool, n))
-            except OSError:
-                pass
-    i = 0
-    for n in sorted(os.listdir(tmp)):
-        full = os.path.join(tmp, n)
-        if not n.startswith("part-") or n.endswith(".crc"):
-            continue
-        if os.path.getsize(full) == 0:
-            continue
-        os.replace(
-            full,
-            os.path.join(spool, f"{stale_prefix}{i:04d}.jsonl"),
-        )
-        i += 1
-    shutil.rmtree(tmp, ignore_errors=True)
+def _published_through(dest: str, tag: str) -> int:
+    """High-water batch id writer `tag` has published into `dest` (-1:
+    none yet). Batches at or below it are replays of published ones,
+    whose files compact_stream_table may since have merged or a spool
+    reap deleted: writing them again would duplicate them."""
+    try:
+        with open(os.path.join(dest, f"_{tag}.hwm")) as f:
+            return int(f.read())
+    except FileNotFoundError:
+        return -1
+
+
+def _staging_dir(dest: str, tag: str, bid: int) -> str:
+    """Sibling temp dir a batch is written to before _publish_batch."""
+    return f"{dest.rstrip('/')}__tmp_{tag}_b{int(bid)}"
+
+
+def _publish_batch(
+    tag: str, bid: int, staged: list[tuple[str, str]], ext: str
+) -> None:
+    """Publish one micro-batch of writer `tag` (one standing query: a
+    spool landing, an archive plus its dead letters, a transform sink).
+    For each (tmp, dest) pair, replace this batch id's files in `dest`
+    with `tmp`'s non-empty part files, named
+    `{tag}-b{bid:010d}-{i:04d}{ext}` (a replay that writes fewer files
+    than the first attempt must leave no stale one). Then, after every
+    rename, os.replace the writer's `_{tag}.hwm` mark in the FIRST dest
+    (underscore-prefixed, so Spark's file listings skip it)."""
+    stem = f"{tag}-b{int(bid):010d}-"
+    for tmp, dest in staged:
+        os.makedirs(dest, exist_ok=True)
+        for n in os.listdir(dest):
+            if n.startswith(stem):
+                try:
+                    os.unlink(os.path.join(dest, n))
+                except OSError:
+                    pass
+        i = 0
+        for n in sorted(os.listdir(tmp)):
+            full = os.path.join(tmp, n)
+            if not n.startswith("part-") or n.endswith(".crc"):
+                continue
+            if os.path.getsize(full) == 0:
+                continue
+            os.replace(full, os.path.join(dest, f"{stem}{i:04d}{ext}"))
+            i += 1
+        shutil.rmtree(tmp, ignore_errors=True)
+    mark = os.path.join(staged[0][1], f"_{tag}.hwm")
+    with open(f"{mark}.tmp", "w") as f:
+        f.write(str(int(bid)))
+    os.replace(f"{mark}.tmp", mark)
 
 
 # A memory view's sink table lives in the SparkSession (named after the
@@ -778,12 +799,11 @@ class Engine:
         on batch 0"). A checkpoint with no committed offsets batch
         never got past batch 0, so resetting it for a clean first
         start loses nothing — the exactly-once contract rides the
-        sink-side logs (parquet _spark_metadata / spool publish /
-        attained-position pins), all of which tolerate a batch-0
-        replan by construction. A checkpoint WITH a committed batch —
-        or one whose offset log can't be LISTED (fail-safe: only wipe
-        when the listing positively shows no committed batch) —
-        resumes untouched. Destructive, so called ONLY from
+        sink side (batch-id publish marks, attained-position pins),
+        where such a query recorded nothing. A checkpoint WITH a
+        committed batch — or one whose offset log can't be LISTED
+        (fail-safe: only wipe when the listing positively shows no
+        committed batch) — resumes untouched. Destructive, so called ONLY from
         _ckpt_for_start immediately before a query start (ADVICE r14
         #2: a path-getter with a destructive side effect was safe only
         while every caller preceded query start)."""
@@ -891,6 +911,13 @@ class Engine:
                     "url/region)"
                 )
             iterator_type(start_position)  # validate before any side effect
+            for d in (self.table_dir(relation), self.dead_letter_dir(relation)):
+                if os.path.isdir(os.path.join(d, "_spark_metadata")):
+                    raise ValueError(
+                        f"{d} holds an old file-sink _spark_metadata log, "
+                        "which readers would honour over newly published "
+                        "files; move it aside first"
+                    )
             if spool_keep_seconds is not None and not is_kinesis:
                 # the file-feed path reads the caller's own directory
                 # directly — there is no engine-owned spool to reap, and
@@ -1186,23 +1213,23 @@ class Engine:
             parsed = parse_records(
                 records, sd.schema_ddl, fmt, delimiter, quote, escape
             )
-            good, bad = split_quarantine(parsed)
+            good = split_quarantine(parsed)[0]
+            tag = f"c{consumer.id}"
 
             queries: list[StreamingQuery] = []
             if ds_mode:
                 # (0) landing: drain the executor-parallel source into
                 # the spool. bdf.write.json runs ON EXECUTORS (the
                 # data path); the driver only renames the part files
-                # to deterministic per-(batch, partition) spool names
-                # — with the source's pinned-replay guarantee a
-                # replayed batch rewrites byte-identical files, so the
-                # publish is idempotent and downstream file sources
-                # never see a torn or divergent batch.
-                def _land(bdf, bid, _spool=spool, _reap=reap_spool):
+                # into place (_publish_batch), so downstream file
+                # sources never see a torn or divergent batch.
+                def _land(bdf, bid, _spool=spool, _reap=reap_spool, _tag=tag):
                     _reap()
-                    tmp = f"{_spool}__tmp_b{bid}"
+                    if bid <= _published_through(_spool, _tag):
+                        return
+                    tmp = _staging_dir(_spool, _tag, bid)
                     bdf.write.mode("overwrite").json(tmp)
-                    _publish_spool_batch(_spool, bid, tmp)
+                    _publish_batch(_tag, bid, [(tmp, _spool)], ".jsonl")
 
                 queries.append(self._start_query(
                     ds_raw.writeStream.foreachBatch(_guarded_batch(_land))
@@ -1216,24 +1243,31 @@ class Engine:
                     .trigger(processingTime=interval)
                 ))
                 self._ds_consumers.add(consumer.id)
-            # (a) exactly-once durable archive of the parsed stream.
+            # (a) one parse per micro-batch: good rows to the archive,
+            # bad ones (if any) to the dead-letter quarantine (the
+            # reference drops the whole batch, pipeline_kinesis.c:740-758)
+            def _ingest(
+                bdf, bid, _tag=tag, _arch=self.table_dir(relation),
+                _dl=self.dead_letter_dir(relation),
+            ):
+                if bid <= _published_through(_arch, _tag):
+                    return
+                bdf.persist()
+                try:
+                    good_b, bad_b = split_quarantine(bdf)
+                    staged = [(_staging_dir(_arch, _tag, bid), _arch)]
+                    good_b.write.mode("overwrite").parquet(staged[0][0])
+                    if not bad_b.isEmpty():
+                        staged.append((_staging_dir(_dl, _tag, bid), _dl))
+                        bad_b.write.mode("overwrite").parquet(staged[1][0])
+                    _publish_batch(_tag, bid, staged, ".parquet")
+                finally:
+                    bdf.unpersist()
+
             queries.append(self._start_query(
-                good.writeStream.format("parquet")
+                parsed.writeStream.foreachBatch(_guarded_batch(_ingest))
                 .queryName(f"ingest_{relation}_c{consumer.id}")
-                .option("path", self.table_dir(relation))
                 .option("checkpointLocation", self._ckpt_for_start(consumer.id, "ingest"))
-                .trigger(processingTime=interval)
-            ))
-            # (b) dead-letter quarantine (improves on the reference's
-            # whole-batch drop, pipeline_kinesis.c:740-758).
-            queries.append(self._start_query(
-                bad.writeStream.format("parquet")
-                .queryName(f"deadletter_{relation}_c{consumer.id}")
-                .option("path", self.dead_letter_dir(relation))
-                .option(
-                    "checkpointLocation",
-                    self._ckpt_for_start(consumer.id, "dead_letter"),
-                )
                 .trigger(processingTime=interval)
             ))
             # (c) continuous views registered on this relation; each may
@@ -1720,8 +1754,6 @@ class Engine:
                 kind, entity = "transform", qname[len("transform_"):]
             elif qname.startswith("ingest_"):
                 kind, entity = "ingest", qname[len("ingest_"):]
-            elif qname.startswith("deadletter_"):
-                kind, entity = "dead_letter", qname[len("deadletter_"):]
             elif qname.endswith("__sw_raw") and qname[:-8] in views:
                 kind, entity = "view", qname[:-8]
             elif qname.endswith("__mrel") and qname[:-6] in views:
@@ -1910,10 +1942,15 @@ class Engine:
         proc = self._procs.get(t.name)
 
         def _transform_batch(
-            bdf: DataFrame, bid: int, _dir=sink_dir, _p=proc
+            bdf: DataFrame, bid: int, _dir=sink_dir, _p=proc,
+            _tag=f"{t.name}-c{consumer_id}",
         ) -> None:
-            if _dir is not None:
-                bdf.write.mode("append").parquet(_dir)
+            # the sink publish is exactly-once; the proc runs again on
+            # a replayed batch (at-least-once)
+            if _dir is not None and bid > _published_through(_dir, _tag):
+                tmp = _staging_dir(_dir, _tag, bid)
+                bdf.write.mode("overwrite").parquet(tmp)
+                _publish_batch(_tag, bid, [(tmp, _dir)], ".parquet")
             if _p is not None:
                 _p(bdf, bid)
 
@@ -2394,16 +2431,11 @@ class Engine:
         op every streaming sink needs (micro-batches write a file per
         trigger per partition; small files dominate scan cost long before
         100 TB). Consumers for the relation must be stopped (the swap
-        cannot race an appending writer); the file-source checkpoint
-        tracks SOURCE offsets, not sink files, so consumption resumes
-        cleanly after compaction. The sink's ``_spark_metadata``
-        transaction log is rewritten as a single ``<latestId>.compact``
-        snapshot naming the compacted files, which is exactly where
-        FileStreamSink readers and the resumed sink's own log compaction
-        pick up. (The snapshot's id need not land on the sink's own
-        N*compactInterval-1 boundary: FileStreamSink reads the NEWEST
-        .compact regardless of alignment — behavior the compaction tests
-        pin down.) Returns (files_before, files_after).
+        cannot race an appending writer). The writers' batch-id
+        high-water marks are carried across the swap, so a batch
+        replayed after compaction — its files now merged under other
+        names — is still recognized as published and skipped.
+        Returns (files_before, files_after).
 
         The swap is two os.rename calls, NOT one atomic operation: a
         concurrent reader in the instant between them sees a missing
@@ -2413,10 +2445,6 @@ class Engine:
         the .compact.bak snapshot before the error propagates, so the
         relation is never left missing.
         """
-        import glob
-        import json
-        import shutil
-
         with self._lock:
             for c in self.catalog.all_consumers():
                 if c.relation == relation and c.id in self._queries:
@@ -2426,57 +2454,23 @@ class Engine:
             d = self.table_dir(relation)
             if not os.path.isdir(d):
                 raise ValueError(f"no stream table for {relation!r}")
-
-            def _nfiles(p: str) -> int:
-                return len(
-                    [f for f in os.listdir(p) if f.endswith(".parquet")]
-                )
-
-            meta = os.path.join(d, "_spark_metadata")
-            latest = -1
-            if os.path.isdir(meta):
-                for f in os.listdir(meta):
-                    base = f[: -len(".compact")] if f.endswith(
-                        ".compact"
-                    ) else f
-                    if base.isdigit():
-                        latest = max(latest, int(base))
-
-            before = _nfiles(d)
+            for n in os.listdir(d):
+                m = re.match(r"(.+)-b(\d{10})-\d+\.parquet$", n)
+                if m and int(m[2]) > _published_through(d, m[1]):
+                    # renamed in but never marked (a crash between the
+                    # two), so never committed: its writer replays it
+                    os.unlink(os.path.join(d, n))
+            before = len(glob.glob(os.path.join(d, "*.parquet")))
             tmp = d.rstrip("/") + ".compact.tmp"
             bak = d.rstrip("/") + ".compact.bak"
             (
-                self.spark.read.parquet(d)
+                self.spark.read.option("mergeSchema", "true").parquet(d)
                 .coalesce(max(target_files, 1))
                 .write.mode("overwrite")
                 .parquet(tmp)
             )
-            if latest >= 0:
-                # snapshot log entry in FileStreamSinkLog v1 format: the
-                # resumed sink appends <latest+1>, readers start from the
-                # newest .compact — older per-batch entries are obsolete.
-                newmeta = os.path.join(tmp, "_spark_metadata")
-                os.makedirs(newmeta, exist_ok=True)
-                lines = ["v1"]
-                for p in sorted(glob.glob(os.path.join(tmp, "*.parquet"))):
-                    st = os.stat(p)
-                    lines.append(
-                        json.dumps(
-                            {
-                                "path": "file://" + os.path.join(d, os.path.basename(p)),
-                                "size": st.st_size,
-                                "isDir": False,
-                                "modificationTime": int(st.st_mtime * 1000),
-                                "blockReplication": 1,
-                                "blockSize": 33554432,
-                                "action": "add",
-                            }
-                        )
-                    )
-                with open(
-                    os.path.join(newmeta, f"{latest}.compact"), "w"
-                ) as fh:
-                    fh.write("\n".join(lines))
+            for mark in glob.glob(os.path.join(d, "_*.hwm")):
+                shutil.copy2(mark, tmp)
             os.rename(d, bak)
             try:
                 os.rename(tmp, d)
@@ -2484,7 +2478,7 @@ class Engine:
                 os.rename(bak, d)  # restore — never leave the relation gone
                 raise
             shutil.rmtree(bak)
-            return before, _nfiles(d)
+            return before, len(glob.glob(os.path.join(d, "*.parquet")))
 
     def replay_dead_letters(
         self,
@@ -2562,10 +2556,9 @@ class Engine:
         good = good.cache()
         n = good.count()
         if n:
-            # a separate dir: the streaming sink's _spark_metadata log
-            # makes its own directory append-only from its point of view —
-            # batch reads there ignore foreign files. stream_table unions
-            # both; dead_letters anti-joins this dir's lineage.
+            # a separate dir that doubles as the recovered-row marker:
+            # stream_table unions both; dead_letters anti-joins this
+            # dir's lineage.
             good.write.mode("append").parquet(self._replayed_dir(relation))
         good.unpersist()
         return n
@@ -2575,7 +2568,14 @@ class Engine:
 
     def dead_letters(self, relation: str) -> DataFrame:
         """Quarantined rows not yet recovered by replay_dead_letters."""
-        dl = self.spark.read.parquet(self.dead_letter_dir(relation))
+        d = self.dead_letter_dir(relation)
+        if glob.glob(os.path.join(d, "*.parquet")):
+            dl = self.spark.read.parquet(d)
+        else:  # nothing quarantined yet: the quarantine schema, no rows
+            dl = split_quarantine(parse_records(
+                self.spark.createDataFrame([], RECORD_SCHEMA),
+                self.catalog.stream(relation).schema_ddl,
+            ))[1]
         if not os.path.isdir(self._replayed_dir(relation)):
             return dl
         replayed = self.spark.read.parquet(

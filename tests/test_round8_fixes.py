@@ -14,7 +14,7 @@ import threading
 
 import pytest
 
-from pipeline_kinesis_spark.engine import _publish_spool_batch
+from pipeline_kinesis_spark.engine import _publish_batch, _published_through
 from pipeline_kinesis_spark.sources.kinesis_datasource import (
     _read_attained,
     _reap_attained,
@@ -137,40 +137,44 @@ class TestPublishSpoolBatch:
         spool.mkdir()
         # prior attempt of batch 5 published two files; other batches
         # must be untouched
-        (spool / "batch-ds0000000005-0000.jsonl").write_text("old-a\n")
-        (spool / "batch-ds0000000005-0003.jsonl").write_text("old-b\n")
-        (spool / "batch-ds0000000004-0000.jsonl").write_text("keep\n")
-        tmp = tmp_path / "spool__tmp_b5"
+        (spool / "c1-b0000000005-0000.jsonl").write_text("old-a\n")
+        (spool / "c1-b0000000005-0003.jsonl").write_text("old-b\n")
+        (spool / "c1-b0000000004-0000.jsonl").write_text("keep\n")
+        tmp = tmp_path / "spool__tmp_c1_b5"
         tmp.mkdir()
         (tmp / "part-00000-x.json").write_text("new-a\n")
         (tmp / "part-00001-x.json").write_text("")  # empty: skipped
         (tmp / "part-00000-x.json.crc").write_text("crc")
         (tmp / "_SUCCESS").write_text("")
-        _publish_spool_batch(str(spool), 5, str(tmp))
+        _publish_batch("c1", 5, [(str(tmp), str(spool))], ".jsonl")
         names = sorted(os.listdir(spool))
         assert names == [
-            "batch-ds0000000004-0000.jsonl",
-            "batch-ds0000000005-0000.jsonl",
+            "_c1.hwm",
+            "c1-b0000000004-0000.jsonl",
+            "c1-b0000000005-0000.jsonl",
         ]
-        assert (spool / "batch-ds0000000005-0000.jsonl").read_text() == (
+        assert (spool / "c1-b0000000005-0000.jsonl").read_text() == (
             "new-a\n"
         )
-        assert (spool / "batch-ds0000000004-0000.jsonl").read_text() == (
+        assert (spool / "c1-b0000000004-0000.jsonl").read_text() == (
             "keep\n"
         )
         assert not tmp.exists()
+        assert _published_through(str(spool), "c1") == 5
 
     def test_first_publish_is_plain_rename(self, tmp_path):
         spool = tmp_path / "spool"
         spool.mkdir()
-        tmp = tmp_path / "spool__tmp_b0"
+        assert _published_through(str(spool), "c1") == -1
+        tmp = tmp_path / "spool__tmp_c1_b0"
         tmp.mkdir()
         (tmp / "part-00000-x.json").write_text("r1\n")
         (tmp / "part-00002-x.json").write_text("r2\n")
-        _publish_spool_batch(str(spool), 0, str(tmp))
+        _publish_batch("c1", 0, [(str(tmp), str(spool))], ".jsonl")
         assert sorted(os.listdir(spool)) == [
-            "batch-ds0000000000-0000.jsonl",
-            "batch-ds0000000000-0001.jsonl",
+            "_c1.hwm",
+            "c1-b0000000000-0000.jsonl",
+            "c1-b0000000000-0001.jsonl",
         ]
 
 

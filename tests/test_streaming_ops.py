@@ -390,10 +390,9 @@ def test_compact_stream_table(engine, spark, tmp_path):
         r.payload for r in engine.stream_table("c_stream").collect()
     } == before_rows
 
-    # ingestion resumes from the checkpoint and must survive the sink
-    # log's OWN compaction boundary (CompactibleFileStreamLog compacts at
-    # batch id 9 with the default interval 10 — it unions our snapshot
-    # entry with the post-resume deltas)
+    # ingestion resumes from the checkpoint: the high-water mark carried
+    # across the swap skips only batches already published, so the
+    # post-resume batches (ids 5..11) all land beside the compacted file
     for i in range(5, 12):
         write_record_file(str(src_root / "s"), [{"data": f"r{i}"}])
     engine.consume_begin("ep", "s", "c_stream")

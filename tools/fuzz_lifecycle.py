@@ -30,6 +30,9 @@ Ops drawn per step (seeded):
   alter          consume_end_all + ALTER STREAM ADD COLUMN via the
                  SQL surface + resume; later feeds carry the extra
                  column (view untouched; once per scenario)
+  compact        consume_end_all + compact_stream_table + resume (a
+                 batch replayed after the swap must not be archived
+                 again)
 
 End-of-scenario ledger (after a final drain):
   view == exact aggregate of WELL-FORMED rows fed,
@@ -42,8 +45,9 @@ reference's core protocol, A1-A4/A9-A12): a boto3-shaped canned wire
 shard SPLIT / shard MERGE / injected throttle+expire faults /
 pause-resume / full engine restart, and the same exactness ledger
 must hold (every appended record lands in the view and archive
-exactly once, across reshard boundaries, fault retries and
-restarts). --mode mixed alternates per scenario.
+exactly once, across reshard boundaries, fault retries, restarts and
+compactions). --mode datasource drives the executor-parallel path the
+same way; --mode mixed cycles all three per scenario.
 
 Scenario i draws from default_rng([seed, i]) so any single scenario
 replays standalone: --only-scenario N reruns exactly scenario N of
@@ -52,7 +56,7 @@ the same seed.
 Usage:
   python tools/fuzz_lifecycle.py [--budget-s 300] [--seed N]
                                  [--only-scenario N]
-                                 [--mode file|wire|mixed]
+                                 [--mode file|wire|datasource|mixed]
 
 Emits one JSON summary line; exit 1 on any contract violation.
 """
@@ -68,6 +72,7 @@ import tempfile
 import time
 import traceback
 import uuid
+from collections import Counter
 
 sys.path.insert(0, ".")
 
@@ -76,7 +81,7 @@ import numpy as np  # noqa: E402
 OPS = (
     "feed", "drain", "pause_resume", "restart", "flap_view",
     "rebucket", "feed_malformed", "replay", "alter",
-    "ttl_expire", "replay_rebucket",
+    "ttl_expire", "replay_rebucket", "compact",
 )
 # feeds and drains dominate so most scenarios move real data between
 # lifecycle punches. r15 ops (VERDICT r14 #3): ttl_expire = the manual
@@ -84,8 +89,8 @@ OPS = (
 # the sweep takes the store lock mid-stream but must reap 0);
 # replay_rebucket = replay_dead_letters on a worker thread racing a
 # concurrent rebucket of the same view's store (A19 concurrency guard).
-WEIGHTS = (0.22, 0.18, 0.10, 0.10, 0.09, 0.08, 0.08, 0.05, 0.03,
-           0.04, 0.03)
+WEIGHTS = (0.20, 0.17, 0.10, 0.10, 0.09, 0.08, 0.08, 0.05, 0.03,
+           0.04, 0.03, 0.03)
 KEYS = tuple(f"k{i}" for i in range(8))
 
 
@@ -315,6 +320,11 @@ def _scenario(spark, rng: np.random.Generator, ops_run: list) -> dict:
                     )
                     state["altered"] = True
                     begin()
+            elif op == "compact":
+                eng.consume_end_all()
+                consuming = False
+                _compact(eng, stream)
+                begin()
         if not consuming:
             begin()
         eng.wait_for_ingest(timeout_s=300)
@@ -359,10 +369,7 @@ def _scenario(spark, rng: np.random.Generator, ops_run: list) -> dict:
             problems.append(
                 f"archive {archived} != good+recovered {want_archive}"
             )
-        try:
-            dl = eng.dead_letters(stream).count()
-        except Exception:
-            dl = 0  # no dead-letter dir yet: nothing ever quarantined
+        dl = eng.dead_letters(stream).count()
         want_dl = state["malformed"] - state["recovered"]
         if dl != want_dl:
             problems.append(
@@ -380,9 +387,16 @@ def _scenario(spark, rng: np.random.Generator, ops_run: list) -> dict:
 
 WIRE_OPS = (
     "append", "drain", "split", "merge", "fault",
-    "pause_resume", "restart",
+    "pause_resume", "restart", "compact",
 )
-WIRE_WEIGHTS = (0.34, 0.18, 0.12, 0.10, 0.10, 0.08, 0.08)
+WIRE_WEIGHTS = (0.32, 0.17, 0.12, 0.10, 0.10, 0.07, 0.07, 0.05)
+
+
+def _compact(eng, stream: str) -> None:
+    """compact_stream_table on stopped consumers; a relation with no
+    archive dir yet (nothing ingested) has nothing to compact."""
+    if os.path.isdir(eng.table_dir(stream)):
+        eng.compact_stream_table(stream, target_files=1)
 
 
 def _scenario_wire(
@@ -550,6 +564,10 @@ def _scenario_wire(
                     append()
                 eng = new_engine()
                 begin()
+            elif op == "compact":
+                eng.consume_end_all()
+                _compact(eng, stream)
+                begin()
         drain(eng)
 
         problems = []
@@ -568,8 +586,6 @@ def _scenario_wire(
         if archived != state["fed"]:
             # dup/miss forensics: which sequence numbers were delivered
             # a wrong number of times (sample)
-            from collections import Counter
-
             seqs = Counter(
                 r.sequence_number
                 for r in eng.stream_table(stream)
@@ -616,6 +632,7 @@ def main() -> int:
     scenarios = 0
     total_ops = 0
     total_fed = 0
+    op_counts: Counter = Counter()
     violations = []
 
     def run_one(idx: int):
@@ -654,6 +671,7 @@ def main() -> int:
                     {"scenario": idx, "ops": ops_run, "problem": p}
                 )
         scenarios += 1
+        op_counts.update(op for op in ops_run if not op.startswith("["))
 
     if args.only_scenario is not None:
         run_one(args.only_scenario)
@@ -669,6 +687,7 @@ def main() -> int:
                 "scenarios": scenarios,
                 "lifecycle_ops": total_ops,
                 "records_fed": total_fed,
+                "op_counts": dict(sorted(op_counts.items())),
                 "violations": len(violations),
                 "seed": args.seed,
                 "budget_s": args.budget_s,
