@@ -61,7 +61,6 @@ from pipeline_kinesis_spark.streaming.continuous_view import (
     OSREL_KEEP_DEFAULT,
     PARTIAL_SEP,
     SW_BUCKET_COL,
-    _write_bucket_marker,
     combine_rewrite_sql,
     combine_select_expr,
     combine_view,
@@ -73,12 +72,10 @@ from pipeline_kinesis_spark.streaming.continuous_view import (
     parse_sw_view_sql,
     publish_bucket_files,
     read_reap_marker,
-    store_bucket_files,
+    read_store,
     read_store_manifest,
-    read_store_schema,
-    recover_store_swap,
-    write_store_manifest,
     split_having,
+    store_bucket_files,
     sw_combine,
     sw_rewrite_sql,
     upsert_to_parquet,
@@ -911,6 +908,7 @@ class Engine:
                     "url/region)"
                 )
             iterator_type(start_position)  # validate before any side effect
+            self._restore_compacted(relation)
             for d in (self.table_dir(relation), self.dead_letter_dir(relation)):
                 if os.path.isdir(os.path.join(d, "_spark_metadata")):
                     raise ValueError(
@@ -1581,15 +1579,9 @@ class Engine:
         # clobber the manifest) mid-sweep — merges queue behind the
         # sweep and proceed when it finishes
         with self._store_lock(view_name):
-            # a writer holding the mutex owns crash recovery: a store
-            # stranded under a crashed legacy swap must be restored or
-            # the sweep would silently no-op on it
-            recover_store_swap(table_dir)
-            if not os.path.isdir(table_dir):
-                return 0
-            # pre-manifest stores fall back to the single-generation
-            # directory listing inside the shared helper
-            buckets = store_bucket_files(table_dir, allow_listing=True)
+            buckets = store_bucket_files(table_dir)
+            if buckets is None:
+                return 0  # nothing committed yet
             for bucket in sorted(buckets):
                 paths = buckets[bucket]
                 if not paths:
@@ -1624,18 +1616,17 @@ class Engine:
         """Resize a parquet_upsert view's hash-bucket count — the ops
         path for a view whose keyspace outgrew the bucket count fixed
         at creation (more buckets = smaller per-batch bucket rewrites).
-        One full-store rewrite committed IN PLACE through the same
-        two-generation MVCC machinery as the merge: re-hash every
-        committed row into the new layout in a tmp dir, move the new
-        part files into the live bucket dirs, and flip the manifest —
-        which carries the bucket count, so the file list and the hash
-        modulus change in ONE atomic rename (a separate marker could
-        desync across a crash and make merges hash keys into the wrong
-        generation's buckets). The live directory is never renamed, so
-        in-flight readers keep every file they planned until the next
-        commit reaps the old generation. Serialized against the view's
-        live foreachBatch merge (and ttl_expire) via the store mutex;
-        merges queue behind the rewrite and resume on the new layout."""
+        One full-store rewrite committed through the store's one
+        manifest commit (publish_bucket_files), the same as every
+        merge: re-hash every committed row into the new layout in a tmp
+        dir, move the new part files into the live bucket dirs, and
+        flip the manifest — which carries the bucket count, so the file
+        list and the hash modulus change in ONE atomic rename. The live
+        directory is never renamed, so in-flight readers keep every
+        file they planned until the next commit reaps the old
+        generation. Serialized against the view's live foreachBatch
+        merge (and ttl_expire) via the store mutex; merges queue behind
+        the rewrite and resume on the new layout."""
         vd = self.catalog.state.views.get(view_name)
         if vd is None:
             raise KeyError(f"unknown continuous view {view_name!r}")
@@ -1648,66 +1639,27 @@ class Engine:
         key_cols = list(vd.get("key_cols") or [])
         table_dir = self.view_dir(view_name)
         with self._store_lock(view_name):
-            # heal any crashed LEGACY whole-dir swap before deciding
-            # whether the store exists (writers own recovery)
-            recover_store_swap(table_dir)
             # future first-materializations (and restarts before one)
             # pick the new count up from the catalog
             self.catalog.update_view_options(
                 view_name, upsert_buckets=num_buckets
             )
-            if not os.path.isdir(table_dir):
-                return  # nothing materialized yet
-            old_per_bucket = store_bucket_files(
-                table_dir, allow_listing=True
-            )
-            old_buckets = set(old_per_bucket or {})
-            has_flat = any(
-                n.endswith(".parquet") for n in os.listdir(table_dir)
-            )
-            if not old_buckets and not has_flat:
-                # dir exists but holds no data: record the count only
-                _write_bucket_marker(table_dir, num_buckets)
-                write_store_manifest(
-                    table_dir, None, num_buckets=num_buckets
-                )
-                return
-            cur = self._read_view_store(view_name)
-            if KB_COL in cur.columns:
-                cur = cur.drop(KB_COL)
+            old_buckets = store_bucket_files(table_dir)
+            if old_buckets is None:
+                return  # nothing committed yet
             kb = F.pmod(
                 F.xxhash64(*[F.col(k) for k in key_cols]),
                 F.lit(int(num_buckets)),
             ).cast("int")
-            rehashed = cur.withColumn(KB_COL, kb)
+            rehashed = (
+                self._read_view_store(view_name)
+                .drop(KB_COL)
+                .withColumn(KB_COL, kb)
+            )
             tmp = f"{table_dir}__rebucket_{uuid.uuid4().hex[:8]}"
             rehashed.write.mode("overwrite").partitionBy(KB_COL).parquet(
                 tmp
             )
-            if has_flat:
-                # FLAT legacy store: an in-place commit would leave a
-                # mixed flat+bucketed dir across a crash (which the
-                # next merge's legacy detection cannot read) — migrate
-                # through the one-time whole-dir swap instead, whose
-                # crash states recover_store_swap already heals. The
-                # brief reader window matches the legacy migration
-                # _upsert_batch performs on such stores anyway.
-                _write_bucket_marker(tmp, num_buckets)
-                bak = f"{table_dir}__rebucket_bak"
-                os.rename(table_dir, bak)
-                try:
-                    os.rename(tmp, table_dir)
-                except OSError:
-                    os.rename(bak, table_dir)
-                    raise
-                shutil.rmtree(bak, ignore_errors=True)
-                write_store_manifest(
-                    table_dir,
-                    None,
-                    rehashed.schema.json(),
-                    num_buckets=num_buckets,
-                )
-                return
             try:
                 new_buckets = {
                     int(n.split("=", 1)[1])
@@ -1721,15 +1673,13 @@ class Engine:
                 publish_bucket_files(
                     table_dir,
                     tmp,
-                    old_buckets | new_buckets,
+                    set(old_buckets) | new_buckets,
                     None,
                     rehashed.schema.json(),
                     num_buckets=num_buckets,
                 )
             finally:
                 shutil.rmtree(tmp, ignore_errors=True)
-            # legacy-compat marker (manifest is authoritative)
-            _write_bucket_marker(table_dir, num_buckets)
 
     def pipeline_query_stats(self) -> DataFrame:
         """The pipeline_query_stats catalog relation (PipelineDB's
@@ -1995,15 +1945,15 @@ class Engine:
                 # serialized against ttl_expire()/rebucket() — the
                 # store's manifest contract is single-writer
                 with _lk:
-                    # the FIRST materialization fixes the bucket count
-                    # in the (thereafter authoritative) manifest — if a
+                    # the FIRST commit fixes the bucket count in the
+                    # (thereafter authoritative) manifest — if a
                     # rebucket() ran between view start and this first
                     # batch, the captured ViewDef's count is stale, so
-                    # re-read the catalog's current value; once the
-                    # store exists the manifest wins and the kwarg is
-                    # only a bootstrap default anyway
+                    # re-read the catalog's current value; once a
+                    # manifest exists it wins and the kwarg is only a
+                    # first-commit default anyway
                     buckets = _v.upsert_buckets
-                    if not os.path.isdir(_d):
+                    if read_store_manifest(_d) is None:
                         cur = self.catalog.state.views.get(_v.name)
                         if cur is not None and cur.get("upsert_buckets"):
                             buckets = cur["upsert_buckets"]
@@ -2443,7 +2393,9 @@ class Engine:
         reason, and the engine lock serializes engine-API readers). If
         the second rename fails, the original directory is restored from
         the .compact.bak snapshot before the error propagates, so the
-        relation is never left missing.
+        relation is never left missing; if the process dies between
+        them, the next consume_begin or compact_stream_table of the
+        relation restores it (_restore_compacted).
         """
         with self._lock:
             for c in self.catalog.all_consumers():
@@ -2451,6 +2403,7 @@ class Engine:
                     raise ValueError(
                         f"stop consumers for {relation!r} before compacting"
                     )
+            self._restore_compacted(relation)
             d = self.table_dir(relation)
             if not os.path.isdir(d):
                 raise ValueError(f"no stream table for {relation!r}")
@@ -2479,6 +2432,20 @@ class Engine:
                 raise
             shutil.rmtree(bak)
             return before, len(glob.glob(os.path.join(d, "*.parquet")))
+
+    def _restore_compacted(self, relation: str) -> None:
+        """Finish a compaction that died between its two renames (the
+        caller holds self._lock): with the archive dir missing, the
+        .compact.bak snapshot IS the archive — rename it back; with
+        both present, the swap completed and the bak is stale."""
+        d = self.table_dir(relation).rstrip("/")
+        bak = d + ".compact.bak"
+        if not os.path.isdir(bak):
+            return
+        if os.path.isdir(d):
+            shutil.rmtree(bak)
+        else:
+            os.rename(bak, d)
 
     def replay_dead_letters(
         self,
@@ -2608,86 +2575,17 @@ class Engine:
         )
 
     def _read_view_store(self, view_name: str) -> DataFrame:
-        """Plan a read of a parquet_upsert store from its committed
-        MANIFEST (snapshot-consistent even while a multi-bucket merge
-        is mid-swap); directory listing only for pre-manifest stores.
-
-        Readers NEVER mutate: during a whole-dir swap (rebucket /
-        legacy migration / its crash window) the store is briefly
-        under the ``__rebucket_bak`` / ``__legacy_bak`` name — plan
-        from whichever complete dir exists, retrying across the
-        microsecond rename window. Restoring a crashed swap is the
-        WRITERS' job (merge/rebucket, under the store mutex) — a
-        reader renaming dirs would race a live swap and corrupt it.
-        A manifest whose files have ALL vanished means we raced a
-        swap — retry; a subset missing is the crash-to-retry window
-        (dropped from the plan, as before)."""
-        import time as _time
-
-        table_dir = self.view_dir(view_name)
-        last_exc: Exception | None = None
-        for attempt in range(6):
-            d = table_dir
-            if not os.path.isdir(d):
-                for suffix in ("__rebucket_bak", "__legacy_bak"):
-                    cand = f"{table_dir}{suffix}"
-                    if os.path.isdir(cand):
-                        d = cand
-                        break
-                else:
-                    if attempt > 0:
-                        # nothing across two looks: the view was never
-                        # materialized. (One brief retry is required —
-                        # a racing whole-dir swap can momentarily show
-                        # neither the live dir nor the bak between the
-                        # writer's two renames and its bak cleanup.)
-                        break
-                    _time.sleep(0.02)
-                    continue
-            raw = read_store_manifest(d)
-            if raw is not None:
-                live = [p for p in raw if os.path.exists(p)]
-                if live:
-                    # basePath keeps the KB_COL partition column in the
-                    # schema, same as a directory read would infer
-                    return self.spark.read.option(
-                        "basePath", d
-                    ).parquet(*live)
-                if raw:
-                    # every manifest file gone: mid-swap — retry
-                    _time.sleep(0.05)
-                    continue
-                # committed-but-EMPTY store (a merge can delete every
-                # row — TTL expiring the last key): a typed empty
-                # relation from the schema the manifest recorded
-                schema = read_store_schema(d)
-                if schema is not None:
-                    return self.spark.createDataFrame([], schema)
-            if os.path.isdir(d):
-                try:
-                    return self.spark.read.parquet(d)
-                except Exception as exc:  # noqa: BLE001 — vanished mid-plan
-                    last_exc = exc
-            _time.sleep(0.05)
-        state = {
-            "table_dir": os.path.isdir(table_dir),
-            "rebucket_bak": os.path.isdir(f"{table_dir}__rebucket_bak"),
-            "legacy_bak": os.path.isdir(f"{table_dir}__legacy_bak"),
-            "manifest": read_store_manifest(table_dir) is not None,
-        }
-        if not any(state.values()) and last_exc is None:
-            # fast, plain miss (one ~20 ms confirm look, no retry
-            # ladder): the view simply has not materialized yet —
-            # distinct message so callers don't chase a swap race
+        """Manifest-planned read of a parquet_upsert store (read_store:
+        snapshot-consistent while merges commit). A store with no
+        manifest has committed nothing."""
+        df = read_store(self.spark, self.view_dir(view_name))
+        if df is None:
             raise RuntimeError(
-                f"view {view_name!r} not materialized: no store "
-                "directory exists yet (the standing query has not "
+                f"view {view_name!r} not materialized: its store has no "
+                "committed manifest yet (the standing query has not "
                 "committed a batch, or the view was never activated)"
             )
-        raise RuntimeError(
-            f"store read for {view_name!r} found no readable generation "
-            f"after retries: {state}"
-        ) from last_exc
+        return df
 
     def matrel(self, view_name: str) -> DataFrame:
         """The view's raw materialization — PipelineDB's ``<v>_mrel``:

@@ -109,9 +109,3 @@ def hash_align(df: DataFrame, *cols: str) -> DataFrame:
     ~2.4x on the dedup bench rows in r15)."""
     sc = df.sparkSession.sparkContext
     return df.repartition(sc.defaultParallelism, *cols)
-
-
-def register_all(spark: SparkSession, sf_dir: str) -> None:
-    """Register every testdata table as a temp view (for spark.sql use)."""
-    for name in TABLES:
-        load(spark, sf_dir, name).createOrReplaceTempView(name)

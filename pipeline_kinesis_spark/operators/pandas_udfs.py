@@ -4,8 +4,9 @@ The reference's extensibility story is C UDFs registered in the catalog
 (pipeline_kinesis--0.9.0.sql:33-83); ours is Spark's Python UDF tiers.
 This module demonstrates the two that matter at scale — Arrow-batched
 scalar pandas UDFs and grouped applyInPandas — on real queries that are
-still oracle-checkable against DuckDB SQL. Row-at-a-time @udf exists
-(functions/udfs.py) but is deliberately kept out of hot paths.
+still oracle-checkable against DuckDB SQL. Row-at-a-time @udf is
+deliberately not used: it serializes row by row through Python, ~10-100x
+slower than these Arrow-batched tiers.
 """
 
 from __future__ import annotations

@@ -350,25 +350,21 @@ class ShardCursor:
 # entry per shard; commit() reaps older epochs. This closes the
 # last-writer-wins loss window (a non-committed attempt that read
 # further no longer advances the next batch's start past records the
-# committed batch never emitted). A legacy un-suffixed `{shard}.json`
-# from an older state dir is still read (its content carries epoch).
+# committed batch never emitted).
 
 
 def _attained_dir(state_dir: str) -> str:
     return os.path.join(state_dir, "attained")
 
 
-def _split_attained_name(name: str) -> tuple[str, int | None]:
-    """`{shard}.e{N}.json` → (shard, N); legacy `{shard}.json` →
-    (shard, None)."""
-    stem = name[:-5]  # drop .json
-    base, dot, suffix = stem.rpartition(".")
-    if dot and suffix[:1] == "e" and suffix[1:].isdigit():
-        return base, int(suffix[1:])
-    return stem, None
+def _split_attained_name(name: str) -> tuple[str, int]:
+    """`{shard}.e{N}.json` → (shard, N)."""
+    base, _, epoch = name[: -len(".json")].rpartition(".e")
+    return base, int(epoch)
 
 
 def _read_attained(state_dir: str) -> dict[str, dict]:
+    """Each shard's winning attained entry: its max-epoch file."""
     d = _attained_dir(state_dir)
     out: dict[str, dict] = {}
     best: dict[str, int] = {}
@@ -380,28 +376,23 @@ def _read_attained(state_dir: str) -> dict[str, dict]:
         if not name.endswith(".json"):
             continue
         shard, epoch = _split_attained_name(name)
+        if epoch <= best.get(shard, -1):
+            continue
         try:
             with open(os.path.join(d, name)) as f:
-                st = json.load(f)
+                out[shard] = json.load(f)
         except (OSError, ValueError):
-            continue  # torn legacy write / reaped mid-read: next round heals
-        e = int(st.get("epoch") or 0)
-        # max-epoch entry wins; ties (legacy + new file for the same
-        # epoch) prefer the pinned per-epoch file
-        if shard not in best or e > best[shard] or (
-            e == best[shard] and epoch is not None
-        ):
-            best[shard] = e
-            out[shard] = st
+            continue  # reaped mid-read: next round heals
+        best[shard] = epoch
     return out
 
 
 def _read_attained_shard(state_dir: str, shard_id: str) -> dict:
     """One shard's winning attained entry (same winner rule as
-    _read_attained: max epoch, per-epoch pin beats legacy on a tie)
-    without parsing the whole directory — the executor poll loop calls
-    this once per shard per batch, and a full-dir parse there is
-    O(shards) opens per call, O(shards²) per micro-batch at scale."""
+    _read_attained: max epoch) without parsing the whole directory —
+    the executor poll loop calls this once per shard per batch, and a
+    full-dir parse there is O(shards) opens per call, O(shards²) per
+    micro-batch at scale."""
     d = _attained_dir(state_dir)
     try:
         names = os.listdir(d)
@@ -415,15 +406,14 @@ def _read_attained_shard(state_dir: str, shard_id: str) -> dict:
         shard, epoch = _split_attained_name(name)
         if shard != shard_id:
             continue  # another shard id sharing this one as a prefix
+        if epoch <= best:
+            continue
         try:
             with open(os.path.join(d, name)) as f:
-                st = json.load(f)
+                out = json.load(f)
         except (OSError, ValueError):
-            continue  # torn legacy write / reaped mid-read
-        e = int(st.get("epoch") or 0)
-        if e > best or (e == best and epoch is not None):
-            best = e
-            out = st
+            continue  # reaped mid-read
+        best = epoch
     return out
 
 
@@ -464,8 +454,8 @@ def _write_attained(state_dir: str, shard_id: str, state: dict) -> None:
 
 def _reap_attained(state_dir: str) -> None:
     """Driver-side (commit()) cleanup: drop per-epoch attained files
-    older than each shard's max epoch, and legacy files superseded by
-    any per-epoch file. Readers tolerate files vanishing mid-scan."""
+    older than each shard's max epoch. Readers tolerate files
+    vanishing mid-scan."""
     d = _attained_dir(state_dir)
     try:
         names = [n for n in os.listdir(d) if n.endswith(".json")]
@@ -474,14 +464,10 @@ def _reap_attained(state_dir: str) -> None:
     newest: dict[str, int] = {}
     for name in names:
         shard, epoch = _split_attained_name(name)
-        if epoch is None:
-            continue
         newest[shard] = max(newest.get(shard, -1), epoch)
     for name in names:
         shard, epoch = _split_attained_name(name)
-        if shard not in newest:
-            continue  # legacy-only shard: keep
-        if epoch is None or epoch < newest[shard]:
+        if epoch < newest[shard]:
             try:
                 os.unlink(os.path.join(d, name))
             except OSError:

@@ -21,6 +21,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import time
 import uuid
 import warnings
 
@@ -78,66 +79,17 @@ UPSERT_BUCKETS = 16
 OSREL_KEEP_DEFAULT = 1000
 _warned_default_reap: set[str] = set()
 KB_COL = "upsert_kb"
-_NB_MARKER = "_upsert_nb"  # `_` prefix: invisible to Spark's listing
-_BAK_PREFIX = ".bak."  # `.` prefix: hidden from partition discovery
 
 
 def _store_buckets(table_dir: str, default: int) -> int:
     """Bucket count is a physical property of the store layout. The
-    MANIFEST carries it (so a rebucket flips file list and bucket count
-    in ONE atomic rename — a marker written separately could desync
-    across a crash and make merges hash keys into the wrong
-    generation's buckets); the marker file is the pre-manifest
-    fallback."""
+    MANIFEST carries it, so a rebucket flips file list and bucket count
+    in ONE atomic rename; a store with no manifest has committed
+    nothing and takes the caller's count."""
     m = _load_manifest(table_dir)
     if m and m.get("num_buckets"):
         return int(m["num_buckets"])
-    try:
-        with open(os.path.join(table_dir, _NB_MARKER)) as f:
-            return int(f.read().strip())
-    except (OSError, ValueError):
-        return default
-
-
-def _write_bucket_marker(table_dir: str, n: int) -> None:
-    with open(os.path.join(table_dir, _NB_MARKER), "w") as f:
-        f.write(str(n))
-
-
-def recover_store_swap(table_dir: str) -> None:
-    """Crash recovery for WHOLE-DIR swaps (legacy migration, rebucket):
-    the swap is rename(table_dir → bak) then rename(tmp → table_dir);
-    dying between the renames leaves only the bak. If the live dir is
-    missing, the bak IS the store — restore it; if the live dir exists,
-    the swap completed and the bak is stale — drop it. Every writer and
-    reader entry point calls this first, so an interrupted resize can
-    never be mistaken for an empty store (which would silently
-    first-materialize from one batch and discard all history)."""
-    for bak in (f"{table_dir}__rebucket_bak", f"{table_dir}__legacy_bak"):
-        if not os.path.isdir(bak):
-            continue
-        if os.path.isdir(table_dir):
-            shutil.rmtree(bak)
-        else:
-            os.rename(bak, table_dir)
-
-
-def _recover_bucket_baks(table_dir: str) -> None:
-    """Crash recovery for PRE-MVCC stores: a `.bak.<KB_COL>=i` dir left
-    behind means a per-bucket rename-swap (the r05 merge mechanism,
-    since replaced by the two-generation manifest commit) died
-    mid-flight. If the live dir is missing, the bak IS the data —
-    restore it; if the live dir exists, the swap completed and the bak
-    is stale — drop it."""
-    for name in os.listdir(table_dir):
-        if not name.startswith(_BAK_PREFIX):
-            continue
-        live = os.path.join(table_dir, name[len(_BAK_PREFIX):])
-        bak = os.path.join(table_dir, name)
-        if os.path.isdir(live):
-            shutil.rmtree(bak)
-        else:
-            os.rename(bak, live)
+    return default
 
 
 def _emit_delta(
@@ -158,9 +110,9 @@ def _emit_delta(
     queries discover the renamed subdirs through a ``b*`` glob source,
     so a half-written tmp dir is never visible to readers.
 
-    MUST run before the merge swaps buckets: ``current`` reads the
-    live store lazily, and evaluating it after the swap would show
-    post-merge values as ``old``."""
+    MUST run before the merge commits: a crash between a commit and
+    its emission would replay the batch against the post-merge store
+    and announce post-merge values as ``old``."""
     bdir = os.path.join(delta_dir, f"b{int(batch_id):012d}")
     if os.path.isdir(bdir):
         return
@@ -293,53 +245,45 @@ def read_reap_marker(delta_dir: str) -> int:
         return 0
 
 
-# Snapshot manifest for the upsert store. The per-bucket rename-swap is
-# atomic per bucket, but a reader LISTING the directory during a
-# multi-bucket merge can assemble a torn snapshot (bucket A post-swap,
-# bucket B pre-swap). The writer therefore publishes, after every
-# merge, a manifest naming the exact parquet files of the committed
-# version (tmp-write + rename, like everything else here); public read
-# paths plan from the manifest's file list instead of a directory
-# listing, so a query never mixes versions at plan time. Single-writer
-# per store (one streaming query per view) makes versioning trivial.
-# On a cluster this role is played by a transactional table format's
-# log (Delta/Iceberg); the stand-in keeps the same reader contract.
+# Snapshot manifest: the upsert store's one commit record. Every commit
+# (the first batch and every later merge, a TTL sweep, a rebucket) moves
+# its new part files into the live bucket dirs, then atomically renames
+# in a manifest naming exactly the files of the new generation; the
+# previous generation stays on disk until the commit after. Readers plan
+# from the manifest's file list, never from a directory listing: the
+# bucket dirs hold two generations, plus whatever files a crashed
+# commit moved in before its manifest flip. A store dir with no
+# manifest has committed nothing. Single writer per store (one
+# streaming query per view, serialized with ttl_expire/rebucket by the
+# engine's store mutex). On a cluster this role is played by a
+# transactional table format's log (Delta/Iceberg); the stand-in keeps
+# the same reader contract.
 _MANIFEST = "_manifest"  # `_` prefix: invisible to Spark's file listing
 
 
 def write_store_manifest(
     table_dir: str,
     batch_id: int | None,
-    schema_json: str | None = None,
-    files: dict[str, list[str]] | None = None,
-    prev_files: dict[str, list[str]] | None = None,
-    num_buckets: int | None = None,
+    schema_json: str | None,
+    files: dict[str, list[str]],
+    prev_files: dict[str, list[str]],
+    num_buckets: int | None,
 ) -> None:
-    """schema_json (StructType.json()) makes a committed-but-EMPTY
-    store readable as a typed empty relation (a merge can delete every
-    row — e.g. TTL expiring the last key); omitted, the previous
-    manifest's schema carries forward. With ``files`` given, that
-    exact per-bucket map is committed (the in-place merge path — the
-    directory holds TWO generations, so a listing would double-count);
-    omitted, the directory listing is scanned (whole-dir swap paths,
-    where the directory holds exactly one generation)."""
-    if files is None:
-        files = _list_bucket_files(table_dir)
+    """Flip the store to a new generation: tmp-write + rename of the
+    manifest naming ``files`` (bucket dir -> part file names) and the
+    still-retained ``prev_files``. schema_json (StructType.json())
+    makes a committed-but-EMPTY store readable as a typed empty
+    relation (a merge can delete every row — e.g. TTL expiring the
+    last key)."""
     mdir = os.path.join(table_dir, _MANIFEST)
     os.makedirs(mdir, exist_ok=True)
-    if schema_json is None or num_buckets is None:
-        prev = _load_manifest(table_dir) or {}
-        if schema_json is None:
-            schema_json = prev.get("schema")
-        if num_buckets is None:
-            num_buckets = prev.get("num_buckets")
     tmp = os.path.join(mdir, f".tmp_{uuid.uuid4().hex[:8]}")
     with open(tmp, "w") as f:
         json.dump(
             {
                 "batch_id": batch_id,
                 "files": files,
-                "prev_files": prev_files or {},
+                "prev_files": prev_files,
                 "schema": schema_json,
                 "num_buckets": num_buckets,
             },
@@ -348,42 +292,14 @@ def write_store_manifest(
     os.rename(tmp, os.path.join(mdir, "LATEST.json"))
 
 
-def _list_bucket_files(table_dir: str) -> dict[str, list[str]]:
-    """Per-bucket parquet file map from a DIRECTORY LISTING — only
-    valid for single-generation layouts (pre-manifest stores, or a
-    freshly swapped-in whole-dir generation)."""
-    files: dict[str, list[str]] = {}
-    for name in sorted(os.listdir(table_dir)):
-        if not name.startswith(f"{KB_COL}="):
-            continue
-        bdir = os.path.join(table_dir, name)
-        files[name] = sorted(
-            f
-            for f in os.listdir(bdir)
-            if f.endswith(".parquet") and not f.startswith(".")
-        )
-    return files
-
-
-def store_bucket_files(
-    table_dir: str, allow_listing: bool = False
-) -> dict[int, list[str]] | None:
+def store_bucket_files(table_dir: str) -> dict[int, list[str]] | None:
     """bucket id → absolute committed file paths per the manifest
     (single source of truth for every consumer that needs per-bucket
-    paths: the merge's touched-bucket read, the TTL sweep, rebucket).
-    Pre-manifest stores return None — or, with ``allow_listing``, the
-    directory listing (valid ONLY because pre-manifest layouts hold a
-    single generation)."""
+    paths: the merge's touched-bucket read, the TTL sweep, rebucket);
+    None when nothing was committed yet."""
     m = _load_manifest(table_dir)
     if m is None:
-        if not allow_listing:
-            return None
-        return {
-            int(key.split("=", 1)[1]): [
-                os.path.join(table_dir, key, f) for f in fnames
-            ]
-            for key, fnames in _list_bucket_files(table_dir).items()
-        }
+        return None
     return {
         int(key.split("=", 1)[1]): [
             os.path.join(table_dir, key, f) for f in fnames
@@ -400,34 +316,21 @@ def publish_bucket_files(
     schema_json: str | None,
     num_buckets: int | None = None,
 ) -> None:
-    """Two-generation MVCC commit for an incremental merge: move the
-    touched buckets' NEW part files INTO the live bucket dirs (uuid
-    part names never collide), publish a manifest naming exactly the
-    new generation, then reap only files in NEITHER the new nor the
-    previous manifest. A reader that planned from manifest N keeps
-    every file it planned until manifest N+2 commits — the filesystem
-    stand-in for a transactional format's version retention, replacing
-    the old rename-swap whose immediate deletes broke any reader
-    between plan and execute. Crash-safe: files land before the
-    manifest flips (readers keep seeing generation N); orphans from a
-    died-and-retried batch are reaped by the retry's own commit."""
-    prev = _load_manifest(table_dir)
-    if prev is None:
-        # pre-manifest bucketed store (first MVCC commit on an old
-        # layout): COMMIT a bootstrap manifest of the directory listing
-        # BEFORE moving any files in. Without a durable bootstrap, a
-        # crash between the file moves and the manifest flip would make
-        # the retry's listing read see two generations (duplicated
-        # current rows); with it, the retry plans from the bootstrap
-        # manifest and the orphans are invisible — then reaped below.
-        write_store_manifest(
-            table_dir,
-            None,
-            schema_json,
-            files=_list_bucket_files(table_dir),
-            num_buckets=num_buckets,
-        )
-        prev = _load_manifest(table_dir) or {}
+    """The store's one commit: a two-generation MVCC flip. Move the
+    touched buckets' NEW part files (written under ``tmp``) INTO the
+    live bucket dirs (uuid part names never collide), publish a
+    manifest naming exactly the new generation, then reap only files
+    in NEITHER the new nor the previous manifest. A reader that planned
+    from manifest N keeps every file it planned until manifest N+2
+    commits — the filesystem stand-in for a transactional format's
+    version retention. Crash-safe: files land before the manifest
+    flips, so readers keep seeing generation N (or, before the first
+    commit, nothing); the orphans a died-and-retried batch moved in
+    are reaped by the retry's own commit. ``schema_json`` and
+    ``num_buckets`` left None carry over from the previous
+    manifest."""
+    os.makedirs(table_dir, exist_ok=True)
+    prev = _load_manifest(table_dir) or {}
     prev_files = dict(prev.get("files", {}))
     new_files = dict(prev_files)
     for b in sorted(touched):
@@ -454,10 +357,10 @@ def publish_bucket_files(
     write_store_manifest(
         table_dir,
         batch_id,
-        schema_json,
-        files=new_files,
-        prev_files=prev_files,
-        num_buckets=num_buckets,
+        schema_json or prev.get("schema"),
+        new_files,
+        prev_files,
+        num_buckets or prev.get("num_buckets"),
     )
     # reap generation N-1: anything not in (new ∪ prev) per bucket
     for b in sorted(touched):
@@ -481,7 +384,8 @@ def publish_bucket_files(
     # a layout the generation before last used (e.g. a shrinking
     # rebucket's high bucket ids, which no future merge or round-robin
     # sweep under the new modulus would ever touch — without this they
-    # would leak the old generation forever)
+    # would leak the old generation forever), or one a crashed first
+    # commit moved in
     live_keys = set(new_files) | set(prev_files)
     for name in os.listdir(table_dir):
         if name.startswith(f"{KB_COL}=") and name not in live_keys:
@@ -499,12 +403,7 @@ def _load_manifest(table_dir: str) -> dict | None:
         return None
 
 
-def read_store_manifest(table_dir: str) -> list[str] | None:
-    """Absolute parquet paths of the last committed version, or None
-    when the store predates manifests (fall back to directory listing)."""
-    m = _load_manifest(table_dir)
-    if m is None:
-        return None
+def _manifest_paths(table_dir: str, m: dict) -> list[str]:
     return [
         os.path.join(table_dir, bucket, fname)
         for bucket, fnames in m.get("files", {}).items()
@@ -512,32 +411,41 @@ def read_store_manifest(table_dir: str) -> list[str] | None:
     ]
 
 
-def read_store_schema(table_dir: str):
-    """StructType of the committed store per its manifest, or None."""
+def read_store_manifest(table_dir: str) -> list[str] | None:
+    """Absolute parquet paths of the last committed version, or None
+    when nothing was committed yet."""
+    m = _load_manifest(table_dir)
+    return None if m is None else _manifest_paths(table_dir, m)
+
+
+def read_store(spark, table_dir: str) -> DataFrame | None:
+    """Manifest-planned batch read of an upsert store — the only
+    correct way to read one (see the manifest note above). None when
+    no manifest exists: nothing was committed. A committed-but-empty
+    store reads as a typed empty relation from the manifest's schema.
+    A manifest whose files have ALL vanished means the read lost a
+    race with the next two commits' reaps — re-plan from the newer
+    manifest; a subset missing is dropped from the plan."""
     from pyspark.sql.types import StructType
 
-    m = _load_manifest(table_dir)
-    if m and m.get("schema"):
-        return StructType.fromJson(json.loads(m["schema"]))
-    return None
-
-
-def read_store(spark, table_dir: str) -> DataFrame:
-    """Manifest-planned batch read of an upsert store — the only
-    correct way to read one: since the two-generation MVCC commit, the
-    directory holds up to two file generations per bucket and a
-    listing would double-count. Pre-manifest (flat legacy) stores fall
-    back to the listing, which is single-generation by construction."""
-    paths = read_store_manifest(table_dir)
-    if paths is None:
-        return spark.read.parquet(table_dir)
-    live = [p for p in paths if os.path.exists(p)]
-    if live:
-        return spark.read.option("basePath", table_dir).parquet(*live)
-    schema = read_store_schema(table_dir)
-    if schema is not None:
-        return spark.createDataFrame([], schema)
-    return spark.read.parquet(table_dir)
+    for _ in range(6):
+        m = _load_manifest(table_dir)
+        if m is None:
+            return None
+        paths = _manifest_paths(table_dir, m)
+        live = [p for p in paths if os.path.exists(p)]
+        if live:
+            # basePath keeps the KB_COL partition column in the schema
+            return spark.read.option("basePath", table_dir).parquet(*live)
+        if not paths:
+            return spark.createDataFrame(
+                [], StructType.fromJson(json.loads(m["schema"]))
+            )
+        time.sleep(0.05)
+    raise RuntimeError(
+        f"store read of {table_dir} found no readable generation after "
+        "retries"
+    )
 
 
 def upsert_to_parquet(
@@ -557,15 +465,16 @@ def upsert_to_parquet(
     (pipeline_kinesis.c:543-579).
 
     The store is partitioned by ``pmod(xxhash64(key_cols), n)``. Each
-    batch: hash the incoming keys, read ONLY the buckets they land in
-    (partition pruning), anti-join out replaced keys, union the new
-    rows, write those buckets ONCE to a tmp dir, and rename-swap each
-    bucket with a restore guard — untouched buckets are never read,
-    never rewritten, and their files stay byte-identical. Scale shape:
-    per-batch IO is proportional to touched buckets, not table size,
-    and the swap window is per-bucket rename, not a full-table
-    overwrite. On a cluster with a transactional format this whole
-    function becomes ``MERGE INTO`` on a table clustered by the key.
+    batch: hash the incoming keys, read ONLY the committed files of
+    the buckets they land in, anti-join out replaced keys, union the
+    new rows, write those buckets ONCE to a tmp dir, and commit them
+    through one manifest flip (publish_bucket_files) — untouched
+    buckets are never read, never rewritten, and their files stay
+    byte-identical. The first batch takes the same path over an empty
+    previous generation. Scale shape: per-batch IO is proportional to
+    touched buckets, not table size. On a cluster with a transactional
+    format this whole function becomes ``MERGE INTO`` on a table
+    clustered by the key.
 
     With ttl_seconds/ttl_column set (PipelineDB TTL views), expired
     rows are dropped from every touched bucket during the merge, and
@@ -578,9 +487,7 @@ def upsert_to_parquet(
     spark = batch_df.sparkSession
     if KB_COL in batch_df.columns:
         raise ValueError(f"column name {KB_COL!r} is reserved")
-    recover_store_swap(table_dir)
-    exists = os.path.isdir(table_dir)
-    n = _store_buckets(table_dir, num_buckets) if exists else num_buckets
+    n = _store_buckets(table_dir, num_buckets)
     kb = F.pmod(F.xxhash64(*[F.col(k) for k in key_cols]), F.lit(n)).cast(
         "int"
     )
@@ -611,123 +518,45 @@ def _upsert_batch(
     batch_id: int | None,
     delta_dir: str | None = None,
 ) -> None:
-    exists = os.path.isdir(table_dir)
     ttl_pred = None
     if ttl_seconds is not None and ttl_column is not None:
         ttl_pred = F.col(ttl_column) >= F.current_timestamp() - F.expr(
             f"INTERVAL {int(ttl_seconds)} SECOND"
         )
-
-    legacy = exists and any(
-        f.endswith(".parquet") for f in os.listdir(table_dir)
-    )
-    if exists and not legacy:
-        _recover_bucket_baks(table_dir)
-
-    if not exists or legacy:
-        # first materialization (or one-time migration of a flat legacy
-        # store): full merge, written bucketed, whole-dir swap.
-        if legacy:
-            kb = F.pmod(
-                F.xxhash64(*[F.col(k) for k in key_cols]), F.lit(n)
-            ).cast("int")
-            current = spark.read.parquet(table_dir).withColumn(KB_COL, kb)
-            keep = current.join(
-                F.broadcast(new.select(*key_cols)), key_cols, "left_anti"
-            )
-            merged = keep.unionByName(new)
-        else:
-            current = None
-            merged = new
-        if delta_dir is not None and batch_id is not None:
-            _emit_delta(
-                new, current, key_cols, delta_dir, batch_id, ttl_pred
-            )
-        if ttl_pred is not None:
-            merged = merged.filter(ttl_pred)
-        tmp = f"{table_dir}__tmp_{uuid.uuid4().hex[:8]}"
-        merged.write.mode("overwrite").partitionBy(KB_COL).parquet(tmp)
-        _write_bucket_marker(tmp, n)
-        bak = f"{table_dir}__legacy_bak"
-        if legacy:
-            os.rename(table_dir, bak)
-        try:
-            os.rename(tmp, table_dir)
-        except OSError:
-            if legacy:
-                os.rename(bak, table_dir)
-            raise
-        if legacy:
-            shutil.rmtree(bak)
-        write_store_manifest(
-            table_dir, batch_id, merged.schema.json(), num_buckets=n
-        )
-        return
-
+    # None: nothing committed yet — files a crashed first commit moved
+    # in are not data, and this commit's reap removes them
+    committed = store_bucket_files(table_dir)
     touched = {
         int(r[0]) for r in new.select(KB_COL).distinct().collect()
     }  # O(buckets) driver-side, bounded by n
-
-    def bucket_paths(buckets: set[int]) -> list[str] | None:
-        """Committed files of the given buckets per the manifest, or
-        None for pre-manifest stores (single-generation layout — a
-        directory listing is then safe). NEVER list a manifested
-        store's dirs: they hold TWO generations."""
-        per_bucket = store_bucket_files(table_dir)
-        if per_bucket is None:
-            return None
-        return [
-            p
-            for b, paths in per_bucket.items()
-            if b in buckets
-            for p in paths
-        ]
-
-    if ttl_pred is not None and batch_id is not None:
+    if ttl_pred is not None and batch_id is not None and committed:
         sweep = int(batch_id) % n
-        if sweep not in touched:
-            sp = bucket_paths({sweep})
-            if sp is None:
-                sweep_dir = os.path.join(table_dir, f"{KB_COL}={sweep}")
-                sp = [sweep_dir] if os.path.isdir(sweep_dir) else []
-            if sp and (
-                spark.read.option("basePath", table_dir)
-                .parquet(*sp)
-                .filter(~ttl_pred)
-                .limit(1)
-                .count()
-                > 0
-            ):
-                touched.add(sweep)
-    if not touched:
-        return
+        sp = committed.get(sweep)
+        if (
+            sweep not in touched
+            and sp
+            and spark.read.option("basePath", table_dir)
+            .parquet(*sp)
+            .filter(~ttl_pred)
+            .limit(1)
+            .count()
+            > 0
+        ):
+            touched.add(sweep)
+    if not touched and committed is not None:
+        return  # an empty FIRST batch still commits a typed empty store
 
-    cur_paths = bucket_paths(touched)
-    if cur_paths is None:
-        have = any(
-            name.startswith(f"{KB_COL}=")
-            for name in os.listdir(table_dir)
-        )
-        current = (
-            spark.read.parquet(table_dir).filter(
-                F.col(KB_COL).isin([int(b) for b in touched])
-            )
-            if have
-            else None
-        )
-    elif cur_paths:
+    cur_paths = [p for b in touched for p in (committed or {}).get(b, [])]
+    current = None
+    merged = new
+    if cur_paths:
         current = spark.read.option("basePath", table_dir).parquet(
             *cur_paths
         )
-    else:  # manifested store, but no committed files in these buckets
-        current = None
-    if current is not None:
         keep = current.join(
             F.broadcast(new.select(*key_cols)), key_cols, "left_anti"
         )
         merged = keep.unionByName(new)
-    else:
-        merged = new
     if delta_dir is not None and batch_id is not None:
         # before the commit: 'current' must still read pre-merge files
         _emit_delta(new, current, key_cols, delta_dir, batch_id, ttl_pred)
@@ -736,10 +565,6 @@ def _upsert_batch(
     tmp = f"{table_dir}__tmp_{uuid.uuid4().hex[:8]}"
     merged.write.mode("overwrite").partitionBy(KB_COL).parquet(tmp)
     try:
-        # two-generation MVCC commit: new files in, manifest flip,
-        # reap generation N-2 — in-flight readers keep their plans.
-        # num_buckets rides along so a bootstrapped pre-manifest
-        # store's manifest becomes authoritative for the count too.
         publish_bucket_files(
             table_dir,
             tmp,

@@ -9,6 +9,7 @@ every record exactly once, and no maintenance call ever errored."""
 
 from __future__ import annotations
 
+import json
 import os
 import threading
 import time
@@ -152,9 +153,10 @@ def test_concurrent_maintenance_soak(engine, spark, tmp_path):
         for r in engine.view_table("agg").collect()
     }
     assert got == expect
-    # final layout is the rebucketed one and the marker agrees
-    with open(os.path.join(engine.view_dir("agg"), "_upsert_nb")) as f:
-        assert int(f.read()) == 16
+    # final layout is the rebucketed one and the manifest agrees
+    manifest = os.path.join(engine.view_dir("agg"), "_manifest", "LATEST.json")
+    with open(manifest) as f:
+        assert json.load(f)["num_buckets"] == 16
     # chained consumer saw deltas for every key
     chained = {r.k for r in engine.view_table("changes").collect()}
     assert chained == set(expect)

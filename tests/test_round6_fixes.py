@@ -6,6 +6,7 @@ merely end in ``_osrel``, and upsert-store rebucketing."""
 
 from __future__ import annotations
 
+import json
 import os
 import threading
 
@@ -15,7 +16,6 @@ import pipeline_kinesis_spark.engine as eng_mod
 from pipeline_kinesis_spark.engine import Engine
 from pipeline_kinesis_spark.sources.file_replay import write_record_file
 from pipeline_kinesis_spark.streaming.continuous_view import (
-    _NB_MARKER,
     read_reap_marker,
 )
 
@@ -25,6 +25,11 @@ def engine(spark, tmp_path):
     eng = Engine(spark, metadata_dir=str(tmp_path / "meta"))
     yield eng
     eng.consume_end_all()
+
+
+def _manifest_buckets(table_dir):
+    with open(os.path.join(table_dir, "_manifest", "LATEST.json")) as f:
+        return json.load(f)["num_buckets"]
 
 
 def _put(stream_dir, rows, start=1):
@@ -311,8 +316,7 @@ def test_rebucket_resizes_store_and_survives_restart(
     engine.wait_for_ingest()
     engine.consume_end_all()
     table_dir = engine.view_dir("agg")
-    with open(os.path.join(table_dir, _NB_MARKER)) as f:
-        assert int(f.read()) == 4
+    assert _manifest_buckets(table_dir) == 4
     before = {
         r.k: (r.cnt, r.total) for r in engine.view_table("agg").collect()
     }
@@ -320,8 +324,7 @@ def test_rebucket_resizes_store_and_survives_restart(
 
     # the ops-hammer SQL spelling drives the same path
     assert engine.execute("SELECT pipeline_rebucket('agg', 16)") == "success"
-    with open(os.path.join(table_dir, _NB_MARKER)) as f:
-        assert int(f.read()) == 16
+    assert _manifest_buckets(table_dir) == 16
     assert engine.catalog.state.views["agg"]["upsert_buckets"] == 16
     buckets = {
         int(n.split("=", 1)[1])
@@ -351,49 +354,6 @@ def test_rebucket_resizes_store_and_survives_restart(
         r.k: (r.cnt, r.total) for r in eng2.view_table("agg").collect()
     }
     assert got2 == got
-
-
-def test_rebucket_crash_between_renames_recovers(engine, spark, tmp_path):
-    """Dying between rebucket's two directory renames leaves only the
-    __rebucket_bak dir; every store entry point must restore it rather
-    than treating the store as empty (which would silently discard all
-    aggregated history on the next merge)."""
-    src_root = tmp_path / "kinesis"
-    engine.add_endpoint("ep", url=str(src_root))
-    engine.create_stream("st", "k STRING, v BIGINT")
-    engine.create_continuous_view(
-        "agg",
-        _BASE_SQL,
-        "st",
-        materialize="parquet_upsert",
-        key_cols=["k"],
-    )
-    _put(src_root / "s1", ["a,1", "b,2"])
-    engine.consume_begin("ep", "s1", "st", fmt="csv", delimiter=",")
-    engine.wait_for_ingest()
-    engine.consume_end_all()
-    before = {
-        r.k: (r.cnt, r.total) for r in engine.view_table("agg").collect()
-    }
-    table_dir = engine.view_dir("agg")
-    # simulate the crash window: first rename done, second never ran
-    os.rename(table_dir, f"{table_dir}__rebucket_bak")
-    # READERS don't mutate (a restore would race a live swap) — they
-    # plan from the bak generation and still see everything
-    assert {
-        r.k: (r.cnt, r.total) for r in engine.view_table("agg").collect()
-    } == before
-    assert not os.path.isdir(table_dir)  # reader left the layout alone
-    # the next MERGE (under the store mutex) restores the store and
-    # merges on top of the recovered data, not an empty dir
-    _put(src_root / "s1", ["a,10"], start=50)
-    engine.consume_begin("ep", "s1", "st", fmt="csv", delimiter=",")
-    engine.wait_for_ingest()
-    got = {
-        r.k: (r.cnt, r.total) for r in engine.view_table("agg").collect()
-    }
-    assert got == {"a": (2, 11), "b": (1, 2)}
-    assert not os.path.isdir(f"{table_dir}__rebucket_bak")
 
 
 def test_combine_rewrite_leaves_string_literals_alone(
@@ -445,81 +405,6 @@ def test_sql_resolves_relations_case_insensitively(
     assert engine.sql("SELECT count(*) AS c FROM AGG").collect()[0].c == 2
 
 
-def test_first_mvcc_commit_on_premanifest_store_keeps_all_buckets(
-    spark, tmp_path
-):
-    """A bucketed store from before the manifest feature: the first
-    MVCC commit must bootstrap the file map from the (single
-    generation) listing — committing only the touched buckets would
-    silently orphan every other bucket's rows."""
-    import shutil
-
-    from pipeline_kinesis_spark.streaming.continuous_view import (
-        read_store,
-        upsert_to_parquet,
-    )
-
-    d = str(tmp_path / "tbl")
-    rows = [(f"k{i}", i) for i in range(20)]
-    upsert_to_parquet(
-        spark.createDataFrame(rows, "k STRING, v INT"), d, ["k"]
-    )
-    shutil.rmtree(os.path.join(d, "_manifest"))  # r04-era store
-    # merge touching ONE key's bucket
-    upsert_to_parquet(
-        spark.createDataFrame([("k3", 300)], "k STRING, v INT"),
-        d,
-        ["k"],
-    )
-    got = {(r.k, r.v) for r in read_store(spark, d).collect()}
-    want = {(k, v) for k, v in rows if k != "k3"} | {("k3", 300)}
-    assert got == want
-    # and a later merge in a DIFFERENT bucket still dedupes correctly
-    upsert_to_parquet(
-        spark.createDataFrame([("k7", 700)], "k STRING, v INT"),
-        d,
-        ["k"],
-    )
-    got = {(r.k, r.v) for r in read_store(spark, d).collect()}
-    assert got == (want - {("k7", 7)}) | {("k7", 700)}
-
-
-def test_ttl_expire_recovers_crashed_swap_state(engine, spark, tmp_path):
-    """ttl_expire is a writer: a store stranded under a crashed legacy
-    whole-dir swap must be restored and swept, not silently skipped."""
-    import datetime as dt
-    import time
-
-    now = dt.datetime.utcnow().replace(microsecond=0)
-    # stored while live (wide first-batch margin), expires at now+8
-    dying = (now + dt.timedelta(seconds=6)).strftime("%Y-%m-%d %H:%M:%S")
-    live = (now + dt.timedelta(hours=1)).strftime("%Y-%m-%d %H:%M:%S")
-    src_root = tmp_path / "kinesis"
-    engine.add_endpoint("ep", url=str(src_root))
-    engine.create_stream("st", "k STRING, ts TIMESTAMP")
-    engine.create_continuous_view(
-        "v",
-        "SELECT k, max(ts) AS last_ts, count(*) AS n FROM st GROUP BY k",
-        "st",
-        materialize="parquet_upsert",
-        key_cols=["k"],
-        ttl_seconds=2,
-        ttl_column="last_ts",
-    )
-    _put(src_root / "s1", [f"dead,{dying}", f"live,{live}"])
-    engine.consume_begin("ep", "s1", "st", fmt="csv", delimiter=",")
-    engine.wait_for_ingest()
-    engine.consume_end_all()
-    table_dir = engine.view_dir("v")
-    os.rename(table_dir, f"{table_dir}__legacy_bak")  # crashed swap
-    while dt.datetime.utcnow() < now + dt.timedelta(seconds=9):
-        time.sleep(0.25)  # 'dead' passes its expiry
-    n = engine.ttl_expire("v")
-    assert n == 1  # restored AND swept the expired row
-    assert os.path.isdir(table_dir)
-    assert {r.k for r in engine.view_table("v").collect()} == {"live"}
-
-
 def test_rebucket_count_rides_the_manifest(engine, spark, tmp_path):
     """The bucket count flips atomically WITH the manifest: a stale
     marker file (the crash the old two-file design allowed) must not
@@ -541,8 +426,9 @@ def test_rebucket_count_rides_the_manifest(engine, spark, tmp_path):
     engine.wait_for_ingest()
     engine.consume_end_all()
     engine.rebucket("agg", 16)
-    # sabotage the legacy marker: manifest must win
-    with open(os.path.join(engine.view_dir("agg"), _NB_MARKER), "w") as f:
+    # a stray bucket-count file (the old marker's name) is ignored:
+    # the manifest is the only record of the count
+    with open(os.path.join(engine.view_dir("agg"), "_upsert_nb"), "w") as f:
         f.write("4")
     _put(src_root / "s1", ["a,10"], start=50)
     engine.consume_begin("ep", "s1", "st", fmt="csv", delimiter=",")
@@ -605,38 +491,3 @@ def test_shrinking_rebucket_reaps_old_high_buckets(
     }
     assert got["key0"] == (2, 11)
     assert all(got[k] == (1, 1) for k in keys if k != "key0")
-
-
-def test_first_mvcc_commit_bootstraps_manifest_durably(spark, tmp_path):
-    """The first commit on a pre-manifest store writes a bootstrap
-    manifest (full file map + bucket count) BEFORE moving files, so a
-    crash mid-commit can never leave a manifest-less two-generation
-    directory for the retry to double-read."""
-    import json
-    import shutil
-
-    from pipeline_kinesis_spark.streaming.continuous_view import (
-        upsert_to_parquet,
-    )
-
-    d = str(tmp_path / "tbl")
-    upsert_to_parquet(
-        spark.createDataFrame(
-            [(f"k{i}", i) for i in range(12)], "k STRING, v INT"
-        ),
-        d,
-        ["k"],
-    )
-    shutil.rmtree(os.path.join(d, "_manifest"))  # r04-era store
-    n_bucket_dirs = sum(
-        1 for n in os.listdir(d) if n.startswith("upsert_kb=")
-    )
-    upsert_to_parquet(
-        spark.createDataFrame([("k1", 100)], "k STRING, v INT"),
-        d,
-        ["k"],
-    )
-    with open(os.path.join(d, "_manifest", "LATEST.json")) as f:
-        m = json.load(f)
-    assert len(m["files"]) == n_bucket_dirs  # every bucket listed
-    assert m["num_buckets"]  # count is manifest-authoritative now

@@ -8,7 +8,6 @@ whose checkpoints it actually wrote."""
 
 from __future__ import annotations
 
-import json
 import os
 import threading
 
@@ -77,19 +76,6 @@ class TestAttainedPins:
         _write_attained(sd, "shardId-000", _state("seq-150", epoch=6))
         st = _read_attained(sd)["shardId-000"]
         assert (st["seq"], st["epoch"]) == ("seq-200", 7)
-
-    def test_legacy_unsuffixed_file_read_then_superseded(self, pin_dir):
-        sd = pin_dir
-        d = os.path.join(sd, "attained")
-        os.makedirs(d)
-        with open(os.path.join(d, "shardId-000.json"), "w") as f:
-            json.dump(_state("seq-10", epoch=3), f)
-        assert _read_attained(sd)["shardId-000"]["seq"] == "seq-10"
-        _write_attained(sd, "shardId-000", _state("seq-20", epoch=4))
-        assert _read_attained(sd)["shardId-000"]["seq"] == "seq-20"
-        _reap_attained(sd)
-        assert sorted(os.listdir(d)) == ["shardId-000.e4.json"]
-        assert _read_attained(sd)["shardId-000"]["seq"] == "seq-20"
 
     def test_reap_keeps_newest_epoch_per_shard(self, pin_dir):
         sd = pin_dir

@@ -199,56 +199,41 @@ def test_upsert_to_parquet_merge_semantics(spark, tmp_path):
     assert rows == {("a", 1), ("b", 20), ("c", 3)}
 
 
-def test_upsert_recovers_interrupted_bucket_swap(spark, tmp_path):
-    """A swap that died between renames leaves a hidden `.bak.` dir and a
-    missing live bucket; the next batch restores it before merging —
-    the store is never left missing a bucket's rows."""
+def test_upsert_first_commit_crash_then_retry(spark, tmp_path, monkeypatch):
+    """A first commit that dies after moving its part files in but
+    before its manifest flip has committed nothing; the retried batch
+    commits exactly its own rows, and its commit reaps every file the
+    crashed attempt left in the bucket dirs."""
     import os
 
-    from pipeline_kinesis_spark.streaming.continuous_view import KB_COL
+    from pipeline_kinesis_spark.streaming import continuous_view as cv
+
+    def bucket_files():
+        return {
+            os.path.join(root, f)
+            for root, _, files in os.walk(d)
+            if os.path.basename(root).startswith(f"{cv.KB_COL}=")
+            for f in files
+            if f.endswith(".parquet")
+        }
 
     d = str(tmp_path / "tbl")
-    upsert_to_parquet(
-        spark.createDataFrame(
-            [(f"k{i}", i) for i in range(20)], "k STRING, v INT"
-        ),
-        d,
-        ["k"],
-    )
-    want = {(f"k{i}", i) for i in range(20)}
-    assert {(r.k, r.v) for r in read_store(spark, d).collect()} == want
-    victim = next(
-        n for n in sorted(os.listdir(d)) if n.startswith(f"{KB_COL}=")
-    )
-    os.rename(os.path.join(d, victim), os.path.join(d, f".bak.{victim}"))
-    # empty batch: nothing to merge, but recovery still runs
-    upsert_to_parquet(
-        spark.createDataFrame([], "k STRING, v INT"), d, ["k"]
-    )
-    assert {(r.k, r.v) for r in read_store(spark, d).collect()} == want
+    rows = [(f"k{i}", i) for i in range(20)]
+    batch = spark.createDataFrame(rows, "k STRING, v INT")
 
+    def crash(*args, **kwargs):
+        raise OSError("injected: died before the manifest flip")
 
-def test_upsert_migrates_legacy_flat_store(spark, tmp_path):
-    """A pre-bucketing flat parquet store is migrated in one pass on the
-    first merge: same rows, hash-bucketed layout from then on."""
-    import os
+    monkeypatch.setattr(cv, "write_store_manifest", crash)
+    with pytest.raises(OSError, match="injected"):
+        upsert_to_parquet(batch, d, ["k"], batch_id=0)
+    monkeypatch.undo()
+    assert bucket_files()  # the crashed attempt's files were moved in
+    assert read_store(spark, d) is None  # ...but nothing was committed
 
-    from pipeline_kinesis_spark.streaming.continuous_view import KB_COL
-
-    d = str(tmp_path / "tbl")
-    spark.createDataFrame(
-        [("a", 1), ("b", 2)], "k STRING, v INT"
-    ).write.parquet(d)
-    upsert_to_parquet(
-        spark.createDataFrame([("b", 20), ("c", 3)], "k STRING, v INT"),
-        d,
-        ["k"],
-    )
-    rows = {(r.k, r.v) for r in read_store(spark, d).collect()}
-    assert rows == {("a", 1), ("b", 20), ("c", 3)}
-    names = os.listdir(d)
-    assert any(n.startswith(f"{KB_COL}=") for n in names)
-    assert not any(n.endswith(".parquet") for n in names)
+    upsert_to_parquet(batch, d, ["k"], batch_id=0)  # the batch replays
+    assert {(r.k, r.v) for r in read_store(spark, d).collect()} == set(rows)
+    assert bucket_files() == set(cv.read_store_manifest(d))
 
 
 def test_upsert_ttl_sweep_reaps_untouched_bucket(spark, tmp_path):
@@ -408,6 +393,7 @@ def test_upsert_rewrites_only_touched_buckets(engine, spark, tmp_path):
     files are byte-identical across the batch (no read, no rewrite, no
     write amplification proportional to table size)."""
     import hashlib
+    import json
     import os
 
     from pipeline_kinesis_spark.streaming.continuous_view import KB_COL
@@ -445,9 +431,8 @@ def test_upsert_rewrites_only_touched_buckets(engine, spark, tmp_path):
     engine.wait_for_ingest()
     after = snap()
 
-    nb = int(
-        open(os.path.join(vdir, "_upsert_nb")).read().strip()
-    )
+    with open(os.path.join(vdir, "_manifest", "LATEST.json")) as f:
+        nb = json.load(f)["num_buckets"]
     touched = spark.sql(
         f"SELECT CAST(pmod(xxhash64('k0'), {nb}) AS INT) AS b"
     ).collect()[0].b
@@ -474,8 +459,9 @@ def test_upsert_rewrites_only_touched_buckets(engine, spark, tmp_path):
 
 
 def test_upsert_buckets_option_flows_to_store_layout(engine, spark, tmp_path):
-    """The per-view bucket-count sizing knob reaches the store: marker
-    file pins it and partition dirs stay within range."""
+    """The per-view bucket-count sizing knob reaches the store: the
+    manifest pins it and partition dirs stay within range."""
+    import json
     import os
 
     from pipeline_kinesis_spark.streaming.continuous_view import KB_COL
@@ -495,7 +481,8 @@ def test_upsert_buckets_option_flows_to_store_layout(engine, spark, tmp_path):
     engine.consume_begin("ep", "s", "nb_stream")
     engine.wait_for_ingest()
     vdir = engine.view_dir("nb_counts")
-    assert open(os.path.join(vdir, "_upsert_nb")).read().strip() == "4"
+    with open(os.path.join(vdir, "_manifest", "LATEST.json")) as f:
+        assert json.load(f)["num_buckets"] == 4
     buckets = {
         int(n.split("=")[1])
         for n in os.listdir(vdir)
@@ -503,6 +490,28 @@ def test_upsert_buckets_option_flows_to_store_layout(engine, spark, tmp_path):
     }
     assert buckets and all(0 <= b < 4 for b in buckets)
     assert engine.view_table("nb_counts").count() == 12
+
+
+def test_view_table_without_manifest_is_not_materialized(engine, spark):
+    """Bucket files under a store dir with no manifest are not data (a
+    first commit died before its manifest flip): the view has
+    committed nothing, and view_table says so instead of listing
+    them."""
+    from pipeline_kinesis_spark.streaming.continuous_view import KB_COL
+
+    engine.create_stream("nm_stream", "payload STRING")
+    engine.create_continuous_view(
+        "nm_counts",
+        "SELECT payload, count(*) AS n FROM nm_stream GROUP BY payload",
+        stream="nm_stream",
+        materialize="parquet_upsert",
+        key_cols=["payload"],
+    )
+    spark.createDataFrame(
+        [("a", 1, 0)], f"payload STRING, n BIGINT, {KB_COL} INT"
+    ).write.partitionBy(KB_COL).parquet(engine.view_dir("nm_counts"))
+    with pytest.raises(RuntimeError, match="not materialized"):
+        engine.view_table("nm_counts")
 
 
 def test_parquet_upsert_requires_keys(engine):
@@ -587,6 +596,39 @@ def test_compact_swap_failure_restores_relation(engine, spark, tmp_path, monkeyp
     } == {"x0", "x1", "x2"}
 
 
+def test_compaction_crash_between_renames_is_restored(engine, tmp_path):
+    """A process that dies between compact_stream_table's two renames
+    leaves the archive only at <dir>.compact.bak. The next
+    consume_begin restores it before publishing into the archive, so
+    stream_table holds the old and the new rows, each exactly once —
+    and a later compaction is not blocked by the bak."""
+    import os
+
+    src_root = tmp_path / "kinesis"
+    for i in range(3):
+        write_record_file(str(src_root / "s"), [{"data": f"x{i}"}])
+    engine.add_endpoint("ep", url=str(src_root))
+    engine.create_stream("cc_stream", "payload STRING")
+    engine.consume_begin("ep", "s", "cc_stream")
+    engine.wait_for_ingest()
+    engine.consume_end("ep", "s", "cc_stream")
+    d = engine.table_dir("cc_stream")
+    os.rename(d, d + ".compact.bak")  # died after the first rename
+
+    for i in range(3, 5):
+        write_record_file(str(src_root / "s"), [{"data": f"x{i}"}])
+    engine.consume_begin("ep", "s", "cc_stream")
+    engine.wait_for_ingest()
+    engine.consume_end("ep", "s", "cc_stream")
+    want = [f"x{i}" for i in range(5)]
+    got = sorted(r.payload for r in engine.stream_table("cc_stream").collect())
+    assert got == want
+    assert not os.path.exists(d + ".compact.bak")
+    engine.compact_stream_table("cc_stream", target_files=1)
+    got = sorted(r.payload for r in engine.stream_table("cc_stream").collect())
+    assert got == want
+
+
 def test_stream_table_join_in_continuous_view(engine, spark, tmp_path):
     """PipelineDB's signature stream-table join INSIDE a continuous
     view: the standing aggregate enriches stream rows against a static
@@ -632,13 +674,12 @@ def test_stream_table_join_in_continuous_view(engine, spark, tmp_path):
 def test_upsert_manifest_snapshot_read(spark, tmp_path):
     """The merge publishes a committed-version manifest; manifest-planned
     reads ignore files a torn/in-flight state would show (orphan file in
-    a bucket), while pre-manifest stores fall back to directory listing."""
+    a bucket), and a store with no manifest has committed nothing."""
     import os as _os
     import shutil as _shutil
 
     from pipeline_kinesis_spark.streaming.continuous_view import (
         read_store_manifest,
-        upsert_to_parquet,
     )
 
     d = str(tmp_path / "tbl")
@@ -675,6 +716,7 @@ def test_upsert_manifest_snapshot_read(spark, tmp_path):
     )
     assert read_store_manifest(d)
 
-    # pre-manifest stores (no _manifest dir) keep working via listing
+    # no manifest: nothing committed, whatever the bucket dirs hold
     _shutil.rmtree(_os.path.join(d, "_manifest"))
     assert read_store_manifest(d) is None
+    assert read_store(spark, d) is None

@@ -33,6 +33,11 @@ Ops drawn per step (seeded):
   compact        consume_end_all + compact_stream_table + resume (a
                  batch replayed after the swap must not be archived
                  again)
+  crash_commit   arm a one-shot fault on the upsert store's manifest
+                 flip, feed: the next store commit raises after its
+                 part files moved in (the view query dies) —
+                 consume_end_all + resume replays the batch over the
+                 crashed commit's orphans
 
 End-of-scenario ledger (after a final drain):
   view == exact aggregate of WELL-FORMED rows fed,
@@ -45,8 +50,8 @@ reference's core protocol, A1-A4/A9-A12): a boto3-shaped canned wire
 shard SPLIT / shard MERGE / injected throttle+expire faults /
 pause-resume / full engine restart, and the same exactness ledger
 must hold (every appended record lands in the view and archive
-exactly once, across reshard boundaries, fault retries, restarts and
-compactions). --mode datasource drives the executor-parallel path the
+exactly once, across reshard boundaries, fault retries, restarts,
+compactions and crashed store commits). --mode datasource drives the executor-parallel path the
 same way; --mode mixed cycles all three per scenario.
 
 Scenario i draws from default_rng([seed, i]) so any single scenario
@@ -69,6 +74,7 @@ import os
 import shutil
 import sys
 import tempfile
+import threading
 import time
 import traceback
 import uuid
@@ -81,7 +87,7 @@ import numpy as np  # noqa: E402
 OPS = (
     "feed", "drain", "pause_resume", "restart", "flap_view",
     "rebucket", "feed_malformed", "replay", "alter",
-    "ttl_expire", "replay_rebucket", "compact",
+    "ttl_expire", "replay_rebucket", "compact", "crash_commit",
 )
 # feeds and drains dominate so most scenarios move real data between
 # lifecycle punches. r15 ops (VERDICT r14 #3): ttl_expire = the manual
@@ -89,8 +95,8 @@ OPS = (
 # the sweep takes the store lock mid-stream but must reap 0);
 # replay_rebucket = replay_dead_letters on a worker thread racing a
 # concurrent rebucket of the same view's store (A19 concurrency guard).
-WEIGHTS = (0.20, 0.17, 0.10, 0.10, 0.09, 0.08, 0.08, 0.05, 0.03,
-           0.04, 0.03, 0.03)
+WEIGHTS = (0.18, 0.16, 0.10, 0.10, 0.09, 0.08, 0.08, 0.05, 0.03,
+           0.04, 0.03, 0.03, 0.03)
 KEYS = tuple(f"k{i}" for i in range(8))
 
 
@@ -274,8 +280,6 @@ def _scenario(spark, rng: np.random.Generator, ops_run: list) -> dict:
                 # replay on a worker thread racing a rebucket of the
                 # same view's store — the concurrency guard must
                 # serialize them without deadlock or ledger drift
-                import threading as _th
-
                 if consuming:
                     eng.wait_for_ingest(timeout_s=180)
                 box: list = []
@@ -288,7 +292,7 @@ def _scenario(spark, rng: np.random.Generator, ops_run: list) -> dict:
                     except Exception as ex:  # surfaces as violation
                         box.append(ex)
 
-                t = _th.Thread(target=_rep)
+                t = threading.Thread(target=_rep)
                 t.start()
                 if consuming:
                     eng.rebucket(view, int(rng.choice([1, 2, 4, 8])))
@@ -324,6 +328,11 @@ def _scenario(spark, rng: np.random.Generator, ops_run: list) -> dict:
                 eng.consume_end_all()
                 consuming = False
                 _compact(eng, stream)
+                begin()
+            elif op == "crash_commit":
+                _crash_commit(feed)
+                eng.consume_end_all()
+                consuming = False
                 begin()
         if not consuming:
             begin()
@@ -387,9 +396,9 @@ def _scenario(spark, rng: np.random.Generator, ops_run: list) -> dict:
 
 WIRE_OPS = (
     "append", "drain", "split", "merge", "fault",
-    "pause_resume", "restart", "compact",
+    "pause_resume", "restart", "compact", "crash_commit",
 )
-WIRE_WEIGHTS = (0.32, 0.17, 0.12, 0.10, 0.10, 0.07, 0.07, 0.05)
+WIRE_WEIGHTS = (0.29, 0.15, 0.12, 0.10, 0.10, 0.07, 0.07, 0.05, 0.05)
 
 
 def _compact(eng, stream: str) -> None:
@@ -397,6 +406,31 @@ def _compact(eng, stream: str) -> None:
     archive dir yet (nothing ingested) has nothing to compact."""
     if os.path.isdir(eng.table_dir(stream)):
         eng.compact_stream_table(stream, target_files=1)
+
+
+def _crash_commit(feed, timeout_s: float = 120.0) -> None:
+    """Arm a one-shot fault on the upsert store's manifest flip and
+    feed: the next store commit raises after its part files moved into
+    the bucket dirs, which kills the committing view query. Returns
+    once the fault fired (or timeout_s passed); the caller restarts the
+    consumers, whose replay of the batch must commit it exactly once
+    and reap the crashed attempt's orphans."""
+    from pipeline_kinesis_spark.streaming import continuous_view as cv
+
+    real = cv.write_store_manifest
+    fired = threading.Event()
+
+    def crash(*args, **kwargs):
+        cv.write_store_manifest = real
+        fired.set()
+        raise RuntimeError("injected crash before the manifest flip")
+
+    cv.write_store_manifest = crash
+    try:
+        feed()
+        fired.wait(timeout_s)
+    finally:
+        cv.write_store_manifest = real
 
 
 def _scenario_wire(
@@ -567,6 +601,10 @@ def _scenario_wire(
             elif op == "compact":
                 eng.consume_end_all()
                 _compact(eng, stream)
+                begin()
+            elif op == "crash_commit":
+                _crash_commit(append)
+                eng.consume_end_all()
                 begin()
         drain(eng)
 
