@@ -10,9 +10,12 @@ kinesis_consume_begin_sr            → consume_begin
 kinesis_consume_end_sr / _all       → consume_end / consume_end_all
 SELECT * FROM seqnums (progress)    → progress()
 
-consume_begin wires: file-replay source → COPY-parity parse (+dead-letter)
-→ (a) exactly-once parquet archive of the stream relation, (b) one
-incremental query per registered continuous view, materialized queryable.
+consume_begin wires: record source → COPY-parity parse → one ingest
+query (exactly-once parquet archive of the stream relation plus the
+dead-letter quarantine), then every active continuous view and transform
+whose chain roots at the relation, through _wire_view/_wire_transform —
+the one wiring path CREATE and ACTIVATE also take on a running consumer,
+so a catalog gets the same standing queries whenever they were created.
 Process/thread plumbing from the reference (bgworkers, shard threads,
 bounded queues — pipeline_kinesis.c:774-823, conc_queue.hpp) collapses
 into Spark's task scheduler; shard→task assignment is automatic.
@@ -703,11 +706,7 @@ class Engine:
         with self._lock:
             self.catalog.drop_transform(name)
             self._procs.pop(name, None)
-            for queries in self._queries.values():
-                for q in list(queries):
-                    if q.name == f"transform_{name}":
-                        q.stop()
-                        queries.remove(q)
+            self._stop_named({f"transform_{name}"})
 
     def drop_continuous_view(self, name: str) -> None:
         """Unregister the view and stop any running query materializing it
@@ -726,13 +725,9 @@ class Engine:
                     f"consumers {deps}; drop them first"
                 )
             self.catalog.drop_view(name)
-            for sink in (name, f"{name}__sw_raw", f"{name}__mrel"):
+            for sink in _view_qnames(name):
                 self._memview_snapshots.pop(sink, None)
-            for queries in self._queries.values():
-                for q in list(queries):
-                    if q.name in _view_qnames(name):
-                        q.stop()
-                        queries.remove(q)
+            self._stop_named(_view_qnames(name))
 
     # --------------------------------------------------------------- paths
 
@@ -844,8 +839,13 @@ class Engine:
         dedup: bool | str = False,
     ) -> Consumer:
         """Start ingesting `stream` (a directory under the endpoint url)
-        into the declared `relation`, plus one incremental query per
-        continuous view registered on that relation.
+        into the declared `relation`, then wire every active continuous
+        view and transform whose chain roots at that relation — on the
+        relation itself, on a view's output stream (at any depth), or
+        on the sink of a transform on the relation — through
+        _wire_view/_wire_transform, in catalog order (each query's
+        feeders start before it). If any start fails, every query this
+        call started is stopped before the error propagates.
 
         Defaults mirror the reference (format='text', delimiter=tab,
         batchsize=1000, parallelism=1 — pipeline_kinesis--0.9.0.sql:54-60).
@@ -1214,127 +1214,87 @@ class Engine:
             good = split_quarantine(parsed)[0]
             tag = f"c{consumer.id}"
 
+            # registered before the first start, so a failure anywhere
+            # below stops exactly what this call started
             queries: list[StreamingQuery] = []
-            if ds_mode:
-                # (0) landing: drain the executor-parallel source into
-                # the spool. bdf.write.json runs ON EXECUTORS (the
-                # data path); the driver only renames the part files
-                # into place (_publish_batch), so downstream file
-                # sources never see a torn or divergent batch.
-                def _land(bdf, bid, _spool=spool, _reap=reap_spool, _tag=tag):
-                    _reap()
-                    if bid <= _published_through(_spool, _tag):
+            self._queries[consumer.id] = queries
+            self._parsed[consumer.id] = (relation, good)
+            try:
+                if ds_mode:
+                    # (0) landing: drain the executor-parallel source into
+                    # the spool. bdf.write.json runs ON EXECUTORS (the
+                    # data path); the driver only renames the part files
+                    # into place (_publish_batch), so downstream file
+                    # sources never see a torn or divergent batch.
+                    def _land(
+                        bdf, bid, _spool=spool, _reap=reap_spool, _tag=tag
+                    ):
+                        _reap()
+                        if bid <= _published_through(_spool, _tag):
+                            return
+                        tmp = _staging_dir(_spool, _tag, bid)
+                        bdf.write.mode("overwrite").json(tmp)
+                        _publish_batch(_tag, bid, [(tmp, _spool)], ".jsonl")
+
+                    queries.append(self._start_query(
+                        ds_raw.writeStream.foreachBatch(_guarded_batch(_land))
+                        .queryName(
+                            f"kds_landing_{relation}_c{consumer.id}"
+                        )
+                        .option(
+                            "checkpointLocation",
+                            self._ckpt_for_start(consumer.id, "kds_landing"),
+                        )
+                        .trigger(processingTime=interval)
+                    ))
+                    self._ds_consumers.add(consumer.id)
+                # (a) one parse per micro-batch: good rows to the archive,
+                # bad ones (if any) to the dead-letter quarantine (the
+                # reference drops the whole batch, pipeline_kinesis.c:740-758)
+                def _ingest(
+                    bdf, bid, _tag=tag, _arch=self.table_dir(relation),
+                    _dl=self.dead_letter_dir(relation),
+                ):
+                    if bid <= _published_through(_arch, _tag):
                         return
-                    tmp = _staging_dir(_spool, _tag, bid)
-                    bdf.write.mode("overwrite").json(tmp)
-                    _publish_batch(_tag, bid, [(tmp, _spool)], ".jsonl")
+                    bdf.persist()
+                    try:
+                        good_b, bad_b = split_quarantine(bdf)
+                        staged = [(_staging_dir(_arch, _tag, bid), _arch)]
+                        good_b.write.mode("overwrite").parquet(staged[0][0])
+                        if not bad_b.isEmpty():
+                            staged.append((_staging_dir(_dl, _tag, bid), _dl))
+                            bad_b.write.mode("overwrite").parquet(staged[1][0])
+                        _publish_batch(_tag, bid, staged, ".parquet")
+                    finally:
+                        bdf.unpersist()
 
                 queries.append(self._start_query(
-                    ds_raw.writeStream.foreachBatch(_guarded_batch(_land))
-                    .queryName(
-                        f"kds_landing_{relation}_c{consumer.id}"
-                    )
+                    parsed.writeStream.foreachBatch(_guarded_batch(_ingest))
+                    .queryName(f"ingest_{relation}_c{consumer.id}")
                     .option(
                         "checkpointLocation",
-                        self._ckpt_for_start(consumer.id, "kds_landing"),
+                        self._ckpt_for_start(consumer.id, "ingest"),
                     )
                     .trigger(processingTime=interval)
                 ))
-                self._ds_consumers.add(consumer.id)
-            # (a) one parse per micro-batch: good rows to the archive,
-            # bad ones (if any) to the dead-letter quarantine (the
-            # reference drops the whole batch, pipeline_kinesis.c:740-758)
-            def _ingest(
-                bdf, bid, _tag=tag, _arch=self.table_dir(relation),
-                _dl=self.dead_letter_dir(relation),
-            ):
-                if bid <= _published_through(_arch, _tag):
-                    return
-                bdf.persist()
-                try:
-                    good_b, bad_b = split_quarantine(bdf)
-                    staged = [(_staging_dir(_arch, _tag, bid), _arch)]
-                    good_b.write.mode("overwrite").parquet(staged[0][0])
-                    if not bad_b.isEmpty():
-                        staged.append((_staging_dir(_dl, _tag, bid), _dl))
-                        bad_b.write.mode("overwrite").parquet(staged[1][0])
-                    _publish_batch(_tag, bid, staged, ".parquet")
-                finally:
-                    bdf.unpersist()
-
-            queries.append(self._start_query(
-                parsed.writeStream.foreachBatch(_guarded_batch(_ingest))
-                .queryName(f"ingest_{relation}_c{consumer.id}")
-                .option("checkpointLocation", self._ckpt_for_start(consumer.id, "ingest"))
-                .trigger(processingTime=interval)
-            ))
-            # (c) continuous views registered on this relation; each may
-            # fan out further through its output stream (PipelineDB
-            # output_of chaining): delta emission turns on only when the
-            # view has active downstream consumers.
-            for view in self.catalog.views_on(relation):
-                if not view.active:
-                    continue
-                vdf = compile_view(
-                    self.spark,
-                    self._view_stream_df(view, good),
-                    relation,
-                    self._view_compile_sql(view),
-                )
-                delta_dir = self._osrel_delta_dir(view)
-                queries.append(
-                    self._start_view_query(
-                        consumer.id, view, vdf, delta_dir=delta_dir
-                    )
-                )
-                if delta_dir is not None:
-                    self._start_osrel_consumers(
-                        consumer.id, view, vdf.schema, queries
-                    )
-            # (d) continuous transforms registered on this relation:
-            # row-wise standing queries, append-mode, output → sink
-            # relation parquet and/or per-batch proc.
-            for t in self.catalog.transforms_on(relation):
-                if not t.active:
-                    continue
-                tdf = compile_view(self.spark, good, relation, t.sql)
-                sink_dir = (
-                    self.table_dir(t.sink_relation)
-                    if t.sink_relation
-                    else None
-                )
-                queries.append(
-                    self._start_transform_query(consumer.id, t, tdf)
-                )
-                # (e) chained continuous views over this transform's sink
-                # relation (PipelineDB: views reading an output stream).
-                # The sink dir doubles as a file-stream source; schema is
-                # the transform's own output schema, so chaining needs no
-                # separate declaration.
-                if sink_dir is not None:
-                    chained = [
-                        v
-                        for v in self.catalog.views_on(t.sink_relation)
-                        if v.active
-                    ]
-                    if chained:
-                        os.makedirs(sink_dir, exist_ok=True)
-                        src = (
-                            self.spark.readStream.schema(tdf.schema)
-                            .parquet(sink_dir)
-                        )
-                        for view in chained:
-                            vdf = compile_view(
-                                self.spark, src, t.sink_relation,
-                                self._view_compile_sql(view),
-                            )
-                            queries.append(
-                                self._start_view_query(
-                                    consumer.id, view, vdf
-                                )
-                            )
-            self._queries[consumer.id] = queries
-            self._parsed[consumer.id] = (relation, good)
+                # every active view, then every active transform, in
+                # catalog order through the same wiring CREATE and
+                # ACTIVATE use; chain resolution starts each query's
+                # feeders first, so the list stays in dependency order.
+                # Snapshots: a concurrent CREATE writes the catalog
+                # before it takes self._lock.
+                for v in list(self.catalog.state.views.values()):
+                    vd = ViewDef(**v)
+                    if vd.active:
+                        self._wire_view(consumer.id, relation, good, vd)
+                for t in list(self.catalog.state.transforms.values()):
+                    td = TransformDef(**t)
+                    if td.active:
+                        self._wire_transform(consumer.id, relation, good, td)
+            except BaseException:
+                self._stop_consumer(consumer.id)
+                raise
             if pump is not None:
                 # start polling only after every standing query is up so
                 # a pump error never races engine wiring
@@ -1350,17 +1310,22 @@ class Engine:
         keep ingesting."""
         with self._lock:
             kind = self.catalog.set_active(name, False)
-            qnames = (
+            self._stop_named(
                 # sw / combine-matrel views run under suffixed sink names
                 _view_qnames(name)
                 if kind == "view"
                 else {f"transform_{name}"}
             )
-            for queries in self._queries.values():
-                for q in list(queries):
-                    if q.name in qnames:
-                        q.stop()
-                        queries.remove(q)
+
+    def _stop_named(self, names: set[str], cid: int | None = None) -> None:
+        """Stop and unregister the standing queries named in `names`, on
+        consumer `cid` or, when cid is None, on every running consumer;
+        the consumers themselves keep ingesting."""
+        lists = self._queries.values() if cid is None else [self._queries[cid]]
+        for queries in lists:
+            for q in [q for q in queries if q.name in names]:
+                q.stop()
+                queries.remove(q)
 
     def activate(self, name: str) -> None:
         """ACTIVATE analog: resume maintenance of a deactivated view or
@@ -1380,12 +1345,14 @@ class Engine:
     def _resolve_chain_source(
         self, cid: int, relation: str, good: DataFrame, stream: str
     ) -> DataFrame | None:
-        """Resolve the streaming source for `stream` on an
-        already-running consumer of `relation`: the consumer's parsed
-        stream itself, a view's output stream (recursively — the base
-        view is restarted WITH delta emission only if it is not
-        already emitting), or a transform's sink relation. None when
-        the chain does not root at `relation`."""
+        """Resolve the streaming source for `stream` on a running
+        consumer of `relation`, starting what feeds it first: the
+        consumer's parsed stream itself, a view's output stream
+        (recursively — the base view is restarted WITH delta emission
+        only if it is not already emitting), or a transform's sink
+        relation (the transform is wired first when active; an inactive
+        one leaves the sink readable as it stands). None when the chain
+        does not root at `relation`."""
         if stream == relation:
             return good
         m = _OSREL_RE.match(stream)
@@ -1412,10 +1379,7 @@ class Engine:
                 # (re)start the base with emission on — checkpoint
                 # resume, nothing lost; an already-emitting base is
                 # left untouched (no needless materialization stall)
-                for q in list(self._queries[cid]):
-                    if q.name in _view_qnames(base.name):
-                        q.stop()
-                        self._queries[cid].remove(q)
+                self._stop_named(_view_qnames(base.name), cid)
                 self._queries[cid].append(
                     self._start_view_query(
                         cid,
@@ -1429,6 +1393,8 @@ class Engine:
             ).parquet(os.path.join(self.osrel_dir(base.name), "b*"))
         for t in self.catalog.transforms_on(relation):
             if t.sink_relation == stream:
+                if t.active:
+                    self._wire_transform(cid, relation, good, t)
                 tdf = compile_view(self.spark, good, relation, t.sql)
                 sink_dir = self.table_dir(stream)
                 os.makedirs(sink_dir, exist_ok=True)
@@ -1440,13 +1406,13 @@ class Engine:
     def _wire_view(
         self, cid: int, relation: str, good: DataFrame, vd: ViewDef
     ) -> bool:
-        """Start vd's standing query on an already-running consumer of
+        """Start vd's standing query on a running consumer of
         `relation` — direct, chained on another view's output stream
         (any depth), or chained on a transform's sink. Idempotent: a
-        live query for the view is never double-started. Shared by
-        ACTIVATE and by CREATE CONTINUOUS VIEW issued while consumers
-        run (PipelineDB starts materializing immediately in both
-        cases)."""
+        live query for the view is never double-started. The one view
+        wiring path: consume_begin, ACTIVATE and CREATE CONTINUOUS VIEW
+        issued while consumers run (PipelineDB starts materializing
+        immediately) all come here."""
         if any(
             q.name in _view_qnames(vd.name) and q.isActive
             for q in self._queries[cid]
@@ -1478,10 +1444,11 @@ class Engine:
     def _wire_transform(
         self, cid: int, relation: str, good: DataFrame, td: TransformDef
     ) -> bool:
-        """Start td's standing query on an already-running consumer of
-        `relation` (idempotent) — direct or chained on a view's output
-        stream. Shared by ACTIVATE and by CREATE CONTINUOUS TRANSFORM
-        issued while consumers run."""
+        """Start td's standing query on a running consumer of `relation`
+        (idempotent) — direct, or chained on a view's output stream or a
+        transform's sink. The one transform wiring path: consume_begin,
+        ACTIVATE and CREATE CONTINUOUS TRANSFORM issued while consumers
+        run all come here."""
         if any(
             q.name == f"transform_{td.name}" and q.isActive
             for q in self._queries[cid]
@@ -1821,64 +1788,6 @@ class Engine:
                 stacklevel=3,
             )
 
-    def _start_osrel_consumers(
-        self,
-        consumer_id: int,
-        view: ViewDef,
-        view_schema,
-        queries: list,
-    ) -> None:
-        """Start the standing queries chained on this view's output
-        stream: a glob file-stream over the delta dir's ``b<batch>``
-        subdirs (rename-published, so readers never see half a batch)
-        feeding each downstream view/transform — PipelineDB's
-        ``SELECT ... FROM output_of('v')`` cascade."""
-        osrel = f"{view.name}_osrel"
-        src = (
-            self.spark.readStream.schema(self._osrel_schema(view_schema))
-            .parquet(os.path.join(self.osrel_dir(view.name), "b*"))
-        )
-        for cv in self.catalog.views_on(osrel):
-            if not cv.active:
-                continue
-            self._check_osrel_gap(
-                view.name,
-                self._ckpt(consumer_id, f"view_{cv.name}"),
-                f"continuous view {cv.name!r}",
-            )
-            cvdf = compile_view(
-                self.spark,
-                self._view_stream_df(cv, src),
-                osrel,
-                self._view_compile_sql(cv),
-            )
-            # multi-level cascades: the chained view may itself have
-            # output-stream consumers (creation order makes cycles
-            # impossible — a view can only chain on views that already
-            # exist)
-            cv_delta = self._osrel_delta_dir(cv)
-            queries.append(
-                self._start_view_query(
-                    consumer_id, cv, cvdf, delta_dir=cv_delta
-                )
-            )
-            if cv_delta is not None:
-                self._start_osrel_consumers(
-                    consumer_id, cv, cvdf.schema, queries
-                )
-        for t in self.catalog.transforms_on(osrel):
-            if not t.active:
-                continue
-            self._check_osrel_gap(
-                view.name,
-                self._ckpt(consumer_id, f"transform_{t.name}"),
-                f"continuous transform {t.name!r}",
-            )
-            tdf = compile_view(self.spark, src, osrel, t.sql)
-            queries.append(
-                self._start_transform_query(consumer_id, t, tdf)
-            )
-
     def _start_transform_query(
         self, consumer_id: int, t: TransformDef, tdf: DataFrame
     ) -> StreamingQuery:
@@ -1985,12 +1894,7 @@ class Engine:
         # carrying hidden combine() partial columns likewise sink under
         # a matrel-suffixed name so the public name always shows the
         # declared schema (PipelineDB's <v>_mrel / overlay-view split).
-        if view.sw_seconds is not None:
-            sink_name = f"{view.name}__sw_raw"
-        elif has_hidden_partials(view.combine_aggs):
-            sink_name = f"{view.name}__mrel"
-        else:
-            sink_name = view.name
+        sink_name = self._sink_name(vars(view))
         self._snapshot_memory_sink(sink_name)
         _SINK_OWNERS.setdefault(self.spark, {})[sink_name] = self.metadata_dir
         return materialize_memory(
@@ -2125,14 +2029,19 @@ class Engine:
             consumer = self.catalog.find_consumer(endpoint, stream, relation)
             if consumer is None:
                 return False
-            pump = self._pumps.pop(consumer.id, None)
-            if pump is not None:
-                pump.stop()  # stop polling before stopping the drain
-            for q in self._queries.pop(consumer.id, []):
-                q.stop()
-            self._parsed.pop(consumer.id, None)
-            self._ds_consumers.discard(consumer.id)
+            self._stop_consumer(consumer.id)
             return True
+
+    def _stop_consumer(self, cid: int) -> None:
+        """Stop one consumer's pump and every standing query it runs,
+        and drop its registry entries."""
+        pump = self._pumps.pop(cid, None)
+        if pump is not None:
+            pump.stop()  # stop polling before stopping the drain
+        for q in self._queries.pop(cid, []):
+            q.stop()
+        self._parsed.pop(cid, None)
+        self._ds_consumers.discard(cid)
 
     def consume_begin_all(self) -> list[Consumer]:
         """Restart every cataloged consumer (kinesis_consume_begin no-arg,
@@ -2180,16 +2089,9 @@ class Engine:
 
     def consume_end_all(self) -> int:
         with self._lock:
-            n = 0
-            for cid in list(self._pumps):
-                self._pumps.pop(cid).stop()
-            for cid, queries in list(self._queries.items()):
-                for q in queries:
-                    q.stop()
-                del self._queries[cid]
-                self._parsed.pop(cid, None)
-                self._ds_consumers.discard(cid)
-                n += 1
+            n = len(self._queries)
+            for cid in list(self._queries):
+                self._stop_consumer(cid)
             self._detach_metrics()
             return n
 
@@ -2553,9 +2455,9 @@ class Engine:
         )
 
     def _sink_name(self, vd: dict) -> str:
-        """Memory-sink table name for a view dict — mirrors
-        _start_view_query's naming (sw partials / combine matrel /
-        plain)."""
+        """Memory-sink table name for a view dict (sw partials / combine
+        matrel / plain) — the one naming rule _start_view_query starts
+        sinks under and the readers read."""
         if vd.get("sw_seconds") is not None:
             return f"{vd['name']}__sw_raw"
         if has_hidden_partials(vd.get("combine_aggs")):

@@ -424,6 +424,63 @@ def test_engine_datasource_mode_end_to_end(spark, wire, tmp_path):
     eng.consume_end_all()
 
 
+# A factory every process can rebuild on its own: the streaming planner
+# and the executor workers import this module fresh (the suite runs from
+# the repo root, which is on their path) and each builds an identical
+# canned stream, so no client state has to cross a process boundary.
+_CANNED = {
+    f"shardId-00{i}": [f"k{i},{j}".encode() for j in range(5)]
+    for i in range(3)
+}
+
+
+def canned_factory() -> FakeKinesisClient:
+    return FakeKinesisClient(_CANNED, page_size=2)
+
+
+def test_engine_datasource_through_registered_client_factory(
+    spark, tmp_path
+):
+    """register_kinesis_client_factory: the planner and the executors
+    build their client from a "module:attr" factory string, not from
+    the endpoint row — the row points at a closed local port, so only
+    the factory reaches the stream. The archive holds every record
+    exactly once, and a stop/resume re-ingests nothing."""
+    from pipeline_kinesis_spark.engine import Engine
+
+    eng = Engine(
+        spark,
+        metadata_dir=str(tmp_path / "meta"),
+        trigger_interval="300 milliseconds",
+    )
+    eng.add_endpoint("ep", region="us-east-1", url="http://127.0.0.1:9")
+    # the module's import name, not __name__: pytest imports this file
+    # under its bare name, which the Python workers cannot resolve
+    eng.register_kinesis_client_factory(
+        "ep", "tests.test_kinesis_datasource:canned_factory"
+    )
+    eng.create_stream("k_in", "k STRING, v BIGINT")
+    want = sorted(
+        f"{s}-{j}" for s, recs in _CANNED.items() for j in range(len(recs))
+    )
+    try:
+        for _ in range(2):
+            c = eng.consume_begin(
+                "ep", "events", "k_in", fmt="csv", delimiter=",",
+                source="datasource",
+            )
+            assert c.id in eng._ds_consumers
+            eng.wait_for_ingest(timeout_s=120)
+            seqs = [
+                r.sequence_number
+                for r in eng.stream_table("k_in").collect()
+            ]
+            assert sorted(seqs) == want
+            assert eng.consume_end("ep", "events", "k_in")
+    finally:
+        eng.consume_end_all()
+
+
 def test_engine_auto_mode_picks_datasource_beyond_max_procs(
     spark, wire, tmp_path
 ):

@@ -21,8 +21,9 @@ Ops drawn per step (seeded):
   pause_resume   consume_end_all + consume_begin on the SAME engine
   restart        consume_end_all + a NEW Engine over the same
                  metadata dir + consume_begin (process-death analog)
-  flap_view      deactivate(view) + activate(view) (consumers keep
-                 archiving; view resumes from its checkpoint)
+  flap_view      deactivate + activate of the base view or one of the
+                 scenario's chained views (consumers keep archiving;
+                 the view resumes from its checkpoint)
   rebucket       live store resize to a new bucket count
   replay         replay_dead_letters with the corrected delimiter
                  (idempotent; recovered rows append to the ARCHIVE —
@@ -39,8 +40,16 @@ Ops drawn per step (seeded):
                  consume_end_all + resume replays the batch over the
                  crashed commit's orphans
 
+Scenario shapes (seeded, reported as shape_counts): ~half chain a view
+on the base view's output stream (osrel_chain), ~a third carry a
+durable sliding-window twin (sw_twin), ~a third add a transform-sink
+chain (sink_chain): a transform copying the stream into a sink
+relation, a parquet_upsert view on the sink and a view on that view's
+output stream.
+
 End-of-scenario ledger (after a final drain):
   view == exact aggregate of WELL-FORMED rows fed,
+  every chained view (telescoped osrel sums included) == the same,
   archive == well-formed + replay-recovered,
   dead_letters == malformed - recovered.
 
@@ -216,6 +225,45 @@ def _scenario(spark, rng: np.random.Generator, ops_run: list) -> dict:
                 sw_seconds=30 * 86400,
                 sw_step_seconds=86400,
             )
+        # ~a third chain through a transform's sink: stream → transform
+        # → sink relation → parquet_upsert view → view on its output
+        # stream, whose telescoped sums must equal the exact aggregate
+        sink_chain = bool(rng.random() < 0.33)
+        flappable = [view]
+        if chained:
+            flappable.append(f"{view}_chain")
+        if sink_chain:
+            eng.create_continuous_transform(
+                f"{view}_t",
+                f"SELECT k, v FROM {stream}",
+                stream=stream,
+                sink_relation=f"{view}_sink",
+            )
+            eng.create_continuous_view(
+                f"{view}_sv",
+                f"SELECT k, count(*) AS n, sum(v) AS total "
+                f"FROM {view}_sink GROUP BY k",
+                stream=f"{view}_sink",
+                materialize="parquet_upsert",
+                key_cols=["k"],
+                osrel_keep_batches=None,
+            )
+            eng.create_continuous_view(
+                f"{view}_svc",
+                f"SELECT new.k AS k, "
+                f"sum(new.n - coalesce(old.n, 0)) AS n, "
+                f"sum(new.total - coalesce(old.total, 0)) AS total "
+                f"FROM {view}_sv_osrel GROUP BY new.k",
+                stream=f"{view}_sv_osrel",
+            )
+            flappable += [f"{view}_sv", f"{view}_svc"]
+        shape = [
+            name for name, on in (
+                ("osrel_chain", chained),
+                ("sw_twin", sw_twin),
+                ("sink_chain", sink_chain),
+            ) if on
+        ]
         feed()
 
         def begin():
@@ -253,10 +301,13 @@ def _scenario(spark, rng: np.random.Generator, ops_run: list) -> dict:
                 view_active = True
             elif op == "flap_view":
                 if view_active and consuming:
-                    eng.deactivate(view)
+                    flapped = str(rng.choice(flappable))
+                    part = flapped[len(view) + 1:] or "base"
+                    ops_run[-1] = f"flap_view:{part}"
+                    eng.deactivate(flapped)
                     if rng.random() < 0.5:
                         feed()  # archived while the view is down
-                    eng.activate(view)
+                    eng.activate(flapped)
             elif op == "rebucket":
                 if consuming:
                     eng.rebucket(view, int(rng.choice([1, 2, 4, 8])))
@@ -337,7 +388,7 @@ def _scenario(spark, rng: np.random.Generator, ops_run: list) -> dict:
         if not consuming:
             begin()
         eng.wait_for_ingest(timeout_s=300)
-        if chained:
+        if chained or sink_chain:
             eng.wait_for_ingest(timeout_s=120)  # drain the cascade tail
 
         problems = []
@@ -362,6 +413,18 @@ def _scenario(spark, rng: np.random.Generator, ops_run: list) -> dict:
                 problems.append(
                     f"chained telescope mismatch: {cgot} != {cwant}"
                 )
+        if sink_chain:
+            cwant = {k: (v[0], v[1]) for k, v in expected.items()}
+            for chained_view in (f"{view}_sv", f"{view}_svc"):
+                cgot = {
+                    r.k: (int(r.n), int(r.total))
+                    for r in eng.view_table(chained_view).collect()
+                }
+                if cgot != cwant:
+                    problems.append(
+                        f"sink chain {chained_view[len(view):]} mismatch: "
+                        f"{cgot} != {cwant}"
+                    )
         if sw_twin:
             sgot = {
                 r.k: (int(r.n), int(r.total))
@@ -388,6 +451,7 @@ def _scenario(spark, rng: np.random.Generator, ops_run: list) -> dict:
             "fed": state["good"] + state["malformed"],
             "feeds": state["feed_no"],
             "problems": problems,
+            "shape": shape,
         }
     finally:
         eng.consume_end_all()
@@ -671,6 +735,7 @@ def main() -> int:
     total_ops = 0
     total_fed = 0
     op_counts: Counter = Counter()
+    shape_counts: Counter = Counter()
     violations = []
 
     def run_one(idx: int):
@@ -704,6 +769,7 @@ def main() -> int:
         else:
             total_ops += len(ops_run)
             total_fed += res["fed"]
+            shape_counts.update(res.get("shape", ()))
             for p in res["problems"]:
                 violations.append(
                     {"scenario": idx, "ops": ops_run, "problem": p}
@@ -726,6 +792,7 @@ def main() -> int:
                 "lifecycle_ops": total_ops,
                 "records_fed": total_fed,
                 "op_counts": dict(sorted(op_counts.items())),
+                "shape_counts": dict(sorted(shape_counts.items())),
                 "violations": len(violations),
                 "seed": args.seed,
                 "budget_s": args.budget_s,
