@@ -6,8 +6,10 @@ Persisted as a single JSON document under the engine's metadata dir with
 atomic rewrite; a process-local lock mirrors the reference's
 AccessExclusiveLock around consumer mutation (pipeline_kinesis.c:830-849).
 The third reference table, ``seqnums``, has no direct analog here: offsets
-live in Structured Streaming checkpoints (exactly-once, managed by Spark) —
-see Engine.progress() for the inspectable view of ingest position.
+live in Structured Streaming checkpoints (exactly-once, managed by Spark),
+plus the pump's per-shard positions saved here — Engine.seqnums() is the
+queryable relation of ingest position, and Engine.pipeline_query_stats()
+the per-query progress.
 """
 
 from __future__ import annotations

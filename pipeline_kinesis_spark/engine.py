@@ -8,7 +8,7 @@ CREATE STREAM (PipelineDB)          → create_stream
 CREATE CONTINUOUS VIEW (PipelineDB) → create_continuous_view
 kinesis_consume_begin_sr            → consume_begin
 kinesis_consume_end_sr / _all       → consume_end / consume_end_all
-SELECT * FROM seqnums (progress)    → progress()
+SELECT * FROM seqnums (progress)    → seqnums()
 
 consume_begin wires: record source → COPY-parity parse → one ingest
 query (exactly-once parquet archive of the stream relation plus the
@@ -55,9 +55,11 @@ from pipeline_kinesis_spark.sources.kinesis import (
     describe_all_shards,
     iterator_type,
 )
-from pipeline_kinesis_spark.sources.kinesis_datasource import build_client
+from pipeline_kinesis_spark.sources.kinesis_datasource import (
+    _read_attained,
+    build_client,
+)
 from pipeline_kinesis_spark.sources.records import RECORD_SCHEMA
-from pipeline_kinesis_spark.streaming.listeners import QueryMetricsListener
 from pipeline_kinesis_spark.streaming.pinned_start import pinned_shuffle
 from pipeline_kinesis_spark.streaming.continuous_view import (
     KB_COL,
@@ -107,6 +109,10 @@ def spool_admission_cap(n_live_shards: int) -> int:
 # <view>_osrel — the output-stream relation naming convention; single
 # source of truth for every parser that recognizes it
 _OSREL_RE = re.compile(r"^(\w+)_osrel$")
+
+# a consumer's own standing queries: ingest_<relation>_c<id> and, on the
+# datasource path, kds_landing_<relation>_c<id>
+_CONSUMER_QUERY_RE = re.compile(r"^(ingest|kds_landing)_(.+)_c\d+$")
 
 # Default output-stream retention: OSREL_KEEP_DEFAULT (imported above,
 # 1000 batches). Unbounded delta history is wrong as a default at
@@ -199,6 +205,16 @@ def _published_through(dest: str, tag: str) -> int:
             return int(f.read())
     except FileNotFoundError:
         return -1
+
+
+def _committed_batch_id(ckpt: str) -> int:
+    """The last batch id a Structured Streaming checkpoint's commit log
+    holds (-1: none yet)."""
+    try:
+        names = os.listdir(os.path.join(ckpt, "commits"))
+    except OSError:
+        return -1
+    return max((int(n) for n in names if n.isdigit()), default=-1)
 
 
 def _staging_dir(dest: str, tag: str, bid: int) -> str:
@@ -322,17 +338,6 @@ class Engine:
         # ACTIVATE can wire a query onto an already-running consumer.
         self._parsed: dict[int, tuple[str, DataFrame]] = {}
         self._lock = threading.RLock()
-        # stats listener behind pipeline_query_stats — attached on FIRST
-        # USE (a Python streaming listener crosses Py4J per progress
-        # event: measured ~15% ingest throughput on this sandbox, so
-        # collection is demand-driven like osrel emission: no consumer,
-        # no cost). Detached at consume_end_all so many short-lived
-        # Engines over one SparkSession never stack listeners on the
-        # shared streams bus. Counters cover from first use onward —
-        # attach early (call pipeline_query_stats() once before
-        # consume_begin) to observe from batch zero.
-        self._metrics = QueryMetricsListener()
-        self._metrics_attached = False
         # per-upsert-store mutex: the manifest design assumes a single
         # writer per store (continuous_view.py manifest note). The
         # view's foreachBatch merge and the synchronous ttl_expire()
@@ -351,11 +356,6 @@ class Engine:
         # make_boto3_client when none is registered).
         self._kinesis_clients: dict[str, object] = {}
         self._kinesis_client_factories: dict[str, str] = {}
-        # consumer ids running the executor-parallel datasource path —
-        # their landing query needs quiescence-polling instead of
-        # processAllAvailable (an always-advancing source never sets
-        # Spark's noNewData flag)
-        self._ds_consumers: set[int] = set()
         # auto spool-reap cadence (spool_keep_seconds consumers):
         # listdir cost per sweep, so gated; tests shrink it
         self._spool_reap_interval_s = 30.0
@@ -365,19 +365,6 @@ class Engine:
         # output-stream emission on — lets chain wiring skip a needless
         # base restart when emission is already flowing
         self._emitting: set[str] = set()
-
-    def _attach_metrics(self) -> None:
-        if not self._metrics_attached:
-            self.spark.streams.addListener(self._metrics)
-            self._metrics_attached = True
-
-    def _detach_metrics(self) -> None:
-        if self._metrics_attached:
-            try:
-                self.spark.streams.removeListener(self._metrics)
-            except Exception:
-                pass
-            self._metrics_attached = False
 
     # ------------------------------------------------------------- catalog
 
@@ -706,7 +693,7 @@ class Engine:
         with self._lock:
             self.catalog.drop_transform(name)
             self._procs.pop(name, None)
-            self._stop_named({f"transform_{name}"})
+            self._stop_queries("transform", name)
 
     def drop_continuous_view(self, name: str) -> None:
         """Unregister the view and stop any running query materializing it
@@ -724,10 +711,10 @@ class Engine:
                     f"continuous view {name!r} has output-stream "
                     f"consumers {deps}; drop them first"
                 )
+            self._stop_queries("view", name)
             self.catalog.drop_view(name)
             for sink in _view_qnames(name):
                 self._memview_snapshots.pop(sink, None)
-            self._stop_named(_view_qnames(name))
 
     # --------------------------------------------------------------- paths
 
@@ -754,14 +741,20 @@ class Engine:
                 view_name, threading.Lock()
             )
 
-    def _ckpt(self, consumer_id: int, kind: str) -> str:
+    def _ckpt(self, cid: int, kind: str, entity: str = "") -> str:
         """Checkpoint path for one standing query. PURE — no side
         effects; callable from gap checks or diagnostics while a query
         may be mid-batch. The batch-0 debris reset lives in
         _reset_batch0_debris and runs only via _ckpt_for_start,
-        immediately before writeStream.start()."""
+        immediately before writeStream.start(). Given the query's
+        _query_kind pair (``kind``, ``entity``), this is the one naming
+        rule of every start site and pipeline_query_stats."""
+        if entity:
+            kind = {"ingest": "ingest", "landing": "kds_landing"}.get(
+                kind, f"{kind}_{entity}"
+            )
         return os.path.join(
-            self.metadata_dir, "checkpoints", str(consumer_id), kind
+            self.metadata_dir, "checkpoints", str(cid), kind
         )
 
     @staticmethod
@@ -805,11 +798,11 @@ class Engine:
             shutil.rmtree(path, ignore_errors=True)
         return path
 
-    def _ckpt_for_start(self, consumer_id: int, kind: str) -> str:
+    def _ckpt_for_start(self, cid: int, kind: str, entity: str = "") -> str:
         """Checkpoint path for a query that is about to START — applies
         the batch-0 debris reset. Every `.option("checkpointLocation",
         ...)` site uses this; everything else uses the pure _ckpt."""
-        return self._reset_batch0_debris(self._ckpt(consumer_id, kind))
+        return self._reset_batch0_debris(self._ckpt(cid, kind, entity))
 
     def _ds_state_dir(self, consumer_id: int) -> str:
         """Attained-position metadata for the executor-parallel
@@ -896,16 +889,17 @@ class Engine:
             if (
                 is_kinesis
                 and endpoint not in self._kinesis_clients
+                and endpoint not in self._kinesis_client_factories
                 and not ep.url
                 and (ep.region or "local") == "local"
             ):
-                # plainly misconfigured: nothing to replay, no client,
-                # no region to build one from — fail here, not in the
-                # pump thread
+                # plainly misconfigured: nothing to replay, no client or
+                # client factory, no region to build one from — fail
+                # here, not in the pump thread
                 raise ValueError(
                     f"endpoint {endpoint!r} has no source url and no "
-                    "kinesis client (register_kinesis_client, or set "
-                    "url/region)"
+                    "kinesis client (register_kinesis_client or "
+                    "register_kinesis_client_factory, or set url/region)"
                 )
             iterator_type(start_position)  # validate before any side effect
             self._restore_compacted(relation)
@@ -1243,11 +1237,12 @@ class Engine:
                         )
                         .option(
                             "checkpointLocation",
-                            self._ckpt_for_start(consumer.id, "kds_landing"),
+                            self._ckpt_for_start(
+                                consumer.id, "landing", relation
+                            ),
                         )
                         .trigger(processingTime=interval)
                     ))
-                    self._ds_consumers.add(consumer.id)
                 # (a) one parse per micro-batch: good rows to the archive,
                 # bad ones (if any) to the dead-letter quarantine (the
                 # reference drops the whole batch, pipeline_kinesis.c:740-758)
@@ -1274,7 +1269,7 @@ class Engine:
                     .queryName(f"ingest_{relation}_c{consumer.id}")
                     .option(
                         "checkpointLocation",
-                        self._ckpt_for_start(consumer.id, "ingest"),
+                        self._ckpt_for_start(consumer.id, "ingest", relation),
                     )
                     .trigger(processingTime=interval)
                 ))
@@ -1310,22 +1305,27 @@ class Engine:
         keep ingesting."""
         with self._lock:
             kind = self.catalog.set_active(name, False)
-            self._stop_named(
-                # sw / combine-matrel views run under suffixed sink names
-                _view_qnames(name)
-                if kind == "view"
-                else {f"transform_{name}"}
-            )
+            self._stop_queries(kind, name)
 
-    def _stop_named(self, names: set[str], cid: int | None = None) -> None:
-        """Stop and unregister the standing queries named in `names`, on
-        consumer `cid` or, when cid is None, on every running consumer;
-        the consumers themselves keep ingesting."""
+    def _stop_queries(
+        self, kind: str, name: str, cid: int | None = None
+    ) -> None:
+        """Stop and unregister the standing queries _query_kind names
+        (kind, name), on consumer `cid` or, when cid is None, on every
+        running consumer; the consumers themselves keep ingesting."""
         lists = self._queries.values() if cid is None else [self._queries[cid]]
+        key = (kind, name)
         for queries in lists:
-            for q in [q for q in queries if q.name in names]:
+            for q in [q for q in queries if self._query_kind(q.name) == key]:
                 q.stop()
                 queries.remove(q)
+
+    def _runs(self, cid: int, kind: str, name: str) -> bool:
+        """True iff a live (kind, name) standing query runs on `cid`."""
+        return any(
+            q.isActive and self._query_kind(q.name) == (kind, name)
+            for q in self._queries[cid]
+        )
 
     def activate(self, name: str) -> None:
         """ACTIVATE analog: resume maintenance of a deactivated view or
@@ -1343,25 +1343,37 @@ class Engine:
                     self._wire_transform(cid, relation, good, td)
 
     def _resolve_chain_source(
-        self, cid: int, relation: str, good: DataFrame, stream: str
+        self,
+        cid: int,
+        relation: str,
+        good: DataFrame,
+        stream: str,
+        _seen: frozenset = frozenset(),
     ) -> DataFrame | None:
         """Resolve the streaming source for `stream` on a running
-        consumer of `relation`, starting what feeds it first: the
-        consumer's parsed stream itself, a view's output stream
-        (recursively — the base view is restarted WITH delta emission
-        only if it is not already emitting), or a transform's sink
-        relation (the transform is wired first when active; an inactive
-        one leaves the sink readable as it stands). None when the chain
-        does not root at `relation`."""
+        consumer of `relation`, starting what feeds it first. One
+        recursive rule for every chain: `stream` is the consumer's
+        parsed stream itself, a view's output stream (the base view is
+        restarted WITH delta emission only if an active query reads that
+        stream and it is not already emitting), or the sink relation of
+        a transform anywhere in the catalog (the transform is wired
+        first when active; an inactive one leaves the sink readable as
+        it stands). Whatever feeds a view or transform is resolved the
+        same way, to any depth. None when the chain does not root at
+        `relation`, or loops back on itself (`_seen`: the streams
+        already being resolved)."""
         if stream == relation:
             return good
+        if stream in _seen:
+            return None
+        _seen = _seen | {stream}
         m = _OSREL_RE.match(stream)
         if m and m.group(1) in self.catalog.state.views:
             base = ViewDef(**self.catalog.state.views[m.group(1)])
             if not base.active:
                 return None
             base_src = self._resolve_chain_source(
-                cid, relation, good, base.stream
+                cid, relation, good, base.stream, _seen
             )
             if base_src is None:
                 return None
@@ -1371,36 +1383,40 @@ class Engine:
                 base.stream,
                 self._view_compile_sql(base),
             )
-            base_running = any(
-                q.name in _view_qnames(base.name) and q.isActive
-                for q in self._queries[cid]
-            )
-            if not (base_running and base.name in self._emitting):
+            base_running = self._runs(cid, "view", base.name)
+            delta_dir = self._osrel_delta_dir(base)
+            if delta_dir is not None and not (
+                base_running and base.name in self._emitting
+            ):
                 # (re)start the base with emission on — checkpoint
-                # resume, nothing lost; an already-emitting base is
+                # resume, nothing lost; an already-emitting base, or
+                # one whose output stream no active query reads (an
+                # inactive transform's sink only needs its schema), is
                 # left untouched (no needless materialization stall)
-                self._stop_named(_view_qnames(base.name), cid)
+                self._stop_queries("view", base.name, cid)
                 self._queries[cid].append(
                     self._start_view_query(
-                        cid,
-                        base,
-                        base_vdf,
-                        delta_dir=self._osrel_delta_dir(base),
+                        cid, base, base_vdf, delta_dir=delta_dir
                     )
                 )
             return self.spark.readStream.schema(
                 self._osrel_schema(base_vdf.schema)
             ).parquet(os.path.join(self.osrel_dir(base.name), "b*"))
-        for t in self.catalog.transforms_on(relation):
-            if t.sink_relation == stream:
-                if t.active:
-                    self._wire_transform(cid, relation, good, t)
-                tdf = compile_view(self.spark, good, relation, t.sql)
-                sink_dir = self.table_dir(stream)
-                os.makedirs(sink_dir, exist_ok=True)
-                return self.spark.readStream.schema(tdf.schema).parquet(
-                    sink_dir
-                )
+        for t in list(self.catalog.state.transforms.values()):
+            if t.get("sink_relation") != stream:
+                continue
+            td = TransformDef(**t)
+            src = self._resolve_chain_source(
+                cid, relation, good, td.stream, _seen
+            )
+            if src is None:
+                continue
+            if td.active:
+                self._wire_transform(cid, relation, good, td, src)
+            tdf = compile_view(self.spark, src, td.stream, td.sql)
+            sink_dir = self.table_dir(stream)
+            os.makedirs(sink_dir, exist_ok=True)
+            return self.spark.readStream.schema(tdf.schema).parquet(sink_dir)
         return None
 
     def _wire_view(
@@ -1413,10 +1429,7 @@ class Engine:
         wiring path: consume_begin, ACTIVATE and CREATE CONTINUOUS VIEW
         issued while consumers run (PipelineDB starts materializing
         immediately) all come here."""
-        if any(
-            q.name in _view_qnames(vd.name) and q.isActive
-            for q in self._queries[cid]
-        ):
+        if self._runs(cid, "view", vd.name):
             return False
         src = self._resolve_chain_source(cid, relation, good, vd.stream)
         if src is None:
@@ -1425,7 +1438,7 @@ class Engine:
         if m and m.group(1) in self.catalog.state.views:
             self._check_osrel_gap(
                 m.group(1),
-                self._ckpt(cid, f"view_{vd.name}"),
+                self._ckpt(cid, "view", vd.name),
                 f"continuous view {vd.name!r}",
             )
         vdf = compile_view(
@@ -1442,26 +1455,30 @@ class Engine:
         return True
 
     def _wire_transform(
-        self, cid: int, relation: str, good: DataFrame, td: TransformDef
+        self,
+        cid: int,
+        relation: str,
+        good: DataFrame,
+        td: TransformDef,
+        src: DataFrame | None = None,
     ) -> bool:
         """Start td's standing query on a running consumer of `relation`
         (idempotent) — direct, or chained on a view's output stream or a
-        transform's sink. The one transform wiring path: consume_begin,
+        transform's sink; `src` is td's already-resolved source, if the
+        caller has it. The one transform wiring path: consume_begin,
         ACTIVATE and CREATE CONTINUOUS TRANSFORM issued while consumers
         run all come here."""
-        if any(
-            q.name == f"transform_{td.name}" and q.isActive
-            for q in self._queries[cid]
-        ):
+        if self._runs(cid, "transform", td.name):
             return False
-        src = self._resolve_chain_source(cid, relation, good, td.stream)
+        if src is None:
+            src = self._resolve_chain_source(cid, relation, good, td.stream)
         if src is None:
             return False
         m = _OSREL_RE.match(td.stream)
         if m and m.group(1) in self.catalog.state.views:
             self._check_osrel_gap(
                 m.group(1),
-                self._ckpt(cid, f"transform_{td.name}"),
+                self._ckpt(cid, "transform", td.name),
                 f"continuous transform {td.name!r}",
             )
         tdf = compile_view(self.spark, src, td.stream, td.sql)
@@ -1475,10 +1492,10 @@ class Engine:
         PipelineDB's pipeline_views()/pipeline_transforms() catalog
         relations. `running` reflects live StreamingQuery state."""
         live = {
-            q.name
-            for queries in self._queries.values()
+            self._query_kind(q.name)
+            for queries in self._running_queries().values()
             for q in queries
-            if q.name and q.isActive
+            if q.isActive
         }
         rows = []
         for v in self.catalog.state.views.values():
@@ -1489,7 +1506,7 @@ class Engine:
                     v["stream"],
                     v.get("materialize", "memory"),
                     bool(v.get("active", True)),
-                    bool(_view_qnames(v["name"]) & live),
+                    ("view", v["name"]) in live,
                 )
             )
         for t in self.catalog.state.transforms.values():
@@ -1500,7 +1517,7 @@ class Engine:
                     t["stream"],
                     t.get("sink_relation") or "",
                     bool(t.get("active", True)),
-                    f"transform_{t['name']}" in live,
+                    ("transform", t["name"]) in live,
                 )
             )
         return self.spark.createDataFrame(
@@ -1650,53 +1667,70 @@ class Engine:
 
     def pipeline_query_stats(self) -> DataFrame:
         """The pipeline_query_stats catalog relation (PipelineDB's
-        per-CQ stats view): cumulative counters per standing query —
-        micro-batches that carried input, rows ingested, high-water
-        batch id, error tallies — collected by the engine's streaming
-        listener since the first consume_begin. Also queryable in SQL:
-        ``SELECT * FROM pipeline_query_stats``. Counters are
-        process-lifetime (a restart starts fresh), matching the
-        reference's in-memory stats, while seqnums() stays the durable
-        progress ledger. Collection starts at this method's FIRST call
-        (demand-driven — an unobserved engine pays zero listener
-        overhead on the hot ingest path); call it once before
-        consume_begin to observe from batch zero."""
-        self._attach_metrics()
-        views = set(self.catalog.state.views)
+        per-CQ stats view; SQL: ``SELECT * FROM pipeline_query_stats``):
+        one row per standing query of the running consumers, read from
+        the progress Spark keeps for it anyway, so the first call
+        returns full rows and the ingest path pays nothing. ``kind`` is
+        ingest, landing, view or transform; ``name`` the relation, view
+        or transform served. ``batches`` / ``input_rows`` count the
+        input-carrying batches among the reports Spark retains for the
+        current run (spark.sql.streaming.numRecentProgressUpdates, 100
+        by default). ``last_batch_id`` is the checkpoint's last committed
+        batch, so it survives restarts. ``errors`` / ``last_error`` are
+        the query's own exception(), so a failed query keeps its own
+        row. ``watermark`` is the latest report's; ``duration_ms`` the
+        durationMs split of the last input-carrying batch."""
         rows = []
-        for qname, t in self._metrics.totals().items():
-            if qname == "__terminated__":
-                kind, entity = "terminated", ""
-            elif qname.startswith("transform_"):
-                kind, entity = "transform", qname[len("transform_"):]
-            elif qname.startswith("ingest_"):
-                kind, entity = "ingest", qname[len("ingest_"):]
-            elif qname.endswith("__sw_raw") and qname[:-8] in views:
-                kind, entity = "view", qname[:-8]
-            elif qname.endswith("__mrel") and qname[:-6] in views:
-                kind, entity = "view", qname[:-6]
-            elif qname in views:
-                kind, entity = "view", qname
-            else:
-                kind, entity = "query", qname
-            rows.append(
-                (
-                    qname,
-                    kind,
-                    entity,
-                    t["batches"],
-                    t["input_rows"],
-                    t["last_batch_id"],
-                    t["errors"],
-                    t["last_error"],
+        for cid, queries in self._running_queries().items():
+            for q in queries:
+                kind, entity = self._query_kind(q.name)
+                recent = q.recentProgress
+                ran = [p for p in recent if p.get("numInputRows")]
+                exc = q.exception()
+                last = recent[-1] if recent else {}
+                rows.append(
+                    (
+                        q.name,
+                        kind,
+                        entity,
+                        len(ran),
+                        sum(p["numInputRows"] for p in ran),
+                        _committed_batch_id(self._ckpt(cid, kind, entity)),
+                        int(exc is not None),
+                        None if exc is None else str(exc)[:2000],
+                        cid,
+                        q.isActive,
+                        (last.get("eventTime") or {}).get("watermark"),
+                        dict(ran[-1]["durationMs"]) if ran else None,
+                    )
                 )
-            )
         return self.spark.createDataFrame(
             rows,
             "query STRING, kind STRING, name STRING, batches BIGINT, "
             "input_rows BIGINT, last_batch_id BIGINT, errors BIGINT, "
-            "last_error STRING",
+            "last_error STRING, consumer_id INT, active BOOLEAN, "
+            "watermark STRING, duration_ms MAP<STRING, BIGINT>",
         )
+
+    def _running_queries(self) -> dict[int, list[StreamingQuery]]:
+        """A copy of the consumer → standing-query registry, taken under
+        the lock (consume_end and CREATE mutate it from other threads)."""
+        with self._lock:
+            return {cid: list(qs) for cid, qs in self._queries.items()}
+
+    def _query_kind(self, qname: str) -> tuple[str, str]:
+        """(kind, entity) of a standing query this engine started:
+        ("view", view) under any of _view_qnames, ("transform", name),
+        or ("ingest" | "landing", relation)."""
+        for suffix in ("", "__sw_raw", "__mrel"):
+            if qname.removesuffix(suffix) in self.catalog.state.views:
+                return "view", qname.removesuffix(suffix)
+        m = _CONSUMER_QUERY_RE.match(qname)
+        if m:
+            return ("ingest" if m[1] == "ingest" else "landing"), m[2]
+        if qname.startswith("transform_"):
+            return "transform", qname[len("transform_"):]
+        return "view", qname  # a view dropped since the registry copy
 
     def _trigger_for(self, consumer: Consumer) -> str:
         """A12 pacing: the reference caps GetRecords at a fixed request
@@ -1819,7 +1853,7 @@ class Engine:
             .outputMode("append")
             .option(
                 "checkpointLocation",
-                self._ckpt_for_start(consumer_id, f"transform_{t.name}"),
+                self._ckpt_for_start(consumer_id, "transform", t.name),
             )
             .trigger(processingTime=interval)
         )
@@ -1884,7 +1918,7 @@ class Engine:
                 .outputMode("update")
                 .option(
                     "checkpointLocation",
-                    self._ckpt_for_start(consumer_id, f"view_{view.name}"),
+                    self._ckpt_for_start(consumer_id, "view", view.name),
                 )
                 .trigger(processingTime=interval)
             )
@@ -1900,7 +1934,7 @@ class Engine:
         return materialize_memory(
             vdf,
             sink_name,
-            self._ckpt_for_start(consumer_id, f"view_{view.name}"),
+            self._ckpt_for_start(consumer_id, "view", view.name),
             output_mode=view.output_mode,
             trigger_interval=interval,
             start_fn=self._start_query,
@@ -2041,7 +2075,6 @@ class Engine:
         for q in self._queries.pop(cid, []):
             q.stop()
         self._parsed.pop(cid, None)
-        self._ds_consumers.discard(cid)
 
     def consume_begin_all(self) -> list[Consumer]:
         """Restart every cataloged consumer (kinesis_consume_begin no-arg,
@@ -2092,7 +2125,6 @@ class Engine:
             n = len(self._queries)
             for cid in list(self._queries):
                 self._stop_consumer(cid)
-            self._detach_metrics()
             return n
 
     def pump_status(self) -> dict[int, dict]:
@@ -2119,36 +2151,31 @@ class Engine:
         """Live state of executor-parallel (datasource-mode) consumers —
         the pump_status analog for the path where polling happens on
         executors: landing-query liveness and batch progress, plus the
-        per-shard attained positions / closed flags from the
-        side-channel (A14 lag feed counterpart)."""
-        with self._lock:
-            ids = sorted(self._ds_consumers)
-            queries = {
-                cid: list(self._queries.get(cid, [])) for cid in ids
-            }
-        from pipeline_kinesis_spark.sources.kinesis_datasource import (
-            _read_attained,
-        )
-
+        per-shard attained positions, closed flags and MillisBehindLatest
+        (``millis_behind``, the pump_status ``lag`` counterpart) from the
+        side-channel (A14 lag feed)."""
         out = {}
-        for cid in ids:
+        for cid, queries in sorted(self._running_queries().items()):
             landing = next(
                 (
                     q
-                    for q in queries[cid]
-                    if (q.name or "").startswith("kds_landing_")
+                    for q in queries
+                    if self._query_kind(q.name)[0] == "landing"
                 ),
                 None,
             )
-            p = landing.lastProgress if landing is not None else None
+            if landing is None:
+                continue  # a file or pump consumer
+            p = landing.lastProgress
             out[cid] = {
-                "alive": bool(landing is not None and landing.isActive),
+                "alive": landing.isActive,
                 "batch_id": p.get("batchId") if p else None,
                 "num_input_rows": p.get("numInputRows") if p else None,
                 "shards": {
                     sid: {
                         "seqnum": st.get("seq"),
                         "closed": bool(st.get("closed")),
+                        "millis_behind": st.get("millis_behind"),
                     }
                     for sid, st in sorted(
                         _read_attained(self._ds_state_dir(cid)).items()
@@ -2552,39 +2579,18 @@ class Engine:
 
     def view_table(self, view_name: str) -> DataFrame:
         """Query a continuous view's current materialized state, whatever
-        its sink (memory table or parquet_upsert directory). TTL views
-        (create_continuous_view ttl_seconds/ttl_column) never show expired
-        rows here: parquet_upsert reaps them at write time, memory views
-        filter them at read time."""
-        vd = self.catalog.state.views.get(view_name)
-        if vd is not None and vd.get("materialize") != "parquet_upsert":
-            if vd.get("sw_seconds") is not None:
-                # sliding-window view: the raw memory table holds
-                # per-step partials — recombine the steps in the window
-                df = sw_combine(
-                    self._memory_sink_table(f"{view_name}__sw_raw"),
-                    vd["sw_seconds"],
-                    vd["sw_aggs"],
-                    vd.get("sw_group_cols") or [],
-                )
-                if vd.get("sw_having"):
-                    df = df.filter(F.expr(vd["sw_having"]))
-                return df
-            return self._ttl_live_filter(
-                drop_partial_cols(
-                    self._memory_sink_table(self._sink_name(vd))
-                ),
-                vd,
-            )
-        df = self._read_view_store(view_name)
-        if KB_COL in df.columns:
-            # hash-bucket partition column — physical store layout, not
-            # part of the view's schema
-            df = df.drop(KB_COL)
-        df = drop_partial_cols(df)
-        if vd is not None and vd.get("sw_seconds") is not None:
-            # durable sw view: the parquet store holds per-step partials
-            # (already reaped to the retention) — recombine the live ones
+        its sink (memory table or parquet_upsert directory): the matrel
+        with its partial-state columns hidden (sw views: the trailing
+        window recombined). TTL views (create_continuous_view
+        ttl_seconds/ttl_column) never show expired rows here:
+        parquet_upsert reaps them at write time, memory views filter them
+        at read time."""
+        df = self.matrel(view_name)
+        vd = self.catalog.state.views[view_name]
+        if vd.get("sw_seconds") is not None:
+            # sliding-window view: the matrel holds per-step partials
+            # (a durable store already reaped to the retention) —
+            # recombine the steps inside the window
             df = sw_combine(
                 df,
                 vd["sw_seconds"],
@@ -2594,12 +2600,11 @@ class Engine:
             if vd.get("sw_having"):
                 df = df.filter(F.expr(vd["sw_having"]))
             return df
-        if vd is not None:
-            # TTL rides the merge for touched buckets and a round-robin
-            # sweep covers the rest within n batches; this read-time
-            # filter guarantees sweep lag is never visible to queries.
-            df = self._ttl_live_filter(df, vd)
-        return df
+        # parquet_upsert TTL rides the merge for touched buckets and a
+        # round-robin sweep covers the rest within n batches; this
+        # read-time filter hides memory views' expired rows and
+        # guarantees sweep lag is never visible to queries.
+        return self._ttl_live_filter(drop_partial_cols(df), vd)
 
     def sql(self, query: str) -> DataFrame:
         """Ad-hoc SQL with every registered continuous view queryable as a
@@ -2607,14 +2612,14 @@ class Engine:
         (README.md:78-88), available mid-stream. Views resolve to their
         CURRENT materialized state at call time.
 
-        Plain MEMORY views resolve to their live sink table by name —
-        for a memory view with TTL that means expired rows are visible
-        here (use view_table()/combine() for TTL-filtered reads; the
-        name cannot be rebound without detaching the standing sink). A
-        sink another metadata dir started under the same view name is
-        never read, nor is a sink restarted empty while view_table
-        serves its pinned snapshot: then the name resolves to this
-        engine's own view_table.
+        Plain MEMORY views resolve to their live sink table by name.
+        The name resolves instead to this engine's own view_table,
+        under a private name the query is rewritten to (rebinding the
+        public name would detach the standing sink), when the view has
+        a TTL (so expired rows stay hidden, as in view_table), when
+        another metadata dir started the sink under the same view
+        name, or when the sink restarted empty while view_table serves
+        its pinned snapshot.
         Every other materialization (parquet, sw, hidden partials)
         resolves through view_table and honors TTL."""
         # PipelineDB spelling output_of('v') → the <v>_osrel relation;
@@ -2622,6 +2627,9 @@ class Engine:
         query = re.sub(
             r"output_of\(\s*'(\w+)'\s*\)", r"\1_osrel", query, flags=re.I
         )
+        # combine() first: it re-points its view at the matrel, which
+        # the private-name repoint below must not rename away
+        query = self._rewrite_combine(query)
         # register ONLY relations the query text references — an ad-hoc
         # read must not pay O(registry) view_table planning (manifest
         # reads, sw recombination) for relations it never touches.
@@ -2649,12 +2657,16 @@ class Engine:
                     self.view_table(name).createOrReplaceTempView(name)
                 except Exception:
                     continue  # not materialized yet — leave unregistered
-            elif name.lower() in ids and not self._serves_live_sink(name):
+            elif name.lower() in ids and (
+                vd.get("ttl_seconds") is not None
+                or not self._serves_live_sink(name)
+            ):
                 # the session's sink under this name is not what
-                # view_table serves — another metadata dir owns it, or
-                # it restarted empty under a pinned snapshot: read this
-                # engine's view under a private name (replacing the
-                # public one would detach the standing sink)
+                # view_table serves — its expired TTL rows are still
+                # there, another metadata dir owns it, or it restarted
+                # empty under a pinned snapshot: read this engine's view
+                # under a private name (replacing the public one would
+                # detach the standing sink)
                 try:
                     own = self.view_table(name)
                 except Exception:
@@ -2662,7 +2674,6 @@ class Engine:
                 tmp_name = f"__own_view_{name}"
                 own.createOrReplaceTempView(tmp_name)
                 query = _repoint_table(query, name, tmp_name)
-        query = self._rewrite_combine(query)
         for name in self.catalog.state.streams:
             if name.lower() not in ids:
                 continue
@@ -2830,10 +2841,6 @@ class Engine:
                 # datasource consumers: Spark's checkpoint owns the
                 # offsets; the attained side-channel is the queryable
                 # per-shard high-water mark
-                from pipeline_kinesis_spark.sources.kinesis_datasource import (  # noqa: E501
-                    _read_attained,
-                )
-
                 att = _read_attained(ds_state)
                 rows = [
                     (c.id, sid, st["seq"])
@@ -2881,14 +2888,17 @@ class Engine:
         import time as _time
 
         deadline = _time.monotonic() + timeout_s
-        for queries in list(self._queries.values()):
-            for q in queries:
-                if (q.name or "").startswith("kds_landing_"):
-                    self._await_quiescent(q, deadline)
-        for queries in list(self._queries.values()):
-            for q in queries:
-                if not (q.name or "").startswith("kds_landing_"):
-                    q.processAllAvailable()
+        queries = [
+            (q, self._query_kind(q.name)[0] == "landing")
+            for qs in self._running_queries().values()
+            for q in qs
+        ]
+        for q, landing in queries:
+            if landing:
+                self._await_quiescent(q, deadline)
+        for q, landing in queries:
+            if not landing:
+                q.processAllAvailable()
 
     @staticmethod
     def _await_quiescent(q, deadline: float) -> None:
@@ -2922,25 +2932,3 @@ class Engine:
         raise TimeoutError(
             f"landing query {q.name!r} did not quiesce before deadline"
         )
-
-    def progress(self) -> list[dict]:
-        """Per-consumer ingest progress — the queryable analog of the
-        seqnums table (README.md:119-129) + lag metric (A14)."""
-        out = []
-        for cid, queries in self._queries.items():
-            for q in queries:
-                p = q.lastProgress
-                if p:
-                    out.append(
-                        {
-                            "consumer_id": cid,
-                            "query": q.name or p.get("name"),
-                            "batch_id": p.get("batchId"),
-                            "num_input_rows": p.get("numInputRows"),
-                            "sources": [
-                                s.get("endOffset")
-                                for s in p.get("sources", [])
-                            ],
-                        }
-                    )
-        return out

@@ -335,11 +335,15 @@ class ShardCursor:
 # One tiny JSON file per shard under <stateDir>/attained/. Written
 # atomically (tmp + os.replace) by the executor task that read the
 # shard; read by the driver in latestOffset(). Content:
-#   {"seq": str|None, "it": str|None, "closed": bool}
+#   {"seq": str|None, "it": str|None, "closed": bool,
+#    "millis_behind": int|None, "epoch": int, "start": str|None}
 # seq   — last consumed sequence number (None until the first record)
 # it    — cached NextShardIterator (saves one GetShardIterator per
 #         batch; also carries sticky-latest across empty polls)
 # closed — shard fully drained after a reshard
+# millis_behind — the last GetRecords response's MillisBehindLatest
+#         (datasource_status reports it per shard)
+# epoch/start — which (epoch, start) produced this reach (replay pins)
 #
 # CONCURRENT-ATTEMPT SAFETY (speculative execution / zombie tasks): the
 # file for epoch N is named `{shard}.e{N}.json` and created with
@@ -779,6 +783,8 @@ class _ShardCursor(ShardCursor):
                 else None
             ),
         )
+        # the last known lag until this batch's first response
+        self.millis_behind = attained.get("millis_behind")
         self.reader = reader
         self.start_seq = start_seq
         self.epoch = epoch
@@ -879,6 +885,7 @@ class _ShardCursor(ShardCursor):
                 "seq": self.last_seq,
                 "it": self.iterator,
                 "closed": self.closed,
+                "millis_behind": self.millis_behind,
                 # replay pinning (see `bound` above): which (epoch,
                 # start) produced this reach
                 "epoch": self.epoch,

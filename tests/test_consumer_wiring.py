@@ -58,9 +58,11 @@ _TELESCOPE = (
 
 def _create_catalog(eng):
     """Every chain shape: a view on the relation; a parquet_upsert view
-    with a view and a transform on its output stream; a transform with
-    a sink; on that sink a parquet_upsert view (itself chained on by a
-    view), a durable sliding-window view and a second transform."""
+    with a view and a transform on its output stream, and a view on
+    that transform's sink; a transform with a sink; on that sink a
+    parquet_upsert view (itself chained on by a view), a durable
+    sliding-window view and a second transform, whose own sink has a
+    view."""
     eng.create_continuous_view("direct", _AGG.format("ev"), "ev")
     eng.create_continuous_view(
         "base", _AGG.format("ev"), "ev",
@@ -75,6 +77,11 @@ def _create_catalog(eng):
         "FROM base_osrel",
         "base_osrel",
         sink_relation="base_audit_out",
+    )
+    eng.create_continuous_view(
+        "audit_v",
+        "SELECT k, sum(dt) AS total FROM base_audit_out GROUP BY k",
+        "base_audit_out",
     )
     eng.create_continuous_transform(
         "t", "SELECT v, k, arrival_timestamp FROM ev WHERE v > 0", "ev",
@@ -92,6 +99,10 @@ def _create_catalog(eng):
     eng.create_continuous_transform(
         "t2", "SELECT k, v * 2 AS v2 FROM s", "s", sink_relation="s2"
     )
+    eng.create_continuous_view(
+        "s2v", "SELECT k, count(*) AS n, sum(v2) AS total FROM s2 GROUP BY k",
+        "s2",
+    )
 
 
 # (feeder, reader) pairs: each reader's query must follow its feeder's
@@ -103,6 +114,8 @@ _FEEDS = [
     ("sv", "sv_tel"),
     ("transform_t", "sw"),
     ("transform_t", "transform_t2"),
+    ("transform_base_audit", "audit_v"),
+    ("transform_t2", "s2v"),
 ]
 
 
@@ -127,7 +140,7 @@ def _check(eng, cid, fed):
     assert set(names) == {
         f"ingest_ev_c{cid}", "direct", "base", "base_tel",
         "transform_base_audit", "transform_t", "sv", "sv_tel", "sw",
-        "transform_t2",
+        "transform_t2", "audit_v", "s2v",
     }
     for feeder, reader in _FEEDS:
         assert names.index(feeder) < names.index(reader), names
@@ -143,10 +156,16 @@ def _check(eng, cid, fed):
     for r in eng.stream_table("base_audit_out").collect():
         audit[r.k] = audit.get(r.k, 0) + r.dt
     assert audit == {k: t for k, (_, t) in everything.items()}
+    assert {
+        r.k: int(r.total) for r in eng.view_table("audit_v").collect()
+    } == audit
     doubled: dict[str, int] = {}
     for r in eng.stream_table("s2").collect():
         doubled[r.k] = doubled.get(r.k, 0) + r.v2
     assert doubled == {k: 2 * t for k, (_, t) in positive.items()}
+    assert _view(eng, "s2v") == {
+        k: (n, 2 * t) for k, (n, t) in positive.items()
+    }
 
 
 def _begin(eng):

@@ -373,6 +373,7 @@ def test_engine_datasource_mode_end_to_end(spark, wire, tmp_path):
     from pipeline_kinesis_spark.engine import Engine
 
     fake, url, cred = wire
+    fake.millis_behind = 250  # reported per shard by datasource_status
     eng = Engine(
         spark,
         metadata_dir=str(tmp_path / "meta"),
@@ -389,7 +390,7 @@ def test_engine_datasource_mode_end_to_end(spark, wire, tmp_path):
         "ep", "events", "k_in", fmt="csv", delimiter=",",
         source="datasource",
     )
-    assert c.id in eng._ds_consumers
+    assert c.id in eng.datasource_status()
     assert not eng.pump_status()  # no driver pump on this path
     eng.wait_for_ingest(timeout_s=120)
     assert eng.stream_table("k_in").count() == 3
@@ -406,6 +407,7 @@ def test_engine_datasource_mode_end_to_end(spark, wire, tmp_path):
     assert st["alive"] and st["shards"]["shardId-000"] == {
         "seqnum": "shardId-000-1",
         "closed": False,
+        "millis_behind": 250,
     }
     # stop, append while down, resume: exactly-once
     assert eng.consume_end("ep", "events", "k_in")
@@ -438,14 +440,20 @@ def canned_factory() -> FakeKinesisClient:
     return FakeKinesisClient(_CANNED, page_size=2)
 
 
+@pytest.mark.parametrize(
+    "endpoint_row",
+    [{"region": "us-east-1", "url": "http://127.0.0.1:9"}, {}],
+    ids=["closed_port_url", "no_url"],
+)
 def test_engine_datasource_through_registered_client_factory(
-    spark, tmp_path
+    spark, tmp_path, endpoint_row
 ):
     """register_kinesis_client_factory: the planner and the executors
     build their client from a "module:attr" factory string, not from
-    the endpoint row — the row points at a closed local port, so only
-    the factory reaches the stream. The archive holds every record
-    exactly once, and a stop/resume re-ingests nothing."""
+    the endpoint row — the row points at a closed local port, or has
+    no url at all, so only the factory reaches the stream. The archive
+    holds every record exactly once, and a stop/resume re-ingests
+    nothing."""
     from pipeline_kinesis_spark.engine import Engine
 
     eng = Engine(
@@ -453,7 +461,7 @@ def test_engine_datasource_through_registered_client_factory(
         metadata_dir=str(tmp_path / "meta"),
         trigger_interval="300 milliseconds",
     )
-    eng.add_endpoint("ep", region="us-east-1", url="http://127.0.0.1:9")
+    eng.add_endpoint("ep", **endpoint_row)
     # the module's import name, not __name__: pytest imports this file
     # under its bare name, which the Python workers cannot resolve
     eng.register_kinesis_client_factory(
@@ -469,7 +477,7 @@ def test_engine_datasource_through_registered_client_factory(
                 "ep", "events", "k_in", fmt="csv", delimiter=",",
                 source="datasource",
             )
-            assert c.id in eng._ds_consumers
+            assert c.id in eng.datasource_status()
             eng.wait_for_ingest(timeout_s=120)
             seqs = [
                 r.sequence_number
@@ -504,7 +512,7 @@ def test_engine_auto_mode_picks_datasource_beyond_max_procs(
         "ep", "events", "k_in", fmt="csv", delimiter=",", source="auto"
     )
     try:
-        assert c.id in eng._ds_consumers  # crossed the threshold
+        assert c.id in eng.datasource_status()  # crossed the threshold
         eng.wait_for_ingest(timeout_s=120)
         assert eng.stream_table("k_in").count() == 3 + MAX_PROCS
     finally:

@@ -207,16 +207,21 @@ def test_combine_sql_leaves_public_view_binding(engine, spark, tmp_path):
     )
     engine.consume_begin("ep", "s1", "st", fmt="csv", delimiter=",")
     engine.wait_for_ingest()
-    # memory sink by name: raw groups; view_table: TTL-filtered
+    # sql() by name reads the view as view_table does: TTL-filtered
     before = engine.sql("SELECT count(*) AS c FROM m").collect()[0].c
-    assert before == 2
+    assert before == 1
     assert {r.k for r in engine.view_table("m").collect()} == {"a"}
+    # the memory sink itself still holds both groups
+    assert spark.table("m").count() == 2
     # combine() respects the view's TTL read semantics...
     total = engine.sql("SELECT combine(n) AS total FROM m").collect()[0]
     assert total.total == 1  # only a's live group contributes
     # ...and does NOT change what the public name means afterwards
     after = engine.sql("SELECT count(*) AS c FROM m").collect()[0].c
     assert after == before
+    # the public name still resolves to the live memory sink (both
+    # groups), not to a TTL-filtered view that combine() rebound it to
+    assert spark.table("m").count() == 2
 
 
 # ------------------------------------- reference-driven sql() registration

@@ -204,7 +204,7 @@ class TestResolvedSourcePersistence:
         started = eng.consume_begin_all()  # note: NO source argument
         try:
             assert [s.id for s in started] == [c.id]
-            assert c.id in eng._ds_consumers
+            assert c.id in eng.datasource_status()
             assert not eng.pump_status()  # did not fall back to pump
             eng.wait_for_ingest(timeout_s=120)
             seqs = [
@@ -231,7 +231,7 @@ class TestResolvedSourcePersistence:
         c = eng.consume_begin(
             "ep", "events", "k_in", fmt="csv", delimiter=",", source="auto"
         )
-        assert c.id in eng._ds_consumers
+        assert c.id in eng.datasource_status()
         assert (
             eng.catalog.find_consumer("ep", "events", "k_in").source
             == "datasource"
@@ -248,7 +248,7 @@ class TestResolvedSourcePersistence:
         )
         try:
             assert restarted.id == c.id
-            assert c.id in eng._ds_consumers
+            assert c.id in eng.datasource_status()
             assert not eng.pump_status()
         finally:
             eng.consume_end_all()

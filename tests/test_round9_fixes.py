@@ -225,7 +225,7 @@ class TestExplicitSourceConflict:
             source="auto",
         )
         try:
-            assert c.id in eng._ds_consumers
+            assert c.id in eng.datasource_status()
             assert not eng.pump_status()
         finally:
             eng.consume_end_all()
@@ -263,7 +263,7 @@ class TestExplicitSourceConflict:
             source="datasource",
         )
         try:
-            assert c.id in eng._ds_consumers
+            assert c.id in eng.datasource_status()
             eng.wait_for_ingest(timeout_s=120)
             seqs = [
                 r.sequence_number

@@ -1,11 +1,13 @@
-"""Format-parity batch scans (B3), stream-stream join (B11), metrics
-listener (A14)."""
+"""Format-parity batch scans (B3), stream-stream join (B11), the
+pipeline_query_stats relation (A14, B2st)."""
 
 from __future__ import annotations
 
-import time
+import os
 import uuid
 
+import pytest
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 
 from pipeline_kinesis_spark.sources.batch_formats import read_table
@@ -13,7 +15,6 @@ from pipeline_kinesis_spark.sources.file_replay import (
     FileReplaySource,
     write_record_file,
 )
-from pipeline_kinesis_spark.streaming.listeners import QueryMetricsListener
 
 
 def test_csv_json_scan_parity(spark, sf_dir, tmp_path):
@@ -98,42 +99,17 @@ def test_stream_stream_join(spark, tmp_path):
         q.stop()
 
 
-def test_metrics_listener_collects_progress(spark, tmp_path):
-    src = str(tmp_path / "src")
-    name = f"ml_{uuid.uuid4().hex[:8]}"
-    write_record_file(src, [{"data": f"r{i}"} for i in range(25)])
-    listener = QueryMetricsListener()
-    spark.streams.addListener(listener)
-    q = (
-        FileReplaySource(src)
-        .read_stream(spark)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        # listener callbacks are delivered asynchronously — poll
-        deadline = time.time() + 15
-        while listener.total_rows() < 25 and time.time() < deadline:
-            time.sleep(0.2)
-        assert listener.total_rows() >= 25
-        hist = listener.history()
-        assert any(h["num_input_rows"] == 25 for h in hist)
-        assert all("duration_ms" in h for h in hist)
-    finally:
-        q.stop()
-        spark.streams.removeListener(listener)
-
 def test_pipeline_query_stats_relation(spark, tmp_path):
-    """PipelineDB pipeline_query_stats analog: the engine's listener
-    accumulates per-standing-query counters, labeled by kind, and the
-    relation is queryable through sql()."""
+    """PipelineDB pipeline_query_stats analog: one row per standing
+    query, read from the progress Spark keeps for it. The first call
+    after wait_for_ingest already holds every batch (nothing to attach
+    beforehand, nothing to poll for); a failed query is reported under
+    its own name; the relation is queryable through sql()."""
     from pipeline_kinesis_spark.engine import Engine
 
-    eng = Engine(spark, metadata_dir=str(tmp_path / "meta"))
+    eng = Engine(
+        spark, metadata_dir=str(tmp_path / "meta"), shuffle_partitions=4
+    )
     try:
         src_root = tmp_path / "kinesis"
         write_record_file(
@@ -141,35 +117,60 @@ def test_pipeline_query_stats_relation(spark, tmp_path):
         )
         eng.add_endpoint("ep", url=str(src_root))
         eng.create_stream("qs_stream", "k STRING, v BIGINT")
+        agg = "SELECT k, count(*) AS cnt FROM qs_stream GROUP BY k"
+        eng.create_continuous_view("qs_view", agg, "qs_stream")
         eng.create_continuous_view(
-            "qs_view",
-            "SELECT k, count(*) AS cnt FROM qs_stream GROUP BY k",
-            "qs_stream",
+            "qs_sw", agg, "qs_stream",
+            materialize="parquet_upsert", sw_seconds=3600,
         )
-        # collection is demand-driven: first call attaches the listener,
-        # so observe BEFORE consume_begin to count from batch zero
-        assert eng.pipeline_query_stats().count() == 0
-        eng.consume_begin("ep", "s", "qs_stream", fmt="csv", delimiter=",")
-        eng.wait_for_ingest()
-        # listener callbacks arrive asynchronously — poll for the rows
-        deadline = time.time() + 15
-        while time.time() < deadline:
-            stats = {
-                (r.kind, r.name): r
-                for r in eng.pipeline_query_stats().collect()
-            }
-            ing = stats.get(("ingest", "qs_stream_c1"))
-            vw = stats.get(("view", "qs_view"))
-            if ing and vw and ing.input_rows >= 10 and vw.input_rows >= 10:
-                break
-            time.sleep(0.2)
-        assert ing.input_rows >= 10 and ing.batches >= 1
-        assert vw.input_rows >= 10 and vw.errors == 0
+
+        def boom(bdf, bid):
+            raise RuntimeError("qs_bad proc failed")
+
+        eng.create_continuous_transform(
+            "qs_bad", "SELECT k FROM qs_stream", "qs_stream", proc=boom
+        )
+        c = eng.consume_begin(
+            "ep", "s", "qs_stream", fmt="csv", delimiter=","
+        )
+        # the transform is wired last, so every other query has drained
+        # by the time its failure surfaces here
+        with pytest.raises(StreamingQueryException):
+            eng.wait_for_ingest()
+        stats = {
+            (r.kind, r.name): r for r in eng.pipeline_query_stats().collect()
+        }
+        assert set(stats) == {
+            ("ingest", "qs_stream"),
+            ("view", "qs_view"),
+            ("view", "qs_sw"),
+            ("transform", "qs_bad"),
+        }
+        for key in (("ingest", "qs_stream"), ("view", "qs_view")):
+            r = stats[key]
+            assert r.input_rows == 10 and r.batches >= 1, r
+            assert r.consumer_id == c.id and r.active, r
+            assert r.last_batch_id >= 0 and r.errors == 0, r
+            assert r.last_error is None and "addBatch" in r.duration_ms, r
+        ingest = stats[("ingest", "qs_stream")]
+        assert ingest.query == f"ingest_qs_stream_c{c.id}"
+        sw = stats[("view", "qs_sw")]
+        assert sw.watermark is not None and sw.last_batch_id >= 0, sw
+        # last_batch_id reads the checkpoint each query was started on:
+        # the rows' kind/name pairs name exactly the consumer's checkpoints
+        ckpts = os.listdir(tmp_path / "meta" / "checkpoints" / str(c.id))
+        assert sorted(ckpts) == sorted(
+            os.path.basename(eng._ckpt(c.id, kind, name))
+            for kind, name in stats
+        )
+        bad = stats[("transform", "qs_bad")]
+        assert bad.query == "transform_qs_bad" and not bad.active
+        assert bad.errors == 1 and "qs_bad proc failed" in bad.last_error
         # SQL-surface read
         n = eng.sql(
             "SELECT sum(input_rows) AS n FROM pipeline_query_stats "
             "WHERE kind = 'ingest'"
         ).collect()[0].n
-        assert n >= 10
+        assert n == 10
     finally:
         eng.consume_end_all()

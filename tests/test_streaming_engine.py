@@ -64,10 +64,12 @@ def test_readme_recipe_end_to_end(engine, spark, tmp_path):
         archived.columns
     )
 
-    # progress analog of `SELECT * FROM pipeline_kinesis.seqnums`
-    # (README.md:119-129)
-    prog = engine.progress()
-    assert any(p["num_input_rows"] for p in prog)
+    # per-query progress, as a catalog relation
+    n = engine.sql(
+        "SELECT sum(input_rows) AS n FROM pipeline_query_stats "
+        "WHERE kind = 'ingest'"
+    ).first().n
+    assert n == 100
 
 
 def test_shard_split_new_shards_consumed_without_restart(

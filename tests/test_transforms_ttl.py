@@ -149,7 +149,8 @@ def test_transform_requires_sink_or_proc(engine):
 
 def test_ttl_memory_view_hides_expired_rows(engine, spark, tmp_path):
     """Memory-sink TTL views evict at read time: keys whose ttl_column
-    lags the wall clock by more than the TTL disappear from view_table."""
+    lags the wall clock by more than the TTL disappear from view_table
+    and from sql()."""
     src_root = tmp_path / "kinesis"
     # 'old' carries an event time far in the past; 'new' is recent-ish
     _put(
@@ -170,6 +171,10 @@ def test_ttl_memory_view_hides_expired_rows(engine, spark, tmp_path):
 
     visible = {r.k for r in engine.view_table("ttl_view").collect()}
     assert visible == {"new"}
+    # sql() reads the view as view_table does
+    assert {
+        r.k for r in engine.sql("SELECT k FROM ttl_view").collect()
+    } == {"new"}
     # the raw sink still holds both groups — TTL is an eviction contract,
     # not a data-loss one
     assert {r.k for r in spark.table("ttl_view").collect()} == {"old", "new"}
