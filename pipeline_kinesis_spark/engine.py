@@ -1740,7 +1740,7 @@ class Engine:
         1/rps seconds — an ACTIVE limit on fetch rounds (and with
         ``batchsize``/``maxFilesPerTrigger`` admission, on records/s),
         not just a stored config value."""
-        rps = getattr(consumer, "rate_limit_rps", None)
+        rps = consumer.rate_limit_rps
         if not rps or rps <= 0:
             return self.trigger_interval
         return f"{max(int(1000 / rps), 1)} milliseconds"
@@ -2099,17 +2099,15 @@ class Engine:
                         c.batchsize,
                         c.parallelism,
                         c.start_position,
-                        getattr(c, "rate_limit_rps", None),
+                        c.rate_limit_rps,
                         # restart on the RESOLVED ingest path — a
                         # datasource consumer restarted in pump mode
                         # would resume from catalog seqnums that path
                         # never wrote and re-ingest from
                         # start_position (and vice versa)
-                        source=getattr(c, "source", "auto"),
-                        spool_keep_seconds=getattr(
-                            c, "spool_keep_seconds", None
-                        ),
-                        dedup=getattr(c, "dedup", False),
+                        source=c.source,
+                        spool_keep_seconds=c.spool_keep_seconds,
+                        dedup=c.dedup,
                     )
                 )
             except Exception as exc:  # noqa: BLE001 — isolate per consumer

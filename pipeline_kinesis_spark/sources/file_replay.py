@@ -36,16 +36,20 @@ from pipeline_kinesis_spark.sources.records import RECORD_SCHEMA
 
 def write_record_file(
     stream_dir: str,
-    records: list[dict],
+    records: list,
     file_name: str | None = None,
 ) -> str:
     """Append one batch file of records to a stream directory (test/demo
-    producer — the analog of `aws kinesis put-record`, README.md:39-45).
+    producer — the analog of `aws kinesis put-record`, README.md:39-45 —
+    and the Kinesis pump's spool writer).
 
-    Each record dict may carry data / sequence_number / partition_key /
-    approximate_arrival_timestamp / shard_id; missing fields are defaulted.
-    Files are written atomically (tmp + rename) so a concurrent reader
-    never sees a partial batch.
+    Each record is a dict or a RECORD_SCHEMA namedtuple row (the pump's
+    RecordRow) and may carry data / sequence_number / partition_key /
+    approximate_arrival_timestamp / shard_id; missing fields are
+    defaulted, and a missing or null arrival is stamped with the write
+    time. A datetime arrival (boto3's shape) is written as ISO-8601,
+    keeping its UTC offset. Files are written atomically (tmp + rename)
+    so a concurrent reader never sees a partial batch.
     """
     os.makedirs(stream_dir, exist_ok=True)
     n_existing = len(
@@ -54,17 +58,22 @@ def write_record_file(
     file_name = file_name or f"batch-{n_existing:08d}.jsonl"
     path = os.path.join(stream_dir, file_name)
     tmp = path + ".tmp"
+    now = datetime.utcnow().isoformat()
     with open(tmp, "w") as f:
         for i, rec in enumerate(records):
+            if isinstance(rec, tuple):
+                rec = rec._asdict()
+            arrival = rec.get("approximate_arrival_timestamp") or now
             row = {
                 "data": rec.get("data"),
                 "sequence_number": rec.get(
                     "sequence_number", f"{n_existing:08d}-{i:08d}"
                 ),
                 "partition_key": rec.get("partition_key"),
-                "approximate_arrival_timestamp": rec.get(
-                    "approximate_arrival_timestamp",
-                    datetime.utcnow().isoformat(),
+                "approximate_arrival_timestamp": (
+                    arrival.isoformat()
+                    if isinstance(arrival, datetime)
+                    else arrival
                 ),
                 "shard_id": rec.get("shard_id", "shardId-000000000000"),
             }

@@ -7,12 +7,15 @@ KinesisReplayBridge → KinesisPump). The per-shard protocol itself —
 iterator resolution, GetRecords with NextShardIterator follow, throttle
 and expired-iterator handling — is the ShardCursor in
 sources/kinesis_datasource.py, shared with the executor-parallel
-datasource path; this module adds only the pump's policy: discovery,
-parent gating, crc32 shard ownership, commit-after-spool checkpoints and
-never-give-up throttle sleeps. make_boto3_client builds real clients,
-and test_kinesis_wire.py drives genuine SigV4-signed HTTP through
-botocore against an in-process fake Kinesis REST endpoint
-(x-amz-json-1.1); against real AWS the same code runs unchanged.
+datasource path, and so is the one record conversion (record_row): the
+poller returns RECORD_SCHEMA rows and the bridge spools them as they
+are. This module adds only the pump's policy: discovery, parent gating,
+crc32 shard ownership (one loop for any worker count), commit-after-
+spool checkpoints and never-give-up throttle sleeps. make_boto3_client
+builds real clients, and test_kinesis_wire.py drives genuine
+SigV4-signed HTTP through botocore against an in-process fake Kinesis
+REST endpoint (x-amz-json-1.1); against real AWS the same code runs
+unchanged.
 
 Reference flow parity:
 - shard discovery (DescribeStream, kinesis_consumer.cpp:200-234)
@@ -21,6 +24,7 @@ Reference flow parity:
   → ShardCursor.acquire, resumed per shard from checkpoints
 - GetRecords pacing/backoff (kinesis_consumer.cpp:364-434)
   → ShardCursor.fetch; pacing by KinesisPump / the reader's ready_at
+- record accessors (kinesis_consumer.cpp:473-501) → record_row
 """
 
 from __future__ import annotations
@@ -37,11 +41,14 @@ from pyspark.sql import DataFrame, SparkSession
 # the pump path and external callers
 from pipeline_kinesis_spark.sources.kinesis_datasource import (  # noqa: F401
     BACKOFF_MAX_S,
+    RecordRow,
     ShardCursor,
     aws_error_code,
     describe_all_shards,
     iterator_type,
     make_boto3_client,
+    record_row,
+    shard_parents,
 )
 
 
@@ -84,7 +91,6 @@ class KinesisSource:
         spark: SparkSession,
         state_dir: str,
         client_factory: str | None = None,
-        max_records_per_shard_per_batch: int | None = None,
         max_partitions: int | None = None,
     ) -> DataFrame:
         """Executor-parallel streaming read via the Python DataSource
@@ -112,11 +118,6 @@ class KinesisSource:
                 str(self.max_fetch_rate_per_shard),
             )
         )
-        if max_records_per_shard_per_batch is not None:
-            reader = reader.option(
-                "maxRecordsPerShardPerBatch",
-                str(max_records_per_shard_per_batch),
-            )
         if max_partitions is not None:
             # cap tasks per micro-batch: beyond the cluster's task
             # slots, shards pack round-robin into group partitions
@@ -185,28 +186,16 @@ class KinesisShardPoller:
 
     # -- discovery ---------------------------------------------------------
 
-    def discover_shards(self) -> list[dict]:
-        """DescribeStream, following HasMoreShards pagination
-        (kinesis_consumer.cpp:200-234)."""
-        return describe_all_shards(self.client, self.source.stream_name)
-
     def refresh_shards(self) -> list[str]:
         """Register newly discovered shards (split/merge children appear
         here mid-stream — no restart needed, improves the reference's
         restart-to-reshard). Returns the new shard ids."""
         new = []
-        for sh in self.discover_shards():
+        for sh in describe_all_shards(self.client, self.source.stream_name):
             sid = sh["ShardId"]
             if sid in self.shards:
                 continue
-            parents = tuple(
-                p
-                for p in (
-                    sh.get("ParentShardId"),
-                    sh.get("AdjacentParentShardId"),
-                )
-                if p
-            )
+            parents = shard_parents(sh)
             with self._ck_lock:
                 committed = self.checkpoints.get(sid)
             # lineage before the cursor: a worker that sees the shard
@@ -231,7 +220,7 @@ class KinesisShardPoller:
             for p in self._parents.get(c.shard_id, ())
         )
 
-    def poll_shard(self, c: ShardCursor) -> list[dict]:
+    def poll_shard(self, c: ShardCursor) -> list[RecordRow]:
         """One GetRecords call for one shard; a throttled shard sleeps
         its backoff (capped at BACKOFF_MAX_S) and is retried next
         round, forever."""
@@ -240,18 +229,7 @@ class KinesisShardPoller:
         recs, fault = c.fetch(self.client, self._start, self.source.batch_size)
         if fault == "throttle":
             self.sleep(min(c.backoff_s, BACKOFF_MAX_S))
-        return [
-            {
-                "shard_id": c.shard_id,
-                "sequence_number": rec["SequenceNumber"],
-                "partition_key": rec.get("PartitionKey"),
-                "data": rec["Data"],
-                "approximate_arrival_timestamp": rec.get(
-                    "ApproximateArrivalTimestamp"
-                ),
-            }
-            for rec in recs
-        ]
+        return [record_row(rec, c.shard_id) for rec in recs]
 
     @staticmethod
     def shard_owner(shard_id: str, workers: int) -> int:
@@ -261,23 +239,24 @@ class KinesisShardPoller:
         same partitions."""
         return zlib.crc32(shard_id.encode()) % workers
 
-    def step(self, owner: int | None = None, workers: int = 1) -> list[dict]:
-        """One polling round; rediscovers shards ONCE per reshard (a
-        newly closed shard triggers one DescribeStream sweep, then is
-        marked — AWS caps DescribeStream at ~10/s account-wide, so a
-        per-round refresh would throttle forever after the first
-        reshard). Discovery throttling is absorbed like GetRecords
-        throttling: skip the sweep this round, retry next. With
-        (owner, workers) set, polls ONLY the shards assigned to this
-        worker — concurrent workers each drive a disjoint subset,
-        sharing discovery and the checkpoint map."""
+    def step(self, owner: int = 0, workers: int = 1) -> list[RecordRow]:
+        """One polling round of worker ``owner`` of ``workers``: polls
+        ONLY the shards shard_owner assigns it (the default single
+        worker owns every shard) — concurrent workers each drive a
+        disjoint subset, sharing discovery and the checkpoint map.
+        Rediscovers shards ONCE per reshard (a newly closed shard
+        triggers one DescribeStream sweep, then is marked — AWS caps
+        DescribeStream at ~10/s account-wide, so a per-round refresh
+        would throttle forever after the first reshard). Discovery
+        throttling is absorbed like GetRecords throttling: skip the
+        sweep this round, retry next."""
         if not self.shards:
             with self._disc_lock:
                 if not self.shards:
                     self.refresh_shards()
         out = []
         for sid, c in list(self.shards.items()):
-            if owner is not None and self.shard_owner(sid, workers) != owner:
+            if self.shard_owner(sid, workers) != owner:
                 continue
             out.extend(self.poll_shard(c))
         pending = [
@@ -304,7 +283,7 @@ class KinesisShardPoller:
                         self._swept.update(pending)
         return out
 
-    def commit(self, recs: list[dict]) -> None:
+    def commit(self, recs: list[RecordRow]) -> None:
         """Mark records as handed downstream — only now do their
         positions enter the durable checkpoint map (the spool write
         happened; a restart resuming AFTER these seqnums loses
@@ -313,7 +292,7 @@ class KinesisShardPoller:
             return
         with self._ck_lock:
             for r in recs:
-                self.checkpoints[r["shard_id"]] = r["sequence_number"]
+                self.checkpoints[r.shard_id] = r.sequence_number
 
     def snapshot_checkpoints(self) -> dict[str, str]:
         """Consistent copy of the committed positions (safe against
@@ -346,51 +325,30 @@ class KinesisReplayBridge:
         self.poller = poller
         self.stream_dir = stream_dir
 
-    def pump(self, owner: int | None = None, workers: int = 1) -> int:
-        """One poll round → one record file (if any records). Returns the
-        number of records landed. With (owner, workers) set, only this
-        worker's shard subset is polled. Batch files ALWAYS carry
-        collision-free unique names (never the count-based default):
-        concurrent workers append to one spool dir, and spool retention
-        (Engine.reap_spool) deletes old files — a reused name would be
-        skipped as already-seen by the file source's offset log."""
+    def pump(self, owner: int = 0, workers: int = 1) -> int:
+        """One poll round of worker ``owner`` of ``workers`` → one record
+        file (if any records). Returns the number of records landed.
+        Batch files ALWAYS carry collision-free unique names (never the
+        count-based default): concurrent workers append to one spool
+        dir, and spool retention (Engine.reap_spool) deletes old files —
+        a reused name would be skipped as already-seen by the file
+        source's offset log."""
         import uuid as _uuid
 
         from pipeline_kinesis_spark.sources.file_replay import (
             write_record_file,
         )
 
-        recs = self.poller.step(owner, workers)
-        if not recs:
+        rows = self.poller.step(owner, workers)
+        if not rows:
             return 0
-        file_name = (
-            f"batch-w{owner if owner is not None else 0}"
-            f"-{_uuid.uuid4().hex[:12]}.jsonl"
-        )
-        rows = []
-        for r in recs:
-            data = r["data"]
-            row = {
-                "data": (
-                    data.decode("utf-8", "replace")
-                    if isinstance(data, (bytes, bytearray))
-                    else data
-                ),
-                "sequence_number": r["sequence_number"],
-                "partition_key": r["partition_key"],
-                "shard_id": r["shard_id"],
-            }
-            if r.get("approximate_arrival_timestamp") is not None:
-                row["approximate_arrival_timestamp"] = r[
-                    "approximate_arrival_timestamp"
-                ]
-            rows.append(row)
+        file_name = f"batch-w{owner}-{_uuid.uuid4().hex[:12]}.jsonl"
         write_record_file(self.stream_dir, rows, file_name=file_name)
         # records are durably spooled — ONLY now may their positions
         # enter the checkpoint map a concurrent worker might persist
         # (committing at poll time would let a crash between poll and
         # spool skip records forever)
-        self.poller.commit(recs)
+        self.poller.commit(rows)
         return len(rows)
 
 
@@ -399,16 +357,18 @@ class KinesisPump(threading.Thread):
     scheduling seam the reference fills with consume_threads spread
     over at most MAX_PROCS bgworkers (kinesis_consumer.cpp:364-434,
     spawned at kinesis_consumer.cpp:328-332; worker partitioning
-    pipeline_kinesis.c:774-823). ``workers`` inner threads each poll a
-    disjoint stable subset of the shards (crc32 assignment), pacing
-    their own rounds so each shard sees at most ``rate_per_shard``
-    GetRecords/s — the reference's 4 req/s pacing
-    (kinesis_consumer.cpp:415-421). Throttle backoff sleeps happen
-    inside the poller on top of this pacing. One worker (the default)
-    is plenty for a handful of shards; the reference's own ceiling is
-    8 workers, and a deployment beyond that scale runs the executor-
-    parallel datasource path (KinesisSource.read_stream), where
-    executors fetch in parallel.
+    pipeline_kinesis.c:774-823). ``workers`` loops each poll a
+    disjoint stable subset of the shards (crc32 assignment) through
+    ``bridge.pump(owner, workers)``, pacing their own rounds so each
+    shard sees at most ``rate_per_shard`` GetRecords/s — the
+    reference's 4 req/s pacing (kinesis_consumer.cpp:415-421). Worker
+    0 runs in this thread (``run()`` called directly is synchronous);
+    workers 1..n-1 run on inner threads. Throttle backoff sleeps
+    happen inside the poller on top of this pacing. One worker (the
+    default) owns every shard and is plenty for a handful of them; the
+    reference's own ceiling is 8 workers, and a deployment beyond that
+    scale runs the executor-parallel datasource path
+    (KinesisSource.read_stream), where executors fetch in parallel.
 
     ``on_round(n_records)`` runs after every round that landed records
     — the engine persists poller checkpoints there (reference
@@ -443,9 +403,6 @@ class KinesisPump(threading.Thread):
         self._wait = wait or self._halt.wait
 
     def run(self) -> None:
-        if self.workers == 1:
-            self._loop(None)
-            return
         threads = [
             threading.Thread(
                 target=self._loop,
@@ -453,21 +410,19 @@ class KinesisPump(threading.Thread):
                 daemon=True,
                 name=f"{self.name}-w{i}",
             )
-            for i in range(self.workers)
+            for i in range(1, self.workers)
         ]
         for t in threads:
             t.start()
+        self._loop(0)
         for t in threads:
             t.join()
 
-    def _loop(self, owner: int | None) -> None:
+    def _loop(self, owner: int) -> None:
         while not self._halt.is_set():
             t0 = self._clock()
             try:
-                if owner is None:
-                    n = self.bridge.pump()
-                else:
-                    n = self.bridge.pump(owner, self.workers)
+                n = self.bridge.pump(owner, self.workers)
                 if n and self.on_round is not None:
                     self.on_round(n)
             except Exception as exc:  # noqa: BLE001 — surfaced via .error

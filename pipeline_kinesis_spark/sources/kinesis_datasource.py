@@ -5,8 +5,9 @@ reference's <=8 driver-side bgworkers (pipeline_kinesis.c:54,774-823) and
 is fine at reference scale — but every ingested byte crosses the driver.
 This module removes that ceiling: a `pyspark.sql.datasource.DataSource`
 whose stream reader plans ONE INPUT PARTITION PER LIVE SHARD (the
-reference's shard list, kinesis_consumer.cpp:200-234) and whose
-per-partition `read()` runs the GetRecords consumer protocol
+reference's shard list, kinesis_consumer.cpp:200-234; with
+``maxPartitions`` below the shard count, shards pack round-robin into
+that many groups) and whose per-partition `read()` runs the GetRecords consumer protocol
 (kinesis_consumer.cpp:364-434 parity: iterator resolution, pacing,
 NextShardIterator follow, closed-shard drain) ON EXECUTORS — GetRecords
 responses land in executor Python workers and flow straight into the
@@ -16,9 +17,11 @@ the cluster: 1000 shards on a 1000-executor cluster poll concurrently.
 This module also holds the consumer protocol core both ingest paths
 share (it must stay self-contained, so the pump imports from here, not
 the other way round): ``ShardCursor`` (iterator resolution and one
-GetRecords step), ``iterator_type`` (the start-position parser),
-``aws_error_code``, ``describe_all_shards`` and the client builders.
-The reader's ``_ShardCursor`` adds only its per-batch policy on top.
+GetRecords step), ``record_row`` (the one GetRecords record →
+RECORD_SCHEMA row conversion), ``iterator_type`` (the start-position
+parser), ``aws_error_code``, ``describe_all_shards``, ``shard_parents``
+(reshard lineage) and the client builders. The reader's
+``_ShardCursor`` adds only its per-batch policy on top.
 
 Offset & exactly-once model
 ---------------------------
@@ -70,7 +73,7 @@ import json
 import os
 import sys
 import time
-from dataclasses import dataclass
+from collections import namedtuple
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -201,6 +204,36 @@ def describe_all_shards(client, stream_name: str) -> list[dict]:
         if not desc.get("HasMoreShards"):
             return shards
         start_id = shards[-1]["ShardId"]
+
+
+def shard_parents(shard: dict) -> tuple[str, ...]:
+    """A DescribeStream shard's reshard lineage: its ParentShardId and,
+    for a merge child, its AdjacentParentShardId."""
+    parents = (shard.get("ParentShardId"), shard.get("AdjacentParentShardId"))
+    return tuple(p for p in parents if p)
+
+
+# one RECORD_SCHEMA row; a plain tuple to Spark, so the reader yields it
+# as is, while the pump reads its fields by name
+RecordRow = namedtuple("RecordRow", RECORD_SCHEMA.fieldNames())
+
+
+def record_row(rec: dict, shard_id: str) -> RecordRow:
+    """A GetRecords record of ``shard_id`` → its RECORD_SCHEMA row
+    (kinesis_consumer.cpp:473-501 accessors): data decoded as utf-8
+    with replacement, seqnum, partition key, arrival as the client
+    returns it (boto3: a tz-aware datetime) and shard id. The pump
+    spools these rows, the reader yields them."""
+    data = rec["Data"]
+    if isinstance(data, (bytes, bytearray)):
+        data = data.decode("utf-8", "replace")
+    return RecordRow(
+        data,
+        rec["SequenceNumber"],
+        rec.get("PartitionKey"),
+        rec.get("ApproximateArrivalTimestamp"),
+        shard_id,
+    )
 
 
 _ITERATOR_TYPES = {
@@ -367,8 +400,13 @@ def _split_attained_name(name: str) -> tuple[str, int]:
     return base, int(epoch)
 
 
-def _read_attained(state_dir: str) -> dict[str, dict]:
-    """Each shard's winning attained entry: its max-epoch file."""
+def _read_attained(
+    state_dir: str, shard_id: str | None = None
+) -> dict[str, dict]:
+    """Each shard's winning attained entry: its max-epoch file. With
+    ``shard_id``, only that shard's files are opened — the executor poll
+    loop reads one shard per batch, and a full-dir parse there would be
+    O(shards) opens per call, O(shards²) per micro-batch at scale."""
     d = _attained_dir(state_dir)
     out: dict[str, dict] = {}
     best: dict[str, int] = {}
@@ -377,9 +415,11 @@ def _read_attained(state_dir: str) -> dict[str, dict]:
     except OSError:
         return out
     for name in names:
-        if not name.endswith(".json"):
+        if not name.endswith(".json") or not name.startswith(shard_id or ""):
             continue
         shard, epoch = _split_attained_name(name)
+        if shard_id not in (None, shard):
+            continue  # another shard id sharing this one as a prefix
         if epoch <= best.get(shard, -1):
             continue
         try:
@@ -388,36 +428,6 @@ def _read_attained(state_dir: str) -> dict[str, dict]:
         except (OSError, ValueError):
             continue  # reaped mid-read: next round heals
         best[shard] = epoch
-    return out
-
-
-def _read_attained_shard(state_dir: str, shard_id: str) -> dict:
-    """One shard's winning attained entry (same winner rule as
-    _read_attained: max epoch) without parsing the whole directory —
-    the executor poll loop calls this once per shard per batch, and a
-    full-dir parse there is O(shards) opens per call, O(shards²) per
-    micro-batch at scale."""
-    d = _attained_dir(state_dir)
-    try:
-        names = os.listdir(d)
-    except OSError:
-        return {}
-    out: dict = {}
-    best = -1
-    for name in names:
-        if not name.endswith(".json") or not name.startswith(shard_id):
-            continue
-        shard, epoch = _split_attained_name(name)
-        if shard != shard_id:
-            continue  # another shard id sharing this one as a prefix
-        if epoch <= best:
-            continue
-        try:
-            with open(os.path.join(d, name)) as f:
-                out = json.load(f)
-        except (OSError, ValueError):
-            continue  # reaped mid-read
-        best = epoch
     return out
 
 
@@ -478,41 +488,24 @@ def _reap_attained(state_dir: str) -> None:
                 pass
 
 
-@dataclass
-class KinesisShardPartition(InputPartition):
-    """One live shard = one Spark input partition (A1/A4 parity: the
-    reference's shard→bgworker assignment becomes Spark task
-    scheduling over input partitions)."""
-
-    shard_id: str
-    start_seq: str | None  # committed position from the offset WAL
-    from_reshard: bool  # child shard: start TRIM_HORIZON, not config
-    epoch: int
-
-    def __init__(self, shard_id, start_seq, from_reshard, epoch):
-        # InputPartition.__init__ wants a single value; bypass it
-        self.shard_id = shard_id
-        self.start_seq = start_seq
-        self.from_reshard = from_reshard
-        self.epoch = epoch
-
-
 class KinesisShardGroupPartition(InputPartition):
-    """Several shards polled by ONE task, interleaved. When the live
-    shard count exceeds the cluster's task slots, one-task-per-shard
-    stops scaling: every micro-batch pays multiple scheduling waves
-    (128 shards on 32 cores = 4 waves per 100 ms trigger). Packing
-    shards round-robin into at most `maxPartitions` tasks keeps each
-    batch a single wave — the same move as the Kafka source's
-    partition packing. The task round-robins GetRecords calls ACROSS
-    its shards (one call per ready shard per pass) because the
-    reference's 4 req/s pacing is PER SHARD (pipeline_kinesis.c
-    consumer pacing): while shard A's 250 ms window cools, shards
-    B/C/D poll — a serial shard-by-shard drain would stack the
-    pacing gaps and make a 4-shard group ~4x slower than one shard
-    in catch-up. Per-shard semantics are untouched: pacing, per-batch
-    record caps, and the attained-position replay pins all live
-    inside the per-shard cursor."""
+    """The shards ONE task polls in a micro-batch — one Spark input
+    partition (A1/A4 parity: the reference's shard→bgworker assignment
+    becomes Spark task scheduling over input partitions). By default
+    each group holds one shard. When the live shard count exceeds the
+    cluster's task slots, one-task-per-shard stops scaling: every
+    micro-batch pays multiple scheduling waves (128 shards on 32 cores
+    = 4 waves per 100 ms trigger). Packing shards round-robin into at
+    most `maxPartitions` groups keeps each batch a single wave — the
+    same move as the Kafka source's partition packing. The task
+    round-robins GetRecords calls ACROSS its shards (one call per ready
+    shard per pass) because the reference's 4 req/s pacing is PER
+    SHARD (pipeline_kinesis.c consumer pacing): while shard A's 250 ms
+    window cools, shards B/C/D poll — a serial shard-by-shard drain
+    would stack the pacing gaps and make a 4-shard group ~4x slower
+    than one shard in catch-up. Per-shard semantics are untouched:
+    pacing, per-batch record caps, and the attained-position replay
+    pins all live inside the per-shard cursor."""
 
     shards: list  # [(shard_id, start_seq, from_reshard), ...]
     epoch: int
@@ -557,9 +550,9 @@ class KinesisStreamReader(DataSourceStreamReader):
         self.rate = float(
             opts.get("maxfetchratepershard", DEFAULT_RATE_PER_SHARD)
         )
-        # 0 = one partition per shard (exact A1/A4 parity); > 0 caps
-        # the partitions per micro-batch, packing shards round-robin
-        # into group partitions (KinesisShardGroupPartition)
+        # 0 = one task per shard (exact A1/A4 parity); > 0 caps the
+        # tasks per micro-batch, packing shards round-robin into that
+        # many KinesisShardGroupPartitions
         self.max_partitions = int(opts.get("maxpartitions", 0))
         self._epoch = 0
 
@@ -657,78 +650,44 @@ class KinesisStreamReader(DataSourceStreamReader):
                 and st.get("seq") == starts.get(sid)
             )
 
-        parts: list[KinesisShardPartition] = []
+        live = []  # (shard_id, start_seq, from_reshard)
         for sid, sh in meta.items():
             if drained(sid):
                 continue  # closed shard fully consumed: nothing left
-            parents = [
-                p
-                for p in (
-                    sh.get("ParentShardId"),
-                    sh.get("AdjacentParentShardId"),
-                )
-                if p and p in meta
-            ]
+            parents = [p for p in shard_parents(sh) if p in meta]
             if any(not drained(p) for p in parents):
                 # reshard ordering: children wait for every parent to
                 # drain (records keep per-key order across the split)
                 continue
-            parts.append(
-                KinesisShardPartition(
-                    shard_id=sid,
-                    start_seq=starts.get(sid),
-                    from_reshard=bool(parents),
-                    epoch=epoch,
-                )
-            )
-        if self.max_partitions and len(parts) > self.max_partitions:
-            # more shards than allowed tasks: pack round-robin over a
-            # stable (sorted) shard order so a shard maps to the same
-            # group index while the live set is unchanged — iterator
-            # caching in the attained files stays warm per shard
-            groups: list[list] = [[] for _ in range(self.max_partitions)]
-            for i, p in enumerate(
-                sorted(parts, key=lambda p: p.shard_id)
-            ):
-                groups[i % self.max_partitions].append(
-                    (p.shard_id, p.start_seq, p.from_reshard)
-                )
-            return [
-                KinesisShardGroupPartition(g, epoch)
-                for g in groups
-                if g
-            ]
-        return parts
+            live.append((sid, starts.get(sid), bool(parents)))
+        # pack round-robin over a stable (sorted) shard order into at
+        # most maxPartitions groups (0: one group per shard), so a
+        # shard maps to the same group index while the live set is
+        # unchanged — iterator caching in the attained files stays
+        # warm per shard
+        n = min(self.max_partitions or len(live), len(live))
+        groups: list[list] = [[] for _ in range(n)]
+        for i, shard in enumerate(sorted(live)):
+            groups[i % n].append(shard)
+        return [KinesisShardGroupPartition(g, epoch) for g in groups]
 
     # -- executor-side read ------------------------------------------------
 
     def read(self, partition):
-        """One micro-batch's poll work for one TASK, on an executor:
-        a single shard (KinesisShardPartition) or a packed group
-        (KinesisShardGroupPartition) with one shared client. A group
-        round-robins ONE GetRecords call per ready shard per pass, so
-        per-shard pacing windows overlap across the group's shards
-        instead of stacking serially (see KinesisShardGroupPartition).
-        Emits RECORD_SCHEMA tuples; per-shard order is preserved
-        (cross-shard interleaving carries no ordering contract)."""
+        """One micro-batch's poll work for one TASK, on an executor: the
+        partition's shards with one shared client. It round-robins ONE
+        GetRecords call per ready shard per pass, so per-shard pacing
+        windows overlap across a group's shards instead of stacking
+        serially (see KinesisShardGroupPartition). Yields RecordRows;
+        per-shard order is preserved (cross-shard interleaving carries
+        no ordering contract)."""
         client = _make_client(self.opts)
-        if isinstance(partition, KinesisShardGroupPartition):
-            shards = [
-                (sid, start_seq, fr, partition.epoch)
-                for sid, start_seq, fr in partition.shards
-            ]
-        else:
-            shards = [
-                (
-                    partition.shard_id,
-                    partition.start_seq,
-                    partition.from_reshard,
-                    partition.epoch,
-                )
-            ]
         pending = [
             c
-            for c in (_ShardCursor(self, *s) for s in shards)
+            for c in (
+                _ShardCursor(self, *shard, partition.epoch)
+                for shard in partition.shards
+            )
             if not c.done
         ]
         while pending:
@@ -768,7 +727,7 @@ class _ShardCursor(ShardCursor):
     """
 
     def __init__(self, reader, sid, start_seq, from_reshard, epoch):
-        attained = _read_attained_shard(reader.state_dir, sid)
+        attained = _read_attained(reader.state_dir, sid).get(sid, {})
         super().__init__(
             reader.stream,
             sid,
@@ -815,8 +774,8 @@ class _ShardCursor(ShardCursor):
                 self.skip_write = True
 
     def step(self, client):
-        """At most one GetRecords call; yields this call's RECORD_SCHEMA
-        tuples. Start-to-start pacing: ready_at advances by min_gap per
+        """At most one GetRecords call; yields this call's RecordRows.
+        Start-to-start pacing: ready_at advances by min_gap per
         call, matching the old sleep-before-call spacing."""
         reader = self.reader
         self.ready_at = time.monotonic() + self.min_gap
@@ -847,16 +806,7 @@ class _ShardCursor(ShardCursor):
                 self.done = True
         self.emitted += len(recs)
         for rec in recs:
-            data = rec["Data"]
-            yield (
-                data.decode("utf-8", "replace")
-                if isinstance(data, (bytes, bytearray))
-                else data,
-                rec["SequenceNumber"],
-                rec.get("PartitionKey"),
-                rec.get("ApproximateArrivalTimestamp"),
-                self.shard_id,
-            )
+            yield record_row(rec, self.shard_id)
         if self.done:
             return
         if self.closed:
@@ -906,6 +856,8 @@ class KinesisDataSource(DataSource):
       maxRecordsPerFetch (GetRecords limit, default 1000),
       maxRecordsPerShardPerBatch (default 10000),
       maxFetchRatePerShard (req/s, default 4 — reference pacing),
+      maxPartitions (tasks per micro-batch; default 0 = one task per
+      shard, else shards pack round-robin into at most this many),
       clientFactory ("module:attr" test seam returning a boto3-shaped
       client).
     """

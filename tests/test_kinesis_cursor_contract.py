@@ -2,8 +2,10 @@
 (KinesisShardPoller.step) and the executor reader
 (KinesisStreamReader.read) both drive the shared ShardCursor. Each
 scenario below runs the same scripted FakeKinesisClient through both
-paths and asserts they deliver the same per-shard record sequences and
-resolve the same GetShardIterator types per shard. No Spark session.
+paths and asserts they deliver the same per-shard sequences of whole
+RECORD_SCHEMA rows (data, seqnum, partition key, arrival, shard id —
+one record_row conversion) and resolve the same GetShardIterator types
+per shard. No Spark session.
 
 A second check guards the self-containment contract of
 sources/kinesis_datasource.py: its functions run in Spark's planner
@@ -23,6 +25,7 @@ from pipeline_kinesis_spark.sources.fake_kinesis import FakeKinesisClient
 from pipeline_kinesis_spark.sources.kinesis import KinesisSource
 
 from tests.test_kinesis_datasource import _reader, _run_batch
+from tests.test_kinesis_protocol import DatetimeArrivalFake, arrival_of
 
 
 class _RecordingFake(FakeKinesisClient):
@@ -40,6 +43,10 @@ class _RecordingFake(FakeKinesisClient):
         )
 
 
+class _RecordingDatetimeFake(_RecordingFake, DatetimeArrivalFake):
+    """_RecordingFake whose records carry boto3's datetime arrivals."""
+
+
 def _recs(prefix, n):
     return [f"{prefix}{i}".encode() for i in range(n)]
 
@@ -54,7 +61,7 @@ def _split(fake):
 
 
 # name → (initial shards, start position, GetRecords limit,
-#         before-first-drain hook, between-drains hook)
+#         before-first-drain hook, between-drains hook[, fake class])
 SCENARIOS = {
     "trim_horizon_multi_page": (
         {"shardId-000": _recs("a", 5), "shardId-001": _recs("b", 3)},
@@ -91,11 +98,19 @@ SCENARIOS = {
         {"shardId-000": _recs("p", 3)},
         "latest", 1, _split, None,
     ),
+    # boto3's record shape: tz-aware datetime arrivals, which the wire
+    # fake never sends
+    "datetime_arrivals": (
+        {"shardId-000": _recs("a", 3), "shardId-001": _recs("b", 2)},
+        "trim_horizon", 2, None,
+        lambda f: f.append("shardId-000", b"late"),
+        _RecordingDatetimeFake,
+    ),
 }
 
 
-def _run_pump(shards, start, limit, before, between):
-    fake = _RecordingFake(shards)
+def _run_pump(shards, start, limit, before, between, fake_cls=_RecordingFake):
+    fake = fake_cls(shards)
     if before:
         before(fake)
     slept: list[float] = []
@@ -108,14 +123,14 @@ def _run_pump(shards, start, limit, before, between):
         if hook:
             hook(fake)
         for _ in range(12):
-            out.extend(
-                (r["shard_id"], r["data"].decode()) for r in poller.step()
-            )
+            out.extend(poller.step())
     return out, fake.acquired
 
 
-def _run_reader(tmp_path, shards, start, limit, before, between):
-    fake = _RecordingFake(shards)
+def _run_reader(
+    tmp_path, shards, start, limit, before, between, fake_cls=_RecordingFake
+):
+    fake = fake_cls(shards)
     if before:
         before(fake)
     r = _reader(tmp_path, fake, start=start, maxRecordsPerFetch=str(limit))
@@ -125,29 +140,34 @@ def _run_reader(tmp_path, shards, start, limit, before, between):
             hook(fake)
         for _ in range(3):
             offset, rows = _run_batch(r, offset)
-            out.extend((t[4], t[0]) for t in rows)
+            out.extend(rows)
     return out, fake.acquired
 
 
 def _per_shard(rows):
-    out: dict[str, list[str]] = {}
-    for sid, data in rows:
-        out.setdefault(sid, []).append(data)
+    """shard id → its whole rows, in delivery order."""
+    out: dict[str, list[tuple]] = {}
+    for row in rows:
+        out.setdefault(row.shard_id, []).append(row)
     return out
+
+
+def _pairs(rows):
+    return [(r.shard_id, r.data) for r in rows]
 
 
 @pytest.mark.parametrize("name", sorted(SCENARIOS))
 def test_pump_and_reader_agree(name, tmp_path):
-    shards, start, limit, before, between = SCENARIOS[name]
-    pump_rows, pump_acq = _run_pump(shards, start, limit, before, between)
-    ds_rows, ds_acq = _run_reader(
-        tmp_path, shards, start, limit, before, between
-    )
-    assert _per_shard(pump_rows) == _per_shard(ds_rows)
+    pump_rows, pump_acq = _run_pump(*SCENARIOS[name])
+    ds_rows, ds_acq = _run_reader(tmp_path, *SCENARIOS[name])
+    assert pump_rows and _per_shard(pump_rows) == _per_shard(ds_rows)
     assert sorted(pump_acq) == sorted(ds_acq)
     if name == "split_child_gated":
         for rows in (pump_rows, ds_rows):
-            assert _per_shard(rows)["shardId-000"] == ["p0", "p1", "p2"]
+            assert [r.data for r in _per_shard(rows)["shardId-000"]] == [
+                "p0", "p1", "p2",
+            ]
+            rows = _pairs(rows)
             # every parent record precedes every child record
             last_parent = max(
                 i for i, (sid, _) in enumerate(rows) if sid == "shardId-000"
@@ -174,17 +194,23 @@ def test_scenarios_exercise_what_they_name():
     ]
     rows, acq = _run_pump(*SCENARIOS["latest"])
     assert acq == [("shardId-000", "LATEST")]
-    assert rows == [("shardId-000", "new0"), ("shardId-000", "new1")]
+    assert _pairs(rows) == [("shardId-000", "new0"), ("shardId-000", "new1")]
     rows, acq = _run_pump(*SCENARIOS["split_under_latest"])
     assert sorted(acq) == [
         ("shardId-000", "LATEST"),
         ("shardId-001", "TRIM_HORIZON"),
         ("shardId-002", "TRIM_HORIZON"),
     ]
-    assert sorted(d for _, d in rows) == ["c1a", "c1b", "c2a"]
+    assert sorted(r.data for r in rows) == ["c1a", "c1b", "c2a"]
     rows, acq = _run_pump(*SCENARIOS["after_sequence_number"])
     assert acq == [("shardId-000", "AFTER_SEQUENCE_NUMBER")]
-    assert [d for _, d in rows] == ["a2", "a3"]
+    assert [r.data for r in rows] == ["a2", "a3"]
+    rows, _ = _run_pump(*SCENARIOS["datetime_arrivals"])
+    assert len(rows) == 6
+    assert all(
+        r.approximate_arrival_timestamp == arrival_of(r.sequence_number)
+        for r in rows
+    )
 
 
 def _package_imports(fn_node):

@@ -57,6 +57,11 @@ def _reader(tmp_path, fake, start="trim_horizon", **opts):
     return KinesisStreamReader(base)
 
 
+def _by_shard(parts):
+    """shard id → (start_seq, from_reshard) over planned partitions."""
+    return {sid: (seq, fr) for p in parts for sid, seq, fr in p.shards}
+
+
 def _run_batch(r, start):
     """Plan and read one micro-batch; returns (end_offset, rows)."""
     end = r.latestOffset()
@@ -75,11 +80,13 @@ class TestProtocol:
         o1, rows = _run_batch(r, o0)
         assert {t[4] for t in rows} == {"shardId-000", "shardId-001"}
         o2 = r.latestOffset()
-        parts = {p.shard_id: p for p in r.partitions(o1, o2)}
-        assert set(parts) == {"shardId-000", "shardId-001", "shardId-002"}
+        parts = r.partitions(o1, o2)
+        assert len(parts) == 3 and all(len(p.shards) == 1 for p in parts)
+        starts = _by_shard(parts)
+        assert set(starts) == {"shardId-000", "shardId-001", "shardId-002"}
         # starts are the COMMITTED positions frozen into the offset
-        assert parts["shardId-000"].start_seq == "shardId-000-0"
-        assert parts["shardId-002"].start_seq is None
+        assert starts["shardId-000"][0] == "shardId-000-0"
+        assert starts["shardId-002"][0] is None
 
     def test_caught_up_batches_are_empty_then_appends_arrive(self, tmp_path):
         fake = FakeKinesisClient({"shardId-000": [b"x", b"y"]})
@@ -118,16 +125,16 @@ class TestProtocol:
         # parent not yet observed-closed: children not planned
         o2 = r.latestOffset()
         parts = r.partitions(o1, o2)
-        assert [p.shard_id for p in parts] == ["shardId-000"]
+        assert list(_by_shard(parts)) == ["shardId-000"]
         rows = [t for p in parts for t in r.read(p)]
         assert rows == []  # drain round marks the parent closed
         r.commit(o2)
         # children now planned, from TRIM_HORIZON; drained parent skipped
         o3 = r.latestOffset()
-        parts = {p.shard_id: p for p in r.partitions(o2, o3)}
-        assert set(parts) == {"shardId-001", "shardId-002"}
-        assert all(p.from_reshard for p in parts.values())
-        rows = [t for p in parts.values() for t in r.read(p)]
+        parts = r.partitions(o2, o3)
+        assert set(_by_shard(parts)) == {"shardId-001", "shardId-002"}
+        assert all(fr for _, fr in _by_shard(parts).values())
+        rows = [t for p in parts for t in r.read(p)]
         assert [t[0] for t in rows] == ["c1"]
 
     def test_replay_pinned_to_first_attempt_reach(self, tmp_path):
@@ -716,7 +723,7 @@ class TestShardGroupPartitions:
         r = _reader(tmp_path, fake, maxPartitions="8")
         parts = r.partitions(r.initialOffset(), r.latestOffset())
         assert len(parts) == 4
-        assert all(hasattr(p, "shard_id") for p in parts)
+        assert all(len(p.shards) == 1 for p in parts)
 
     def test_replay_determinism_through_groups(self, tmp_path):
         """The attained (epoch, start) replay pin lives inside the

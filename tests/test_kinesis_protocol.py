@@ -11,6 +11,10 @@ its own suite, test_kinesis_wire.py, which DOES drive real boto3 HTTP).
 
 from __future__ import annotations
 
+import json
+import os
+from datetime import datetime, timedelta, timezone
+
 import pytest
 
 from pipeline_kinesis_spark.sources.kinesis import (
@@ -28,6 +32,27 @@ from pipeline_kinesis_spark.sources.fake_kinesis import (  # noqa: F401
     FakeKinesisClient,
     ProvisionedThroughputExceededException,
 )
+
+
+ARRIVAL0 = datetime(2026, 1, 1, 12, 30, 45, 123000, tzinfo=timezone.utc)
+
+
+def arrival_of(seq: str) -> datetime:
+    """The arrival DatetimeArrivalFake gives the record ``seq``."""
+    return ARRIVAL0 + timedelta(seconds=int(seq.rsplit("-", 1)[1]))
+
+
+class DatetimeArrivalFake(FakeKinesisClient):
+    """boto3's record shape: every record carries a tz-aware datetime
+    ApproximateArrivalTimestamp (the wire fake sends none)."""
+
+    def get_records(self, ShardIterator, Limit):
+        resp = super().get_records(ShardIterator, Limit)
+        for rec in resp["Records"]:
+            rec["ApproximateArrivalTimestamp"] = arrival_of(
+                rec["SequenceNumber"]
+            )
+        return resp
 
 
 def _src(start="trim_horizon", **kw):
@@ -49,12 +74,12 @@ def test_trim_horizon_reads_everything_and_follows_iterator():
     )
     p = _src(batch_size=2).poller(fake)  # batch 2 forces iterator follow
     got = _drain(p, rounds=3)
-    assert [r["data"] for r in got if r["shard_id"] == "shardId-000"] == [
-        b"a",
-        b"b",
-        b"c",
+    assert [r.data for r in got if r.shard_id == "shardId-000"] == [
+        "a",
+        "b",
+        "c",
     ]
-    assert [r["data"] for r in got if r["shard_id"] == "shardId-001"] == [b"d"]
+    assert [r.data for r in got if r.shard_id == "shardId-001"] == ["d"]
     # NextShardIterator was followed, not re-acquired: one GetShardIterator
     # per shard despite multiple GetRecords pages
     assert fake.calls.count("get_shard_iterator:TRIM_HORIZON") == 2
@@ -72,20 +97,20 @@ def test_latest_skips_backlog_then_sees_new_records():
     assert _drain(p, rounds=2) == []
     fake.append("shardId-000", b"fresh")
     got = _drain(p, rounds=2)
-    assert [r["data"] for r in got] == [b"fresh"]
+    assert [r.data for r in got] == ["fresh"]
 
 
 def test_after_sequence_number_and_checkpoint_resume():
     fake = FakeKinesisClient({"shardId-000": [b"a", b"b", b"c", b"d"]})
     # explicit start position
     p = _src(start="after_sequence_number:shardId-000-1").poller(fake)
-    assert [r["data"] for r in _drain(p, 2)] == [b"c", b"d"]
+    assert [r.data for r in _drain(p, 2)] == ["c", "d"]
     # checkpoint beats configured start (resume semantics)
     fake2 = FakeKinesisClient({"shardId-000": [b"a", b"b", b"c", b"d"]})
     p2 = _src(start="trim_horizon").poller(
         fake2, checkpoints={"shardId-000": "shardId-000-2"}
     )
-    assert [r["data"] for r in _drain(p2, 2)] == [b"d"]
+    assert [r.data for r in _drain(p2, 2)] == ["d"]
     assert "get_shard_iterator:AFTER_SEQUENCE_NUMBER" in fake2.calls
 
 
@@ -97,7 +122,7 @@ def test_throttle_backoff_is_linear_and_capped_and_resets():
     got = _drain(p, rounds=9)
     # linear 1,2,3,4 then capped at 5 (kinesis_consumer.cpp:395-430)
     assert slept == [1.0, 2.0, 3.0, 4.0, 5.0, 5.0, 5.0]
-    assert [r["data"] for r in got] == [b"a"]
+    assert [r.data for r in got] == ["a"]
     # a successful fetch resets the backoff ramp
     st = p.shards["shardId-000"]
     assert st.backoff_s == 0.0
@@ -113,8 +138,8 @@ def test_expired_iterator_reacquires_without_loss_or_dup():
     first = p.step()  # reads 'a'
     fake.expire_next = 1
     rest = _drain(p, rounds=4)
-    assert [r["data"] for r in first + rest] == [b"a", b"b", b"c"]
-    seqs = [r["sequence_number"] for r in first + rest]
+    assert [r.data for r in first + rest] == ["a", "b", "c"]
+    seqs = [r.sequence_number for r in first + rest]
     assert len(seqs) == len(set(seqs))  # no duplicates after re-acquire
     # re-acquired AFTER the checkpointed seq, not from the stream start
     assert fake.calls.count("get_shard_iterator:TRIM_HORIZON") == 1
@@ -130,15 +155,15 @@ def test_resharding_children_after_parent_drains():
     fake.append("shardId-001", b"c1")
     fake.append("shardId-002", b"c2")
     got = _drain(p, rounds=6)
-    datas = [r["data"] for r in got]
-    assert datas[0] == b"p2"  # parent drains first
-    assert set(datas[1:]) == {b"c1", b"c2"}
+    datas = [r.data for r in got]
+    assert datas[0] == "p2"  # parent drains first
+    assert set(datas[1:]) == {"c1", "c2"}
     # children started at TRIM_HORIZON (no gap), parent marked closed
     assert p.shards["shardId-000"].closed
     assert not p.shards["shardId-001"].closed
     # child records were NOT consumed before the parent closed
-    parent_close_idx = datas.index(b"p2")
-    assert all(d in (b"c1", b"c2") for d in datas[parent_close_idx + 1 :])
+    parent_close_idx = datas.index("p2")
+    assert all(d in ("c1", "c2") for d in datas[parent_close_idx + 1 :])
 
 
 def test_describe_stream_pagination():
@@ -265,7 +290,7 @@ def test_discovery_throttle_is_absorbed_not_fatal():
 
     fake.describe_stream = flaky
     got = _drain(p, rounds=5)  # throttled sweeps absorbed, then child found
-    assert [r["data"] for r in got] == [b"c1"]
+    assert [r.data for r in got] == ["c1"]
 
 
 def test_commit_after_spool_checkpoint_discipline():
@@ -279,4 +304,41 @@ def test_commit_after_spool_checkpoint_discipline():
     # a restarted poller from the committed map resumes after 'a'
     fake2 = FakeKinesisClient({"shardId-000": [b"a", b"b", b"c"]})
     p2 = _src(batch_size=2).poller(fake2, checkpoints=p.snapshot_checkpoints())
-    assert [r["data"] for r in _drain(p2, 2)] == [b"b", b"c"]
+    assert [r.data for r in _drain(p2, 2)] == ["b", "c"]
+
+
+def test_bridge_spools_datetime_arrivals_as_iso(tmp_path):
+    """Against real Kinesis boto3 returns each arrival as a tz-aware
+    datetime: the bridge must spool it as ISO-8601 with its offset (a
+    raw datetime is not JSON-serializable), decode the data once, and
+    commit the spooled positions."""
+    from pipeline_kinesis_spark.sources.kinesis import KinesisReplayBridge
+
+    fake = DatetimeArrivalFake(
+        {"shardId-000": [b"a,1", b"\xffb,2"], "shardId-001": [b"c,3"]}
+    )
+    spool = tmp_path / "spool"
+    bridge = KinesisReplayBridge(_src().poller(fake), str(spool))
+    assert bridge.pump() == 3
+    (name,) = os.listdir(spool)
+    with open(spool / name) as f:
+        rows = [json.loads(line) for line in f]
+    assert [
+        (r["shard_id"], r["sequence_number"], r["partition_key"], r["data"])
+        for r in rows
+    ] == [
+        ("shardId-000", "shardId-000-0", "pk0", "a,1"),
+        ("shardId-000", "shardId-000-1", "pk1", "\ufffdb,2"),
+        ("shardId-001", "shardId-001-0", "pk0", "c,3"),
+    ]
+    assert rows[1]["approximate_arrival_timestamp"] == (
+        "2026-01-01T12:30:46.123000+00:00"
+    )
+    for r in rows:
+        assert datetime.fromisoformat(
+            r["approximate_arrival_timestamp"]
+        ) == arrival_of(r["sequence_number"])
+    assert bridge.poller.snapshot_checkpoints() == {
+        "shardId-000": "shardId-000-1",
+        "shardId-001": "shardId-001-0",
+    }

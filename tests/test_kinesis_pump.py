@@ -8,11 +8,18 @@ pipeline_kinesis.c:543-579). No manual pump() calls anywhere here."""
 from __future__ import annotations
 
 import time
+from datetime import datetime, timedelta, timezone
+
+from pyspark.sql import functions as F
 
 from pipeline_kinesis_spark.engine import Engine
 from pipeline_kinesis_spark.sources.kinesis import KinesisPump
 
-from tests.test_kinesis_protocol import FakeKinesisClient
+from tests.test_kinesis_protocol import (
+    DatetimeArrivalFake,
+    FakeKinesisClient,
+    arrival_of,
+)
 
 
 def _wait_until(cond, timeout=60.0):
@@ -31,8 +38,9 @@ def test_consume_begin_runs_pump_reshards_and_resumes(spark, tmp_path):
     """The verdict's done-criteria e2e: consume_begin against the fake
     client ingests unattended, a mid-stream reshard drains through, and
     a full engine restart resumes from catalog seqnums with no
-    duplicates."""
-    fake = FakeKinesisClient(
+    duplicates. The records carry boto3's tz-aware datetime arrivals,
+    and the archive keeps each record's arrival instant."""
+    fake = DatetimeArrivalFake(
         {"shardId-000": [b"a,1", b"a,2"], "shardId-001": [b"b,5"]}
     )
     meta = str(tmp_path / "meta")
@@ -91,9 +99,16 @@ def test_consume_begin_runs_pump_reshards_and_resumes(spark, tmp_path):
     }
     assert rows == {"a": (2, 3), "b": (1, 5), "c": (2, 20)}
     # exactly-once across the restart: archive holds 5 records, no dups
-    seq_rows = eng2.stream_table("k_in").select("sequence_number").collect()
+    seq_rows = eng2.stream_table("k_in").select(
+        "sequence_number", F.unix_micros("arrival_timestamp").alias("us")
+    ).collect()
     seqs_seen = [r.sequence_number for r in seq_rows]
     assert len(seqs_seen) == 5 and len(set(seqs_seen)) == 5
+    epoch = datetime(1970, 1, 1, tzinfo=timezone.utc)
+    assert {r.sequence_number: r.us for r in seq_rows} == {
+        seq: (arrival_of(seq) - epoch) // timedelta(microseconds=1)
+        for seq in seqs_seen
+    }
     # the poller resumed AFTER the checkpointed seqnums, not from the
     # stream start
     assert "get_shard_iterator:AFTER_SEQUENCE_NUMBER" in fake.calls
@@ -161,7 +176,7 @@ def test_pump_pacing_matches_reference_rate():
         def __init__(self):
             self.n = 0
 
-        def pump(self):
+        def pump(self, owner, workers):
             self.n += 1
             return 1
 
@@ -195,7 +210,7 @@ def test_make_boto3_client_constructs_when_available():
 
 def test_pump_on_round_failure_is_terminal():
     class OneShotBridge:
-        def pump(self):
+        def pump(self, owner, workers):
             return 2
 
     def bad_persist(n):
