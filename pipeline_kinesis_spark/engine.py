@@ -10,11 +10,12 @@ kinesis_consume_begin_sr            → consume_begin
 kinesis_consume_end_sr / _all       → consume_end / consume_end_all
 SELECT * FROM seqnums (progress)    → seqnums()
 
-consume_begin wires: record source → COPY-parity parse → one ingest
-query (exactly-once parquet archive of the stream relation plus the
-dead-letter quarantine), then every active continuous view and transform
-whose chain roots at the relation, through _wire_view/_wire_transform —
-the one wiring path CREATE and ACTIVATE also take on a running consumer,
+consume_begin wires: record source → one ingest query (COPY-parity
+parse → exactly-once parquet archive of the stream relation plus the
+dead-letter quarantine; on the datasource path it also lands the spool
+the views read), then every active continuous view and transform whose
+chain roots at the relation, through _wire_view/_wire_transform — the
+one wiring path CREATE and ACTIVATE also take on a running consumer,
 so a catalog gets the same standing queries whenever they were created.
 Process/thread plumbing from the reference (bgworkers, shard threads,
 bounded queues — pipeline_kinesis.c:774-823, conc_queue.hpp) collapses
@@ -99,7 +100,7 @@ def spool_admission_cap(n_live_shards: int) -> int:
     (``batchsize`` per shard per fetch, ``rate_limit_rps`` fetches per
     second), so this cap is only a backstop and must never throttle the
     drain below the landing rate: each micro-batch admits everything
-    spooled since the last one. A datasource landing batch publishes up
+    spooled since the last one. A datasource ingest batch publishes up
     to one file per live shard (2x headroom for resharding splits
     between restarts); a pump round publishes one file per polling
     worker (at most MAX_PROCS), which the floor of 64 covers."""
@@ -110,9 +111,8 @@ def spool_admission_cap(n_live_shards: int) -> int:
 # source of truth for every parser that recognizes it
 _OSREL_RE = re.compile(r"^(\w+)_osrel$")
 
-# a consumer's own standing queries: ingest_<relation>_c<id> and, on the
-# datasource path, kds_landing_<relation>_c<id>
-_CONSUMER_QUERY_RE = re.compile(r"^(ingest|kds_landing)_(.+)_c\d+$")
+# a consumer's own standing query: ingest_<relation>_c<id>
+_INGEST_QUERY_RE = re.compile(r"^ingest_(.+)_c\d+$")
 
 # Default output-stream retention: OSREL_KEEP_DEFAULT (imported above,
 # 1000 batches). Unbounded delta history is wrong as a default at
@@ -207,6 +207,24 @@ def _published_through(dest: str, tag: str) -> int:
         return -1
 
 
+def _dedup(records: DataFrame, dedup: bool | str) -> DataFrame:
+    """B26: the wire is at-least-once (a failed copy retries the WHOLE
+    batch, pipeline_kinesis.c:744-758). With ``dedup`` on, collapse
+    redeliveries of one (shard_id, sequence_number) BEFORE parse, first
+    delivery wins, so the archive, the dead letters and every view see
+    a record once. A string is the redelivery horizon: the watermark
+    reaps older keys (unbounded dropDuplicates state on a 100 TB stream
+    is a slow leak); records must then carry arrival timestamps."""
+    if not dedup:
+        return records
+    keys = ["shard_id", "sequence_number"]
+    if isinstance(dedup, str):
+        return records.withWatermark(
+            "approximate_arrival_timestamp", dedup
+        ).dropDuplicatesWithinWatermark(keys)
+    return records.dropDuplicates(keys)
+
+
 def _committed_batch_id(ckpt: str) -> int:
     """The last batch id a Structured Streaming checkpoint's commit log
     holds (-1: none yet)."""
@@ -226,7 +244,8 @@ def _publish_batch(
     tag: str, bid: int, staged: list[tuple[str, str]], ext: str
 ) -> None:
     """Publish one micro-batch of writer `tag` (one standing query: a
-    spool landing, an archive plus its dead letters, a transform sink).
+    datasource spool landing, an archive plus its dead letters, a
+    transform sink).
     For each (tmp, dest) pair, replace this batch id's files in `dest`
     with `tmp`'s non-empty part files, named
     `{tag}-b{bid:010d}-{i:04d}{ext}` (a replay that writes fewer files
@@ -303,7 +322,7 @@ class Engine:
         self.spark = spark
         ship_package(spark)
         # Per-engine shuffle width for the STANDING queries this engine
-        # starts (views/transforms/landing sinks). Structured Streaming
+        # starts (ingest/views/transforms). Structured Streaming
         # snapshots spark.sql.shuffle.partitions into each query's
         # checkpoint at start, and every stateful operator then pays one
         # state-store partition (plus task) per shuffle partition per
@@ -380,6 +399,7 @@ class Engine:
     def remove_endpoint(self, name: str) -> None:
         self.catalog.remove_endpoint(name)
         self._kinesis_clients.pop(name, None)
+        self._kinesis_client_factories.pop(name, None)
 
     def register_kinesis_client(self, endpoint: str, client) -> None:
         """Bind a boto3-shaped Kinesis client to an endpoint: any object
@@ -749,10 +769,8 @@ class Engine:
         immediately before writeStream.start(). Given the query's
         _query_kind pair (``kind``, ``entity``), this is the one naming
         rule of every start site and pipeline_query_stats."""
-        if entity:
-            kind = {"ingest": "ingest", "landing": "kds_landing"}.get(
-                kind, f"{kind}_{entity}"
-            )
+        if entity and kind != "ingest":
+            kind = f"{kind}_{entity}"
         return os.path.join(
             self.metadata_dir, "checkpoints", str(cid), kind
         )
@@ -866,9 +884,10 @@ class Engine:
         it caps the files one micro-batch admits (maxFilesPerTrigger).
 
         ``spool_keep_seconds`` bounds the raw kinesis spool (the record
-        files the pump/landing writes and the ingest pipeline consumes):
-        files older than this are auto-reaped during ingestion. None
-        (default) keeps them forever — the audit-everything behavior;
+        files the pump or the datasource ingest query writes and the
+        standing queries consume): files older than this are
+        auto-reaped during ingestion. None (default) keeps them
+        forever — the audit-everything behavior;
         at scale pass a retention comfortably above the slowest
         standing query's lag (see reap_spool for the safety contract).
         """
@@ -902,6 +921,17 @@ class Engine:
                     "register_kinesis_client_factory, or set url/region)"
                 )
             iterator_type(start_position)  # validate before any side effect
+            prev = self.catalog.find_consumer(endpoint, stream, relation)
+            old_landing = prev and self._ckpt(prev.id, "kds_landing")
+            if old_landing and os.path.isdir(old_landing):
+                # old two-query datasource layout: spool files it landed
+                # but never archived would never reach the archive
+                raise ValueError(
+                    f"{old_landing} is the checkpoint of a separate "
+                    "landing query, which this engine no longer runs; "
+                    "move the consumer's checkpoints, dsstate and spool "
+                    "aside to re-ingest from start_position"
+                )
             self._restore_compacted(relation)
             for d in (self.table_dir(relation), self.dead_letter_dir(relation)):
                 if os.path.isdir(os.path.join(d, "_spark_metadata")):
@@ -921,7 +951,6 @@ class Engine:
                     "directory directly; nothing is spooled)"
                 )
             parallelism = min(max(parallelism, 1), MAX_PROCS)
-            prev = self.catalog.find_consumer(endpoint, stream, relation)
             if (
                 prev is not None
                 and source in ("pump", "datasource")
@@ -1061,18 +1090,14 @@ class Engine:
                 # shard, GetRecords polled ON executors (sources/
                 # kinesis_datasource.py). Exactly ONE streaming query
                 # may consume the source (its attained side-channel is
-                # single-consumer), so the topology is LANDING + FAN-
-                # OUT: a landing query writes each micro-batch's raw
-                # records — executor-parallel, deterministic file
-                # names, idempotent under replay — into the same spool
-                # format the pump uses, and the proven FileReplaySource
-                # → parse → archive/dead-letter/view pipeline consumes
-                # the spool with per-query file-source offsets. Bytes
-                # flow Kinesis → executors → shared storage; the
-                # driver only renames spool files (metadata). Offsets
-                # live in the Spark checkpoint (+ attained files) —
-                # the catalog seqnum round-trip of the pump path is
-                # not needed; seqnums() reads the attained files.
+                # single-consumer): the ingest query, which lands each
+                # batch in the pump's spool format (see _ingest) for
+                # the views to FAN OUT from with per-query file-source
+                # offsets. Bytes flow Kinesis → executors → shared
+                # storage; the driver only renames files (metadata).
+                # Offsets live in the Spark checkpoint (+ attained
+                # files) — the catalog seqnum round-trip of the pump
+                # path is not needed; seqnums() reads the attained files.
                 spec = self.spark.sparkContext.getConf().get(
                     "spark.speculation", "false"
                 )
@@ -1105,7 +1130,7 @@ class Engine:
                     ),
                 )
                 # the admission backstop scales with the LIVE shard
-                # count (one landing file per shard per batch), never a
+                # count (one spool file per shard per batch), never a
                 # constant a bigger stream can outgrow
                 if n_live_shards == 0:
                     try:
@@ -1180,33 +1205,50 @@ class Engine:
                 records = self._apply_start_position(
                     consumer, replay_src, replay_src.read_stream(self.spark)
                 )
-            if dedup:
-                # B26: the wire is at-least-once (a failed copy retries
-                # the WHOLE batch, pipeline_kinesis.c:744-758), so the
-                # same (shard, seqnum) record can arrive again in a
-                # later file/batch. Collapse redeliveries BEFORE parse
-                # so the archive, the dead-letter quarantine and every
-                # standing view each see a record exactly once. Keyed
-                # on the Kinesis identity (shard_id, sequence_number);
-                # first delivery wins.
-                keys = ["shard_id", "sequence_number"]
-                if isinstance(dedup, str):
-                    # bounded dedup state: redeliveries only need to be
-                    # remembered for the redelivery horizon, so the
-                    # watermark reaps older keys — the at-scale setting
-                    # (unbounded dropDuplicates state on a 100 TB
-                    # stream is a slow leak). Records must carry
-                    # arrival timestamps for this form.
-                    records = records.withWatermark(
-                        "approximate_arrival_timestamp", dedup
-                    ).dropDuplicatesWithinWatermark(keys)
-                else:
-                    records = records.dropDuplicates(keys)
+            records = _dedup(records, dedup)
             parsed = parse_records(
                 records, sd.schema_ddl, fmt, delimiter, quote, escape
             )
             good = split_quarantine(parsed)[0]
             tag = f"c{consumer.id}"
+
+            # one parse per micro-batch: good rows to the archive, bad
+            # ones (if any) to the dead-letter quarantine (the reference
+            # drops the whole batch, pipeline_kinesis.c:740-758). A
+            # datasource batch is persisted (a second read would re-run
+            # GetRecords) and spooled before the archive write; a crash
+            # between the two publishes replays it under the same spool
+            # names, and the archive mark archives it once.
+            def _ingest(
+                bdf, bid, _tag=tag, _arch=self.table_dir(relation),
+                _dl=self.dead_letter_dir(relation),
+                _spool=spool if ds_mode else None,
+                _reap=reap_spool if ds_mode else None,
+            ):
+                if _reap is not None:
+                    _reap()
+                if bid <= _published_through(_arch, _tag):
+                    return
+                if _spool is not None:
+                    bdf.persist()
+                parsed_b = parse_records(
+                    bdf, sd.schema_ddl, fmt, delimiter, quote, escape
+                ).persist()
+                try:
+                    if _spool is not None:
+                        tmp = _staging_dir(_spool, _tag, bid)
+                        bdf.write.mode("overwrite").json(tmp)
+                        _publish_batch(_tag, bid, [(tmp, _spool)], ".jsonl")
+                    good_b, bad_b = split_quarantine(parsed_b)
+                    staged = [(_staging_dir(_arch, _tag, bid), _arch)]
+                    good_b.write.mode("overwrite").parquet(staged[0][0])
+                    if not bad_b.isEmpty():
+                        staged.append((_staging_dir(_dl, _tag, bid), _dl))
+                        bad_b.write.mode("overwrite").parquet(staged[1][0])
+                    _publish_batch(_tag, bid, staged, ".parquet")
+                finally:
+                    parsed_b.unpersist()
+                    bdf.unpersist()
 
             # registered before the first start, so a failure anywhere
             # below stops exactly what this call started
@@ -1214,58 +1256,9 @@ class Engine:
             self._queries[consumer.id] = queries
             self._parsed[consumer.id] = (relation, good)
             try:
-                if ds_mode:
-                    # (0) landing: drain the executor-parallel source into
-                    # the spool. bdf.write.json runs ON EXECUTORS (the
-                    # data path); the driver only renames the part files
-                    # into place (_publish_batch), so downstream file
-                    # sources never see a torn or divergent batch.
-                    def _land(
-                        bdf, bid, _spool=spool, _reap=reap_spool, _tag=tag
-                    ):
-                        _reap()
-                        if bid <= _published_through(_spool, _tag):
-                            return
-                        tmp = _staging_dir(_spool, _tag, bid)
-                        bdf.write.mode("overwrite").json(tmp)
-                        _publish_batch(_tag, bid, [(tmp, _spool)], ".jsonl")
-
-                    queries.append(self._start_query(
-                        ds_raw.writeStream.foreachBatch(_guarded_batch(_land))
-                        .queryName(
-                            f"kds_landing_{relation}_c{consumer.id}"
-                        )
-                        .option(
-                            "checkpointLocation",
-                            self._ckpt_for_start(
-                                consumer.id, "landing", relation
-                            ),
-                        )
-                        .trigger(processingTime=interval)
-                    ))
-                # (a) one parse per micro-batch: good rows to the archive,
-                # bad ones (if any) to the dead-letter quarantine (the
-                # reference drops the whole batch, pipeline_kinesis.c:740-758)
-                def _ingest(
-                    bdf, bid, _tag=tag, _arch=self.table_dir(relation),
-                    _dl=self.dead_letter_dir(relation),
-                ):
-                    if bid <= _published_through(_arch, _tag):
-                        return
-                    bdf.persist()
-                    try:
-                        good_b, bad_b = split_quarantine(bdf)
-                        staged = [(_staging_dir(_arch, _tag, bid), _arch)]
-                        good_b.write.mode("overwrite").parquet(staged[0][0])
-                        if not bad_b.isEmpty():
-                            staged.append((_staging_dir(_dl, _tag, bid), _dl))
-                            bad_b.write.mode("overwrite").parquet(staged[1][0])
-                        _publish_batch(_tag, bid, staged, ".parquet")
-                    finally:
-                        bdf.unpersist()
-
                 queries.append(self._start_query(
-                    parsed.writeStream.foreachBatch(_guarded_batch(_ingest))
+                    (_dedup(ds_raw, dedup) if ds_mode else records)
+                    .writeStream.foreachBatch(_guarded_batch(_ingest))
                     .queryName(f"ingest_{relation}_c{consumer.id}")
                     .option(
                         "checkpointLocation",
@@ -1671,8 +1664,9 @@ class Engine:
         one row per standing query of the running consumers, read from
         the progress Spark keeps for it anyway, so the first call
         returns full rows and the ingest path pays nothing. ``kind`` is
-        ingest, landing, view or transform; ``name`` the relation, view
-        or transform served. ``batches`` / ``input_rows`` count the
+        ingest (one per consumer, on every ingest path), view or
+        transform; ``name`` the relation, view or transform served.
+        ``batches`` / ``input_rows`` count the
         input-carrying batches among the reports Spark retains for the
         current run (spark.sql.streaming.numRecentProgressUpdates, 100
         by default). ``last_batch_id`` is the checkpoint's last committed
@@ -1721,13 +1715,13 @@ class Engine:
     def _query_kind(self, qname: str) -> tuple[str, str]:
         """(kind, entity) of a standing query this engine started:
         ("view", view) under any of _view_qnames, ("transform", name),
-        or ("ingest" | "landing", relation)."""
+        or ("ingest", relation)."""
         for suffix in ("", "__sw_raw", "__mrel"):
             if qname.removesuffix(suffix) in self.catalog.state.views:
                 return "view", qname.removesuffix(suffix)
-        m = _CONSUMER_QUERY_RE.match(qname)
+        m = _INGEST_QUERY_RE.match(qname)
         if m:
-            return ("ingest" if m[1] == "ingest" else "landing"), m[2]
+            return "ingest", m[1]
         if qname.startswith("transform_"):
             return "transform", qname[len("transform_"):]
         return "view", qname  # a view dropped since the registry copy
@@ -2145,28 +2139,34 @@ class Engine:
             }
         return out
 
+    def _datasource_ingests(self) -> dict[int, StreamingQuery]:
+        """consumer id → the ingest query of each running datasource
+        consumer: the one reader of its executor-parallel source."""
+        ds = {
+            c.id
+            for c in self.catalog.all_consumers()
+            if c.source == "datasource"
+        }
+        return {
+            cid: q
+            for cid, queries in sorted(self._running_queries().items())
+            if cid in ds
+            for q in queries
+            if self._query_kind(q.name)[0] == "ingest"
+        }
+
     def datasource_status(self) -> dict[int, dict]:
         """Live state of executor-parallel (datasource-mode) consumers —
         the pump_status analog for the path where polling happens on
-        executors: landing-query liveness and batch progress, plus the
-        per-shard attained positions, closed flags and MillisBehindLatest
-        (``millis_behind``, the pump_status ``lag`` counterpart) from the
-        side-channel (A14 lag feed)."""
+        executors: the liveness and batch progress of the consumer's
+        ingest query, plus the per-shard attained positions, closed
+        flags and MillisBehindLatest (``millis_behind``, the pump_status
+        ``lag`` counterpart) from the side-channel (A14 lag feed)."""
         out = {}
-        for cid, queries in sorted(self._running_queries().items()):
-            landing = next(
-                (
-                    q
-                    for q in queries
-                    if self._query_kind(q.name)[0] == "landing"
-                ),
-                None,
-            )
-            if landing is None:
-                continue  # a file or pump consumer
-            p = landing.lastProgress
+        for cid, q in self._datasource_ingests().items():
+            p = q.lastProgress
             out[cid] = {
-                "alive": landing.isActive,
+                "alive": q.isActive,
                 "batch_id": p.get("batchId") if p else None,
                 "num_input_rows": p.get("numInputRows") if p else None,
                 "shards": {
@@ -2185,8 +2185,8 @@ class Engine:
     def _spool_reaper(self, spool: str, keep_s: float | None):
         """Per-round auto-reap hook for a consumer's spool: sweeps files
         older than ``keep_s`` (spool_keep_seconds; None = keep all) at
-        most once per _spool_reap_interval_s — a listdir every landing
-        round would be O(spool) work per batch."""
+        most once per _spool_reap_interval_s — a listdir every pump round
+        or ingest batch would be O(spool) work per batch."""
         import time as _time
 
         last = [0.0]
@@ -2253,6 +2253,15 @@ class Engine:
 
     # ---------------------------------------------------------- inspection
 
+    def _require_stopped(self, relation: str, action: str) -> None:
+        """Refuse `action` on `relation` while a consumer of it runs
+        (the caller holds self._lock)."""
+        for c in self.catalog.all_consumers():
+            if c.relation == relation and c.id in self._queries:
+                raise ValueError(
+                    f"stop consumers for {relation!r} before {action}"
+                )
+
     def alter_stream_add_column(
         self, relation: str, col_name: str, col_type: str
     ) -> None:
@@ -2264,11 +2273,7 @@ class Engine:
         the new column (mergeSchema parquet read + declared-schema
         fill-in in stream_table)."""
         with self._lock:
-            for c in self.catalog.all_consumers():
-                if c.relation == relation and c.id in self._queries:
-                    raise ValueError(
-                        f"stop consumers for {relation!r} before altering"
-                    )
+            self._require_stopped(relation, "altering")
             self.catalog.alter_stream_add_column(relation, col_name, col_type)
 
     def stream_table(self, relation: str) -> DataFrame:
@@ -2325,11 +2330,7 @@ class Engine:
         relation restores it (_restore_compacted).
         """
         with self._lock:
-            for c in self.catalog.all_consumers():
-                if c.relation == relation and c.id in self._queries:
-                    raise ValueError(
-                        f"stop consumers for {relation!r} before compacting"
-                    )
+            self._require_stopped(relation, "compacting")
             self._restore_compacted(relation)
             d = self.table_dir(relation)
             if not os.path.isdir(d):
@@ -2877,26 +2878,24 @@ class Engine:
 
     def wait_for_ingest(self, timeout_s: float = 60.0) -> None:
         """Block until all running queries have processed available input
-        (test/demo helper). Datasource landing queries poll an
-        always-advancing source (every trigger plans a batch), so
-        Spark's noNewData flag — what processAllAvailable waits on —
-        never sets for them; they are instead polled until three
-        consecutive completed batches carried zero input rows (three,
-        not two — see _await_quiescent for the pinned-replay chain)."""
+        (test/demo helper). The ingest query of a datasource consumer
+        polls an always-advancing source (every trigger plans a batch),
+        so Spark's noNewData flag — what processAllAvailable waits on —
+        never sets for it; it is instead polled until three consecutive
+        completed batches carried zero input rows (three, not two — see
+        _await_quiescent for the pinned-replay chain). Every other query
+        then drains what is available, the spool those batches landed
+        included."""
         import time as _time
 
         deadline = _time.monotonic() + timeout_s
-        queries = [
-            (q, self._query_kind(q.name)[0] == "landing")
-            for qs in self._running_queries().values()
-            for q in qs
-        ]
-        for q, landing in queries:
-            if landing:
-                self._await_quiescent(q, deadline)
-        for q, landing in queries:
-            if not landing:
-                q.processAllAvailable()
+        ds = self._datasource_ingests()
+        for q in ds.values():
+            self._await_quiescent(q, deadline)
+        for cid, queries in self._running_queries().items():
+            for q in queries:
+                if q is not ds.get(cid):
+                    q.processAllAvailable()
 
     @staticmethod
     def _await_quiescent(q, deadline: float) -> None:
@@ -2928,5 +2927,5 @@ class Engine:
                     zero_streak = 0
             _time.sleep(0.05)
         raise TimeoutError(
-            f"landing query {q.name!r} did not quiesce before deadline"
+            f"ingest query {q.name!r} did not quiesce before deadline"
         )

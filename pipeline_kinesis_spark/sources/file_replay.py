@@ -14,8 +14,8 @@ Flow-control mapping (reference → here):
 - bounded queue of 100 batches (conc_queue.hpp) → ``maxFilesPerTrigger``
   admission control in the micro-batch planner. On a file feed (the
   caller's own directory) the cap is ``parallelism`` and is the only
-  flow control. On an engine-owned Kinesis spool (pump or datasource
-  landing) it is only a backstop, ``engine.spool_admission_cap`` — the
+  flow control. On an engine-owned Kinesis spool (landed by the pump
+  or the datasource ingest query) it is only a backstop, ``engine.spool_admission_cap`` — the
   poller already bounds what lands (``batchsize`` records per shard per
   fetch, ``rate_limit_rps`` fetches per second), so each micro-batch
   admits everything spooled since the last one;

@@ -373,10 +373,10 @@ def test_e2e_reshard_mid_stream(spark, wire, tmp_path):
 
 def test_engine_datasource_mode_end_to_end(spark, wire, tmp_path):
     """consume_begin(source='datasource'): the engine's full pipeline —
-    landing query → spool → parse → archive + dead letter + continuous
-    view — fed by executor-parallel Kinesis polling over real SigV4
-    HTTP, with seqnums() surfacing the attained positions and a
-    stop/resume cycle staying exactly-once."""
+    one ingest query (spool + parse → archive + dead letter), then the
+    continuous view off the spool — fed by executor-parallel Kinesis
+    polling over real SigV4 HTTP, with seqnums() surfacing the attained
+    positions and a stop/resume cycle staying exactly-once."""
     from pipeline_kinesis_spark.engine import Engine
 
     fake, url, cred = wire
@@ -399,8 +399,19 @@ def test_engine_datasource_mode_end_to_end(spark, wire, tmp_path):
     )
     assert c.id in eng.datasource_status()
     assert not eng.pump_status()  # no driver pump on this path
+    # the ingest query is the datasource's one reader: no landing query
+    assert sorted(q.name for q in eng._queries[c.id]) == sorted(
+        [f"ingest_k_in_c{c.id}", "k_counts"]
+    )
     eng.wait_for_ingest(timeout_s=120)
     assert eng.stream_table("k_in").count() == 3
+    assert "kds_landing" not in os.listdir(
+        tmp_path / "meta" / "checkpoints" / str(c.id)
+    )
+    assert {r.kind for r in eng.pipeline_query_stats().collect()} == {
+        "ingest",
+        "view",
+    }
     rows = {
         r.k: (r.n, r.total) for r in eng.view_table("k_counts").collect()
     }
@@ -431,6 +442,35 @@ def test_engine_datasource_mode_end_to_end(spark, wire, tmp_path):
     }
     assert rows["a"] == (3, 10)
     eng.consume_end_all()
+
+
+def test_engine_refuses_old_landing_checkpoint(spark, wire, tmp_path):
+    """A datasource consumer whose checkpoints hold the separate landing
+    query of the old two-query layout is refused before anything
+    starts: spool files it landed but never archived would never reach
+    the archive."""
+    from pipeline_kinesis_spark.catalog import Consumer
+    from pipeline_kinesis_spark.engine import Engine
+
+    _, url, cred = wire
+    eng = Engine(spark, metadata_dir=str(tmp_path / "meta"))
+    eng.add_endpoint("ep", region="us-east-1", url=url, credfile=cred)
+    eng.create_stream("k_in", "k STRING, v BIGINT")
+    c = eng.catalog.upsert_consumer(
+        Consumer(0, "ep", "events", "k_in", source="datasource")
+    )
+    os.makedirs(tmp_path / "meta" / "checkpoints" / str(c.id) / "kds_landing")
+    active = {q.id for q in spark.streams.active}
+    try:
+        with pytest.raises(ValueError, match="landing query"):
+            eng.consume_begin(
+                "ep", "events", "k_in", fmt="csv", delimiter=",",
+                source="datasource",
+            )
+        assert {q.id for q in spark.streams.active} == active
+        assert not eng._queries and not eng.datasource_status()
+    finally:
+        eng.consume_end_all()
 
 
 # A factory every process can rebuild on its own: the streaming planner
@@ -492,6 +532,31 @@ def test_engine_datasource_through_registered_client_factory(
             ]
             assert sorted(seqs) == want
             assert eng.consume_end("ep", "events", "k_in")
+    finally:
+        eng.consume_end_all()
+
+
+def test_remove_endpoint_drops_its_client_factory(spark, tmp_path):
+    """remove_endpoint forgets the endpoint's client factory with its
+    client: an endpoint re-added under the same name with no url and
+    region 'local' is plainly misconfigured again, so consume_begin
+    refuses it and starts nothing."""
+    from pipeline_kinesis_spark.engine import Engine
+
+    eng = Engine(spark, metadata_dir=str(tmp_path / "meta"))
+    eng.add_endpoint("ep")
+    eng.register_kinesis_client_factory(
+        "ep", "tests.test_kinesis_datasource:canned_factory"
+    )
+    eng.remove_endpoint("ep")
+    eng.add_endpoint("ep", region="local")
+    eng.create_stream("k_in", "k STRING, v BIGINT")
+    active = {q.id for q in spark.streams.active}
+    try:
+        with pytest.raises(ValueError, match="no source url"):
+            eng.consume_begin("ep", "events", "k_in", fmt="csv", delimiter=",")
+        assert {q.id for q in spark.streams.active} == active
+        assert not eng._queries and not eng.pump_status()
     finally:
         eng.consume_end_all()
 

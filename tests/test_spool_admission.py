@@ -1,5 +1,5 @@
 """Spool admission on the Kinesis paths: the ingest pipeline's file
-source admits everything the pump (or the datasource landing query) has
+source admits everything the pump (or the datasource ingest query) has
 spooled, up to a shard-derived backstop — flow control lives upstream
 in the poller (batchsize per shard per fetch x fetches per second), so
 ``parallelism`` picks polling workers and never throttles the drain."""

@@ -1,6 +1,6 @@
 """Spool retention: the raw kinesis landing area must be boundable.
 
-Without retention the spool (record files the pump/landing writes and
+Without retention the spool (record files the pump/datasource writes and
 the ingest pipeline consumes) duplicates the archived stream forever.
 reap_spool / spool_keep_seconds delete files past an age that exceeds
 consumer lag; already-processed files are tracked BY NAME in each
@@ -123,7 +123,7 @@ def test_reap_spool_unknown_consumer(engine):
 
 
 def test_datasource_landing_auto_reaps(spark, tmp_path):
-    """The executor-parallel path's landing query runs the same
+    """The executor-parallel path's ingest query runs the same
     retention sweep: spool files past spool_keep_seconds disappear
     while ingestion keeps flowing."""
     pytest.importorskip("boto3")

@@ -39,6 +39,11 @@ Ops drawn per step (seeded):
                  part files moved in (the view query dies) —
                  consume_end_all + resume replays the batch over the
                  crashed commit's orphans
+  crash_publish  (wire and datasource mixes) arm a one-shot fault on
+                 the ingest query's archive publish, feed: the batch
+                 dies after its spool landing (datasource path), before
+                 its archive publish — consume_end_all + resume must
+                 archive it exactly once
 
 Scenario shapes (seeded, reported as shape_counts): ~half chain a view
 on the base view's output stream (osrel_chain), ~a third carry a
@@ -60,8 +65,9 @@ shard SPLIT / shard MERGE / injected throttle+expire faults /
 pause-resume / full engine restart, and the same exactness ledger
 must hold (every appended record lands in the view and archive
 exactly once, across reshard boundaries, fault retries, restarts,
-compactions and crashed store commits). --mode datasource drives the executor-parallel path the
-same way; --mode mixed cycles all three per scenario.
+compactions, crashed store commits and crashed archive publishes).
+--mode datasource drives the executor-parallel path the same way;
+--mode mixed cycles all three per scenario.
 
 Scenario i draws from default_rng([seed, i]) so any single scenario
 replays standalone: --only-scenario N reruns exactly scenario N of
@@ -460,9 +466,9 @@ def _scenario(spark, rng: np.random.Generator, ops_run: list) -> dict:
 
 WIRE_OPS = (
     "append", "drain", "split", "merge", "fault",
-    "pause_resume", "restart", "compact", "crash_commit",
+    "pause_resume", "restart", "compact", "crash_commit", "crash_publish",
 )
-WIRE_WEIGHTS = (0.29, 0.15, 0.12, 0.10, 0.10, 0.07, 0.07, 0.05, 0.05)
+WIRE_WEIGHTS = (0.26, 0.13, 0.12, 0.10, 0.10, 0.07, 0.07, 0.05, 0.05, 0.05)
 
 
 def _compact(eng, stream: str) -> None:
@@ -495,6 +501,45 @@ def _crash_commit(feed, timeout_s: float = 120.0) -> None:
         fired.wait(timeout_s)
     finally:
         cv.write_store_manifest = real
+
+
+def _crash_publish(feed, archive: str, timeout_s: float = 120.0) -> bool:
+    """Arm a one-shot fault on the ingest query's archive publish and
+    feed: the next batch that archives rows raises after staging them,
+    before any file is published (on the datasource path, after the
+    batch's spool files were), which kills the ingest query. Returns
+    whether the fault fired within timeout_s; the caller restarts the
+    consumers, whose replay of the batch must archive it exactly once
+    while the views take each republished spool file once."""
+    import pyarrow.parquet as pq
+
+    import pipeline_kinesis_spark.engine as engine_mod
+
+    real = engine_mod._publish_batch
+    fired = threading.Event()
+
+    def rows(tmp: str) -> int:
+        return sum(
+            pq.read_metadata(os.path.join(tmp, n)).num_rows
+            for n in os.listdir(tmp)
+            if n.startswith("part-") and n.endswith(".parquet")
+        )
+
+    def crash(tag, bid, staged, ext):
+        # the datasource reader plans a batch every trigger: skip the
+        # empty ones, whose replay would prove nothing
+        if staged[0][1] != archive or not rows(staged[0][0]):
+            return real(tag, bid, staged, ext)
+        engine_mod._publish_batch = real
+        fired.set()
+        raise RuntimeError("injected crash before the archive publish")
+
+    engine_mod._publish_batch = crash
+    try:
+        feed()
+        return fired.wait(timeout_s)
+    finally:
+        engine_mod._publish_batch = real
 
 
 def _scenario_wire(
@@ -571,7 +616,7 @@ def _scenario_wire(
         return eng
 
     def drain(eng, timeout_s=240.0):
-        """Pump fetch is async to the landing queries: poll until the
+        """Wire fetch is async to wait_for_ingest: poll until the
         archive holds everything appended so far, then drain views."""
         deadline = _time.monotonic() + timeout_s
         while _time.monotonic() < deadline:
@@ -668,6 +713,11 @@ def _scenario_wire(
                 begin()
             elif op == "crash_commit":
                 _crash_commit(append)
+                eng.consume_end_all()
+                begin()
+            elif op == "crash_publish":
+                if not _crash_publish(append, eng.table_dir(stream)):
+                    ops_run[-1] = "crash_publish_unfired"
                 eng.consume_end_all()
                 begin()
         drain(eng)
