@@ -22,6 +22,17 @@ from dataclasses import asdict, dataclass, field
 
 from pyspark.sql.types import StructType
 
+# <view>_osrel — the output-stream relation naming convention, and
+# PipelineDB's output_of('v') spelling of it; the one copy of each rule
+OSREL_RE = re.compile(r"^(\w+)_osrel$")
+_OUTPUT_OF = re.compile(r"output_of\(\s*'(\w+)'\s*\)", re.IGNORECASE)
+
+
+def rewrite_output_of(sql: str) -> str:
+    """PipelineDB's ``output_of('v')`` spelling → the ``<v>_osrel``
+    relation the engine registers for view delta streams."""
+    return _OUTPUT_OF.sub(lambda m: f"{m.group(1)}_osrel", sql)
+
 
 @dataclass
 class Endpoint:
@@ -309,7 +320,7 @@ class Catalog:
             for t in self.state.transforms.values()
         ):
             return True
-        m = re.match(r"^(\w+)_osrel$", rel)
+        m = OSREL_RE.match(rel)
         return bool(m and m.group(1) in self.state.views)
 
     def create_view(self, vd: ViewDef) -> None:
@@ -427,12 +438,6 @@ class Catalog:
                     c.id = existing["id"]
                     if c.resolved_position is None:
                         c.resolved_position = existing.get("resolved_position")
-                    if c.source == "auto":
-                        # keep the previously RESOLVED ingest path — a
-                        # restart in "auto" must not re-roll the
-                        # pump/datasource decision (their checkpoints
-                        # are not interchangeable)
-                        c.source = existing.get("source", "auto")
                     self.state.consumers[str(c.id)] = asdict(c)
                     self._save()
                     return c

@@ -39,12 +39,14 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from pipeline_kinesis_spark.catalog import (
+    OSREL_RE,
     Catalog,
     Consumer,
     Endpoint,
     StreamDef,
     TransformDef,
     ViewDef,
+    rewrite_output_of,
 )
 from pipeline_kinesis_spark.ingest.parse import parse_records, split_quarantine
 from pipeline_kinesis_spark.shipping import ship_package
@@ -67,13 +69,13 @@ from pipeline_kinesis_spark.streaming.continuous_view import (
     OSREL_KEEP_DEFAULT,
     PARTIAL_SEP,
     SW_BUCKET_COL,
+    _outside_string_mask,
     combine_rewrite_sql,
     combine_select_expr,
     combine_view,
     compile_view,
     drop_partial_cols,
     has_hidden_partials,
-    materialize_memory,
     parse_combine_view_sql,
     parse_sw_view_sql,
     publish_bucket_files,
@@ -106,10 +108,6 @@ def spool_admission_cap(n_live_shards: int) -> int:
     worker (at most MAX_PROCS), which the floor of 64 covers."""
     return max(2 * n_live_shards, 64)
 
-
-# <view>_osrel — the output-stream relation naming convention; single
-# source of truth for every parser that recognizes it
-_OSREL_RE = re.compile(r"^(\w+)_osrel$")
 
 # a consumer's own standing query: ingest_<relation>_c<id>
 _INGEST_QUERY_RE = re.compile(r"^ingest_(.+)_c\d+$")
@@ -242,7 +240,7 @@ def _staging_dir(dest: str, tag: str, bid: int) -> str:
 
 def _publish_batch(
     tag: str, bid: int, staged: list[tuple[str, str]], ext: str
-) -> None:
+) -> int:
     """Publish one micro-batch of writer `tag` (one standing query: a
     datasource spool landing, an archive plus its dead letters, a
     transform sink).
@@ -251,8 +249,10 @@ def _publish_batch(
     `{tag}-b{bid:010d}-{i:04d}{ext}` (a replay that writes fewer files
     than the first attempt must leave no stale one). Then, after every
     rename, os.replace the writer's `_{tag}.hwm` mark in the FIRST dest
-    (underscore-prefixed, so Spark's file listings skip it)."""
+    (underscore-prefixed, so Spark's file listings skip it). Returns
+    the number of files published."""
     stem = f"{tag}-b{int(bid):010d}-"
+    published = 0
     for tmp, dest in staged:
         os.makedirs(dest, exist_ok=True)
         for n in os.listdir(dest):
@@ -271,10 +271,12 @@ def _publish_batch(
             os.replace(full, os.path.join(dest, f"{stem}{i:04d}{ext}"))
             i += 1
         shutil.rmtree(tmp, ignore_errors=True)
+        published += i
     mark = os.path.join(staged[0][1], f"_{tag}.hwm")
     with open(f"{mark}.tmp", "w") as f:
         f.write(str(int(bid)))
     os.replace(f"{mark}.tmp", mark)
+    return published
 
 
 # A memory view's sink table lives in the SparkSession (named after the
@@ -290,10 +292,6 @@ def _repoint_table(query: str, name: str, tmp_name: str) -> str:
     """Rewrite references to table ``name`` in ``query`` to ``tmp_name``,
     case-insensitively and outside string literals only (a predicate
     like WHERE label = 'v' keeps its literal)."""
-    from pipeline_kinesis_spark.streaming.continuous_view import (
-        _outside_string_mask,
-    )
-
     mask = _outside_string_mask(query)
     return re.sub(
         rf"\b{re.escape(name)}\b",
@@ -607,7 +605,7 @@ class Engine:
         ``_osrel`` is not an output stream — same precedence as
         catalog._is_source_relation (streams checked first), so the two
         validators agree."""
-        m = _OSREL_RE.match(stream)
+        m = OSREL_RE.match(stream)
         if not m or stream in self.catalog.state.streams:
             return
         base = self.catalog.state.views.get(m.group(1))
@@ -863,6 +861,13 @@ class Engine:
         Restarting an existing consumer resumes from its checkpoints — the
         analog of seqnum recovery (pipeline_kinesis.c:459-536).
 
+        Like the reference (pipeline_kinesis.c:887-892, 931-940) the call
+        checks every argument, then writes the consumer row once: the
+        ingest path is decided by _resolve_source, which has no side
+        effect, and the row persists that RESOLVED path, from which the
+        path is built. A refused call leaves the catalog untouched. A
+        consumer already running only has its options persisted.
+
         ``source`` picks the Kinesis ingest architecture:
         - "pump": the managed driver-side polling pump (reference
           bgworker parity; fine up to MAX_PROCS-ish shards);
@@ -871,10 +876,14 @@ class Engine:
           shard, GetRecords on executors, ingest bandwidth scales with
           the cluster; needs a boto3-reachable endpoint row (or a
           registered client factory), not an injected client object;
-        - "auto" (default): "datasource" when discovery reports more
+        - "auto" (default): the consumer's persisted path on a restart;
+          on a first start "datasource" when discovery reports more
           shards than MAX_PROCS (the reference's own worker ceiling,
-          pipeline_kinesis.c:54) and the endpoint can serve it,
-          else "pump".
+          pipeline_kinesis.c:54) and the endpoint can serve it, else
+          "pump".
+        File-feed endpoints always resolve to "file". An explicit
+        "pump"/"datasource" that contradicts the persisted path is
+        refused: the two paths' checkpoints are not interchangeable.
 
         ``parallelism`` (clamped to 1..MAX_PROCS) sets the pump's polling
         workers on Kinesis paths, not batch admission: each micro-batch
@@ -894,33 +903,7 @@ class Engine:
         with self._lock:
             ep = self.catalog.endpoint(endpoint)
             sd = self.catalog.stream(relation)
-            # kinesis-typed endpoints carry an injected client, or no
-            # local source directory to replay from (url absent, or a
-            # scheme:// URL — the reference's AWS endpoint url);
-            # file-replay endpoints always carry a plain directory
-            # path, whatever region string they declare
-            url_is_dir = bool(ep.url) and not re.match(
-                r"^[a-z][a-z0-9+.-]*://", ep.url
-            )
-            is_kinesis = (
-                endpoint in self._kinesis_clients or not url_is_dir
-            )
-            if (
-                is_kinesis
-                and endpoint not in self._kinesis_clients
-                and endpoint not in self._kinesis_client_factories
-                and not ep.url
-                and (ep.region or "local") == "local"
-            ):
-                # plainly misconfigured: nothing to replay, no client or
-                # client factory, no region to build one from — fail
-                # here, not in the pump thread
-                raise ValueError(
-                    f"endpoint {endpoint!r} has no source url and no "
-                    "kinesis client (register_kinesis_client or "
-                    "register_kinesis_client_factory, or set url/region)"
-                )
-            iterator_type(start_position)  # validate before any side effect
+            it_type = iterator_type(start_position)[0]
             prev = self.catalog.find_consumer(endpoint, stream, relation)
             old_landing = prev and self._ckpt(prev.id, "kds_landing")
             if old_landing and os.path.isdir(old_landing):
@@ -940,7 +923,11 @@ class Engine:
                         "which readers would honour over newly published "
                         "files; move it aside first"
                     )
-            if spool_keep_seconds is not None and not is_kinesis:
+            running = prev is not None and bool(self._queries.get(prev.id))
+            path, client, n_live_shards = self._resolve_source(
+                endpoint, ep, stream, source, prev, running
+            )
+            if spool_keep_seconds is not None and path == "file":
                 # the file-feed path reads the caller's own directory
                 # directly — there is no engine-owned spool to reap, and
                 # silently accepting the knob would let a user believe
@@ -951,29 +938,20 @@ class Engine:
                     "directory directly; nothing is spooled)"
                 )
             parallelism = min(max(parallelism, 1), MAX_PROCS)
-            if (
-                prev is not None
-                and source in ("pump", "datasource")
-                and prev.source in ("pump", "datasource")
-                and source != prev.source
-            ):
-                # an EXPLICIT source that conflicts with the persisted
-                # resolution would restart on the other path and
-                # resume from checkpoints that path never wrote,
-                # re-ingesting from start_position — the exact
-                # duplicate window the persisted resolution closes.
-                # Refuse before the upsert overwrites the resolution;
-                # consume_end drops the consumer (and its checkpoint
-                # domain) for a deliberate mode switch.
-                raise ValueError(
-                    f"consumer for {stream!r} previously ingested via "
-                    f"source={prev.source!r}; restarting with "
-                    f"source={source!r} would resume from checkpoints "
-                    f"the {source!r} path never wrote (duplicate "
-                    f"ingest). consume_end first to switch ingest "
-                    f"modes, or pass source='auto' / "
-                    f"source={prev.source!r}."
+            resolved_position = prev.resolved_position if prev else None
+            if path == "file":
+                # file feeds: the caller's own directory, where this
+                # cap is the only flow control (A11)
+                replay_src = FileReplaySource(
+                    os.path.join(ep.url, stream),
+                    max_files_per_trigger=parallelism,
                 )
+                if (
+                    not running
+                    and it_type == "LATEST"
+                    and resolved_position is None
+                ):
+                    resolved_position = self._latest_snapshot(replay_src)
             consumer = self.catalog.upsert_consumer(
                 Consumer(
                     id=0,
@@ -989,86 +967,20 @@ class Engine:
                     start_position=start_position,
                     rate_limit_rps=rate_limit_rps,
                     spool_keep_seconds=spool_keep_seconds,
-                    source=source,
+                    source=path,
                     dedup=dedup,
+                    resolved_position=resolved_position,
                 )
             )
-            if self._queries.get(consumer.id):
-                return consumer  # already running
-            interval = self._trigger_for(consumer)
+            if running:
+                return consumer
 
             pump: KinesisPump | None = None
-            if is_kinesis and source not in ("auto", "pump", "datasource"):
-                raise ValueError(f"unknown source mode {source!r}")
-            # a restart in "auto" reuses the RESOLVED path from the
-            # catalog (upsert_consumer preserved it): pump checkpoints
-            # (catalog seqnums) and datasource offsets (Spark WAL +
-            # attained files) are not interchangeable, so re-rolling
-            # the auto decision on restart could resume from
-            # checkpoints the original path never wrote and re-ingest
-            # from start_position (duplicates)
-            source_req = source
-            if source_req == "auto" and consumer.source in (
-                "pump",
-                "datasource",
-            ):
-                source_req = consumer.source
-            ds_mode = False
-            n_live_shards = 0
-            if is_kinesis:
-                client = self._kinesis_clients.get(endpoint)
-                factory = self._kinesis_client_factories.get(endpoint)
-                if client is None:
-                    # built fresh per consume_begin (never cached): a
-                    # factory may hand out a different client each call
-                    client = build_client(
-                        factory, ep.region, ep.credfile, ep.url
-                    )
-                # an injected client OBJECT is driver-only; the
-                # datasource needs executors to build their own
-                # (factory string, or a boto3-usable endpoint row)
-                ds_capable = (
-                    factory is not None
-                    or endpoint not in self._kinesis_clients
+            if path == "file":
+                records = self._apply_start_position(
+                    consumer, replay_src.read_stream(self.spark)
                 )
-                if source_req == "datasource":
-                    if not ds_capable:
-                        raise ValueError(
-                            "source='datasource' needs a boto3-usable "
-                            "endpoint row or register_kinesis_client_"
-                            "factory — an injected client object "
-                            "cannot ship to executors"
-                        )
-                    ds_mode = True
-                elif source_req == "auto" and ds_capable:
-                    # the reference's own worker ceiling (MAX_PROCS=8,
-                    # pipeline_kinesis.c:54): beyond it, shard-parallel
-                    # executor ingest wins; discovery failure here is
-                    # not fatal — the pump will surface it properly
-                    try:
-                        n_shards = len(
-                            describe_all_shards(client, stream)
-                        )
-                    except Exception as exc:  # noqa: BLE001
-                        if isinstance(
-                            exc, (NameError, AttributeError, TypeError)
-                        ):
-                            raise  # programming error, never swallow
-                        n_shards = 0
-                    n_live_shards = n_shards
-                    ds_mode = n_shards > MAX_PROCS
-            # persist the RESOLVED ingest path so consume_begin_all
-            # restarts this consumer the same way (see source_req above)
-            resolved_source = (
-                ("datasource" if ds_mode else "pump")
-                if is_kinesis
-                else "file"
-            )
-            if consumer.source != resolved_source:
-                consumer.source = resolved_source
-                self.catalog.upsert_consumer(consumer)
-            ds_raw = None
-            if is_kinesis:
+            else:
                 # the engine-owned record spool both Kinesis paths land
                 # into and the ingest pipeline replays from
                 spool = os.path.join(
@@ -1085,38 +997,24 @@ class Engine:
                     batch_size=batchsize,
                     max_fetch_rate_per_shard=rate_limit_rps or 4.0,
                 )
-            if ds_mode:
-                # Executor-parallel ingest: one input partition per
-                # shard, GetRecords polled ON executors (sources/
-                # kinesis_datasource.py). Exactly ONE streaming query
-                # may consume the source (its attained side-channel is
-                # single-consumer): the ingest query, which lands each
-                # batch in the pump's spool format (see _ingest) for
-                # the views to FAN OUT from with per-query file-source
-                # offsets. Bytes flow Kinesis → executors → shared
-                # storage; the driver only renames files (metadata).
-                # Offsets live in the Spark checkpoint (+ attained
-                # files) — the catalog seqnum round-trip of the pump
-                # path is not needed; seqnums() reads the attained files.
-                spec = self.spark.sparkContext.getConf().get(
-                    "spark.speculation", "false"
-                )
-                if str(spec).lower() == "true":
-                    # the attained side-channel pins replays first-
-                    # writer-wins per (epoch, start), which removes the
-                    # record-LOSS window — but a speculative attempt
-                    # whose output commits after losing the pin race
-                    # could still duplicate a tail; refuse rather than
-                    # weaken exactly-once
-                    raise ValueError(
-                        "source='datasource' requires "
-                        "spark.speculation=false (speculative task "
-                        "attempts race the attained-position pin)"
-                    )
+                records = FileReplaySource(
+                    spool,
+                    max_files_per_trigger=spool_admission_cap(n_live_shards),
+                ).read_stream(self.spark)
+            if path == "datasource":
+                # Executor-parallel ingest (sources/kinesis_datasource.py):
+                # one input partition per shard, GetRecords polled ON
+                # executors. The ingest query is the source's one reader
+                # (its attained side-channel is single-consumer) and
+                # lands each batch in the spool the views fan out from
+                # (see _ingest). Offsets live in its checkpoint and the
+                # attained files, which seqnums() reads.
                 ds_raw = cfg.read_stream(
                     self.spark,
                     state_dir=self._ds_state_dir(consumer.id),
-                    client_factory=factory,
+                    client_factory=self._kinesis_client_factories.get(
+                        endpoint
+                    ),
                     # one scheduling wave per trigger: when live shards
                     # outnumber the cluster's task slots, the reader
                     # packs shards round-robin into at most this many
@@ -1129,17 +1027,7 @@ class Engine:
                         parallelism,
                     ),
                 )
-                # the admission backstop scales with the LIVE shard
-                # count (one spool file per shard per batch), never a
-                # constant a bigger stream can outgrow
-                if n_live_shards == 0:
-                    try:
-                        n_live_shards = len(
-                            describe_all_shards(client, stream)
-                        )
-                    except Exception:  # noqa: BLE001 — backstop only
-                        n_live_shards = 0
-            elif is_kinesis:
+            elif path == "pump":
                 # full consumer protocol on a managed background pump
                 # (reference consume_thread, kinesis_consumer.cpp:
                 # 328-332, 364-434): poller → record spool → the same
@@ -1190,22 +1078,13 @@ class Engine:
                     # clamped above)
                     workers=parallelism,
                 )
-            if is_kinesis:
-                records = FileReplaySource(
-                    spool,
-                    max_files_per_trigger=spool_admission_cap(n_live_shards),
-                ).read_stream(self.spark)
-            else:
-                # file feeds: the caller's own directory, where this
-                # cap is the only flow control (A11)
-                replay_src = FileReplaySource(
-                    os.path.join(ep.url, stream),
-                    max_files_per_trigger=parallelism,
-                )
-                records = self._apply_start_position(
-                    consumer, replay_src, replay_src.read_stream(self.spark)
-                )
             records = _dedup(records, dedup)
+            if path == "datasource":
+                ingest_src = _dedup(ds_raw, dedup)
+            else:
+                # the ingest query reads the records; only on the
+                # datasource path does it land (and reap) the spool
+                ingest_src, spool, reap_spool = records, None, None
             parsed = parse_records(
                 records, sd.schema_ddl, fmt, delimiter, quote, escape
             )
@@ -1218,12 +1097,15 @@ class Engine:
             # datasource batch is persisted (a second read would re-run
             # GetRecords) and spooled before the archive write; a crash
             # between the two publishes replays it under the same spool
-            # names, and the archive mark archives it once.
+            # names, and the archive mark archives it once. A batch that
+            # spools no file is empty: the reader plans one every
+            # trigger, and archiving it would add a footer-only parquet
+            # file each time (the reference COPYs non-empty batches
+            # only, pipeline_kinesis.c:725-758).
             def _ingest(
                 bdf, bid, _tag=tag, _arch=self.table_dir(relation),
                 _dl=self.dead_letter_dir(relation),
-                _spool=spool if ds_mode else None,
-                _reap=reap_spool if ds_mode else None,
+                _spool=spool, _reap=reap_spool,
             ):
                 if _reap is not None:
                     _reap()
@@ -1238,7 +1120,10 @@ class Engine:
                     if _spool is not None:
                         tmp = _staging_dir(_spool, _tag, bid)
                         bdf.write.mode("overwrite").json(tmp)
-                        _publish_batch(_tag, bid, [(tmp, _spool)], ".jsonl")
+                        if not _publish_batch(
+                            _tag, bid, [(tmp, _spool)], ".jsonl"
+                        ):
+                            return
                     good_b, bad_b = split_quarantine(parsed_b)
                     staged = [(_staging_dir(_arch, _tag, bid), _arch)]
                     good_b.write.mode("overwrite").parquet(staged[0][0])
@@ -1257,14 +1142,11 @@ class Engine:
             self._parsed[consumer.id] = (relation, good)
             try:
                 queries.append(self._start_query(
-                    (_dedup(ds_raw, dedup) if ds_mode else records)
-                    .writeStream.foreachBatch(_guarded_batch(_ingest))
-                    .queryName(f"ingest_{relation}_c{consumer.id}")
-                    .option(
-                        "checkpointLocation",
-                        self._ckpt_for_start(consumer.id, "ingest", relation),
-                    )
-                    .trigger(processingTime=interval)
+                    ingest_src.writeStream.foreachBatch(
+                        _guarded_batch(_ingest)
+                    ),
+                    f"ingest_{relation}_c{consumer.id}",
+                    consumer.id, "ingest", relation,
                 ))
                 # every active view, then every active transform, in
                 # catalog order through the same wiring CREATE and
@@ -1289,6 +1171,135 @@ class Engine:
                 pump.start()
                 self._pumps[consumer.id] = pump
             return consumer
+
+    def _resolve_source(
+        self,
+        endpoint: str,
+        ep: Endpoint,
+        stream: str,
+        source: str,
+        prev: Consumer | None,
+        running: bool,
+    ) -> tuple[str, object, int]:
+        """consume_begin's one ingest-path decision. Runs every check on
+        the endpoint and ``source`` with no side effect, and returns the
+        path ("file", "pump" or "datasource"), the Kinesis client it
+        built or looked up (None on a file feed or a running consumer)
+        and the live shard count when it read one (0 otherwise). The
+        one DescribeStream call feeds both the auto threshold and the
+        datasource's spool_admission_cap; a running consumer keeps its
+        persisted path and makes none."""
+        # kinesis-typed endpoints carry an injected client, or no
+        # local source directory to replay from (url absent, or a
+        # scheme:// URL — the reference's AWS endpoint url);
+        # file-replay endpoints always carry a plain directory
+        # path, whatever region string they declare
+        injected = endpoint in self._kinesis_clients
+        factory = self._kinesis_client_factories.get(endpoint)
+        url_is_dir = bool(ep.url) and not re.match(
+            r"^[a-z][a-z0-9+.-]*://", ep.url
+        )
+        if (
+            not injected
+            and factory is None
+            and not ep.url
+            and (ep.region or "local") == "local"
+        ):
+            # plainly misconfigured: nothing to replay, no client or
+            # client factory, no region to build one from — fail
+            # here, not in the pump thread
+            raise ValueError(
+                f"endpoint {endpoint!r} has no source url and no "
+                "kinesis client (register_kinesis_client or "
+                "register_kinesis_client_factory, or set url/region)"
+            )
+        is_kinesis = injected or not url_is_dir
+        # consume_begin_all restarts a file-feed consumer with its
+        # persisted source, "file"
+        modes = ("auto", "pump", "datasource") + (
+            () if is_kinesis else ("file",)
+        )
+        if source not in modes:
+            raise ValueError(f"unknown source mode {source!r}")
+        if not is_kinesis:
+            return "file", None, 0
+        kinesis_paths = ("pump", "datasource")
+        persisted = (
+            prev.source if prev and prev.source in kinesis_paths else None
+        )
+        if persisted and source in kinesis_paths and source != persisted:
+            # an EXPLICIT source that conflicts with the persisted
+            # resolution would restart on the other path and
+            # resume from checkpoints that path never wrote,
+            # re-ingesting from start_position — the exact
+            # duplicate window the persisted resolution closes.
+            # consume_end drops the consumer (and its checkpoint
+            # domain) for a deliberate mode switch.
+            raise ValueError(
+                f"consumer for {stream!r} previously ingested via "
+                f"source={persisted!r}; restarting with "
+                f"source={source!r} would resume from checkpoints "
+                f"the {source!r} path never wrote (duplicate "
+                f"ingest). consume_end first to switch ingest "
+                f"modes, or pass source='auto' / "
+                f"source={persisted!r}."
+            )
+        if running:
+            return prev.source, None, 0
+        # "auto" on a restart reuses the persisted path: pump
+        # checkpoints (catalog seqnums) and datasource offsets (Spark
+        # WAL + attained files) are not interchangeable, so re-rolling
+        # the decision could resume from checkpoints the original path
+        # never wrote and re-ingest from start_position (duplicates)
+        path = persisted if source == "auto" and persisted else source
+        # an injected client OBJECT is driver-only; the datasource
+        # needs executors to build their own (factory string, or a
+        # boto3-usable endpoint row)
+        ds_capable = factory is not None or not injected
+        if path == "datasource" and not ds_capable:
+            raise ValueError(
+                "source='datasource' needs a boto3-usable "
+                "endpoint row or register_kinesis_client_"
+                "factory — an injected client object "
+                "cannot ship to executors"
+            )
+        if path == "auto" and not ds_capable:
+            path = "pump"
+        client = self._kinesis_clients.get(endpoint)
+        if client is None:
+            # built fresh per consume_begin (never cached): a
+            # factory may hand out a different client each call
+            client = build_client(factory, ep.region, ep.credfile, ep.url)
+        n_live_shards = 0
+        if path != "pump":
+            # discovery failure is not fatal: the auto decision falls
+            # to the pump, which surfaces it properly, and the
+            # admission backstop to its floor
+            try:
+                n_live_shards = len(describe_all_shards(client, stream))
+            except Exception as exc:  # noqa: BLE001
+                if isinstance(exc, (NameError, AttributeError, TypeError)):
+                    raise  # programming error, never swallow
+        if path == "auto":
+            # the reference's own worker ceiling (MAX_PROCS=8,
+            # pipeline_kinesis.c:54): beyond it, shard-parallel
+            # executor ingest wins
+            path = "datasource" if n_live_shards > MAX_PROCS else "pump"
+        spec = self.spark.sparkContext.getConf().get(
+            "spark.speculation", "false"
+        )
+        if path == "datasource" and str(spec).lower() == "true":
+            # the attained side-channel pins replays first-writer-wins
+            # per (epoch, start), which removes the record-LOSS window —
+            # but a speculative attempt whose output commits after
+            # losing the pin race could still duplicate a tail; refuse
+            # rather than weaken exactly-once
+            raise ValueError(
+                "source='datasource' requires "
+                "spark.speculation=false (speculative task "
+                "attempts race the attained-position pin)"
+            )
+        return path, client, n_live_shards
 
     # ---------------------------------------- ACTIVATE / DEACTIVATE
 
@@ -1360,7 +1371,7 @@ class Engine:
         if stream in _seen:
             return None
         _seen = _seen | {stream}
-        m = _OSREL_RE.match(stream)
+        m = OSREL_RE.match(stream)
         if m and m.group(1) in self.catalog.state.views:
             base = ViewDef(**self.catalog.state.views[m.group(1)])
             if not base.active:
@@ -1427,7 +1438,7 @@ class Engine:
         src = self._resolve_chain_source(cid, relation, good, vd.stream)
         if src is None:
             return False
-        m = _OSREL_RE.match(vd.stream)
+        m = OSREL_RE.match(vd.stream)
         if m and m.group(1) in self.catalog.state.views:
             self._check_osrel_gap(
                 m.group(1),
@@ -1467,7 +1478,7 @@ class Engine:
             src = self._resolve_chain_source(cid, relation, good, td.stream)
         if src is None:
             return False
-        m = _OSREL_RE.match(td.stream)
+        m = OSREL_RE.match(td.stream)
         if m and m.group(1) in self.catalog.state.views:
             self._check_osrel_gap(
                 m.group(1),
@@ -1745,11 +1756,23 @@ class Engine:
                 return self._trigger_for(c)
         return self.trigger_interval
 
-    def _start_query(self, builder) -> StreamingQuery:
-        """``.start()`` a standing query under this engine's shuffle
-        width (see ``shuffle_partitions`` in ``__init__``); no-op
-        passthrough when unset. The pin is held under a process-wide
-        lock so concurrent starts never inherit each other's width."""
+    def _start_query(
+        self, builder, name: str, cid: int, kind: str, entity: str
+    ) -> StreamingQuery:
+        """The one start site of a standing query: ``.start()`` it as
+        `name`, checkpointed at its _query_kind pair (``kind``,
+        ``entity``) of consumer `cid` and triggered at that consumer's
+        pace, under this engine's shuffle width (see
+        ``shuffle_partitions`` in ``__init__``; no pin when unset). The
+        pin is held under a process-wide lock so concurrent starts
+        never inherit each other's width."""
+        builder = (
+            builder.queryName(name)
+            .option(
+                "checkpointLocation", self._ckpt_for_start(cid, kind, entity)
+            )
+            .trigger(processingTime=self._trigger_for_cid(cid))
+        )
         if self._shuffle_partitions is None:
             return builder.start()
         with pinned_shuffle(self.spark, self._shuffle_partitions):
@@ -1822,7 +1845,6 @@ class Engine:
         """Run one compiled continuous transform: append-mode standing
         query whose batches land in the sink relation and/or invoke the
         registered per-batch procedure."""
-        interval = self._trigger_for_cid(consumer_id)
         sink_dir = (
             self.table_dir(t.sink_relation) if t.sink_relation else None
         )
@@ -1843,13 +1865,8 @@ class Engine:
 
         return self._start_query(
             tdf.writeStream.foreachBatch(_guarded_batch(_transform_batch))
-            .queryName(f"transform_{t.name}")
-            .outputMode("append")
-            .option(
-                "checkpointLocation",
-                self._ckpt_for_start(consumer_id, "transform", t.name),
-            )
-            .trigger(processingTime=interval)
+            .outputMode("append"),
+            f"transform_{t.name}", consumer_id, "transform", t.name,
         )
 
     def _start_view_query(
@@ -1865,7 +1882,6 @@ class Engine:
         also appends (old, new, arrival_timestamp) change tuples there —
         only requested when the view has active downstream consumers, so
         unconsumed output streams cost nothing."""
-        interval = self._trigger_for_cid(consumer_id)
         if delta_dir is not None:
             self._emitting.add(view.name)
         else:
@@ -1908,13 +1924,8 @@ class Engine:
 
             return self._start_query(
                 vdf.writeStream.foreachBatch(_guarded_batch(_merge_batch))
-                .queryName(view.name)
-                .outputMode("update")
-                .option(
-                    "checkpointLocation",
-                    self._ckpt_for_start(consumer_id, "view", view.name),
-                )
-                .trigger(processingTime=interval)
+                .outputMode("update"),
+                view.name, consumer_id, "view", view.name,
             )
         # sw views keep their per-step partials under a raw-suffixed sink
         # name: view_table / sql() recombine them under the public name,
@@ -1925,13 +1936,9 @@ class Engine:
         sink_name = self._sink_name(vars(view))
         self._snapshot_memory_sink(sink_name)
         _SINK_OWNERS.setdefault(self.spark, {})[sink_name] = self.metadata_dir
-        return materialize_memory(
-            vdf,
-            sink_name,
-            self._ckpt_for_start(consumer_id, "view", view.name),
-            output_mode=view.output_mode,
-            trigger_interval=interval,
-            start_fn=self._start_query,
+        return self._start_query(
+            vdf.writeStream.format("memory").outputMode(view.output_mode),
+            sink_name, consumer_id, "view", view.name,
         )
 
     def _snapshot_memory_sink(self, sink_name: str) -> None:
@@ -1997,15 +2004,13 @@ class Engine:
         )
 
     def _apply_start_position(
-        self,
-        consumer: Consumer,
-        source: FileReplaySource,
-        records: DataFrame,
+        self, consumer: Consumer, records: DataFrame
     ) -> DataFrame:
         """A3 offset resolution (pipeline_kinesis.c:587-605,
         kinesis_consumer.cpp:258-291): trim_horizon | latest |
         after_sequence_number:X. 'latest' is resolved ONCE into a concrete
-        per-shard seqnum snapshot and persisted, so restarts resume from the
+        per-shard seqnum snapshot (_latest_snapshot) that consume_begin
+        persists with the consumer row, so restarts resume from the
         checkpoint rather than re-resolving (which could skip records).
         Seqnums compare lexicographically — the file source zero-pads its
         framing (write_record_file); a real Kinesis connector resolves this
@@ -2018,7 +2023,7 @@ class Engine:
             return records
         if it_type == "AFTER_SEQUENCE_NUMBER":
             return records.filter(F.col("sequence_number") > F.lit(seq))
-        snap = self._resolve_latest(consumer, source)
+        snap = consumer.resolved_position
         if not snap:
             return records
         snap_df = self.spark.createDataFrame(
@@ -2033,23 +2038,18 @@ class Engine:
             .select(*[f.name for f in RECORD_SCHEMA.fields])
         )
 
-    def _resolve_latest(
-        self, consumer: Consumer, source: FileReplaySource
-    ) -> dict[str, str]:
-        if consumer.resolved_position is not None:
-            return consumer.resolved_position
-        snap: dict[str, str] = {}
-        if os.path.isdir(source.stream_dir):
-            rows = (
-                source.read_batch(self.spark)
-                .groupBy("shard_id")
-                .agg(F.max("sequence_number").alias("m"))
-                .collect()
-            )
-            snap = {r.shard_id: r.m for r in rows if r.m is not None}
-        consumer.resolved_position = snap
-        self.catalog.upsert_consumer(consumer)
-        return snap
+    def _latest_snapshot(self, source: FileReplaySource) -> dict[str, str]:
+        """Each shard's newest sequence number in a file feed: where a
+        'latest' consumer starts."""
+        if not os.path.isdir(source.stream_dir):
+            return {}
+        rows = (
+            source.read_batch(self.spark)
+            .groupBy("shard_id")
+            .agg(F.max("sequence_number").alias("m"))
+            .collect()
+        )
+        return {r.shard_id: r.m for r in rows if r.m is not None}
 
     def consume_end(self, endpoint: str, stream: str, relation: str) -> bool:
         """Stop the consumer's queries (kinesis_consume_end_sr analog)."""
@@ -2623,9 +2623,7 @@ class Engine:
         resolves through view_table and honors TTL."""
         # PipelineDB spelling output_of('v') → the <v>_osrel relation;
         # emitted delta history is batch-queryable like any relation
-        query = re.sub(
-            r"output_of\(\s*'(\w+)'\s*\)", r"\1_osrel", query, flags=re.I
-        )
+        query = rewrite_output_of(query)
         # combine() first: it re-points its view at the matrel, which
         # the private-name repoint below must not rename away
         query = self._rewrite_combine(query)
@@ -2715,10 +2713,6 @@ class Engine:
         matrel (partials visible) for this query. The rewrite is textual
         but anchored: it fires only when exactly one registered view both
         appears in the query and exposes every referenced alias."""
-        from pipeline_kinesis_spark.streaming.continuous_view import (
-            _outside_string_mask,
-        )
-
         pre_mask = _outside_string_mask(query)
         aliases = {
             m.group(1)
@@ -2773,10 +2767,6 @@ class Engine:
         tmp_name = f"__combine_mrel_{name}"
         mrel.createOrReplaceTempView(tmp_name)
         specs = vd["combine_aggs"]
-        from pipeline_kinesis_spark.streaming.continuous_view import (
-            _outside_string_mask,
-        )
-
         # rewrites apply OUTSIDE string literals only — a predicate
         # like WHERE label = 'v' must keep its literal untouched.
         # re.sub scans the original string, so match offsets index the

@@ -57,6 +57,8 @@ from typing import Any
 
 from pyspark.sql import DataFrame
 
+from pipeline_kinesis_spark.catalog import rewrite_output_of
+
 # PG type → Spark DDL type (the subset PipelineDB stream DDL uses)
 _PG_TYPES = {
     "text": "STRING",
@@ -251,15 +253,6 @@ def _map_pg_schema(coldefs: str) -> str:
     return ", ".join(cols)
 
 
-_OUTPUT_OF = re.compile(r"output_of\(\s*'(\w+)'\s*\)", re.IGNORECASE)
-
-
-def _rewrite_output_of(select_sql: str) -> str:
-    """PipelineDB's ``FROM output_of('v')`` spelling → the ``<v>_osrel``
-    relation the engine registers for view delta streams."""
-    return _OUTPUT_OF.sub(lambda m: f"{m.group(1)}_osrel", select_sql)
-
-
 def _infer_stream(engine, select_sql: str) -> str:
     """The FROM clause names the source relation — a registered stream,
     a transform output relation, or a view's output stream
@@ -404,7 +397,7 @@ def execute(engine, statement: str) -> DataFrame | str:
     m = _CREATE_CV.match(statement)
     if m:
         name, withopts, select_sql = m.groups()
-        select_sql = _rewrite_output_of(select_sql.rstrip().rstrip(";"))
+        select_sql = rewrite_output_of(select_sql.rstrip().rstrip(";"))
         kwargs: dict[str, Any] = {}
         if withopts:
             for tok in _split_args(withopts):
@@ -486,7 +479,7 @@ def execute(engine, statement: str) -> DataFrame | str:
     m = _CREATE_CT.match(statement)
     if m:
         name, select_sql, proc_name = m.groups()
-        select_sql = _rewrite_output_of(select_sql.rstrip().rstrip(";"))
+        select_sql = rewrite_output_of(select_sql.rstrip().rstrip(";"))
         proc = engine._procs.get(proc_name) if proc_name else None
         if proc_name and proc is None:
             raise ValueError(

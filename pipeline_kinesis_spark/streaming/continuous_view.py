@@ -27,7 +27,6 @@ import warnings
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 
 def compile_view(
@@ -41,27 +40,6 @@ def compile_view(
     exactly as for a batch query, then runs it incrementally."""
     stream_df.createOrReplaceTempView(stream_name)
     return spark.sql(view_sql)
-
-
-def materialize_memory(
-    view_df: DataFrame,
-    view_name: str,
-    checkpoint_dir: str,
-    output_mode: str = "complete",
-    trigger_interval: str = "500 milliseconds",
-    start_fn=None,
-) -> StreamingQuery:
-    """`start_fn` (builder -> StreamingQuery) lets the caller start the
-    query under a pinned shuffle width (Engine._start_query); default is
-    a plain .start()."""
-    builder = (
-        view_df.writeStream.format("memory")
-        .queryName(view_name)
-        .outputMode(output_mode)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(processingTime=trigger_interval)
-    )
-    return builder.start() if start_fn is None else start_fn(builder)
 
 
 # Hash-bucket partitioning for the upsert store: rows live under

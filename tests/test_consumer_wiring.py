@@ -12,7 +12,9 @@ from __future__ import annotations
 import pytest
 from pyspark.errors import AnalysisException
 
+from pipeline_kinesis_spark.catalog import Consumer
 from pipeline_kinesis_spark.engine import Engine
+from pipeline_kinesis_spark.sources.fake_kinesis import FakeKinesisClient
 from pipeline_kinesis_spark.sources.file_replay import write_record_file
 
 
@@ -267,3 +269,72 @@ def test_failed_consume_begin_stops_what_it_started(spark, engine, tmp_path):
     assert [q.name for q in engine._queries[c.id]] == [f"ingest_ev_c{c.id}"]
     assert engine.stream_table("ev").count() == len(_BATCH1) - 1
     assert engine.dead_letters("ev").count() == 1
+
+
+@pytest.mark.parametrize("kind", ["kinesis", "file"])
+def test_refused_source_leaves_the_consumer_row(
+    spark, engine, tmp_path, kind
+):
+    """consume_begin checks its source before its one catalog write: an
+    unknown source, on either endpoint kind, raises and leaves a stopped
+    consumer's row — its resolved path included — as it was, so
+    consume_begin_all and an auto restart still take that path."""
+    if kind == "kinesis":
+        engine.add_endpoint("ep", region="local")
+        engine.register_kinesis_client(
+            "ep", FakeKinesisClient({"shardId-000": []})
+        )
+        path = "pump"
+    else:
+        engine.add_endpoint("ep", url=str(tmp_path / "kinesis"))
+        path = "file"
+    engine.create_stream("ev", "v BIGINT, k STRING")
+    engine.catalog.upsert_consumer(
+        Consumer(0, "ep", "s1", "ev", format="csv", source=path)
+    )
+    before = {k: dict(v) for k, v in engine.catalog.state.consumers.items()}
+    active = {q.id for q in spark.streams.active}
+    with pytest.raises(ValueError, match="unknown source mode 'bogus'"):
+        engine.consume_begin(
+            "ep", "s1", "ev", fmt="text", batchsize=7, source="bogus"
+        )
+    assert engine.catalog.state.consumers == before
+    assert engine.catalog.find_consumer("ep", "s1", "ev").source == path
+    assert {q.id for q in spark.streams.active} == active
+    assert not engine._queries and not engine.pump_status()
+
+
+def test_consume_begin_writes_the_consumer_row_once(
+    engine, tmp_path, monkeypatch
+):
+    """The first start of a 'latest' file consumer persists its
+    resolved path and its start snapshot in one catalog write; a call
+    on the running consumer persists its options and starts nothing."""
+    src_root = tmp_path / "kinesis"
+    engine.add_endpoint("ep", url=str(src_root))
+    engine.create_stream("ev", "v BIGINT, k STRING")
+    _put(src_root, _BATCH1[:2], 1)
+    writes = []
+    upsert = engine.catalog.upsert_consumer
+
+    def counting_upsert(c):
+        writes.append(dict(vars(c)))
+        return upsert(c)
+
+    monkeypatch.setattr(engine.catalog, "upsert_consumer", counting_upsert)
+    c = engine.consume_begin(
+        "ep", "s1", "ev", fmt="csv", delimiter=",", start_position="latest"
+    )
+    assert len(writes) == 1
+    assert writes[0]["source"] == "file"
+    assert writes[0]["resolved_position"] == {
+        "shardId-000000000000": f"{2:056d}"
+    }
+    queries = list(engine._queries[c.id])
+    again = engine.consume_begin(
+        "ep", "s1", "ev", fmt="csv", delimiter=",", batchsize=5,
+        start_position="latest",
+    )
+    assert again.id == c.id and len(writes) == 2
+    assert writes[1]["source"] == "file" and again.batchsize == 5
+    assert engine._queries[c.id] == queries

@@ -34,8 +34,8 @@ def test_row_teardown_when_body_raises(
 
     real_start = Engine._start_query
 
-    def recording_start(self, builder):
-        q = real_start(self, builder)
+    def recording_start(self, builder, *args):
+        q = real_start(self, builder, *args)
         started.append(q)
         engines.add(id(self))
         return q

@@ -405,6 +405,16 @@ def test_engine_datasource_mode_end_to_end(spark, wire, tmp_path):
     )
     eng.wait_for_ingest(timeout_s=120)
     assert eng.stream_table("k_in").count() == 3
+    # the reader plans a batch every trigger; an empty one archives
+    # nothing (no footer-only parquet file per idle trigger)
+    archived = sorted(os.listdir(eng.table_dir("k_in")))
+    ingest = eng._datasource_ingests()[c.id]
+    idle_from = ingest.lastProgress["batchId"]
+    deadline = time.monotonic() + 60
+    while ingest.lastProgress["batchId"] < idle_from + 4:
+        assert time.monotonic() < deadline
+        time.sleep(0.1)
+    assert sorted(os.listdir(eng.table_dir("k_in"))) == archived
     assert "kds_landing" not in os.listdir(
         tmp_path / "meta" / "checkpoints" / str(c.id)
     )
